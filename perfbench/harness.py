@@ -61,39 +61,72 @@ def spark_extra() -> dict:
     tmp = os.path.join(WORK, "tmp")
     return {
         "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
-        # a fixed-size heap: a growable one made peak RSS swing by a fifth
-        # between runs of the same work, with GC timing
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms{driver_memory()}",
+        # a fixed-size heap, touched in full at launch: a growable one made
+        # peak RSS swing by a fifth between runs of the same work, and an
+        # untouched one by up to 0.6 GB (geodesic_pairs: 2.0-2.65 GB over
+        # ten runs; touched, 3.0 GB in each of three)
+        "spark.driver.extraJavaOptions":
+            f"-Djava.io.tmpdir={tmp} -Xms{driver_memory()} -XX:+AlwaysPreTouch",
         "spark.ui.showConsoleProgress": "false",
     }
+
+
+def task_slots() -> int:
+    """One task slot fewer than the host has cores, which leaves a core
+    to the Spark driver side: this Python process, py4j and the JVM's
+    scheduler and GC threads. With a slot per core on a shared 4-core
+    host, text_dedup's run-to-run spread of items_per_s was twice as
+    wide (IQR/median 0.21 against 0.10 over the same five seeds,
+    alternating), with no lower median (4,549 against 4,739 texts/s)."""
+    return max(host_cpus() - 1, 1)
 
 
 def start_spark(app: str):
     from geodistpy_spark import get_spark
 
-    return get_spark(app, master=f"local[{host_cpus()}]", extra=spark_extra())
+    return get_spark(app, master=f"local[{task_slots()}]", extra=spark_extra())
 
 
 def stop_spark(spark) -> None:
-    """Stop the session, then the JVM, and wait for the JVM to exit."""
+    """Stop the session and wait for the JVM to exit. Left alone, the JVM
+    outlives this process by 1.5-2 s after ``spark.stop()`` (measured on
+    a 4-core host), so it would overlap the next run."""
     from pyspark import SparkContext
 
-    gateway = SparkContext._gateway
+    proc = getattr(SparkContext._gateway, "proc", None)
     spark.stop()
-    if gateway is None:
-        return
-    proc = getattr(gateway, "proc", None)
-    gateway.shutdown()
-    SparkContext._gateway = None
-    SparkContext._jvm = None
     if proc is not None:
-        if proc.stdin is not None:
-            proc.stdin.close()  # the JVM exits when its stdin closes
-        try:
-            proc.wait(timeout=30)
-        except Exception:
-            proc.kill()
-            proc.wait(timeout=30)
+        proc.stdin.close()  # the JVM exits when its stdin closes
+        proc.wait(timeout=60)
+
+
+def executed_plan(df) -> list[dict]:
+    """The executed physical plan of a DataFrame after an action, through
+    the adaptive query stages, as a pre-order list of nodes: ``name``,
+    ``parent`` (an index into the list, or None) and the SQL ``metrics``.
+    Codegen wrappers are left out."""
+    nodes = []
+
+    def walk(p, parent):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan(), parent)
+        if cls.endswith("QueryStageExec"):
+            return walk(p.plan(), parent)
+        if cls not in ("InputAdapter", "WholeStageCodegenExec"):
+            ms, metrics = p.metrics(), {}
+            keys = ms.keys().iterator()
+            while keys.hasNext():
+                k = keys.next()
+                metrics[k] = ms.apply(k).value()
+            nodes.append({"name": p.nodeName(), "parent": parent, "metrics": metrics})
+            parent = len(nodes) - 1
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i), parent)
+
+    walk(df._jdf.queryExecution().executedPlan(), None)
+    return nodes
 
 
 # ---------------------------------------------------------------------------
@@ -118,6 +151,7 @@ class HostMeta:
         steal = d[7] / sum(d) if len(d) > 7 and sum(d) else 0.0
         return {"load1_start": self.load1_start, "load1_end": os.getloadavg()[0],
                 "cpu_steal_frac": round(steal, 4), "cpus": host_cpus(),
+                "task_slots": task_slots(),
                 "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY")}
 
 
@@ -150,8 +184,14 @@ def _rss_bytes(pid: int) -> int:
 
 
 class RssSampler:
-    """Peak summed RSS of this process and all its descendants (the JVM
-    and the Python workers), sampled from /proc on a daemon thread."""
+    """Peak summed RSS of this process's descendants, the JVM and the
+    Python workers, sampled from /proc on a daemon thread. This process
+    is left out: besides the Spark driver it holds the benchmark's inputs
+    and references. The peak is the highest total that two samples in a row
+    reach: single samples about one JVM heap above the rest (5.4 GB
+    against 3.3 GB, once in six docs_pipeline runs) are left out; a
+    process the JVM spawns shares its memory until it execs, so /proc
+    likely showed the heap twice."""
 
     def __init__(self, interval_s: float = 0.25):
         self.interval_s = interval_s
@@ -161,9 +201,11 @@ class RssSampler:
 
     def _loop(self):
         me = os.getpid()
+        prev = 0
         while not self._stop.is_set():
-            total = sum(_rss_bytes(p) for p in _descendants(me))
-            self.peak = max(self.peak, total)
+            total = sum(_rss_bytes(p) for p in _descendants(me) if p != me)
+            self.peak = max(self.peak, min(prev, total))
+            prev = total
             self._stop.wait(self.interval_s)
 
     def __enter__(self):

@@ -19,6 +19,7 @@ import pyarrow.parquet as pq
 from harness import ROOT, WORK
 
 GOLDEN_INVERSE = os.path.join(ROOT, "fixtures", "golden", "inverse.parquet")
+HARD_GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "hard_golden.json")
 
 # geodesic_pairs hard-case shares (the rest are area-uniform pairs)
 ANTIPODAL_SHARE = 0.02
@@ -143,17 +144,20 @@ def rings(poly_dir: str) -> list[tuple[int, np.ndarray, np.ndarray]]:
 # ---------------------------------------------------------------------------
 
 def golden_pairs() -> dict:
-    """The 1,500 golden inverse pairs: coordinates from the integer
-    recipe the golden fixture was made with, truth from the fixture."""
+    """The 1,500 golden inverse pairs (coordinates from the integer
+    recipe the golden fixture was made with, truth from the fixture),
+    then the fixed hard-case pairs of hard_golden.json."""
     t = pq.read_table(GOLDEN_INVERSE).to_pydict()
     k = np.array(t["id"], np.int64)
-    return {
+    g = {
         "lat1": (k * 9973 % 17999) / 1e2 - 8.9995e1,
         "lon1": (k * 7919 % 35999) / 1e2 - 1.79995e2,
         "lat2": ((k * 104729 + 12345) % 17999) / 1e2 - 8.9995e1,
         "lon2": ((k * 95231 + 54321) % 35999) / 1e2 - 1.79995e2,
         "truth": np.array(t["s_m"]),
     }
+    h = np.array(load_json(HARD_GOLDEN)["rows"])
+    return {c: np.concatenate([v, h[:, i]]) for i, (c, v) in enumerate(g.items())}
 
 
 def _uniform_points(rng, n):
@@ -168,7 +172,12 @@ def pairs(n: int, seed: int) -> str:
     """``n`` point pairs: area-uniform, plus near-antipodal (within 0.5
     degrees of the antipode), polar (|lat| > 89.9) and coincident rows at
     the stated shares, plus the golden pairs; rows shuffled so the hard
-    cases spread over all partitions."""
+    cases spread over all partitions. ``truth`` holds the golden
+    distances; ``hard_ref`` holds the package's Karney kernel's solution,
+    which converges everywhere, on every hard-case row. It checks the
+    Vincenty-then-rescue path row by row; the hard-case golden rows
+    check the Karney kernel itself."""
+    from geodistpy_spark.kernels import karney_inverse
 
     def build(d):
         rng = np.random.default_rng(seed)
@@ -189,11 +198,16 @@ def pairs(n: int, seed: int) -> str:
             "lat1": np.concatenate([lat1, g["lat1"]]), "lon1": np.concatenate([lon1, g["lon1"]]),
             "lat2": np.concatenate([lat2, g["lat2"]]), "lon2": np.concatenate([lon2, g["lon2"]]),
         }
-        truth = np.concatenate([np.full(m, np.nan), g["truth"]])
+        hard = np.full(m, np.nan)
+        h = kind > 0
+        hard[h] = karney_inverse(lat1[h], lon1[h], lat2[h], lon2[h])
+        refs = {"truth": np.concatenate([np.full(m, np.nan), g["truth"]]),
+                "hard_ref": np.concatenate([hard, np.full(len(g["truth"]), np.nan)])}
         order = rng.permutation(n)
         table = pa.table({k: v[order] for k, v in cols.items()})
-        truth = truth[order]
-        table = table.append_column("truth", pa.array(truth, mask=np.isnan(truth)))
+        for k, v in refs.items():
+            v = v[order]
+            table = table.append_column(k, pa.array(v, mask=np.isnan(v)))
         write_parts(table, d, 8)
         save_json(os.path.join(d, "_shares.json"), {
             "rows": n, "golden": len(g["truth"]), "antipodal": int(a.sum()),

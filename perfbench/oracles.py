@@ -8,6 +8,9 @@ geodesic, and the 2% margins here are far wider.
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+from itertools import combinations
+
 import numpy as np
 
 from geodistpy_spark import kernels as K
@@ -137,5 +140,23 @@ def shingle_set(text: str, k: int = 3) -> set:
     return {tuple(w[i:i + k]) for i in range(len(w) - k + 1)}
 
 
-def jaccard(a: set, b: set) -> float:
-    return len(a & b) / len(a | b) if a or b else 0.0
+def near_dup_pairs(texts: list[str], threshold: float, k: int = 3) -> dict:
+    """Every pair (i, j), i < j, of texts whose word k-shingle Jaccard is
+    at least ``threshold``, mapped to that Jaccard. Exact: an inverted
+    shingle index gives each pair's intersection size, so no pair that
+    shares a shingle is skipped."""
+    sets = [shingle_set(t, k) for t in texts]
+    index = defaultdict(list)
+    for i, s in enumerate(sets):
+        for sh in s:
+            index[sh].append(i)
+    inter = Counter()
+    for docs in index.values():
+        if len(docs) > 1:
+            inter.update(combinations(docs, 2))
+    out = {}
+    for (i, j), n in inter.items():
+        jac = n / (len(sets[i]) + len(sets[j]) - n)
+        if jac >= threshold:
+            out[(i, j)] = jac
+    return out

@@ -58,8 +58,7 @@ def main(argv=None) -> int:
         try:
             workloads.WORKLOADS[args.workload](ctx)
         finally:
-            if ctx.spark is not None:
-                harness.stop_spark(ctx.spark)
+            ctx.close()
     ctx.e2e["peak_rss_mb"] = rss.peak_mb
 
     if args.trace:

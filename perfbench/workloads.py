@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import shutil
 import statistics
+import threading
 import time
 import traceback
 
@@ -19,24 +20,45 @@ import numpy as np
 
 import inputs
 import oracles
-from harness import WORK, start_spark, timing_summary
+from harness import WORK, executed_plan, start_spark, stop_spark, timing_summary
 
+# session set-ups per run: the first launches the JVM, so the median is
+# the slower of the other two
 SETUP_REPS = 3
-WARMUP_PASSES = 4
+# geodist passes settle after two (5.9 s, 1.8 s, then 1.2-1.6 s; 1M
+# pairs, 4-core host)
+WARMUP_PASSES = 2
+# text_dedup passes keep getting faster for longer (10k texts, 4-core
+# host: 2.3 s, 2.1 s, 2.0 s, 2.0 s, 1.8 s, ... 1.45 s by the fifteenth),
+# mostly fixed per-job overhead warming up; a run's budget allows three
+DEDUP_WARMUP_PASSES = 3
 # docs_pipeline result rows are keyed query_id * KEY_MULT + doc number * 8
 # + span index, and compared by count, key sum and key-square sum mod a prime
 KEY_MULT = 100_000_000
 KEY_PRIME = 1_000_000_007
 # the checkpointed job: chunks, and the chunk after which a crash is injected
-N_CHUNKS = 4
-FAIL_AFTER_CHUNK = 1
+N_CHUNKS = 2
+FAIL_AFTER_CHUNK = 0
 RADIUS_M = 50_000.0
 K_NEAREST = 10
+# text_dedup: the Jaccard threshold, and the least share of the true and
+# of the planted near-duplicate pairs a pass must find (MinHash LSH with
+# 4 bands of 3 rows finds a pair at Jaccard J with probability
+# 1 - (1 - J^3)^4: 0.41 at 0.5, 0.94 at 0.8)
+DEDUP_THRESHOLD = 0.5
+DEDUP_RECALL_FLOOR = 0.75
+DEDUP_PLANTED_RECALL_FLOOR = 0.80
+# geodesic_pairs: largest error allowed against the golden truth and
+# against Karney's solution on the hard-case rows
+GOLDEN_TOL_M = 2.5e-4
+HARD_TOL_M = 1e-3
+SUM_REL_TOL = 1e-12
 
 # per-layer metrics, all printed by every traced run; a layer the
 # workload never calls reads 0
-_OPS = ("plans.pipeline.CheckpointedRun", "operators.knn.knn_join",
-        "operators.polygons.zonal_stats", "textops.dedup.near_duplicates_minhash")
+_OPS = ("plans.pipeline.CheckpointedRun", "operators.radius.radius_join",
+        "operators.knn.knn_join", "operators.polygons.zonal_stats",
+        "textops.dedup.near_duplicates_minhash")
 PER_LAYER = {
     "session.get_spark.s": "s",
     "sources.documents.extract_geo_spans.s": "s",
@@ -49,9 +71,12 @@ PER_LAYER = {
     "plans.pipeline.CheckpointedRun.bytes_written_per_input_byte": "ratio",
     "operators.radius.radius_join.build_s": "s",
     "operators.radius.radius_join.py4j_calls": "count",
+    "operators.radius.radius_join.exec_s": "s",
+    "operators.radius.radius_join.jobs": "count",
+    "operators.radius.radius_join.cells_per_query": "count",
+    "operators.radius.radius_join.cover_udf_s": "s",
+    "operators.radius.radius_join.refine_udf_s": "s",
     "operators.radius.radius_join.refine_yield": "ratio",
-    "grid.cell_cover.s": "s",
-    "grid.cell_cover.cells_per_query": "count",
     "operators.knn.candidate_histogram.s": "s",
     "operators.knn.knn_join.build_s": "s",
     "operators.knn.knn_join.exec_s": "s",
@@ -87,6 +112,8 @@ class Ctx:
         self.workload, self.seed, self.seconds = workload, seed, seconds
         self.tracer, self.size, self.corrupt = tracer, size, corrupt
         self.spark = None
+        self._launcher = None
+        self._launched: dict = {}
         self.attempted = 0
         self.failed = 0
         self.setup_times: list[float] = []
@@ -98,18 +125,54 @@ class Ctx:
     def traced(self) -> bool:
         return self.tracer.enabled
 
+    def launch(self):
+        """Launch the JVM and the first session on a thread, so that the
+        workload's inputs and references are built meanwhile."""
+        def go():
+            t0 = time.perf_counter()
+            try:
+                with self.tracer.span("session.get_spark"):
+                    self._launched["spark"] = start_spark(f"perfbench-{self.workload}")
+            except BaseException as e:  # re-raised by setup()
+                self._launched["error"] = e
+            self._launched["s"] = time.perf_counter() - t0
+
+        self._launcher = threading.Thread(target=go, daemon=True)
+        self._launcher.start()
+
+    def _join_launch(self):
+        if self._launcher is not None:
+            self._launcher.join()
+            self._launcher = None
+            self.spark = self._launched.get("spark")
+
+    def close(self):
+        """Stop the session and the JVM, also when the run failed early."""
+        self._join_launch()
+        if self.spark is not None:
+            self.tracer.detach()
+            stop_spark(self.spark)
+            self.spark = None
+
     def setup(self, load):
         """Start a session and load the workload's inputs, SETUP_REPS
-        times (the first also launches the JVM); setup_s is the median.
-        Returns what the last ``load`` returned."""
+        times (the first is the session :meth:`launch` started, with the
+        JVM launch); setup_s is the median. Returns what the last
+        ``load`` returned."""
         state = None
-        for _ in range(SETUP_REPS):
-            if self.spark is not None:
-                self.tracer.detach()
-                self.spark.stop()  # session only; the JVM stays up
-            t0 = time.perf_counter()
-            with self.tracer.span("session.get_spark"):
-                self.spark = start_spark(f"perfbench-{self.workload}")
+        for rep in range(SETUP_REPS):
+            if rep == 0:
+                self._join_launch()
+                if "error" in self._launched:
+                    raise self._launched["error"]
+                t0 = time.perf_counter() - self._launched["s"]
+            else:
+                if self.spark is not None:
+                    self.tracer.detach()
+                    self.spark.stop()  # session only; the JVM stays up
+                t0 = time.perf_counter()
+                with self.tracer.span("session.get_spark"):
+                    self.spark = start_spark(f"perfbench-{self.workload}")
             self.tracer.attach(self.spark)
             state = load(self.spark)
             self.setup_times.append(time.perf_counter() - t0)
@@ -152,10 +215,11 @@ class Ctx:
 
 
 def corrupt(out):
-    """Damage an operation's output the way a wrong answer would: drop
-    the first row, or nudge a number by one part in a thousand."""
+    """Damage an operation's output the way a wrong answer would: nudge
+    a number (the last field of the first row) by one part in a thousand."""
     if isinstance(out, list) and out:
-        return out[1:]
+        *head, last = out[0]
+        return [(*head, last * 1.001 + 1)] + out[1:]
     if isinstance(out, dict):
         k = next(iter(out))
         return {**out, k: out[k] * 1.001 + 1}
@@ -187,12 +251,13 @@ def _size(ctx, default: dict, tiny: dict) -> dict:
 # docs_pipeline
 # ---------------------------------------------------------------------------
 
-def _pipeline_reference(n_docs, seed, docs_dir, places_dir, poly_dir, raster_dir) -> dict:
+def _pipeline_reference(sz, seed, docs_dir, places_dir, poly_dir, raster_dir) -> dict:
     """What an uninterrupted, exact run of the job must produce, by brute
     force over every (place, point) pair; cached per seed."""
     import pyarrow.parquet as pq
 
-    path = inputs.cache_path("docs_pipeline", "reference", n_docs, seed)
+    path = inputs.cache_path("docs_pipeline", f"reference-p{sz['n_places']}-r{sz['raster_res']}",
+                             sz["n_docs"], seed)
 
     def build(d):
         pts = inputs.geo_points(docs_dir)
@@ -220,6 +285,36 @@ def _pipeline_reference(n_docs, seed, docs_dir, places_dir, poly_dir, raster_dir
     return inputs.load_json(os.path.join(path, "reference.json"))
 
 
+def radius_plan(df) -> dict:
+    """Cover and refine figures of an executed radius_join: the cover
+    UDF and the explode of its cells sit below the join, the exact
+    refine UDF above it. UDF times are summed over tasks."""
+    nodes = executed_plan(df)
+
+    def below_join(i):
+        while nodes[i]["parent"] is not None:
+            i = nodes[i]["parent"]
+            if "Join" in nodes[i]["name"]:
+                return True
+        return False
+
+    udfs = [i for i, nd in enumerate(nodes) if nd["name"] == "ArrowEvalPython"]
+    cover = [i for i in udfs if below_join(i)]
+    refine = [i for i in udfs if not below_join(i)]
+    if len(cover) != 1 or len(refine) != 1:
+        raise RuntimeError(f"radius_join plan has {len(cover)} cover and {len(refine)} "
+                           "refine UDF nodes, expected one each")
+    cm, rm = nodes[cover[0]]["metrics"], nodes[refine[0]]["metrics"]
+    explode = nodes[cover[0]]["parent"]
+    if nodes[explode]["name"] != "Generate":
+        raise RuntimeError(f"radius_join cover UDF feeds {nodes[explode]['name']}, not Generate")
+    return {"queries": cm["pythonNumRowsReceived"],
+            "cover_cells": nodes[explode]["metrics"]["numOutputRows"],
+            "cover_udf_s": cm["pythonTotalTime"] / 1e3,
+            "refine_udf_s": rm["pythonTotalTime"] / 1e3,
+            "refine_rows": rm["pythonNumRowsReceived"]}
+
+
 def _dir_bytes(path: str) -> int:
     total = 0
     for dp, _, files in os.walk(path):
@@ -231,23 +326,22 @@ def _dir_bytes(path: str) -> int:
 def docs_pipeline(ctx: Ctx):
     """The shape of jobs/radius_pipeline.py plus its downstream steps, in
     a fresh session, so first-call costs are paid as every job pays them."""
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from geodistpy_spark import grid
     from geodistpy_spark.operators import (candidate_histogram, knn_join,
                                            point_in_polygon_join, radius_join, zonal_stats)
     from geodistpy_spark.plans import CheckpointedRun
     from geodistpy_spark.sources.documents import extract_geo_spans, verify_roundtrip
 
-    sz = _size(ctx, dict(n_docs=20_000, n_places=2_000, raster_res=7),
+    ctx.launch()
+    sz = _size(ctx, dict(n_docs=10_000, n_places=1_000, raster_res=7),
                dict(n_docs=1_000, n_places=50, raster_res=5))
     n_docs = sz["n_docs"]
     docs_dir = inputs.documents("docs_pipeline", n_docs, ctx.seed, n_files=8)
     places_dir = inputs.places("docs_pipeline", sz["n_places"], ctx.seed + 1)
     poly_dir = inputs.polygons("docs_pipeline", 50, ctx.seed + 2)
     raster_dir = inputs.raster("docs_pipeline", sz["raster_res"], ctx.seed + 3)
-    ref = _pipeline_reference(n_docs, ctx.seed, docs_dir, places_dir, poly_dir, raster_dir)
+    ref = _pipeline_reference(sz, ctx.seed, docs_dir, places_dir, poly_dir, raster_dir)
     tr = ctx.tracer
 
     def load(spark):
@@ -382,28 +476,28 @@ def docs_pipeline(ctx: Ctx):
         L["operators.knn.knn_join.py4j_calls"] = _per_call(tr, "operators.knn.knn_join", "py4j_calls")
         L["operators.polygons.zonal_stats.s"] = _median_span(tr, "operators.polygons.zonal_stats")
         L["operators.polygons.zonal_stats.jobs"] = tr.total("operators.polygons.zonal_stats", "jobs")
-        # the 50 km covers of a sample of the places, and how many covered
-        # points the exact refine keeps
-        pl = pq.read_table(os.path.join(places_dir, "part-0000.parquet")).to_pydict()
-        pts = inputs.geo_points(docs_dir)
-        res = grid.pick_resolution(RADIUS_M)
-        cells = grid.cell_id_np(pts["lat"], pts["lon"], res)
-        sample = list(zip(pl["query_id"], pl["q_lat"], pl["q_lon"]))[:200]
-        cover_s, n_cells, covered = 0.0, [], 0
-        for _, la, lo in sample:
-            t1 = time.perf_counter()
-            with tr.span("grid.cell_cover"):
-                cover = grid.cell_cover(la, lo, RADIUS_M, res=res)[1]
-            cover_s += time.perf_counter() - t1
-            n_cells.append(len(cover))
-            covered += int(np.isin(cells, np.asarray(cover, np.int64)).sum())
-        ids = np.array([q for q, _, _ in sample])
-        hits = len(oracles.radius_hits(ids, np.array([la for _, la, _ in sample]),
-                                       np.array([lo for _, _, lo in sample]), pts["key"],
-                                       pts["lat"], pts["lon"], RADIUS_M)[0])
-        L["grid.cell_cover.s"] = cover_s / len(sample)
-        L["grid.cell_cover.cells_per_query"] = float(np.mean(n_cells))
-        L["operators.radius.radius_join.refine_yield"] = hits / covered if covered else 0.0
+        # radius_join runs inside the job's chunk writes, where its jobs
+        # cannot be told from the write's: run it once more, built as the
+        # job builds it, over every geo point of the corpus, and read the
+        # cover and refine figures from its executed plan
+        name = "operators.radius.radius_join"
+
+        def radius_all():
+            with tr.span(name + ".exec"):
+                df = radius_join(places, geo_all, RADIUS_M, c_lat="lat", c_lon="lon").agg(
+                    F.count("*").alias("rows"))
+                return df, df.collect()[0]["rows"]
+
+        _, out = ctx.op(radius_all, lambda r: None if r[1] == ref["rows"] else
+                        f"radius_join rows {r[1]} vs {ref['rows']}", "radius_join")
+        if out is not None:
+            plan = radius_plan(out[0])
+            L[f"{name}.exec_s"] = _median_span(tr, name + ".exec")
+            L[f"{name}.jobs"] = _median_span(tr, name + ".exec", "jobs")
+            L[f"{name}.cells_per_query"] = plan["cover_cells"] / plan["queries"]
+            L[f"{name}.cover_udf_s"] = plan["cover_udf_s"]
+            L[f"{name}.refine_udf_s"] = plan["refine_udf_s"]
+            L[f"{name}.refine_yield"] = out[1] / plan["refine_rows"]
         ctx.finish_trace(wall)
     shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -435,6 +529,7 @@ def geodesic_pairs(ctx: Ctx):
     from geodistpy_spark import kernels as K
     from geodistpy_spark.operators import geodist, haversine_dist
 
+    ctx.launch()
     n = _size(ctx, dict(n=1_000_000), dict(n=20_000))["n"]
     pairs_dir = inputs.pairs(n, ctx.seed)
     ref = _pairs_reference(n, ctx.seed, pairs_dir)
@@ -454,16 +549,24 @@ def geodesic_pairs(ctx: Ctx):
             d = geodist(df, *cols)
             r = d.agg(F.sum("dist").alias("dist_sum"),
                       F.max(F.abs(F.col("dist") - F.col("truth"))).alias("max_err"),
-                      F.count("truth").alias("golden")).collect()[0]
-        return {"dist_sum": r["dist_sum"], "max_err": r["max_err"], "golden": r["golden"]}
+                      F.count("truth").alias("golden"),
+                      F.max(F.abs(F.col("dist") - F.col("hard_ref"))).alias("hard_err"),
+                      F.count("hard_ref").alias("hard")).collect()[0]
+        return r.asDict()
 
-    errs = []
+    shares = ctx.meta["shares"]
+    n_hard = shares["antipodal"] + shares["polar"] + shares["coincident"]
+    errs, hard_errs, sum_errs = [], [], []
 
     def check(r):
         errs.append(r["max_err"])
-        if r["golden"] != 1500 or r["max_err"] is None or r["max_err"] > 2.5e-4:
+        hard_errs.append(r["hard_err"])
+        sum_errs.append(abs(r["dist_sum"] - ref["dist_sum"]) / ref["dist_sum"])
+        if r["golden"] != shares["golden"] or r["max_err"] is None or r["max_err"] > GOLDEN_TOL_M:
             return f"golden error {r['max_err']} m over {r['golden']} pairs"
-        if abs(r["dist_sum"] - ref["dist_sum"]) > 1e-9 * ref["dist_sum"]:
+        if r["hard"] != n_hard or r["hard_err"] is None or r["hard_err"] > HARD_TOL_M:
+            return f"hard-case error {r['hard_err']} m over {r['hard']} pairs"
+        if sum_errs[-1] > SUM_REL_TOL:
             return f"distance sum {r['dist_sum']} vs {ref['dist_sum']}"
         return None
 
@@ -484,6 +587,8 @@ def geodesic_pairs(ctx: Ctx):
         ctx.e2e["items_per_s"] = n / statistics.median(times)
     ctx.meta["pass_s"] = timing_summary(times) if times else {}
     ctx.meta["max_err_m"] = max((e for e in errs if e is not None), default=None)
+    ctx.meta["hard_max_err_m"] = max((e for e in hard_errs if e is not None), default=None)
+    ctx.meta["sum_rel_err"] = max(sum_errs, default=None)
 
     if ctx.traced:
         L = ctx.layer
@@ -514,16 +619,31 @@ def geodesic_pairs(ctx: Ctx):
 # text_dedup
 # ---------------------------------------------------------------------------
 
-def text_dedup(ctx: Ctx):
-    import hashlib
+def _dedup_reference(n: int, seed: int, texts_dir: str) -> dict:
+    """Every pair of texts at or above the threshold, with its exact
+    Jaccard; cached per seed."""
+    path = inputs.cache_path("text_dedup", "reference", n, seed)
 
+    def build(d):
+        t = inputs.read_dir(texts_dir).to_pydict()
+        ids = t["doc_id"]
+        pairs = oracles.near_dup_pairs(t["text"], DEDUP_THRESHOLD)
+        inputs.save_json(os.path.join(d, "pairs.json"),
+                         [[ids[i], ids[j], jac] for (i, j), jac in sorted(pairs.items())])
+
+    inputs.cached(path, build)
+    return {(a, b): j for a, b, j in inputs.load_json(os.path.join(path, "pairs.json"))}
+
+
+def text_dedup(ctx: Ctx):
     from geodistpy_spark.textops.dedup import (lsh_candidate_pairs, minhash_signatures,
                                                near_duplicates_minhash)
 
-    n = _size(ctx, dict(n=20_000), dict(n=2_000))["n"]
+    ctx.launch()
+    n = _size(ctx, dict(n=10_000), dict(n=2_000))["n"]
     texts_dir = inputs.texts(n, ctx.seed)
-    ref_path = os.path.join(inputs.cache_path("text_dedup", "reference", n, ctx.seed),
-                            "pairs.json")
+    ref = _dedup_reference(n, ctx.seed, texts_dir)
+    planted = {tuple(p) for p in inputs.load_json(os.path.join(texts_dir, "_planted.json"))}
     tr = ctx.tracer
 
     def load(spark):
@@ -532,47 +652,40 @@ def text_dedup(ctx: Ctx):
         return df
 
     df = ctx.setup(load)
-    t = inputs.read_dir(texts_dir).to_pydict()
-    text_by_id = dict(zip(t["doc_id"], t["text"]))
 
     def one_pass():
         caches = []
         with tr.span("textops.dedup.near_duplicates_minhash"):
-            rows = near_duplicates_minhash(df, threshold=0.5, caches=caches).select(
+            rows = near_duplicates_minhash(df, threshold=DEDUP_THRESHOLD, caches=caches).select(
                 "id_1", "id_2", "jaccard").collect()
         for c in caches:
             c.unpersist()
         return sorted((r["id_1"], r["id_2"], r["jaccard"]) for r in rows)
 
-    def digest(rows):
-        return hashlib.sha256(repr([(a, b) for a, b, _ in rows]).encode()).hexdigest()
-
-    def precision_problem(rows):
-        """Exact Jaccard of a fixed sample of the reported pairs."""
-        for a, b, j in rows[:: max(1, len(rows) // 500)]:
-            exact = oracles.jaccard(oracles.shingle_set(text_by_id[a]),
-                                    oracles.shingle_set(text_by_id[b]))
-            if exact < 0.5 or abs(exact - j) > 1e-9:
-                return f"pair ({a}, {b}) jaccard {j}, exact {exact}"
-        return None
-
-    # the first warm-up pass gives this seed's reference pair set unless
-    # an earlier run of the same seed already recorded one
-    warm = one_pass()
-    for _ in range(WARMUP_PASSES - 1):
-        one_pass()
-    if os.path.exists(ref_path):
-        ref = inputs.load_json(ref_path)["sha256"]
-    else:
-        ref = digest(warm)
-        if precision_problem(warm) is None:
-            os.makedirs(os.path.dirname(ref_path), exist_ok=True)
-            inputs.save_json(ref_path, {"sha256": ref, "pairs": len(warm)})
+    recalls = []
 
     def check(rows):
-        if digest(rows) != ref:
-            return f"pair set ({len(rows)} pairs) differs from the seed's reference"
-        return precision_problem(rows)
+        """Every reported pair is a true near-duplicate with its exact
+        Jaccard; enough of the true and of the planted pairs are found."""
+        found = {(a, b) for a, b, _ in rows}
+        if len(found) != len(rows):
+            return f"{len(rows) - len(found)} pairs reported twice"
+        for a, b, j in rows:
+            if (a, b) not in ref:
+                return f"pair ({a}, {b}) reported with jaccard {j}, below {DEDUP_THRESHOLD}"
+            if abs(j - ref[(a, b)]) > 1e-9:
+                return f"pair ({a}, {b}) jaccard {j}, exact {ref[(a, b)]}"
+        recall = len(found) / len(ref) if ref else 1.0
+        planted_recall = len(found & planted) / len(planted) if planted else 1.0
+        recalls.append((recall, planted_recall))
+        if recall < DEDUP_RECALL_FLOOR or planted_recall < DEDUP_PLANTED_RECALL_FLOOR:
+            return (f"recall {recall:.4f} of {len(ref)} true pairs (floor {DEDUP_RECALL_FLOOR}), "
+                    f"{planted_recall:.4f} of {len(planted)} planted (floor "
+                    f"{DEDUP_PLANTED_RECALL_FLOOR})")
+        return None
+
+    for _ in range(DEDUP_WARMUP_PASSES):  # first calls: codegen, JIT, shuffle files
+        warm = one_pass()
 
     times = []
     t0 = time.perf_counter()
@@ -585,10 +698,8 @@ def text_dedup(ctx: Ctx):
     if times:
         ctx.e2e["items_per_s"] = n / statistics.median(times)
     ctx.meta["pass_s"] = timing_summary(times) if times else {}
-    planted = {tuple(p) for p in inputs.load_json(os.path.join(texts_dir, "_planted.json"))}
-    found = {(a, b) for a, b, _ in warm}
-    ctx.meta["pairs"] = len(warm)
-    ctx.meta["planted_recall"] = len(planted & found) / len(planted) if planted else None
+    ctx.meta["pairs"] = {"found": len(warm), "true": len(ref), "planted": len(planted)}
+    ctx.meta["recall"] = sorted(set(recalls))
 
     if ctx.traced:
         L = ctx.layer
