@@ -156,11 +156,7 @@ def candidate_histogram(candidates: DataFrame, c_lat: str = "lat",
       exchange — the 100 TB shape.
     """
     n = grid.nx(HIST_RES)
-    try:
-        n_parts = candidates.rdd.getNumPartitions()
-    except Exception:
-        n_parts = max_map_partitions + 1
-    if n_parts <= max_map_partitions:
+    if candidates.rdd.getNumPartitions() <= max_map_partitions:
         src = candidates.filter(_valid_coords(c_lat, c_lon)).select(
             F.col(c_lat).alias("__la"), F.col(c_lon).alias("__lo"))
 

@@ -1,8 +1,10 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults follow the sandbox (local[32], single JVM); at
-production scale the same configs apply per-executor and the entry point
-is ``spark-submit --py-files geodistpy_spark.zip job.py``.
+Local-mode defaults come from the host: one task slot per core this
+process may run on (``SPARK_GRAFT_CPUS`` overrides) and a quarter of
+physical memory for the driver heap (``SPARK_DRIVER_MEMORY`` overrides).
+At production scale the same configs apply per-executor and the entry
+point is ``spark-submit --py-files geodistpy_spark.zip job.py``.
 """
 
 from __future__ import annotations
@@ -12,97 +14,29 @@ import os
 from pyspark.sql import SparkSession
 
 
-_PREWARMED: set[str] = set()
+def _task_slots() -> int:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus is not None else len(os.sched_getaffinity(0))
 
 
-def _prewarm(spark: SparkSession, n_workers: int) -> None:
-    """Warm the session's lazily-initialized machinery once at startup:
-    the Python worker pool (one Arrow-batched UDF task per core — worker
-    spawn is ~1 s for a 32-wide pool and ``spark.python.worker.reuse``
-    keeps them alive), the shuffle + AQE stage-materialization path, and
-    a broadcast build. A long-lived production session pays these once
-    at startup; without this, the first real query of every session pays
-    them instead (guide §1: measure the computation, not the warmup).
-    Set GEODISTPY_PREWARM=0 to skip.
-    """
-    from pyspark.sql import functions as F
-
-    try:
-        @F.pandas_udf("double")
-        def _warm(x: "pd.Series") -> "pd.Series":  # noqa: F821
-            return x
-
-        df = spark.range(n_workers * 4, numPartitions=n_workers).select(
-            F.col("id").cast("double").alias("x"))
-        # one job: Python workers + Arrow serde + a shuffle (AQE wave)
-        df.select(_warm("x").alias("x"), (F.col("x") % 7).alias("k")) \
-            .groupBy("k").agg(F.sum("x")).collect()
-        # broadcast build path (BroadcastExchange thread pool + codegen)
-        small = spark.range(8).select(F.col("id").alias("k"))
-        df.select((F.col("x").cast("long") % 8).alias("k")).join(
-            F.broadcast(small), on="k").count()
-        # MapInArrow / MapInPandas runner init: each physical-operator
-        # family pays a one-time per-session setup (measured ~1.9 s for
-        # the first mapInArrow job even with the worker pool already
-        # warm); without this it lands inside the first real
-        # histogram/ANN call instead
-        tiny = spark.range(n_workers, numPartitions=min(n_workers, 8))
-
-        def _mia(it):
-            import pyarrow as pa
-            for b in it:
-                yield pa.record_batch([pa.array([b.num_rows], pa.int64())],
-                                      names=["n"])
-
-        tiny.mapInArrow(_mia, "n long").collect()
-
-        def _mip(it):
-            for b in it:
-                yield b
-
-        tiny.select(F.col("id").cast("double").alias("x")) \
-            .mapInPandas(_mip, "x double").collect()
-        # cached-relation scan paths: the first InMemoryRelation build
-        # and the first mapInArrow over an InMemoryTableScan each carry
-        # their own one-time JVM init (measured: first histogram-over-
-        # cache call 2.4 s -> 1.1 s with this warm) — plus the window
-        # operator family (row_number top-k, sessionize)
-        from pyspark.sql import Window
-
-        cached = tiny.select(
-            (F.col("id") % 7).cast("double").alias("a"),
-            F.col("id").cast("double").alias("b")).cache()
-        cached.count()
-
-        def _mia2(it):
-            import numpy as np
-            import pyarrow as pa
-            s = np.int64(0)
-            for b in it:
-                s += b.num_rows
-            yield pa.record_batch([pa.array([np.array([s]).tobytes()],
-                                            pa.binary())], names=["h"])
-
-        cached.filter(~F.isnan("a")).mapInArrow(_mia2, "h binary").collect()
-        cached.select("a", F.row_number().over(
-            Window.partitionBy("a").orderBy("b")).alias("rn")).collect()
-        cached.unpersist()
-    except Exception:  # pragma: no cover - warmup must never break callers
-        pass
+def _driver_memory() -> str:
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:"))
+    return f"{max(total_kb // 4 // 1024, 1024)}m"
 
 
 def get_spark(app_name: str = "geodistpy_spark", master: str | None = None,
               shuffle_partitions: int | None = None, extra: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    slots = _task_slots()
+    master = master or f"local[{slots}]"
     if shuffle_partitions is None:
         # cores x 4: memory-heavy aggregations (collect_list, wide minhash
         # groupBys) need partitions smaller than cores x 1 would give, and
         # AQE coalesces the excess away on small stages
-        try:
-            shuffle_partitions = int(cpus) * 4
-        except ValueError:
-            shuffle_partitions = 128
+        shuffle_partitions = slots * 4
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -113,7 +47,7 @@ def get_spark(app_name: str = "geodistpy_spark", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         # PySpark 4 wraps every DataFrame API call to capture the Python
         # call site for error messages: a stack walk plus THREE extra
@@ -127,12 +61,4 @@ def get_spark(app_name: str = "geodistpy_spark", master: str | None = None,
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _PREWARMED and os.environ.get("GEODISTPY_PREWARM") != "0":
-        _PREWARMED.add(app_id)
-        try:
-            n = spark.sparkContext.defaultParallelism
-        except Exception:
-            n = 8
-        _prewarm(spark, max(int(n), 1))
     return spark

@@ -10,11 +10,14 @@ Cluster usage (north rule: multi-executor via --py-files)::
         --queries s3://bucket/query_points.parquet \
         --radius-m 50000 --out s3://bucket/out/ --chunks 256
 
-Local smoke::
+Local smoke, with the fixture places as query points::
 
+    python -c "import pyarrow.parquet as pq; pq.write_table(pq.read_table(
+        'fixtures/places.parquet', columns=['place_id', 'lat', 'lon']
+        ).rename_columns(['query_id', 'q_lat', 'q_lon']), '/tmp/queries.parquet')"
     PYTHONPATH=. python jobs/radius_pipeline.py \
         --docs fixtures/documents_interleaved.parquet \
-        --queries .bench_work/queries_200.parquet \
+        --queries /tmp/queries.parquet \
         --radius-m 500000 --out /tmp/radius_out --chunks 4
 
 The job is chunked + checkpointed (plans.pipeline): a killed run resumes

@@ -13,8 +13,7 @@ from geodistpy_spark.sources.fixtures import ensure_default_fixtures  # noqa: E4
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="geodistpy_spark_tests", master="local[8]",
-                  shuffle_partitions=8)
+    s = get_spark(app_name="geodistpy_spark_tests")
     yield s
     s.stop()
 
