@@ -230,17 +230,61 @@ def polar_cap_cells(lat: float, lon: float, sigma: float, res: int,
     return sorted(set(cells))
 
 
+def cap_covers(lat, lon, radius_m, res: int, margin: float = 1.002,
+               max_cells: int | None = None) -> list[np.ndarray]:
+    """Conservative disk covers at ``res``, vectorized over points: row
+    ``i`` holds every cell containing a point within ``radius_m[i]``
+    geodesic meters of ``(lat[i], lon[i])`` (``radius_m`` may be a
+    scalar).
+
+    The standard spherical-cap bounding box: lat band ±σ, lon half-width
+    asin(sin σ / cos lat) when no pole is inside the cap, per-row polar
+    spans (:func:`polar_cap_cells`) otherwise — with σ = radius over the
+    *minimum* curvature radius of the ellipsoid (over-estimates the cap,
+    never under). A row whose cover exceeds ``max_cells`` gets an EMPTY
+    array instead (its box is never materialized).
+    """
+    la, lo, r = np.broadcast_arrays(*(np.atleast_1d(np.asarray(v, dtype=np.float64))
+                                      for v in (lat, lon, radius_m)))
+    n = nx(res)
+    sigma = np.minimum(r * margin / MIN_CURVATURE_RADIUS_M, np.pi)
+    sigma_deg = np.degrees(sigma)
+    y_lo = np.clip(np.floor((np.maximum(la - sigma_deg, -90.0) + 90.0) / 180.0 * n),
+                   0, n - 1).astype(np.int64)
+    y_hi = np.clip(np.floor((np.minimum(la + sigma_deg, 90.0) + 90.0 - 1e-12) / 180.0 * n),
+                   0, n - 1).astype(np.int64)
+    pole = (np.abs(la) + sigma_deg) >= 90.0
+    with np.errstate(invalid="ignore"):
+        ratio = np.sin(sigma) / np.maximum(np.cos(np.radians(la)), 1e-15)
+    dlam = np.degrees(np.arcsin(np.minimum(ratio, 1.0)))
+    span = np.minimum(np.ceil(2.0 * dlam / (360.0 / n)).astype(np.int64) + 2, n)
+    lo_x = np.floor(np.mod(lo - dlam + 180.0, 360.0) / 360.0 * n).astype(np.int64)
+    limit = np.iinfo(np.int64).max if max_cells is None else max_cells
+    empty = np.empty(0, dtype=np.int64)
+    out = []
+    for i in range(la.size):
+        if pole[i]:
+            cells = np.asarray(polar_cap_cells(
+                float(la[i]), float(lo[i]), float(sigma[i]), res,
+                int(y_lo[i]), int(y_hi[i])), dtype=np.int64)
+            out.append(cells if len(cells) <= limit else empty)
+        elif (y_hi[i] - y_lo[i] + 1) * span[i] <= limit:
+            ys = np.arange(y_lo[i], y_hi[i] + 1, dtype=np.int64)
+            xs = (lo_x[i] + np.arange(span[i], dtype=np.int64)) % n
+            out.append((ys[:, None] * n + xs[None, :]).ravel())
+        else:
+            out.append(empty)
+    return out
+
+
 def cell_cover(lat: float, lon: float, radius_m: float, res: int | None = None,
                margin: float = 1.002, max_cover: int = 2048) -> tuple[int, list[int]]:
     """Conservative disk cover: every point whose geodesic distance to
     (lat, lon) is <= radius_m lies in one of the returned cells.
 
-    Returns ``(res, cell_ids)``. Uses the standard spherical-cap bounding
-    box: lat band ±σ, lon half-width asin(sin σ / cos lat) when no pole is
-    inside the cap, full rows otherwise — with σ = radius over the
-    *minimum* curvature radius of the ellipsoid (over-estimates the cap,
-    never under). Verified empirically against brute-force geodesic
-    distances in tests (tests/test_grid.py).
+    Returns ``(res, sorted cell_ids)`` of the :func:`cap_covers` cover.
+    Verified empirically against brute-force geodesic distances in tests
+    (tests/test_grid.py).
 
     When ``res`` is not forced by the caller, the resolution is coarsened
     until the cover fits in ``max_cover`` cells — a small polar cap
@@ -252,51 +296,13 @@ def cell_cover(lat: float, lon: float, radius_m: float, res: int | None = None,
     auto = res is None
     if auto:
         res = pick_resolution(radius_m)
-
     while True:
-        n = nx(res)
-        sigma = min(radius_m * margin / MIN_CURVATURE_RADIUS_M, math.pi)
-        sigma_deg = math.degrees(sigma)
-
-        lat_lo = max(lat - sigma_deg, -90.0)
-        lat_hi = min(lat + sigma_deg, 90.0)
-        y_lo = int(math.floor((lat_lo + 90.0) / 180.0 * n))
-        y_hi = int(math.floor((lat_hi + 90.0 - 1e-12) / 180.0 * n))
-        y_lo = min(max(y_lo, 0), n - 1)
-        y_hi = min(max(y_hi, 0), n - 1)
-        rows = y_hi - y_lo + 1
-
-        pole_in_cap = (abs(lat) + sigma_deg) >= 90.0
-        if pole_in_cap:
-            cells = polar_cap_cells(lat, lon, sigma, res, y_lo, y_hi)
-            if auto and res > 0 and len(cells) > max_cover:
-                res -= 1
-                continue
-            return res, cells
-        else:
-            sin_ratio = math.sin(sigma) / max(math.cos(math.radians(lat)), 1e-15)
-            dlam_deg = math.degrees(math.asin(min(sin_ratio, 1.0)))
-            cell_w = 360.0 / n
-            span = min(int(math.ceil(2.0 * dlam_deg / cell_w)) + 2, n)
-            lo_x = int(math.floor(((lon - dlam_deg + 180.0) % 360.0) / 360.0 * n))
-
-        if auto and res > 0 and rows * span > max_cover:
+        coarsen = auto and res > 0
+        cells = cap_covers(lat, lon, radius_m, res, margin,
+                           max_cover if coarsen else None)[0]
+        # a finite cover holds at least the center's cell: empty means
+        # over budget
+        if coarsen and not len(cells):
             res -= 1
             continue
-
-        cells: list[int] = []
-        for y in range(y_lo, y_hi + 1):
-            cells.extend(y * n + ((lo_x + i) % n) for i in range(span))
-        return res, sorted(set(cells))
-
-
-def cover_min_exterior_distance(lat: float, lon: float, radius_m: float) -> float:
-    """Lower bound on the geodesic distance from (lat, lon) to any point
-    *outside* ``cell_cover(lat, lon, radius_m)`` — by construction the
-    cover contains the full geodesic disk, so the bound is ``radius_m``.
-
-    Exposed for the kNN ring-closure argument: after searching a cover of
-    radius R and finding >= k candidates with k-th distance <= R, no
-    uncovered point can beat the k-th candidate.
-    """
-    return radius_m
+        return res, sorted(cells.tolist())

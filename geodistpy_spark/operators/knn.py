@@ -1,85 +1,62 @@
-"""kNN queries: density-seeded cell-cover search with exact re-rank.
+"""kNN queries: one density-seeded cover join plus one guaranteed fallback.
 
 Engine rewrite of the reference's ``geodesic_knn`` (distance.py:463-540:
-full scan + argpartition top-k) into a cover-prefiltered search with a
-ring-closure guarantee:
+full scan + argpartition top-k) as two exact passes in ONE lazy plan,
+both seeded by :func:`candidate_histogram` (exact per-cell candidate
+counts on a 64x64 grid; pass ``hist=`` to reuse it across joins):
 
-    a cover of radius R contains ALL points within geodesic distance R
-    (grid cover math is conservative) => if >= k candidates are found at
-    distance <= R, no uncovered point can displace the top k.
+1. Density pass. A per-query radius ``r`` from local histogram density,
+   its cap cover at the join resolution (empty past ``COVER_BUDGET``
+   cells), one cover equi-join. A query is CLOSED when >= k joined
+   candidates have haversine <= ``CLOSE_FRAC * r``: those lie within
+   geodesic ``r`` (haversine/geodesic stays in [0.9954, 1.0058] on every
+   registered ellipsoid) and the cover holds every point within ``r``,
+   so its top-k joined rows are exact.
+2. Fallback for every open query. The smallest square block of
+   histogram cells around the query holding >= k candidates bounds the
+   k-th distance by ``R`` (:func:`_fallback_radius_np`). One join on the
+   cover of ``R`` ranks candidates by haversine in SQL; only rows within
+   ``RANK_SLACK`` of the k-th haversine reach the exact kernel.
 
-Round-1 design ran up to 5 driver-synchronized rounds (cache +
-localCheckpoint + isEmpty per round ~ 10+ Spark jobs); this version is
-a FIXED 3-phase plan built lazily as one DAG:
-
-  0. one aggregation over candidates -> coarse per-cell count histogram,
-     collected driver-side (bounded: <= 4^HIST_RES cells) and turned into
-     an integral image. Also yields the candidate total for the k <= n
-     validation (reference distance.py:520-522). Callers issuing many
-     joins against one candidate table precompute this once with
-     ``candidate_histogram`` and pass ``hist=`` — the join then runs a
-     single candidate scan.
-  1. per-query search radius from LOCAL density (expanding block sums on
-     the integral image, vectorized in one pandas UDF) -> variable-radius
-     TIERED cover join -> window top-k; a query closes when it has k
-     in-disk neighbors (ring closure). Tiers: each query covers at the
-     finest of {res, res-2, res-4} whose cover fits max_cover_cells
-     (tier encoded into the join key, cell*32+tier), so sparse/oceanic
-     queries search 16x-larger disks with coarse cells instead of
-     falling through to the crossJoin; candidates emit one ancestor key
-     per tier.
-  2. unclosed queries retry at ``growth`` x radius (same candidate-side
-     exchange: Spark reuses the shuffle).
-  3. stragglers (typically none) fall back to an exact broadcast
-     cross-join, so termination and exactness are unconditional.
-
-Phases 2/3 see only queries that phase 1/2 could not close; at uniform
-density the per-query radius closes ~99% in phase 1. One driving action
-executes the whole lazy union; the small per-phase top-k outputs are
-cached (the nondeterministic refine fence blocks Catalyst subtree
-dedup — without the caches the multi-consumer DAG re-executes phases).
+Nothing is cached: the open-query aggregate reads the pass-1 join a
+second time (deterministic SQL up to the refine UDF), so a long-lived
+session keeps no relation per call.
 
 Ordering contract matches the reference: ascending exact distance, ties
 broken by candidate id when ``c_id`` is given (stable; reference argsort
 is index-stable, distance.py:533-537), else by (lat, lon).
-
-Scale notes (100 TB): the histogram is a map-side-combined agg on an
-int key (4^6 distinct values) — one cheap pass; the cover join
-broadcasts the exploded query side (the candidate table is never
-hash-partitioned by cell — see docs/SCALE.md skew evidence), with
-optional salting for the forced-shuffle regime; per-query covers are
-bounded by ``max_cover_cells`` regardless of how sparse a region is
-(unbounded-radius queries are caught by phase 3 instead of exploding
-the cover).
 """
 
 from __future__ import annotations
 
 import math
-from functools import lru_cache
+from functools import lru_cache, partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import grid
-from ..constants import unit_factor
+from ..constants import resolve_ellipsoid, unit_factor
 from ..functions.expressions import cell_id_col, great_circle_m, haversine_m
 from ..functions.udfs import vincenty_udf
 
 EARTH_AREA_M2 = 5.10072e14
 GLOBE_M = 2.1e7
 HIST_RES = 6  # 64 x 64 = 4096 cells; dense int64 grid is 32 KB driver-side
+COVER_BUDGET = 4096  # pass-1 cover cells per query; larger covers go to the fallback
+# haversine/geodesic lies in [0.9954, 1.0058] (tests/test_operators.py):
+CLOSE_FRAC = 0.99  # haversine <= 0.99 r  =>  geodesic <= r
+HAV_SLACK = 1.01  # geodesic <= r  =>  haversine <= 1.01 r
+RANK_SLACK = 1.0201  # haversine > 1.0201 H_k  =>  geodesic > the k-th geodesic
 
 
 @lru_cache(maxsize=128)
 def _valid_coords(lat: str, lon: str):
     """Rows with non-null, non-NaN, in-range coordinates (NaN fails
-    ``between`` and null propagates to null — both drop under filter).
-    Cached per column-name pair: Column trees are immutable and the
-    builder's py4j chatter is pure driver overhead per call."""
+    ``between``, null propagates). Cached: Column trees are immutable and
+    building one is pure py4j overhead per call."""
     return (
         F.col(lat).between(-90.0, 90.0) & F.col(lon).between(-180.0, 180.0)
         & ~F.isnan(lat) & ~F.isnan(lon)
@@ -88,60 +65,53 @@ def _valid_coords(lat: str, lon: str):
 
 def candidate_histogram_from_layout(path: str) -> tuple[np.ndarray, int]:
     """(counts[n,n], total) from a :func:`~geodistpy_spark.sources.io.
-    write_cell_partitioned` layout WITHOUT scanning any data: per-cell
-    row counts come from the parquet FOOTER metadata of each hive
-    partition directory (``cell_pK=<cell>``), summed file by file.
-
-    Partition cells coarser than HIST_RES spread their count uniformly
-    over their HIST_RES descendants (finer ones roll up) — the kNN
-    radius estimator only needs a density GUESS; phases 2/3 correct any
-    error. This is the zero-cost path for repeated knn_join calls
-    against a written corpus: pass the result via ``hist=`` and each
-    join runs exactly ONE candidate scan (the join itself).
+    write_cell_partitioned` layout without a Spark job. A hive partition
+    (``cell_pK=<cell>``) at or finer than HIST_RES adds its parquet
+    FOOTER row counts to its ancestor cell; a coarser one reads only its
+    fine-cell column (``cell_rN``), so every HIST_RES cell keeps its
+    exact count, as :func:`knn_join`'s fallback radius requires. Pass
+    the result via ``hist=`` and each join runs no histogram aggregation.
     """
+    import glob
     import os
     import re
 
     import pyarrow.parquet as pq
 
     n = grid.nx(HIST_RES)
-    counts = np.zeros((n, n), dtype=np.int64)
-    pat = re.compile(r"^cell_p(\d+)=(\d+)$")
+    counts = np.zeros(n * n, dtype=np.int64)
     for entry in sorted(os.listdir(path)):
-        m = pat.match(entry)
+        m = re.match(r"^cell_p(\d+)=(\d+)$", entry)
         if not m:
             continue
         p_res, cell = int(m.group(1)), int(m.group(2))
-        rows = 0
-        pdir = os.path.join(path, entry)
-        for f in os.listdir(pdir):
-            if f.endswith(".parquet"):
-                rows += pq.ParquetFile(os.path.join(pdir, f)).metadata.num_rows
-        if rows == 0:
-            continue
-        pn = grid.nx(p_res)
-        py, px = divmod(cell, pn)
-        if p_res <= HIST_RES:
-            k = n // pn  # each coarse cell covers a k x k block
-            counts[py * k:(py + 1) * k, px * k:(px + 1) * k] += rows // (k * k)
-            # remainder to the block corner so totals stay exact
-            counts[py * k, px * k] += rows - (rows // (k * k)) * k * k
-        else:
-            s = pn // n
-            counts[py // s, px // s] += rows
+        for f in glob.glob(os.path.join(path, entry, "*.parquet")):
+            pf = pq.ParquetFile(f)
+            if p_res >= HIST_RES:
+                res, cells, rows = p_res, np.array([cell]), pf.metadata.num_rows
+            else:
+                col = next(c for c in pf.schema_arrow.names if re.match(r"^cell_r\d+$", c))
+                res, cells, rows = int(col[6:]), pf.read(columns=[col]).column(0).to_numpy(), 1
+                if res < HIST_RES:
+                    raise ValueError(f"{f}: {col} is coarser than res {HIST_RES}")
+            y, x = np.divmod(cells, grid.nx(res))
+            s = res - HIST_RES
+            counts += np.bincount((y >> s) * n + (x >> s), minlength=n * n) * rows
+    counts = counts.reshape(n, n)
     return counts, int(counts.sum())
 
 
 def candidate_histogram(candidates: DataFrame, c_lat: str = "lat",
                         c_lon: str = "lon",
                         max_map_partitions: int = 1024) -> tuple[np.ndarray, int]:
-    """(counts[n,n], total) — the coarse density histogram knn_join seeds
-    its per-query radii from, from ONE aggregation over the candidates.
+    """(counts[n,n], total) — the exact per-cell candidate counts
+    knn_join seeds its per-query radii and its fallback radius from,
+    from ONE aggregation over the candidates.
 
     Compute this once and pass it to repeated :func:`knn_join` /
-    :func:`geodesic_knn` calls via ``hist=`` so each join runs a single
-    candidate scan (the join itself) instead of two. Invalid-coordinate
-    rows are excluded, matching knn_join's own candidate filter.
+    :func:`geodesic_knn` calls via ``hist=`` so no join re-aggregates the
+    candidates. Invalid-coordinate rows are excluded, matching
+    knn_join's own candidate filter.
 
     Two physical strategies, identical counts:
 
@@ -215,19 +185,18 @@ def _radius_estimator_np(counts: np.ndarray, k: int, r_cap_m: float):
 
     Expands square blocks on an integral image until >= 2k candidates are
     inside, converts the local density to the radius of a disk expected
-    to hold 2k, then pads 1.5x. Clamped to [1 km, r_cap_m]; phases 2/3
-    correct any under-estimate, so this only has to be a good guess.
+    to hold 2k, then pads 1.5x. Clamped to [1 km, r_cap_m]; the fallback
+    pass answers any query this under-estimates, so it only has to be a
+    good guess.
     """
     n = counts.shape[0]
     # integral image with a zero row/col: block sums in O(1)
-    ii = np.zeros((n + 1, n + 1), dtype=np.int64)
-    np.cumsum(np.cumsum(counts, axis=0), axis=1, out=ii[1:, 1:])
+    ii = np.pad(np.cumsum(np.cumsum(counts, axis=0), axis=1), ((1, 0), (1, 0)))
     cell_h_m = 180.0 / n * 110_600.0
     target = 2 * k
 
     def _est(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
-        x = np.clip((np.mod(lo + 180.0, 360.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-        y = np.clip(((la + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
+        y, x = np.divmod(grid.cell_id_np(la, lo, HIST_RES), n)
         cnt = np.zeros(len(la), dtype=np.int64)
         blk = np.zeros(len(la), dtype=np.int64)
         done = np.zeros(len(la), dtype=bool)
@@ -250,220 +219,77 @@ def _radius_estimator_np(counts: np.ndarray, k: int, r_cap_m: float):
     return _est
 
 
-def _radius_estimator_udf(counts: np.ndarray, k: int, r_cap_m: float):
-    """Pandas UDF wrapper over :func:`_radius_estimator_np`."""
+def _fallback_radius_np(counts: np.ndarray, k: int, a: float, f: float):
+    """Numpy closure (la, lo) -> a radius (meters) holding >= k candidates.
+
+    Finds the smallest square block of histogram cells around the
+    query's cell (longitude wrapping) that counts >= k candidates. Every
+    point of the block is reachable along the query's parallel by at
+    most ``dlam`` and then along a meridian by at most ``dphi``; both
+    arcs have radius of curvature <= ``M = a / sqrt(1 - e^2)``, so
+    ``R = M * (dphi + cos(phi_q) * dlam)`` bounds the geodesic distance
+    to the k-th nearest candidate. Exact only if ``counts`` counts every
+    candidate in its own cell.
+    """
+    n = counts.shape[0]
+    # integral image of 3 side-by-side copies: wrapping block sums
+    ii = np.pad(np.cumsum(np.cumsum(np.tile(counts, (1, 3)), axis=0), axis=1),
+                ((1, 0), (1, 0)))
+    m = a / math.sqrt(1.0 - f * (2.0 - f))
+
+    def _radius(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
+        y, x = np.divmod(grid.cell_id_np(la, lo, HIST_RES), n)
+        s = np.full(len(la), n - 1)  # the whole grid holds all >= k
+        for t in range(n - 2, -1, -1):  # descending: the last hit is the smallest
+            y0 = np.maximum(y - t, 0); y1 = np.minimum(y + t + 1, n)
+            x0 = x + n - t; x1 = x0 + min(2 * t + 1, n)
+            c = ii[y1, x1] - ii[y0, x1] - ii[y1, x0] + ii[y0, x0]
+            s = np.where(c >= k, t, s)
+        lat_lo = -90.0 + 180.0 * np.maximum(y - s, 0) / n
+        lat_hi = -90.0 + 180.0 * np.minimum(y + s + 1, n) / n
+        dphi = np.radians(np.maximum(la - lat_lo, lat_hi - la))
+        dlam = np.radians(np.minimum((s + 1) * 360.0 / n, 180.0))
+        return m * (dphi + np.cos(np.radians(la)) * dlam)
+
+    return _radius
+
+
+def _seed_udf(counts: np.ndarray, k: int, r_cap_m: float, res: int, ellipsoid):
+    """Pandas UDF: (lat, lon) -> struct<r, cells, fcells>: the pass-1
+    radius and its cover at ``res`` (empty past ``COVER_BUDGET``), and
+    the fallback cover at ``HIST_RES``, in ONE Python stage."""
     est = _radius_estimator_np(counts, k, r_cap_m)
+    fallback = _fallback_radius_np(counts, k, *resolve_ellipsoid(ellipsoid))
+    cover = partial(grid.cap_covers, res=res, max_cells=COVER_BUDGET)
 
-    @F.pandas_udf(T.DoubleType())
-    def _r_est(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(est(lat.to_numpy(dtype=np.float64),
-                             lon.to_numpy(dtype=np.float64)))
-
-    return _r_est
-
-
-def _tiers(res: int) -> list[int]:
-    """Cover resolution tiers, fine -> coarse: dense-region queries cover
-    at ``res`` (the density-derived join resolution); sparse/oceanic
-    queries whose disks would blow the cell budget there fall back to
-    4x / 16x coarser cells instead of falling through to the exact
-    crossJoin. Tier + cell share ONE join key: ``cell * 32 + tier_res``."""
-    return sorted({res, max(res - 2, 0), max(res - 4, 0)}, reverse=True)
-
-
-@lru_cache(maxsize=128)
-def _tier_key(lat_col: str, lon_col: str, t: int):
-    # cached like cell_id_col: same immutable-Column-tree argument
-    return cell_id_col(lat_col, lon_col, t) * 32 + t
-
-
-def _cover_cells_var_udf(res: int, max_cells: int, margin: float = 1.002):
-    """Pandas UDF: (lat, lon, radius_m) -> array<long> of TIER-ENCODED
-    cover cells (``cell * 32 + tier_res``) — per-row radius variant of
-    radius._cover_cells_udf, same conservative spherical-cap bounding-box
-    construction, per-row tier selection.
-
-    Each row tries the tiers fine -> coarse and emits the first cover
-    that fits ``max_cells`` (pole-containing caps at fine res can emit
-    tens of thousands of cells; a 16x-coarser tier holds a 16x-larger
-    disk in the same budget). Rows that fit NO tier get an EMPTY cover —
-    the query then finds no in-disk candidates, stays open, and phase 3
-    answers it exactly; cost stays bounded, correctness unconditional."""
-    cover = _cover_cells_np(res, max_cells, margin)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cover(lat: pd.Series, lon: pd.Series, radius_m: pd.Series) -> pd.Series:
-        return pd.Series(cover(lat.to_numpy(dtype=np.float64),
-                               lon.to_numpy(dtype=np.float64),
-                               radius_m.to_numpy(dtype=np.float64)))
-
-    return _cover
-
-
-def _seed_cover_udf(counts: np.ndarray, k: int, r_cap_m: float,
-                    res: int, max_cells: int):
-    """Pandas UDF: (lat, lon) -> struct<r double, cells array<long>> —
-    the density-derived phase-1 radius AND its tier-encoded cover in
-    ONE Python stage (the r5 shape ran the estimator UDF and the cover
-    UDF as two ArrowEvalPython operators: two JVM->Python round trips
-    and two operator builds per call for 200-row query tables)."""
-    est = _radius_estimator_np(counts, k, r_cap_m)
-    cover = _cover_cells_np(res, max_cells)
-    schema = T.StructType([
-        T.StructField("r", T.DoubleType()),
-        T.StructField("cells", T.ArrayType(T.LongType())),
-    ])
-
-    @F.pandas_udf(schema)
+    @F.pandas_udf("r double, cells array<bigint>, fcells array<bigint>")
     def _seed(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
         la = lat.to_numpy(dtype=np.float64)
         lo = lon.to_numpy(dtype=np.float64)
         r = est(la, lo)
-        return pd.DataFrame({"r": r, "cells": cover(la, lo, r)})
+        fcells = grid.cap_covers(la, lo, fallback(la, lo), HIST_RES)
+        return pd.DataFrame({"r": r, "cells": cover(la, lo, r), "fcells": fcells})
 
-    return _seed
-
-
-def _cover_cells_np(res: int, max_cells: int, margin: float = 1.002):
-    """Numpy closure (la, lo, radius_m) -> list of tier-encoded cover
-    cell arrays (see :func:`_cover_cells_var_udf` for semantics)."""
-    tiers = _tiers(res)
-
-    def _cover(la: np.ndarray, lo: np.ndarray, radius_m: np.ndarray) -> list:
-        sigma = np.minimum(radius_m * margin
-                           / grid.MIN_CURVATURE_RADIUS_M, np.pi)
-        sigma_deg = np.degrees(sigma)
-        pole = (np.abs(la) + sigma_deg) >= 90.0
-        geom = {}
-        for t in tiers:
-            n = grid.nx(t)
-            cell_w = 360.0 / n
-            lat_lo = np.maximum(la - sigma_deg, -90.0)
-            lat_hi = np.minimum(la + sigma_deg, 90.0)
-            y_lo = np.clip(np.floor((lat_lo + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-            y_hi = np.clip(np.floor((lat_hi + 90.0 - 1e-12) / 180.0 * n), 0, n - 1).astype(np.int64)
-            with np.errstate(invalid="ignore"):
-                ratio = np.sin(sigma) / np.maximum(np.cos(np.radians(la)), 1e-15)
-            dlam = np.degrees(np.arcsin(np.minimum(ratio, 1.0)))
-            span = np.minimum(np.ceil(2.0 * dlam / cell_w).astype(np.int64) + 2, n)
-            span = np.where(pole | (sigma >= np.pi * 0.999), n, span)
-            lo_x = np.floor(np.mod(lo - dlam + 180.0, 360.0) / 360.0 * n).astype(np.int64)
-            lo_x = np.where(pole, 0, lo_x)
-            geom[t] = (n, y_lo, y_hi, span, lo_x)
-        empty = np.empty(0, dtype=np.int64)
-        out = []
-        for i in range(len(la)):
-            cells = empty
-            for t in tiers:
-                n, y_lo, y_hi, span, lo_x = geom[t]
-                if pole[i]:
-                    pc = np.asarray(grid.polar_cap_cells(
-                        float(la[i]), float(lo[i]), float(sigma[i]), t,
-                        int(y_lo[i]), int(y_hi[i])), dtype=np.int64)
-                    if len(pc) <= max_cells:
-                        cells = pc * 32 + t
-                        break
-                    continue
-                if (y_hi[i] - y_lo[i] + 1) * span[i] > max_cells:
-                    continue
-                ys = np.arange(y_lo[i], y_hi[i] + 1, dtype=np.int64)
-                xs = (lo_x[i] + np.arange(span[i], dtype=np.int64)) % n
-                cells = (ys[:, None] * n + xs[None, :]).ravel() * 32 + t
-                break
-            out.append(cells)
-        return out
-
-    return _cover
-
-
-def _topk_in_radius(qr: DataFrame, cand: DataFrame, k: int, res: int,
-                    ellipsoid, exact: bool,
-                    q_id: str, c_lat: str, c_lon: str,
-                    order_tail, salt: int | None, out: str,
-                    max_cover_cells: int) -> DataFrame:
-    """Variable-radius cover join + per-query top-k with closure count.
-
-    ``qr`` carries (q_id, __qlat, __qlon, __r); output adds ``out``
-    (meters), __rn (rank) and __cnt (in-disk candidates, capped at
-    window evaluation) — a query is CLOSED iff __cnt >= k. A ``__cells``
-    column, when present, is a precomputed tier-encoded cover (the
-    fused phase-1 seed UDF emits it next to __r) and skips the cover
-    UDF here.
-    """
-    if "__cells" in qr.columns:
-        q = qr.withColumn("__cell", F.explode("__cells")).drop("__cells")
-    else:
-        cov = _cover_cells_var_udf(res, max_cover_cells)
-        q = qr.withColumn("__cell", F.explode(cov("__qlat", "__qlon", "__r")))
-
-    if salt and salt > 1:
-        q = q.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        c = cand.withColumn("__salt", F.pmod(F.hash(F.col(c_lat), F.col(c_lon)), F.lit(salt)))
-        join_keys = ["__cell", "__salt"]
-    else:
-        c = cand
-        join_keys = ["__cell"]
-
-    joined = q.join(c, on=join_keys, how="inner")
-    hav = haversine_m("__qlat", "__qlon", c_lat, c_lon)
-    if exact:
-        # conservative codegen prefilter (see radius._prefilter_margin_m
-        # for the haversine-not-AL rationale): hav > __r * 1.01 + 5 km
-        # is provably outside the disk — those rows (the cover box's
-        # corners) never reach the Arrow kernel
-        joined = joined.filter(hav <= F.col("__r") * 1.01 + 5_000.0)
-        d = vincenty_udf(ellipsoid, once=True)(F.col("__qlat"), F.col("__qlon"),
-                                               F.col(c_lat), F.col(c_lon))
-        joined = joined.withColumn(out, d).filter(F.col(out) <= F.col("__r"))
-    else:
-        # approximate mode: haversine band decision — the AL tree only
-        # evaluates (short-circuited) on the boundary band inside the
-        # pushed join predicate (no subexpression elimination there);
-        # the output column evaluates once in the projection
-        d = great_circle_m("__qlat", "__qlon", c_lat, c_lon)
-        keep = (hav <= F.col("__r") * 0.99 - 5_000.0) | (
-            (hav <= F.col("__r") * 1.01 + 5_000.0) & (d <= F.col("__r")))
-        joined = joined.filter(keep).withColumn(out, d)
-    w = Window.partitionBy(q_id).orderBy(F.col(out).asc(), *order_tail)
-    wc = Window.partitionBy(q_id)
-    # one select instead of drop + 2x withColumn: each DataFrame op is a
-    # full analysis round trip (~10-20 ms at local[32]) paid per build,
-    # and this runs twice per knn_join
-    keep = [c for c in joined.columns if c not in ("__cell", "__salt")]
-    return joined.select(
-        *keep,
-        F.row_number().over(w).alias("__rn"),
-        F.count(F.lit(1)).over(wc).alias("__cnt"),
-    )
+    # an evaluate-once fence, as in vincenty_udf(once=True): filters that
+    # Catalyst infers on the struct's fields would otherwise run it twice
+    return _seed.asNondeterministic()
 
 
 def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
              metric: str = "meter", ellipsoid="WGS-84", exact: bool = True,
              q_id: str = "query_id", q_lat: str = "q_lat", q_lon: str = "q_lon",
              c_lat: str = "lat", c_lon: str = "lon", c_id: str | None = None,
-             r0_m: float | None = None, growth: float = 6.0,
-             max_cover_cells: int = 4096,
-             salt: int | None = None, out: str = "dist",
-             hist: tuple[np.ndarray, int] | None = None,
-             stats: dict | None = None) -> DataFrame:
+             out: str = "dist", hist: tuple[np.ndarray, int] | None = None) -> DataFrame:
     """Many-to-many kNN join: for every query row, its k nearest
     candidates by exact geodesic distance (``exact=False``: great-circle).
 
-    See module docstring for the 3-phase plan. ``r0_m`` overrides the
-    density-derived per-query radius with a constant. ``c_id`` gives the
+    See the module docstring for the two-pass plan. ``c_id`` gives the
     deterministic tie-break column (recommended; matches the reference's
-    index-stable ordering). ``hist`` is an optional precomputed
-    :func:`candidate_histogram` — pass it when issuing many joins against
-    the same candidate table so each call runs a single candidate scan.
+    index-stable ordering). ``hist``: a precomputed
+    :func:`candidate_histogram` of these candidates, for repeated joins.
 
-    Candidate rows with null/NaN/out-of-range coordinates are ignored
-    (they can never be a nearest neighbor; unfiltered they would rank by
-    null distances in the phase-3 fallback and crash the histogram).
-
-    ``stats``: pass a dict to receive the per-phase closed-result
-    DataFrames (keys phase1/phase2) for population introspection — after
-    the main action they count from cache, so phase populations cost one
-    cheap job each (phase3 = total - phase1 - phase2).
+    Candidate and query rows with null/NaN/out-of-range coordinates are
+    ignored: such a query yields no rows.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -476,135 +302,82 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
             f"k={k} exceeds candidate count {n_cand} (reference contract: "
             "distance.py:520-522)")
 
-    order_tail = [F.col(c_id).asc()] if c_id else [F.col(c_lat).asc(), F.col(c_lon).asc()]
-
     # join resolution from the candidate-weighted mean density (the radius
     # a typical query needs); covers stay ~3x3 for in-distribution queries
     n_h = grid.nx(HIST_RES)
-    occupied = counts[counts > 0]
-    if r0_m is None and occupied.size:
-        # density each CANDIDATE sees (weighted by count) -> typical r
-        cell_area = EARTH_AREA_M2 / (n_h * n_h)  # coarse mean; fine for a log2 pick
-        mean_density = float((occupied.astype(np.float64) ** 2).sum()) / (
-            occupied.sum() * cell_area)
-        r_typ = 1.5 * math.sqrt(2.0 * k / (math.pi * mean_density))
-    else:
-        r_typ = r0_m if r0_m is not None else 100_000.0
-    r_typ = min(max(r_typ, 1_000.0), GLOBE_M)
-    res = grid.pick_resolution(r_typ)
-    # radius cap: the COARSEST tier bounds how large a disk still fits in
-    # max_cover_cells — sparse/oceanic queries get a 16x-larger search
-    # radius than the fine tier alone would allow before phase 3
-    tiers = _tiers(res)
-    span_cap = max(int(math.sqrt(max_cover_cells)), 3)
-    r_cap = min(span_cap / 2.0 * (2.0e7 / grid.nx(min(tiers))), GLOBE_M)
+    occupied = counts[counts > 0].astype(np.float64)
+    mean_density = float((occupied ** 2).sum()) / (
+        occupied.sum() * EARTH_AREA_M2 / (n_h * n_h))
+    r_typ = 1.5 * math.sqrt(2.0 * k / (math.pi * mean_density))
+    res = grid.pick_resolution(min(max(r_typ, 1_000.0), GLOBE_M))
+    # 30 join cells: the radius of a ~64 x 64-cell (COVER_BUDGET) cover
+    # at the equator
+    r_cap = min(30 * 2.0e7 / grid.nx(res), GLOBE_M)
 
-    # invalid/null query coordinates yield NO rows for that query (the
-    # SQL-consistent analog of the reference's coordinate validation —
-    # unfiltered they would rank candidates by NaN distances)
+    seed = _seed_udf(counts, k, r_cap, res, ellipsoid)
     qr = queries.select(
-        F.col(q_id),
-        F.col(q_lat).alias("__qlat"),
-        F.col(q_lon).alias("__qlon"),
-    ).filter(
-        F.col("__qlat").between(-90.0, 90.0) & F.col("__qlon").between(-180.0, 180.0)
-        & ~F.isnan("__qlat") & ~F.isnan("__qlon")
-    )
-    if r0_m is not None:
-        qr = qr.withColumn("__r", F.lit(min(float(r0_m), r_cap)))
-    else:
-        # fused seed: radius estimate + phase-1 cover in ONE Python
-        # stage (two ArrowEvalPython operators before); _topk_in_radius
-        # picks the __cells column up and skips its own cover UDF
-        seed = _seed_cover_udf(counts, k, r_cap, res, max_cover_cells)
-        qr = qr.withColumn("__rc", seed("__qlat", "__qlon")).select(
-            q_id, "__qlat", "__qlon",
-            F.col("__rc.r").alias("__r"),
-            F.col("__rc.cells").alias("__cells"))
-    # each phase's output feeds BOTH the result union and the next
-    # phase's open-set; the nondeterministic refine UDF blocks Catalyst
-    # subtree dedup, so cache the (small: O(queries x k)) intermediates
-    # to keep each phase single-execution
-    qr = qr.cache()
+        F.col(q_id), F.col(q_lat).alias("__qlat"), F.col(q_lon).alias("__qlon"),
+    ).filter(_valid_coords("__qlat", "__qlon")).select(
+        q_id, "__qlat", "__qlon", seed("__qlat", "__qlon").alias("__s"))
 
-    # candidate rows carry ONE tier-encoded ancestor key per tier (the
-    # join stays a single-key equi-join; coarse-tier probes only match
-    # for the sparse queries that chose that tier)
-    cand = candidates.withColumn(
-        "__cell", F.explode(F.array(*[_tier_key(c_lat, c_lon, t) for t in tiers])))
-    drop_cols = ["__rn", "__cnt", "__r", "__qlat", "__qlon"]
-
-    # phase 1: density-seeded radius
-    p1 = _topk_in_radius(qr, cand, k, res, ellipsoid, exact,
-                         q_id, c_lat, c_lon, order_tail, salt, out,
-                         max_cover_cells).filter(F.col("__rn") <= k).cache()
-    closed1 = p1.filter(F.col("__cnt") >= k).drop(*drop_cols)
-    # open set = queries with < k in-disk rows (incl. ZERO rows, which
-    # never appear in p1 — hence the left join, not a semi-join)
-    # p1s/p2s are at most one row per query — the same small-by-contract
-    # side the cover join already broadcasts. An explicit broadcast hint
-    # keeps the open-set left joins off the SortMergeJoin path Catalyst
-    # picks from the cached relations' unknown stats (each SMJ costs two
-    # exchanges + sorts, i.e. two more sequential AQE waves per phase).
-    p1s = p1.filter(F.col("__rn") == 1).select(q_id, F.col("__cnt").alias("__c1"))
-    qr2 = (
-        qr.drop("__cells")  # phase-1 cover is stale once __r grows
-        .join(F.broadcast(p1s), on=q_id, how="left")
-        .filter(F.coalesce(F.col("__c1"), F.lit(0)) < k)
-        # one select = drop("__c1") + the __r growth withColumn
-        .select(q_id, "__qlat", "__qlon",
-                F.least(F.col("__r") * growth, F.lit(r_cap)).alias("__r"))
-    ).cache()  # consumed by BOTH phase 2 and the phase-3 open-set join
-
-    # phase 2: growth x radius for the unclosed tail (same candidate-side
-    # exchange as phase 1 -> ReusedExchange, no second scan)
-    p2 = _topk_in_radius(qr2, cand, k, res, ellipsoid, exact,
-                         q_id, c_lat, c_lon, order_tail, salt, out,
-                         max_cover_cells).filter(F.col("__rn") <= k).cache()
-    closed2 = p2.filter(F.col("__cnt") >= k).drop(*drop_cols)
-    p2s = p2.filter(F.col("__rn") == 1).select(q_id, F.col("__cnt").alias("__c2"))
-
-    # phase 3: exact fallback for stragglers (broadcast the tiny query
-    # side; unconditional correctness)
-    qr3 = (
-        qr2.join(F.broadcast(p2s), on=q_id, how="left")
-        .filter(F.coalesce(F.col("__c2"), F.lit(0)) < k).drop("__c2")
-    )
+    hav = haversine_m("__qlat", "__qlon", c_lat, c_lon)
     if exact:
-        d3 = vincenty_udf(ellipsoid, once=True)(F.col("__qlat"), F.col("__qlon"),
-                                                F.col(c_lat), F.col(c_lon))
+        dist = vincenty_udf(ellipsoid, once=True)(
+            F.col("__qlat"), F.col("__qlon"), F.col(c_lat), F.col(c_lon))
     else:
-        d3 = great_circle_m("__qlat", "__qlon", c_lat, c_lon)
-    w3 = Window.partitionBy(q_id).orderBy(F.col(out).asc(), *order_tail)
-    p3 = (
-        F.broadcast(qr3.drop("__r")).crossJoin(candidates)
-        .withColumn(out, d3)
-        .withColumn("__rn", F.row_number().over(w3))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn", "__qlat", "__qlon")
-    )
+        dist = great_circle_m("__qlat", "__qlon", c_lat, c_lon)
+    order_tail = [F.col(c_id).asc()] if c_id else [F.col(c_lat).asc(), F.col(c_lon).asc()]
+    w = Window.partitionBy(q_id).orderBy(F.col(out).asc(), *order_tail)
+    cols = [q_id, *(c for c in candidates.columns if c != out)]
 
-    if stats is not None:
-        stats["phase1"] = closed1
-        stats["phase2"] = closed2
-    result = closed1.unionByName(closed2).unionByName(p3)
+    def _cover_join(q: DataFrame, cells: str, cell_res: int, *q_cols) -> DataFrame:
+        q = q.select(q_id, "__qlat", "__qlon", *q_cols,
+                     F.explode(f"__s.{cells}").alias("__cell"))
+        c = candidates.withColumn("__cell", cell_id_col(c_lat, c_lon, cell_res))
+        return q.join(c, on="__cell")
+
+    def _top_k(rows: DataFrame, closed) -> DataFrame:
+        # window columns cannot sit in a filter: select, then filter
+        return (rows.withColumn(out, dist)
+                .select("*", F.row_number().over(w).alias("__rn"), closed.alias("__closed"))
+                .filter((F.col("__rn") <= k) & F.col("__closed")).select(*cols, out))
+
+    # pass 1: density-seeded radius. A query's closure count is the same
+    # in the window of its ranked rows and in the aggregate that picks
+    # the open queries, so each query is answered by exactly one pass
+    j1 = _cover_join(qr, "cells", res, F.col("__s.r").alias("__r"))
+    in_disk = hav <= F.col("__r") * CLOSE_FRAC
+    top1 = _top_k(j1.filter(hav <= F.col("__r") * HAV_SLACK),
+                  F.count_if(in_disk).over(Window.partitionBy(q_id)) >= k)
+    # ids of the closed queries: at most one row per query, broadcast
+    # like the query side
+    closed = F.broadcast(j1.filter(in_disk).groupBy(q_id).count()
+                         .filter(F.col("count") >= k).select(q_id))
+
+    # pass 2: the open queries, at the histogram-guaranteed radius
+    j2 = _cover_join(qr.join(closed, on=q_id, how="left_anti"), "fcells", HIST_RES)
+    kth = F.nth_value("__hav", k).over(Window.partitionBy(q_id).orderBy("__hav")
+                                       .rowsBetween(Window.unboundedPreceding,
+                                                    Window.unboundedFollowing))
+    top2 = _top_k(j2.withColumn("__hav", hav).withColumn("__hk", kth)
+                  .filter(F.col("__hav") <= F.col("__hk") * RANK_SLACK + 1.0),
+                  F.lit(True))
+
+    result = top1.unionByName(top2)
     return result.withColumn(out, F.col(out) * unit_factor(metric))
 
 
 def geodesic_knn(df: DataFrame, point: tuple[float, float], k: int,
                  metric: str = "meter", ellipsoid="WGS-84",
                  lat_col: str = "lat", lon_col: str = "lon",
-                 id_col: str | None = None,
-                 r0_m: float | None = None,
-                 out: str = "dist",
+                 id_col: str | None = None, out: str = "dist",
                  hist: tuple[np.ndarray, int] | None = None) -> DataFrame:
     """k nearest rows to ``point`` by exact geodesic distance, sorted
     ascending (reference contract distance.py:463-540 incl. the
     k-validation at :520-522).
 
     Thin wrapper over :func:`knn_join` with a single broadcast query row
-    — one plan, no per-round driver synchronization (round-1 version ran
-    the cover join twice per round and a full count for the seed).
+    — one plan, no per-round driver synchronization.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -616,8 +389,7 @@ def geodesic_knn(df: DataFrame, point: tuple[float, float], k: int,
     res = knn_join(
         q, df, k, metric=metric, ellipsoid=ellipsoid, exact=True,
         q_id="__q", q_lat="__la", q_lon="__lo",
-        c_lat=lat_col, c_lon=lon_col, c_id=id_col, r0_m=r0_m, out=out,
-        hist=hist,
+        c_lat=lat_col, c_lon=lon_col, c_id=id_col, out=out, hist=hist,
     )
     order = [F.col(out).asc()] + ([F.col(id_col).asc()] if id_col else [])
     return res.drop("__q").orderBy(*order)

@@ -17,7 +17,6 @@ additionally salt the probe side).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -95,46 +94,12 @@ def _prefilter_margin_m(radius_m: float) -> float:
 
 
 def _cover_cells_udf(radius_m: float, res: int):
-    """Pandas UDF: (lat, lon) -> array<long> cover cells at ``res``.
-
-    Vectorized cap-bounding-box math (same construction as
-    grid.cell_cover); the per-row list build only materializes the
-    output arrays (no per-row numerics).
-    """
-    n = 1 << res
-    sigma = min(radius_m * 1.002 / grid.MIN_CURVATURE_RADIUS_M, np.pi)
-    sigma_deg = np.degrees(sigma)
-    cell_w = 360.0 / n
+    """Pandas UDF: (lat, lon) -> array<long> cover cells at ``res``
+    (:func:`grid.cap_covers`)."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _cover(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la = lat.to_numpy()
-        lo = lon.to_numpy()
-        lat_lo = np.maximum(la - sigma_deg, -90.0)
-        lat_hi = np.minimum(la + sigma_deg, 90.0)
-        y_lo = np.clip(np.floor((lat_lo + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-        y_hi = np.clip(np.floor((lat_hi + 90.0 - 1e-12) / 180.0 * n), 0, n - 1).astype(np.int64)
-        pole = (np.abs(la) + sigma_deg) >= 90.0
-        with np.errstate(invalid="ignore"):
-            ratio = np.sin(sigma) / np.maximum(np.cos(np.radians(la)), 1e-15)
-        dlam = np.degrees(np.arcsin(np.minimum(ratio, 1.0)))
-        span = np.minimum(np.ceil(2.0 * dlam / cell_w).astype(np.int64) + 2, n)
-        span = np.where(pole, n, span)
-        lo_x = np.floor(np.mod(lo - dlam + 180.0, 360.0) / 360.0 * n).astype(np.int64)
-        lo_x = np.where(pole, 0, lo_x)
-        out = []
-        for i in range(len(la)):
-            if pole[i]:
-                # per-row spans near the pole (grid.polar_cap_cells) —
-                # full 2^res rows would explode fine-res polar covers
-                out.append(np.asarray(grid.polar_cap_cells(
-                    float(la[i]), float(lo[i]), sigma, res,
-                    int(y_lo[i]), int(y_hi[i])), dtype=np.int64))
-                continue
-            ys = np.arange(y_lo[i], y_hi[i] + 1, dtype=np.int64)
-            xs = (lo_x[i] + np.arange(span[i], dtype=np.int64)) % n
-            out.append((ys[:, None] * n + xs[None, :]).ravel())
-        return pd.Series(out)
+        return pd.Series(grid.cap_covers(lat.to_numpy(), lon.to_numpy(), radius_m, res))
 
     return _cover
 
@@ -144,7 +109,6 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
                 q_id: str = "query_id", q_lat: str = "q_lat", q_lon: str = "q_lon",
                 c_lat: str = "lat", c_lon: str = "lon",
                 res: int | None = None, exact: bool = True,
-                broadcast_queries: bool | None = None,
                 salt: int | None = None, out: str = "dist") -> DataFrame:
     """Many-to-many radius join: every (query, candidate) pair with
     geodesic distance <= radius (boundary inclusive).
@@ -154,10 +118,8 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
     can sit in 1 cover cell only, but covers of ONE query never repeat a
     cell — no dedup needed) -> exact refine.
 
-    ``broadcast_queries``: force/forbid broadcasting the exploded query
-    cover (default: let Catalyst/AQE decide). ``salt``: replicate the
-    query side salt-ways and split candidate rows among salts — for
-    dense-cell skew beyond what AQE skew-join handles.
+    ``salt``: replicate the query side salt-ways and split candidate rows
+    among salts — for dense-cell skew beyond what AQE skew-join handles.
 
     Polar note: pole-containing caps get PER-ROW longitude spans
     (grid.polar_cap_cells) — full rows only where the cap genuinely
@@ -185,11 +147,6 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
         join_keys = ["__cell", "__salt"]
     else:
         join_keys = ["__cell"]
-
-    if broadcast_queries is True:
-        q = F.broadcast(q)
-    elif broadcast_queries is False:
-        c = F.broadcast(c)
 
     joined = q.join(c, on=join_keys, how="inner")
     if exact:

@@ -148,9 +148,9 @@ class TestDocumentsIO:
 
 class TestLayoutHistogram:
     def test_metadata_histogram_matches_scan(self, spark, tmp_path):
-        # footer-metadata histogram == scan-based histogram in TOTAL, and
+        # layout histogram == scan-based histogram cell by cell, and
         # knn_join(hist=metadata) returns the same neighbors as the
-        # scan-seeded join (estimator errors are corrected by phases 2/3)
+        # scan-seeded join
         import numpy as np
 
         from geodistpy_spark.operators import (
@@ -166,12 +166,9 @@ class TestLayoutHistogram:
         counts, total = candidate_histogram_from_layout(path)
         s_counts, s_total = candidate_histogram(df)
         assert total == s_total == 4000
-        # coarse spread: block sums must agree exactly with the scan at
-        # the partition resolution (res 4 -> 16x16 blocks over the 64 grid)
-        k = counts.shape[0] // 16
-        a = counts.reshape(16, k, 16, k).sum(axis=(1, 3))
-        b = s_counts.reshape(16, k, 16, k).sum(axis=(1, 3))
-        assert (a == b).all()
+        # res-4 partitions are coarser than the 64 x 64 grid: their
+        # fine-cell column still gives every cell its exact count
+        assert (counts == s_counts).all()
         q = spark.createDataFrame(
             [(0, 45.0, 15.0), (1, 55.0, -5.0)],
             "query_id long, q_lat double, q_lon double")

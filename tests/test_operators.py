@@ -159,7 +159,7 @@ class TestRadius:
         assert "ATAN" not in exact_plan.upper()
         knn_plan = knn_join(q, c, 1, c_id="cid", exact=True) \
             ._jdf.queryExecution().optimizedPlan().toString()
-        # knn phase-3 fallback legitimately projects AL when exact=False
+        # knn's gc mode legitimately projects AL when exact=False
         # only; exact mode must be ATAN-free end to end
         assert "ATAN" not in knn_plan.upper()
         gc_plan = radius_join(q, c, 100_000.0, exact=False) \
@@ -358,9 +358,10 @@ class TestKnn:
         assert (pd_a[key].values == pd_b[key].values).all()
         assert np.allclose(pd_a.dist.values, pd_b.dist.values)
 
-    def test_knn_join_hist_skips_candidate_scan(self, spark, places, monkeypatch):
+    def test_knn_join_hist_skips_candidate_scan(self, spark, places, places_pd,
+                                                 monkeypatch):
         # with hist= the join must not re-aggregate the candidate table
-        # (poisoned to prove it) and stats= exposes phase populations
+        # (poisoned to prove it)
         from geodistpy_spark.operators import candidate_histogram
         from geodistpy_spark.operators import knn as KN
 
@@ -372,18 +373,21 @@ class TestKnn:
         monkeypatch.setattr(KN, "candidate_histogram", _boom)
         q = spark.createDataFrame([(1, 48.0, 2.0)],
                                   "query_id long, q_lat double, q_lon double")
-        stats = {}
-        out = KN.knn_join(q, places, 3, c_id="place_id", hist=hist, stats=stats)
-        total = out.count()
-        assert total == 3
-        p1, p2 = stats["phase1"].count(), stats["phase2"].count()
-        assert p1 + p2 <= total
+        got = KN.knn_join(q, places, 3, c_id="place_id", hist=hist).toPandas()
+        d = K.geodesic_inverse(np.full(len(places_pd), 48.0),
+                               np.full(len(places_pd), 2.0),
+                               places_pd.lat.values, places_pd.lon.values)
+        assert np.allclose(np.sort(got.dist.values), np.sort(d)[:3], atol=1e-6)
 
-    def test_knn_join_polar_cover_capped_routes_phase3(self, spark):
-        # a pole-adjacent query whose cover would blow past
-        # max_cover_cells gets an EMPTY cover and must still come back
-        # exact via the phase-3 fallback
+    def test_knn_join_polar_cover_capped_routes_phase3(self, spark, monkeypatch):
+        # a pole-adjacent query whose pass-1 cover exceeds the cell
+        # budget (zero here) gets an EMPTY cover and must still come back
+        # exact via the fallback pass
         import pandas as pd
+
+        from geodistpy_spark.operators import knn as KN
+
+        monkeypatch.setattr(KN, "COVER_BUDGET", 0)
         rng = np.random.default_rng(7)
         n = 400
         cand_lat = rng.uniform(82.0, 90.0, n)
@@ -392,14 +396,39 @@ class TestKnn:
             pd.DataFrame({"cid": np.arange(n), "lat": cand_lat, "lon": cand_lon}))
         q = spark.createDataFrame([(1, 89.9, 10.0)],
                                   "query_id long, q_lat double, q_lon double")
-        got = knn_join(q, cand, 5, c_id="cid", max_cover_cells=4).toPandas()
+        seed = KN._seed_udf(np.ones((64, 64), np.int64), 5, 1e6, 10, "WGS-84")
+        s = q.select(seed("q_lat", "q_lon").alias("s")).first().s
+        assert s.cells == [] and len(s.fcells) > 0  # the budget reaches the UDF
+        got = KN.knn_join(q, cand, 5, c_id="cid").toPandas()
         d = K.geodesic_inverse(np.full(n, 89.9), np.full(n, 10.0),
                                cand_lat, cand_lon)
         assert np.allclose(np.sort(got.dist.values), np.sort(d)[:5], atol=1e-6)
 
+    def test_knn_join_leaves_no_persistent_rdds(self, spark, places):
+        # a long-lived session must not accumulate cached relations per
+        # call
+        jsc = spark.sparkContext._jsc
+        before = len(jsc.getPersistentRDDs())
+        for lat, k in ((48.0, 3), (-30.0, 4)):
+            q = spark.createDataFrame([(1, lat, 2.0)],
+                                      "query_id long, q_lat double, q_lon double")
+            assert knn_join(q, places, k, c_id="place_id").count() == k
+        assert len(jsc.getPersistentRDDs()) == before
+
+    def test_knn_join_plan_has_no_cross_join(self, spark, places):
+        # the sparse-straggler query is answered by the fallback cover
+        # join, never by a nested-loop or cartesian cross join
+        q = spark.createDataFrame([(1, -40.0, -140.0)],
+                                  "query_id long, q_lat double, q_lon double")
+        qe = knn_join(q, places, 40, c_id="place_id")._jdf.queryExecution()
+        plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        assert "CartesianProduct" not in plans
+        assert "BroadcastNestedLoopJoin" not in plans
+        assert "Join Cross" not in plans
+
     def test_knn_join_sparse_straggler_phase3(self, spark, places, places_pd):
         # a query in the middle of the Pacific with k larger than any
-        # phase-1/2 disk plausibly holds -> must still return exact top-k
+        # pass-1 disk plausibly holds -> must still return exact top-k
         queries = spark.createDataFrame([(1, -40.0, -140.0)],
                                         "query_id long, q_lat double, q_lon double")
         k = 40
@@ -409,6 +438,76 @@ class TestKnn:
                                np.full(len(places_pd), -140.0),
                                places_pd.lat.values, places_pd.lon.values)
         assert np.allclose(np.sort(got.dist.values), np.sort(d)[:k], atol=1e-6)
+
+
+class TestKnnBounds:
+    """The two distance bounds knn_join's exactness rests on (numpy only)."""
+
+    @staticmethod
+    def _pairs(rng, n):
+        # 0.1 m .. 16,000 km, random azimuths; poles and the antimeridian
+        # as explicit origins
+        lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
+        lon = rng.uniform(-180, 180, n)
+        lat[: n // 10] = rng.choice([-90.0, 90.0], n // 10)
+        lon[n // 10: n // 5] = rng.choice([-180.0, 180.0], n // 10)
+        d = 10 ** rng.uniform(-1, np.log10(1.6e7), n)
+        la2, lo2, _ = K.vincenty_direct(lat, lon, rng.uniform(0, 360, n), d)
+        return lat, lon, la2, lo2
+
+    @pytest.mark.parametrize("ellipsoid", ["WGS-84", "Clarke (1880)"])
+    def test_close_frac_haversine_implies_geodesic(self, ellipsoid):
+        # haversine <= CLOSE_FRAC * r  =>  geodesic <= r  =>  haversine
+        # <= HAV_SLACK * r, for every r; RANK_SLACK covers the whole
+        # haversine/geodesic ratio spread
+        from geodistpy_spark.constants import resolve_ellipsoid
+        from geodistpy_spark.operators import knn as KN
+
+        la1, lo1, la2, lo2 = self._pairs(np.random.default_rng(11), 200_000)
+        g = K.geodesic_inverse(la1, lo1, la2, lo2, *resolve_ellipsoid(ellipsoid))
+        ratio = K.haversine(la1, lo1, la2, lo2) / g
+        assert ratio.min() >= KN.CLOSE_FRAC, ratio.min()
+        assert ratio.max() <= KN.HAV_SLACK, ratio.max()
+        assert ratio.min() * KN.RANK_SLACK > ratio.max()
+
+    @pytest.mark.parametrize("ellipsoid", ["WGS-84", "Clarke (1880)"])
+    def test_fallback_radius_bounds_kth_geodesic(self, ellipsoid):
+        from geodistpy_spark import grid as G
+        from geodistpy_spark.constants import resolve_ellipsoid
+        from geodistpy_spark.operators import knn as KN
+
+        a, f = resolve_ellipsoid(ellipsoid)
+        rng = np.random.default_rng(5)
+        n_h = G.nx(KN.HIST_RES)
+        m = 1500
+        cl = rng.uniform(-70, 70, (5, 2))
+        which = rng.integers(0, 5, m)
+        sets = {
+            "clustered": (np.clip(cl[which, 0] + rng.normal(0, 1, m), -90, 90),
+                          cl[which, 1] + rng.normal(0, 1, m)),
+            "uniform": (np.degrees(np.arcsin(rng.uniform(-1, 1, m))),
+                        rng.uniform(-180, 180, m)),
+            "polar": (rng.uniform(80, 90, m) * rng.choice([-1, 1], m),
+                      rng.uniform(-180, 180, m)),
+            "antimeridian": (rng.uniform(-60, 60, m),
+                             rng.uniform(175, 185, m)),
+        }
+        q_la = np.concatenate([rng.uniform(-90, 90, 60), [90.0, -90.0, 0.0, 45.0]])
+        q_lo = np.concatenate([rng.uniform(-180, 180, 60), [0.0, 0.0, 180.0, -180.0]])
+        for name, (la, lo) in sets.items():
+            lo = (lo + 180.0) % 360.0 - 180.0
+            counts = np.bincount(G.cell_id_np(la, lo, KN.HIST_RES),
+                                 minlength=n_h * n_h).reshape(n_h, n_h)
+            # the queries nearest the candidates are the tight cases
+            qa = np.concatenate([q_la, np.minimum(la[:40] + 0.01, 90.0)])
+            qo = np.concatenate([q_lo, lo[:40]])
+            for k in (1, 7, 40):
+                radius = KN._fallback_radius_np(counts, k, a, f)(qa, qo)
+                for i in range(len(qa)):
+                    d = K.geodesic_inverse(np.full(m, qa[i]), np.full(m, qo[i]),
+                                           la, lo, a, f)
+                    kth = np.partition(d, k - 1)[k - 1]
+                    assert kth <= radius[i], (name, k, qa[i], qo[i], kth, radius[i])
 
 
 class TestPipLeftJoin:
