@@ -736,15 +736,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return hit.select("cand_id", "poly_id")
 
     def q_point_in_polygon_rel(spark, sf_dir):
-        # the relational (no-driver-collect) strategy must produce the
-        # broadcast path's exact result — same oracle SQL gates both
+        # kept as its own key so the contract's key set stays fixed:
+        # the same single plan as q_point_in_polygon, same oracle SQL
         from geodistpy_spark.sources.fixtures import ensure_default_fixtures
 
         paths = ensure_default_fixtures()
         polys = spark.read.parquet(paths["polygons"])
         pts = _cand_points(spark, sf_dir)
-        hit = point_in_polygon_join(pts, polys, lat_col="lat", lon_col="lon",
-                                    strategy="relational")
+        hit = point_in_polygon_join(pts, polys, lat_col="lat", lon_col="lon")
         return hit.select("cand_id", "poly_id")
 
     def q_polygon_area(spark, sf_dir):

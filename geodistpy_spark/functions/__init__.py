@@ -14,7 +14,6 @@ from .udfs import (
     destination_udf,
     interpolate_udf,
     karney_udf,
-    point_in_polygon_udf,
     vincenty_full_udf,
     vincenty_udf,
 )
@@ -23,5 +22,5 @@ __all__ = [
     "bearing_sphere_deg", "cell_id_col", "cell_x", "cell_y",
     "great_circle_m", "haversine_m", "normalize_lon", "parent_cell_col",
     "to_unit", "validate_coords", "destination_udf", "interpolate_udf",
-    "karney_udf", "point_in_polygon_udf", "vincenty_full_udf", "vincenty_udf",
+    "karney_udf", "vincenty_full_udf", "vincenty_udf",
 ]

@@ -158,36 +158,3 @@ def interpolate_udf(n_points: int, ellipsoid="WGS-84"):
 
     return _interpolate
 
-
-def point_in_polygon_udf(ring_lat, ring_lon):
-    """Pandas UDF: ray-cast point-in-polygon against ONE polygon whose
-    vertices are closed over (broadcast in the task closure).
-
-    ``ring_lat/ring_lon`` are vertex lists in order (not closed).
-    Longitude handling: the test runs in an antimeridian-safe frame —
-    vertices and points are unwrapped relative to the polygon's first
-    vertex, so rings crossing ±180 work.
-    """
-    import numpy as np
-
-    vlat = np.asarray(ring_lat, dtype=np.float64)
-    vlon = np.asarray(ring_lon, dtype=np.float64)
-    ref = vlon[0]
-    vlon_u = np.mod(vlon - ref + 180.0, 360.0) - 180.0
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        plat = lat.to_numpy()
-        plon = np.mod(lon.to_numpy() - ref + 180.0, 360.0) - 180.0
-        inside = np.zeros(len(plat), dtype=bool)
-        x1, y1 = vlon_u, vlat
-        x2, y2 = np.roll(vlon_u, -1), np.roll(vlat, -1)
-        for i in range(len(vlat)):
-            xi, yi, xj, yj = x1[i], y1[i], x2[i], y2[i]
-            cond = (yi > plat) != (yj > plat)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (xj - xi) * (plat - yi) / (yj - yi) + xi
-            inside ^= cond & (plon < xint)
-        return pd.Series(inside)
-
-    return _pip

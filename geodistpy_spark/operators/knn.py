@@ -102,65 +102,23 @@ def candidate_histogram_from_layout(path: str) -> tuple[np.ndarray, int]:
 
 
 def candidate_histogram(candidates: DataFrame, c_lat: str = "lat",
-                        c_lon: str = "lon",
-                        max_map_partitions: int = 1024) -> tuple[np.ndarray, int]:
+                        c_lon: str = "lon") -> tuple[np.ndarray, int]:
     """(counts[n,n], total) — the exact per-cell candidate counts
     knn_join seeds its per-query radii and its fallback radius from,
-    from ONE aggregation over the candidates.
+    from ONE map-side-combined SQL groupBy over the candidates (one tiny
+    exchange of at most 4^HIST_RES rows per partition).
 
     Compute this once and pass it to repeated :func:`knn_join` /
     :func:`geodesic_knn` calls via ``hist=`` so no join re-aggregates the
     candidates. Invalid-coordinate rows are excluded, matching
     knn_join's own candidate filter.
-
-    Two physical strategies, identical counts:
-
-    - scans with at most ``max_map_partitions`` partitions run a
-      SINGLE-stage mapInArrow pass: each task bincounts its partition
-      into a dense 4^HIST_RES vector and emits only the occupied
-      (cell, count) rows; the driver sums the partials. No exchange, no
-      AQE wave — measured 0.9 -> 0.5 s per call at local[32] (and this
-      runs on every un-``hist``-ed knn_join).
-    - wider scans (where per-partition partial rows could swamp the
-      driver) fall back to the map-side-combined groupBy + one tiny
-      exchange — the 100 TB shape.
     """
     n = grid.nx(HIST_RES)
-    if candidates.rdd.getNumPartitions() <= max_map_partitions:
-        src = candidates.filter(_valid_coords(c_lat, c_lon)).select(
-            F.col(c_lat).alias("__la"), F.col(c_lon).alias("__lo"))
-
-        def _partials(batches):
-            import pyarrow as pa
-            dense = np.zeros(n * n, np.int64)
-            for b in batches:
-                la = b.column(0).to_numpy(zero_copy_only=False)
-                lo = b.column(1).to_numpy(zero_copy_only=False)
-                y = np.clip(np.floor((la + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-                x = np.clip(np.floor(np.mod(lo + 180.0, 360.0) / 360.0 * n),
-                            0, n - 1).astype(np.int64)
-                dense += np.bincount(y * n + x, minlength=n * n)
-            # ONE packed row per task (n*n int64 little-endian, 32 KB at
-            # HIST_RES): collecting (cell, cnt) pairs materialized tens of
-            # thousands of pyspark Rows per call through the pickle->Row
-            # path (~0.3 s driver-side at local[32]); a binary blob per
-            # task is 32 rows and a numpy sum
-            if dense.any():
-                yield pa.record_batch(
-                    [pa.array([dense.astype("<i8").tobytes()], pa.binary())],
-                    names=["h"])
-
-        counts = np.zeros(n * n, dtype=np.int64)
-        for r in src.mapInArrow(_partials, "h binary").collect():
-            counts += np.frombuffer(r["h"], dtype="<i8")
-        counts = counts.reshape(n, n)
-        return counts, int(counts.sum())
     # lean cell expression: the _valid_coords filter already rejects
     # null/NaN/Inf/out-of-range rows, so the full cell_id_col CASE
     # guards are redundant here and only inflate per-call analysis +
-    # codegen time (this runs as a fresh plan on every un-histed
-    # knn_join; measured ~0.3 s of driver planning saved at local[32]).
-    # For in-range finite coords the math is identical to cell_id_col.
+    # codegen time. For in-range finite coords the math is identical
+    # to cell_id_col.
     y = F.least(F.greatest(F.floor((F.col(c_lat) + 90.0) / 180.0 * n),
                            F.lit(0)), F.lit(n - 1))
     x = F.least(F.greatest(
@@ -171,12 +129,10 @@ def candidate_histogram(candidates: DataFrame, c_lat: str = "lat",
         .groupBy((y * n + x).cast("long").alias("__c"))
         .count().collect()
     )
-    counts = np.zeros((n, n), dtype=np.int64)
+    counts = np.zeros(n * n, dtype=np.int64)
     for r in rows:
-        if r["__c"] is None:
-            continue
-        y, x = divmod(int(r["__c"]), n)
-        counts[y, x] = r["count"]
+        counts[r["__c"]] = r["count"]
+    counts = counts.reshape(n, n)
     return counts, int(counts.sum())
 
 

@@ -1,16 +1,18 @@
 """Point-in-polygon spatial join + raster<->vector zonal assignment.
 
-Polygon sets are small by contract (the broadcast side — north rule:
-"broadcast of small polygon sets"); points/tiles are the big side.
-
-Plan shape:
-  1. driver: per-polygon conservative cell cover (cells intersecting the
-     ring's antimeridian-unwrapped bbox) at a shared resolution,
-  2. broadcast equi-join (cell -> candidate poly_id) against the points'
-     cell ids — integer-key join, no geometry at this stage,
-  3. exact refine: vectorized ray-cast inside an Arrow batch, polygons
-     closed over by the UDF (grouped by poly_id inside each batch so the
-     edge loop is over <= ~20 edges, vectorized over points).
+One plan for every polygon-set size, batch or streaming:
+  1. ring prep in ``mapInPandas`` over the polygon table (:func:`_prep_ring`
+     per ring): unwrap the ring, close polar caps, pick a per-ring cover
+     resolution and classify its conservative cell cover — no
+     driver-side polygon state,
+  2. one (res, cell) equi-join of each point's ancestor cells against
+     the exploded cover pairs, which carry the ring arrays — an
+     integer-key join, no geometry at this stage. Spark's planner
+     broadcasts the pair side when it is small (the north rule's
+     "broadcast of small polygon sets") and shuffles it otherwise,
+  3. exact refine: one Arrow UDF ray-casts each candidate against the
+     ring on its row, grouped by poly_id inside each batch so the edge
+     loop is over one ring's edges, vectorized over its points.
 
 Semantics: planar even-odd ray-cast in an unwrapped (lon, lat) frame per
 polygon — rings crossing the antimeridian are unwrapped relative to
@@ -34,38 +36,6 @@ from ..functions.expressions import cell_id_col
 
 def _unwrap(lons: np.ndarray, ref: float) -> np.ndarray:
     return np.mod(lons - ref + 180.0, 360.0) - 180.0
-
-
-def _prep_polygon(vlat: np.ndarray, vlon: np.ndarray):
-    """Unwrap ring; close polar caps through the pole.
-
-    Returns (vlat, vlon_unwrapped, ref_lon).
-    """
-    ref = float(vlon[0])
-    u = _unwrap(vlon, ref)
-    # cumulative unwrap so consecutive vertices never jump > 180
-    for i in range(1, len(u)):
-        d = u[i] - u[i - 1]
-        if d > 180.0:
-            u[i:] -= 360.0
-        elif d < -180.0:
-            u[i:] += 360.0
-    # pole-encircling detection: total longitudinal winding of the closed
-    # ring is ±360 for a cap, 0 for an ordinary polygon
-    closing = np.mod(u[0] - u[-1] + 180.0, 360.0) - 180.0
-    winding = (u[-1] - u[0]) + closing
-    if abs(winding) > 180.0:  # polar cap: close through the nearer pole
-        pole = 90.0 if vlat.mean() > 0 else -90.0
-        # continue the winding to the pole so the two added meridional
-        # edges seal the cap (the lat==pole edge is skipped by ray-cast)
-        u_end = u[-1] + closing
-        vlat = np.concatenate([vlat, [pole, pole]])
-        u = np.concatenate([u, [u_end, u[0]]])
-    return vlat, u, ref
-
-
-def _ring_bbox(vlat: np.ndarray, vlon_u: np.ndarray):
-    return float(vlat.min()), float(vlat.max()), float(vlon_u.min()), float(vlon_u.max())
 
 
 def _map_lon_into_ring(plon_u: np.ndarray, ring_lon_min: float) -> np.ndarray:
@@ -166,7 +136,7 @@ def _cover_entries(vlat: np.ndarray, vlon_u: np.ndarray, ref: float,
     marks cells proven fully inside (their points skip the per-point
     refine)."""
     n = 1 << res
-    la0, la1, lo0, lo1 = _ring_bbox(vlat, vlon_u)
+    la0, la1, lo0, lo1 = vlat.min(), vlat.max(), vlon_u.min(), vlon_u.max()
     pad_lat = 180.0 / n
     y0 = max(int((la0 - pad_lat + 90.0) / 180.0 * n), 0)
     y1 = min(int((la1 + pad_lat + 90.0) / 180.0 * n), n - 1)
@@ -184,121 +154,86 @@ def _cover_entries(vlat: np.ndarray, vlon_u: np.ndarray, ref: float,
     return ys[keep].astype(np.int64) * n + xs[keep], status[keep] == 1
 
 
-def polygon_cover_pairs(polys: list[dict]):
-    """[(res, cell_id, poly_id, full)] candidate pairs, one classified
-    cover per polygon at its own resolution (cells a bit smaller than
-    the ring bbox — a shared resolution would let the largest ring, e.g.
-    a polar cap, blow up every small ring's cover slop).
+def _prep_ring(lat, lon):
+    """One ring's prep: unwrap it, close a polar cap through the pole,
+    pick its cover resolution and classify its cover at it.
 
-    ``polys``: [{poly_id, lat: ndarray, lon: ndarray}].
+    Returns (res, vlat, vlon_u, ref, cells, full): the ring's vertices in
+    its unwrapped frame (``ref`` = first-vertex longitude) and
+    :func:`_cover_entries` at ``res``.
     """
-    prepped = {}
-    pairs = []
-    for p in polys:
-        vlat, vlon_u, ref = _prep_polygon(np.asarray(p["lat"], float), np.asarray(p["lon"], float))
-        pid = p["poly_id"]
-        prepped[pid] = (vlat, vlon_u, ref)
-        la0, la1, lo0, lo1 = _ring_bbox(vlat, vlon_u)
-        res = _poly_res(max(la1 - la0, lo1 - lo0))
-        cells, full = _cover_entries(vlat, vlon_u, ref, res)
-        pairs.extend(
-            (res, int(c), pid, bool(f)) for c, f in zip(cells, full))
-    return pairs, prepped
+    vlat = np.asarray(lat, dtype=float)
+    ref = float(lon[0])
+    u = _unwrap(np.asarray(lon, dtype=float), ref)
+    # cumulative unwrap so consecutive vertices never jump > 180
+    for i in range(1, len(u)):
+        d = u[i] - u[i - 1]
+        if d > 180.0:
+            u[i:] -= 360.0
+        elif d < -180.0:
+            u[i:] += 360.0
+    # pole-encircling detection: total longitudinal winding of the closed
+    # ring is ±360 for a cap, 0 for an ordinary polygon
+    closing = np.mod(u[0] - u[-1] + 180.0, 360.0) - 180.0
+    winding = (u[-1] - u[0]) + closing
+    if abs(winding) > 180.0:  # polar cap: close through the nearer pole
+        pole = 90.0 if vlat.mean() > 0 else -90.0
+        # continue the winding to the pole so the two added meridional
+        # edges seal the cap (the lat==pole edge is skipped by ray-cast)
+        u_end = u[-1] + closing
+        vlat = np.concatenate([vlat, [pole, pole]])
+        u = np.concatenate([u, [u_end, u[0]]])
+    # one resolution per ring, ~16 cells across its bbox (a shared one
+    # would let the largest ring, e.g. a polar cap, blow up every small
+    # ring's cover slop). Finer cells classify more of the cover as
+    # provably interior (no per-point refine) and prune outside cells
+    # tighter (fewer false candidates through the join)
+    span = max(float(np.ptp(vlat)), float(np.ptp(u)), 1e-3)
+    res = min(max(int(math.floor(math.log2(360.0 / span))) + 4, 0), grid.MAX_RES)
+    cells, full = _cover_entries(vlat, u, ref, res)
+    return res, vlat, u, ref, cells, full
 
 
-def _pip_refine_udf(prepped: dict):
-    """(lat, lon, poly_id, full) -> bool, vectorized even-odd ray-cast.
-
-    ``full`` rows (cover cells proven fully interior) short-circuit to
-    True without touching the edge loop — Python compute follows
-    boundary-cell rows only, while the plan stays a SINGLE candidate
-    scan (a full/boundary union split would re-scan and re-join the
-    whole point side under a broadcast join, where there is no
-    exchange to reuse)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _refine(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
-                full: pd.Series) -> pd.Series:
-        la = lat.to_numpy()
-        lo = lon.to_numpy()
-        pid = poly_id.to_numpy()
-        inside = full.to_numpy(dtype=bool).copy()
-        todo = ~inside
-        for p in np.unique(pid[todo]):
-            vlat, vlon_u, ref = prepped[p]
-            sel = todo & (pid == p)
-            plat = la[sel]
-            plon = _map_lon_into_ring(_unwrap(lo[sel], ref), vlon_u.min())
-            inside[sel] = _raycast(vlat, vlon_u, plat, plon)
-        return pd.Series(inside)
-
-    return _refine
+_PREP_COLS = ["poly_id", "__res", "vlat", "vlon_u", "ref", "cover", "cover_full"]
+_PREP_SCHEMA = ("poly_id long, __res int, vlat array<double>, vlon_u array<double>, "
+                "ref double, cover array<bigint>, cover_full array<boolean>")
 
 
-def _poly_res(span_deg: float) -> int:
-    """Per-polygon cover resolution: ~16 cells across the ring's bbox
-    (covers stay a few hundred cells). Finer cells buy two things at
-    once: most cover cells classify as provably-interior (points skip
-    the Python refine) and provably-outside cells prune tighter (fewer
-    false candidates through the join)."""
-    return min(max(int(math.floor(math.log2(360.0 / max(span_deg, 1e-3)))) + 4, 0),
-               grid.MAX_RES)
-
-
-_PREP_SCHEMA = T.StructType([
-    T.StructField("poly_id", T.LongType()),
-    T.StructField("__res", T.IntegerType()),
-    T.StructField("vlat", T.ArrayType(T.DoubleType())),
-    T.StructField("vlon_u", T.ArrayType(T.DoubleType())),
-    T.StructField("ref", T.DoubleType()),
-    T.StructField("cover", T.ArrayType(T.LongType())),
-    T.StructField("cover_full", T.ArrayType(T.BooleanType())),
-])
-
-
-def _prep_polygons_rel(polygons: DataFrame) -> DataFrame:
-    """Distributed polygon prep: unwrap/close each ring, pick a per-ring
-    cover resolution, and emit the conservative cell cover — one row per
-    polygon, NO driver collect (the relational analog of
-    :func:`polygon_cover_pairs`, same bbox + one-cell-pad construction).
-    """
+def _prep_polygons(polygons: DataFrame) -> DataFrame:
+    """:func:`_prep_ring` over the polygon table in ``mapInPandas``: one
+    row per usable polygon. Null rings and rings of < 3 vertices have no
+    interior and are skipped."""
     def _prep(pdfs):
         for pdf in pdfs:
-            out = {k.name: [] for k in _PREP_SCHEMA.fields}
+            rows = []
             for pid, ring in zip(pdf["poly_id"], pdf["ring"]):
                 if ring is None or len(ring) < 3:
-                    continue  # no interior — same rule as _load_polygons
-                vlat = np.asarray([v["lat"] for v in ring], float)
-                vlon = np.asarray([v["lon"] for v in ring], float)
-                vlat, u, ref = _prep_polygon(vlat, vlon)
-                la0, la1, lo0, lo1 = _ring_bbox(vlat, u)
-                res = _poly_res(max(la1 - la0, lo1 - lo0))
-                cells, full = _cover_entries(vlat, u, ref, res)
-                out["poly_id"].append(pid)
-                out["__res"].append(res)
-                out["vlat"].append(vlat.tolist())
-                out["vlon_u"].append(u.tolist())
-                out["ref"].append(ref)
-                out["cover"].append(cells.tolist())
-                out["cover_full"].append(full.tolist())
-            if out["poly_id"]:
+                    continue
+                res, vlat, u, ref, cells, full = _prep_ring(
+                    [v["lat"] for v in ring], [v["lon"] for v in ring])
+                rows.append((pid, res, vlat.tolist(), u.tolist(), ref,
+                             cells.tolist(), full.tolist()))
+            if rows:
                 # an all-skipped batch would hand Arrow empty OBJECT
                 # columns it cannot cast to list<double>
-                yield pd.DataFrame(out)
+                yield pd.DataFrame(rows, columns=_PREP_COLS)
 
     return polygons.select("poly_id", "ring").mapInPandas(_prep, _PREP_SCHEMA)
 
 
 @F.pandas_udf(T.BooleanType())
-def _pip_refine_rel_udf(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
-                        vlat: pd.Series, vlon_u: pd.Series,
-                        ref: pd.Series, full: pd.Series) -> pd.Series:
-    """Row-carried-ring variant of the even-odd ray-cast: the polygon
-    arrays arrive as columns (carried on the exploded cover-pair
-    relation), grouped by poly_id inside the batch so the edge loop
-    vectorizes over that polygon's points exactly like the broadcast
-    path. ``full`` rows short-circuit to True — same single-scan
-    rationale as :func:`_pip_refine_udf`."""
+def _pip_refine_udf(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
+                    vlat: pd.Series, vlon_u: pd.Series,
+                    ref: pd.Series, full: pd.Series) -> pd.Series:
+    """(point, ring columns, full) -> bool, vectorized even-odd ray-cast.
+
+    The ring arrays arrive as columns of the joined candidate row and
+    are grouped by poly_id inside the batch, so the edge loop vectorizes
+    over that polygon's points. ``full`` rows (cover cells proven fully
+    interior) short-circuit to True without touching the edge loop:
+    Python compute follows boundary-cell rows only, while the plan stays
+    a SINGLE candidate scan (a full/boundary union split would re-scan
+    and re-join the whole point side)."""
     la = lat.to_numpy()
     lo = lon.to_numpy()
     pid = poly_id.to_numpy()
@@ -310,43 +245,21 @@ def _pip_refine_rel_udf(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
         vla = np.asarray(vlat.iloc[first], dtype=float)
         vlo = np.asarray(vlon_u.iloc[first], dtype=float)
         rf = float(ref.iloc[first])
-        plat = la[sel]
         plon = _map_lon_into_ring(_unwrap(lo[sel], rf), vlo.min())
-        inside[sel] = _raycast(vla, vlo, plat, plon)
+        inside[sel] = _raycast(vla, vlo, la[sel], plon)
     return pd.Series(inside)
 
 
-def _no_hits(pts: DataFrame) -> DataFrame:
-    """Empty hit relation with the operator's output schema (point
-    columns + poly_id) — the degenerate result when no usable polygons
-    exist (empty table, or every ring null/<3 vertices). Without this
-    guard an empty cover set builds a zero-element F.array() whose VOID
-    element type fails analysis at the explode."""
-    return pts.where(F.lit(False)).withColumn(
-        "poly_id", F.lit(None).cast("long"))
-
-
-def _pip_join_relational(pts: DataFrame, polygons: DataFrame,
-                         lat_col: str, lon_col: str) -> DataFrame:
-    """(point rows x containing poly_id) with NO driver-side polygon
-    state: prep + cover are computed distributedly, candidates come from
-    a (res, cell) equi-join, refine reads the ring arrays off the joined
-    row. Scales to arbitrarily many polygons (the broadcast path walls at
-    the driver with ~10^5 rings).
-
-    Plan: one polygon scan (prep -> cover explode, ring arrays carried
-    on the pair rows), ONE point scan (ancestor cell per ACTIVE res —
-    the distinct-res list is the only driver action, bounded by
-    grid.MAX_RES values), one shuffle equi-join on (res, cell), Arrow
-    ray-cast refine with interior-cell rows short-circuited.
-    """
-    prepped = _prep_polygons_rel(polygons)
-    # ring arrays ride on the exploded pair relation: its shuffle volume
-    # is polygons x cover cells (never points), and carrying them here
+def _pip_hits(pts: DataFrame, polygons: DataFrame,
+              lat_col: str, lon_col: str) -> DataFrame:
+    """(point rows x containing poly_id) by the module docstring's plan:
+    one polygon scan, ONE point scan (an ancestor cell per ACTIVE res),
+    one equi-join on (res, cell), one candidate scan into the refine."""
+    prepped = _prep_polygons(polygons)
+    # ring arrays ride on the exploded pair relation: its volume is
+    # polygons x cover cells (never points), and carrying them here
     # means ONE point-side join and ONE candidate scan — a separate
-    # rings join would consume the candidate relation twice (the point
-    # scan + explode + join would re-execute; no exchange reuse
-    # materialized in the static plan)
+    # rings join would consume the candidate relation twice
     pairs = prepped.select(
         "poly_id", "__res", "vlat", "vlon_u", "ref",
         F.explode(F.arrays_zip(
@@ -354,12 +267,15 @@ def _pip_join_relational(pts: DataFrame, polygons: DataFrame,
         )).alias("__cf"),
     ).select("poly_id", "__res", "vlat", "vlon_u", "ref",
              F.col("__cf.c").alias("__cell"), F.col("__cf.f").alias("__full"))
-    # the only driver round-trip: WHICH resolutions are active (<= 26
-    # ints, metadata not data)
-    res_list = sorted(
-        r["__res"] for r in prepped.select("__res").distinct().collect())
+    # the only driver round trip: WHICH resolutions are active. One int
+    # per polygon in one single-stage job; a distinct() would add an
+    # exchange and a second job
+    res_list = sorted({r[0] for r in prepped.select("__res").collect()})
     if not res_list:
-        return _no_hits(pts)
+        # no usable ring: the empty result with the operator's schema
+        # (an empty F.array() below would fail analysis at the explode)
+        return pts.where(F.lit(False)).withColumn(
+            "poly_id", F.lit(None).cast("long"))
     cells = F.array(*[
         F.struct(F.lit(r).cast("int").alias("r"),
                  cell_id_col(lat_col, lon_col, r).alias("c"))
@@ -373,32 +289,15 @@ def _pip_join_relational(pts: DataFrame, polygons: DataFrame,
     )
     cand = ptsx.join(pairs, on=["__res", "__cell"], how="inner") \
         .drop("__res", "__cell")
-    hit = cand.filter(_pip_refine_rel_udf(
+    hit = cand.filter(_pip_refine_udf(
         F.col(lat_col), F.col(lon_col), F.col("poly_id"),
         F.col("vlat"), F.col("vlon_u"), F.col("ref"), F.col("__full")))
     return hit.drop("vlat", "vlon_u", "ref", "__full")
 
 
-def _load_polygons(polygons: DataFrame, _rows=None) -> list[dict]:
-    rows = polygons.select("poly_id", "ring").collect() if _rows is None else _rows
-    # null rings and <3-vertex rings have no interior: skip them (the
-    # relational prep applies the same rule)
-    return [
-        {
-            "poly_id": r["poly_id"],
-            "lat": np.array([v["lat"] for v in r["ring"]]),
-            "lon": np.array([v["lon"] for v in r["ring"]]),
-        }
-        for r in rows
-        if r["ring"] is not None and len(r["ring"]) >= 3
-    ]
-
-
 def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
                           lat_col: str = "lat", lon_col: str = "lon",
                           how: str = "inner",
-                          strategy: str = "auto",
-                          broadcast_max_polys: int = 512,
                           point_id_cols: list[str] | None = None) -> DataFrame:
     """Join each point to the polygon(s) containing it.
 
@@ -412,96 +311,33 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     dominant cost; without keys the nondeterministic-id + checkpoint
     fallback pins row identity against task retries).
 
-    Two physical strategies, identical results:
-
-    - ``broadcast`` — rings collected driver-side, cover pairs + refine
-      closure broadcast. Fastest for small polygon sets (the north
-      rule's case) but walls at the driver around ~10^5 rings (the
-      reference punts here entirely, docs/spatial-queries.md:286-289).
-    - ``relational`` — polygon prep, cover and refine all stay
-      distributed (no driver polygon state); per-polygon adaptive cover
-      resolution, one shuffle equi-join on (res, cell). Use for large
-      polygon sets (census tracts & co).
-    - ``auto`` (default) — probes ``limit(broadcast_max_polys + 1)`` and
-      picks.
+    One plan for every polygon-set size (see the module docstring):
+    building it runs one Spark job, the list of active cover resolutions
+    (plus the localCheckpoint above on a keyless left join); no ring is
+    collected driver-side.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"unsupported how={how!r}")
-    if strategy not in ("auto", "broadcast", "relational"):
-        raise ValueError(f"unknown strategy={strategy!r}")
-    preloaded_rows = None
-    if strategy == "auto":
-        # one limited collect serves as BOTH the size probe and (when
-        # the broadcast path wins, i.e. the common small-polygon-set
-        # case) the ring load — the r5 shape ran a limit().count() job
-        # and then a second full collect of the same rows
-        probe = polygons.select("poly_id", "ring") \
-            .limit(broadcast_max_polys + 1).collect()
-        if len(probe) <= broadcast_max_polys:
-            strategy = "broadcast"
-            preloaded_rows = probe
-        else:
-            strategy = "relational"
-
     # surrogate row id: the left join below must be per-ROW (duplicate
     # coordinates would multiply and null-valued columns never equal
-    # themselves under a join on all point columns)
-    left = how == "left"
+    # themselves under a join on all point columns). With
+    # point_id_cols the hits join back on the KEY COLUMNS THEMSELVES:
+    # no materialization and no hashed surrogate (a 64-bit hash of the
+    # key is NOT injective — at the 10^12-row scale this path exists
+    # for, birthday collisions are certain and would silently mis-assign
+    # poly_id).
     pts = points
-    if left:
-        if point_id_cols:
-            # caller names a natural key (unique per row by contract):
-            # hits join back on the KEY COLUMNS THEMSELVES, so no
-            # materialization and no hashed surrogate (a 64-bit hash of
-            # the key is NOT injective — at the 10^12-row scale this
-            # path exists for, birthday collisions are certain and
-            # would silently mis-assign poly_id). Null-safe equality:
-            # a null key component still identifies its row.
-            pass
-        else:
-            # monotonically_increasing_id is NONdeterministic: base and
-            # hit below both read this plan, and a task retry / AQE
-            # re-shuffle could assign different ids per evaluation,
-            # silently mis-joining. localCheckpoint pins one
-            # materialized assignment for both subtrees (eager: runs a
-            # job here, acceptable fallback when no natural key exists).
-            pts = pts.withColumn(
-                "__pt", F.monotonically_increasing_id()).localCheckpoint()
+    if how == "left" and not point_id_cols:
+        # monotonically_increasing_id is NONdeterministic: base and hit
+        # below both read this plan, and a task retry / AQE re-shuffle
+        # could assign different ids per evaluation, silently
+        # mis-joining. localCheckpoint pins one materialized assignment
+        # for both subtrees (eager: runs a job here, acceptable fallback
+        # when no natural key exists).
+        pts = pts.withColumn(
+            "__pt", F.monotonically_increasing_id()).localCheckpoint()
 
-    if strategy == "relational":
-        hit = _pip_join_relational(pts, polygons, lat_col, lon_col)
-    else:
-        spark = points.sparkSession
-        polys = _load_polygons(polygons, _rows=preloaded_rows)
-        pairs, prepped = polygon_cover_pairs(polys)
-        if not pairs:
-            hit = _no_hits(pts)
-        else:
-            pairs_df = spark.createDataFrame(
-                pairs,
-                schema="__res int, __cell long, poly_id long, __full boolean")
-            res_list = sorted({r for r, _, _, _ in pairs})
-            cells_arr = F.array(*[
-                F.struct(F.lit(r).cast("int").alias("r"),
-                         cell_id_col(lat_col, lon_col, r).alias("c"))
-                for r in res_list
-            ])
-            ptsx = (
-                pts.withColumn("__rc", F.explode(cells_arr))
-                .withColumn("__res", F.col("__rc.r"))
-                .withColumn("__cell", F.col("__rc.c"))
-                .drop("__rc")
-            )
-            cand = ptsx.join(F.broadcast(pairs_df), on=["__res", "__cell"],
-                             how="inner")
-            # one candidate scan; the UDF short-circuits interior-cell
-            # rows so the Python ray-cast follows polygon PERIMETER
-            # cells only
-            refine = _pip_refine_udf(prepped)
-            hit = cand.filter(
-                refine(F.col(lat_col), F.col(lon_col), F.col("poly_id"),
-                       F.col("__full"))
-            ).drop("__res", "__cell", "__full")
+    hit = _pip_hits(pts, polygons, lat_col, lon_col)
     if how == "inner":
         return hit
     if point_id_cols:
@@ -512,6 +348,7 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
         hit_k = hit.select(
             *[F.col(c).alias(a) for c, a in zip(point_id_cols, keyed)],
             "poly_id")
+        # null-safe equality: a null key component still identifies its row
         cond = functools.reduce(operator.and_, [
             F.col(c).eqNullSafe(F.col(a))
             for c, a in zip(point_id_cols, keyed)

@@ -11,7 +11,8 @@ Iceberg snapshot commits, which need jars not present here):
   ``pmod(xxhash64(key), n_chunks)`` — stable across runs and cluster
   sizes,
 - each chunk's result is written to ``out/chunk=<i>/`` and only then a
-  commit marker ``_committed_<i>.json`` is written with lineage: rows
+  commit marker ``_committed_<i>.json`` is written (to a temporary file
+  renamed onto the marker, so a marker is whole or absent) with lineage: rows
   in/out, per-partition row counts, an input fingerprint (order-
   independent hash-sum of keys), wall time,
 - a resumed run verifies the input fingerprint per chunk, skips
@@ -159,8 +160,12 @@ class CheckpointedRun:
                 "partitions": partition_metrics(written),
             }
             self._log(dict(entry, event="chunk_written"))
-            with open(self._marker(i), "w") as f:
+            # write-then-rename: a crash mid-write leaves no marker, so
+            # the chunk stays uncommitted and a resumed run recomputes it
+            tmp = self._marker(i) + ".tmp"
+            with open(tmp, "w") as f:
                 json.dump(entry, f)
+            os.replace(tmp, self._marker(i))
             self._log(dict(entry, event="chunk_committed"))
             executed.append(i)
             if fail_after_chunk is not None and i >= fail_after_chunk:

@@ -68,18 +68,18 @@ def stream_geofence(points: DataFrame, polygons: DataFrame,
     alerting shape (vehicle enters restricted area, event inside a
     service region).
 
-    The broadcast point-in-polygon path is fully STATELESS — per-row
-    cover-cell explode, broadcast equi-join against the classified
-    (res, cell) -> poly_id pairs, Arrow ray-cast refine on boundary-cell
-    rows — so it runs unchanged under ``readStream`` in append mode with
-    no watermark or state store. Zones are read once at plan time (they
-    are the broadcast side); restart the query to pick up zone edits.
+    The point-in-polygon plan is STATELESS on the point side — per-row
+    cover-cell explode, an equi-join against the zones' classified
+    (res, cell) cover pairs (a static relation, broadcast by Spark when
+    small), Arrow ray-cast refine on boundary-cell rows — so it runs
+    unchanged under ``readStream`` in append mode with no watermark or
+    state store. The zones' active cover resolutions are read once at
+    plan time; restart the query to pick up zone edits.
     """
     from ..operators.polygons import point_in_polygon_join
 
     return point_in_polygon_join(points, polygons, lat_col=lat_col,
-                                 lon_col=lon_col, how="inner",
-                                 strategy="broadcast")
+                                 lon_col=lon_col, how="inner")
 
 
 def stream_windowed_event_counts(spark: SparkSession, input_dir: str,

@@ -700,35 +700,43 @@ class TestDimwiseHaversine:
             assert abs(r.sq_value - sq2[i, j]) < 1e-9
 
 
+def _pip_brute(places, polygons) -> set:
+    """(place_id, poly_id) hits by a plain ray-cast over every point and
+    every prepped ring collected in the test (no cover, no join)."""
+    from geodistpy_spark.operators.polygons import (
+        _map_lon_into_ring,
+        _prep_ring,
+        _unwrap,
+    )
+
+    places_pd = places.toPandas()
+    exp = set()
+    for r in polygons.select("poly_id", "ring").collect():
+        if r["ring"] is None or len(r["ring"]) < 3:
+            continue
+        _, vlat, vlon_u, ref, _, _ = _prep_ring(
+            [v["lat"] for v in r["ring"]], [v["lon"] for v in r["ring"]])
+        plat = places_pd.lat.values
+        plon = _map_lon_into_ring(_unwrap(places_pd.lon.values, ref), vlon_u.min())
+        acc = np.zeros(len(plat), dtype=bool)
+        x2 = np.roll(vlon_u, -1)
+        y2 = np.roll(vlat, -1)
+        for e in range(len(vlat)):
+            xi, yi, xj, yj = vlon_u[e], vlat[e], x2[e], y2[e]
+            if yi == yj:
+                continue
+            cond = (yi > plat) != (yj > plat)
+            xint = (xj - xi) * (plat - yi) / (yj - yi) + xi
+            acc ^= cond & (plon < xint)
+        exp |= {(int(i), int(r["poly_id"])) for i in places_pd.place_id.values[acc]}
+    return exp
+
+
 class TestPolygons:
     def test_pip_vs_brute(self, places, polygons):
-        from geodistpy_spark.operators.polygons import (
-            _load_polygons,
-            _map_lon_into_ring,
-            _prep_polygon,
-            _unwrap,
-        )
-
-        places_pd = places.toPandas()
-        polys = _load_polygons(polygons)
-        exp = set()
-        for p in polys:
-            vlat, vlon_u, ref = _prep_polygon(p["lat"], p["lon"])
-            plat = places_pd.lat.values
-            plon = _map_lon_into_ring(_unwrap(places_pd.lon.values, ref), vlon_u.min())
-            acc = np.zeros(len(plat), dtype=bool)
-            x2 = np.roll(vlon_u, -1)
-            y2 = np.roll(vlat, -1)
-            for e in range(len(vlat)):
-                xi, yi, xj, yj = vlon_u[e], vlat[e], x2[e], y2[e]
-                if yi == yj:
-                    continue
-                cond = (yi > plat) != (yj > plat)
-                xint = (xj - xi) * (plat - yi) / (yj - yi) + xi
-                acc ^= cond & (plon < xint)
-            exp |= {(int(i), int(p["poly_id"])) for i in places_pd.place_id.values[acc]}
         got = point_in_polygon_join(places, polygons).select("place_id", "poly_id").toPandas()
-        assert set(zip(got.place_id.astype(int), got.poly_id.astype(int))) == exp
+        assert set(zip(got.place_id.astype(int), got.poly_id.astype(int))) \
+            == _pip_brute(places, polygons)
 
     def test_square_membership(self, spark):
         sq = spark.createDataFrame(
@@ -801,29 +809,23 @@ class TestPolygons:
         import math
 
         from geodistpy_spark.operators.polygons import (
-            _load_polygons, _map_lon_into_ring, _raycast, _unwrap,
-            polygon_cover_pairs)
+            _map_lon_into_ring, _prep_ring, _raycast, _unwrap)
 
-        polys = _load_polygons(polygons)
-        pairs, prepped = polygon_cover_pairs(polys)
-        by_pid: dict = {}
-        res_of: dict = {}
-        for res, cell, pid, full in pairs:
-            by_pid.setdefault(pid, {})[cell] = full
-            res_of[pid] = res
         g = np.linspace(0.02, 0.98, 7)
         gy, gx = np.meshgrid(g, g, indexing="ij")
         n_full = n_dropped = 0
-        for p in polys:
-            pid = int(p["poly_id"])
-            vlat, vlon_u, ref = prepped[pid]
-            n = 1 << res_of[pid]
+        for r in polygons.select("poly_id", "ring").collect():
+            pid = int(r["poly_id"])
+            res, vlat, vlon_u, ref, cells, full = _prep_ring(
+                [v["lat"] for v in r["ring"]], [v["lon"] for v in r["ring"]])
+            by_cell = dict(zip(cells.tolist(), full.tolist()))
+            n = 1 << res
             la0 = math.floor((vlat.min() + 90.0) / 180.0 * n) - 1
             la1 = math.floor((vlat.max() + 90.0) / 180.0 * n) + 1
             # x sweep: the cover's columns + 3 guard cells each side
             # (cells further out are > 1 cell from any edge; full-plane
             # candidate conservativeness is test_pip_vs_brute's job)
-            cov_x = sorted({c % n for c in by_pid[pid]})
+            cov_x = sorted({c % n for c in by_cell})
             xs_sweep = sorted({(x + d) % n for x in cov_x
                                for d in range(-3, 4)})
             for y in range(max(la0, 0), min(la1, n - 1) + 1):
@@ -835,7 +837,7 @@ class TestPolygons:
                         _map_lon_into_ring(_unwrap(plon_abs, ref),
                                            float(vlon_u.min())))
                     cell = y * n + x
-                    flag = by_pid[pid].get(cell)
+                    flag = by_cell.get(cell)
                     if flag is True:
                         n_full += 1
                         assert inside.all(), (pid, cell, "full cell leak")
@@ -909,9 +911,9 @@ class TestPolygons:
 
     def test_degenerate_polygon_inputs(self, spark):
         # empty tables, null rings, and <3-vertex rings must not crash
-        # either strategy: no interior -> no hits, left join keeps every
-        # point with null poly_id, and null/degenerate rings are skipped
-        # while valid rings in the same table still match
+        # the join: no interior -> no hits, left join keeps every point
+        # with null poly_id, and null/degenerate rings are skipped while
+        # valid rings in the same table still match
         pts = spark.createDataFrame([(1, 5.0, 5.0), (2, 0.0, 0.0)],
                                     "pid long, lat double, lon double")
         sch = "poly_id long, ring array<struct<lat:double,lon:double>>"
@@ -927,35 +929,43 @@ class TestPolygons:
         for name, (rows, want) in cases.items():
             polys = (spark.createDataFrame(rows, sch) if rows
                      else spark.createDataFrame([], sch))
-            for strat in ("broadcast", "relational"):
-                got = point_in_polygon_join(pts, polys, strategy=strat) \
-                    .select("pid", "poly_id").collect()
-                assert {(r.pid, r.poly_id) for r in got} == want, (name, strat)
+            got = point_in_polygon_join(pts, polys) \
+                .select("pid", "poly_id").collect()
+            assert {(r.pid, r.poly_id) for r in got} == want, name
             left = point_in_polygon_join(pts, polys, how="left").count()
             assert left == 2, name
 
-    def test_relational_strategy_matches_broadcast(self, places, polygons, monkeypatch):
-        # the no-driver-collect path must reproduce the broadcast path
-        # exactly across the fixture's ordinary/antimeridian/polar rings —
-        # with the driver-side loader poisoned to PROVE nothing collects
-        from geodistpy_spark.operators import polygons as P
+    def test_build_runs_only_the_resolution_job(self, spark, places, polygons):
+        # building the join collects no ring driver-side: its one eager
+        # job is the list of active cover resolutions, and the result
+        # still equals the brute-force ray-cast
+        sc = spark.sparkContext
+        sc.setJobGroup("pip-build", "point_in_polygon_join build")
+        try:
+            hit = point_in_polygon_join(places, polygons)
+            jobs = sc.statusTracker().getJobIdsForGroup("pip-build")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == 1
+        got = hit.select("place_id", "poly_id").toPandas()
+        assert set(zip(got.place_id.astype(int), got.poly_id.astype(int))) \
+            == _pip_brute(places, polygons)
 
-        exp = point_in_polygon_join(places, polygons, strategy="broadcast") \
-            .select("place_id", "poly_id").toPandas()
-
-        def _boom(df):
-            raise AssertionError("relational path collected polygons driver-side")
-
-        monkeypatch.setattr(P, "_load_polygons", _boom)
-        got = P.point_in_polygon_join(places, polygons, strategy="relational") \
-            .select("place_id", "poly_id").toPandas()
-        assert set(zip(got.place_id, got.poly_id)) \
-            == set(zip(exp.place_id, exp.poly_id))
+    def test_plan_broadcasts_small_zone_sets(self, places, polygons):
+        # the north rule's "broadcast of small polygon sets" is the
+        # planner's choice on the one plan: the fixture zones' cover
+        # pairs are broadcast, and nothing shuffles or crosses the points
+        hit = point_in_polygon_join(places, polygons)
+        hit.collect()
+        plan = hit._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        for op in ("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct"):
+            assert op not in plan, op
 
     def test_relational_many_polygons_auto_dispatch(self, spark):
-        # 10,000 polygons: auto dispatch must take the relational path
-        # (the broadcast path's driver collect is the wall this removes);
-        # 'left' keeps outside points with null poly_id
+        # 10,000 polygons on the same plan as a handful: no driver-side
+        # ring state to wall at; 'left' keeps outside points with null
+        # poly_id
         import pandas as pd
         side = 100
         polys = []
@@ -981,17 +991,27 @@ class TestPolygons:
         assert np.isnan(got[-1])
 
 
-class TestCandidateHistogramStrategies:
-    def test_map_partials_match_groupby_fallback(self, places):
-        # the single-stage mapInArrow partial-count path and the
-        # map-side-combined groupBy fallback must produce identical
-        # histograms (knn_join's radius seeding reads either)
-        import numpy as np
-
+class TestCandidateHistogram:
+    def test_counts_match_numpy_bincount(self, spark, places):
+        # exact per-cell counts (knn_join's fallback radius relies on
+        # them): rows with null, NaN or out-of-range coordinates are not
+        # counted, and lon = +-180 falls in the same cell as -180
+        from geodistpy_spark import grid
         from geodistpy_spark.operators import candidate_histogram
+        from geodistpy_spark.operators.knn import HIST_RES
 
-        fast_counts, fast_total = candidate_histogram(places)
-        slow_counts, slow_total = candidate_histogram(
-            places, max_map_partitions=0)
-        assert fast_total == slow_total
-        assert np.array_equal(fast_counts, slow_counts)
+        extra = spark.createDataFrame(
+            [(None, 1.0), (2.0, None), (float("nan"), 3.0), (4.0, float("nan")),
+             (91.0, 0.0), (-90.5, 0.0), (0.0, 180.5), (0.0, -181.0),
+             (10.0, 180.0), (10.0, -180.0), (-10.0, 180.0), (90.0, 180.0),
+             (-90.0, -180.0)], "lat double, lon double")
+        rows = places.select("lat", "lon").unionByName(extra)
+        pdf = rows.toPandas()
+        la, lo = pdf.lat.to_numpy(float), pdf.lon.to_numpy(float)
+        ok = (np.abs(la) <= 90.0) & (np.abs(lo) <= 180.0)  # False for NaN/null
+        n = grid.nx(HIST_RES)
+        want = np.bincount(grid.cell_id_np(la[ok], lo[ok], HIST_RES),
+                           minlength=n * n).reshape(n, n)
+        counts, total = candidate_histogram(rows)
+        assert total == ok.sum() == places.count() + 5
+        assert np.array_equal(counts, want)

@@ -42,6 +42,40 @@ class TestCheckpointResume:
         got = _canon(resumed.result(spark).toPandas())
         pd.testing.assert_frame_equal(got, expected)
 
+    def test_torn_marker_write_is_not_a_commit(self, spark, docs, tmp_path,
+                                               monkeypatch):
+        # a crash while the commit marker is written (half a document,
+        # then an error) must leave the chunk uncommitted: the resumed
+        # run recomputes it and the result equals an uninterrupted run
+        import json
+
+        from geodistpy_spark.plans import pipeline
+
+        ref = CheckpointedRun(str(tmp_path / "ref"), n_chunks=3)
+        ref.run(docs, _transform)
+        expected = _canon(ref.result(spark).toPandas())
+
+        real_dump = json.dump
+
+        def _torn_dump(obj, f, *args, **kwargs):
+            if "_committed_" not in getattr(f, "name", ""):
+                return real_dump(obj, f, *args, **kwargs)
+            doc = json.dumps(obj)
+            f.write(doc[:len(doc) // 2])
+            raise OSError("crash while writing the commit marker")
+
+        monkeypatch.setattr(pipeline.json, "dump", _torn_dump)
+        torn = CheckpointedRun(str(tmp_path / "torn"), n_chunks=3)
+        with pytest.raises(OSError, match="commit marker"):
+            torn.run(docs, _transform)
+        monkeypatch.undo()
+        assert torn.committed_chunks() == set()
+
+        resumed = CheckpointedRun(str(tmp_path / "torn"), n_chunks=3)
+        assert resumed.run(docs, _transform) == [0, 1, 2]
+        pd.testing.assert_frame_equal(
+            _canon(resumed.result(spark).toPandas()), expected)
+
     def test_lineage_log_has_partition_metrics(self, spark, docs, tmp_path):
         run = CheckpointedRun(str(tmp_path / "lin"), n_chunks=3)
         run.run(docs, _transform)

@@ -132,7 +132,7 @@ class TestStreaming:
         assert len(got) > 0
 
     def test_stream_geofence_matches_batch(self, spark, fixture_paths, tmp_path):
-        # geofencing = stateless broadcast PIP under readStream: the
+        # geofencing = the stateless PIP plan under readStream: the
         # streaming result over the same files must equal the batch join
         import os
         import shutil
