@@ -53,6 +53,30 @@ def resolve_ellipsoid(ellipsoid: str | tuple[float, float] = "WGS-84") -> tuple[
     return a, f
 
 
+#: absolute float allowance (meters) of a haversine value: two spellings
+#: of one point (lon +-180, any lon at a pole) are ~1e-9 m apart, not 0
+HAV_ROUND_M = 1e-6
+
+
+def hav_bounds(a: float, f: float, exact: bool = True) -> tuple[float, float]:
+    """``(inner, outer)`` with ``inner * d <= hav_a <= outer * d`` for
+    every pair of points, where ``hav_a`` is the haversine on the sphere
+    of radius ``a`` over geodetic (lat, lon) and ``d`` the geodesic
+    distance on ``(a, f)`` (``exact=False``: its Andoyer-Lambert
+    approximation), up to ``HAV_ROUND_M``.
+
+    Geodetic (lat, lon) is the Gauss map of the surface normal, and
+    every principal radius of curvature lies in ``[a(1-f)^2, a/(1-f)]``,
+    so ``(1-f) * s <= hav_a <= s / (1-f)^2``. Andoyer-Lambert's error
+    ``|AL/s - 1| <= f`` folds into both factors. A relative 1e-7 covers
+    float rounding (1e-8 at near-antipodal pairs).
+    """
+    inner, outer = 1.0 - f, 1.0 / (1.0 - f) ** 2
+    if not exact:
+        inner, outer = inner / (1.0 + f), outer / (1.0 - f)
+    return inner * (1.0 - 1e-7), outer * (1.0 + 1e-7)
+
+
 def unit_factor(metric: str) -> float:
     """Meters -> requested unit multiplier (reference: distance.py:60-83)."""
     try:

@@ -12,7 +12,7 @@ hierarchical equirectangular quad-grid natively (SURVEY.md §2.4):
 - neighbor enumeration wraps in x (antimeridian) and clamps in y
   (polar caps).
 
-Driver-side generators (:func:`cell_cover`, :func:`k_ring`) produce the
+Driver-side generators (:func:`cap_cover`, :func:`k_ring`) produce the
 small cell-id sets that get broadcast into joins; they only ever touch
 cell ids, never data rows. Cover conservativeness (every point within
 ``radius_m`` geodesic meters of the center lands in a covered cell) is
@@ -26,15 +26,9 @@ import math
 
 import numpy as np
 
-MAX_RES = 25
+from .constants import HAV_ROUND_M, WGS84_A, WGS84_F, hav_bounds
 
-# conservative meters-per-degree bounds on WGS-84:
-# meridian arc per degree ranges ~110,574 (equator) .. ~111,694 (pole);
-# using the MINIMUM means we never under-estimate the degree-span of a
-# geodesic radius.
-MIN_M_PER_DEG_LAT = 110_567.0
-# equatorial meters per degree of longitude (a * pi / 180)
-M_PER_DEG_LON_EQ = 111_319.49079327358
+MAX_RES = 25
 
 
 def nx(res: int) -> int:
@@ -183,14 +177,6 @@ def pick_resolution(radius_m: float, max_cover: int = 512) -> int:
     return min(max(r, 0), MAX_RES)
 
 
-# Smallest radius of curvature anywhere on WGS-84 is the meridional radius
-# at the equator, ~6,335,439 m. A geodesic of length d therefore subtends a
-# haversine-style central angle (on geodetic lat/lon treated as spherical)
-# of at most ~d / 6.33e6 rad; using this UNDER-estimate of the radius makes
-# the cap angle an over-estimate, i.e. the cover conservative.
-MIN_CURVATURE_RADIUS_M = 6_330_000.0
-
-
 def polar_cap_cells(lat: float, lon: float, sigma: float, res: int,
                     y_lo: int, y_hi: int) -> list[int]:
     """Cells of a pole-containing spherical cap with PER-ROW longitude
@@ -230,24 +216,25 @@ def polar_cap_cells(lat: float, lon: float, sigma: float, res: int,
     return sorted(set(cells))
 
 
-def cap_covers(lat, lon, radius_m, res: int, margin: float = 1.002,
+def cap_covers(lat, lon, sigma, res: int,
                max_cells: int | None = None) -> list[np.ndarray]:
-    """Conservative disk covers at ``res``, vectorized over points: row
-    ``i`` holds every cell containing a point within ``radius_m[i]``
-    geodesic meters of ``(lat[i], lon[i])`` (``radius_m`` may be a
-    scalar).
+    """Cap covers at ``res``, vectorized over points: row ``i`` holds
+    every cell containing a point whose geodetic (lat, lon), read as a
+    unit-sphere direction, is within angle ``sigma[i]`` (radians) of
+    ``(lat[i], lon[i])`` (``sigma`` may be a scalar; the geodesic disk of
+    radius ``r`` is in the cap of angle ``outer * r / a``, see
+    :func:`~geodistpy_spark.constants.hav_bounds`).
 
     The standard spherical-cap bounding box: lat band ±σ, lon half-width
     asin(sin σ / cos lat) when no pole is inside the cap, per-row polar
-    spans (:func:`polar_cap_cells`) otherwise — with σ = radius over the
-    *minimum* curvature radius of the ellipsoid (over-estimates the cap,
-    never under). A row whose cover exceeds ``max_cells`` gets an EMPTY
-    array instead (its box is never materialized).
+    spans (:func:`polar_cap_cells`) otherwise. A row whose cover exceeds
+    ``max_cells`` gets an EMPTY array instead (its box is never
+    materialized).
     """
-    la, lo, r = np.broadcast_arrays(*(np.atleast_1d(np.asarray(v, dtype=np.float64))
-                                      for v in (lat, lon, radius_m)))
+    la, lo, sigma = np.broadcast_arrays(*(np.atleast_1d(np.asarray(v, dtype=np.float64))
+                                          for v in (lat, lon, sigma)))
     n = nx(res)
-    sigma = np.minimum(r * margin / MIN_CURVATURE_RADIUS_M, np.pi)
+    sigma = np.minimum(sigma, np.pi)
     sigma_deg = np.degrees(sigma)
     y_lo = np.clip(np.floor((np.maximum(la - sigma_deg, -90.0) + 90.0) / 180.0 * n),
                    0, n - 1).astype(np.int64)
@@ -277,14 +264,10 @@ def cap_covers(lat, lon, radius_m, res: int, margin: float = 1.002,
     return out
 
 
-def cell_cover(lat: float, lon: float, radius_m: float, res: int | None = None,
-               margin: float = 1.002, max_cover: int = 2048) -> tuple[int, list[int]]:
-    """Conservative disk cover: every point whose geodesic distance to
-    (lat, lon) is <= radius_m lies in one of the returned cells.
-
-    Returns ``(res, sorted cell_ids)`` of the :func:`cap_covers` cover.
-    Verified empirically against brute-force geodesic distances in tests
-    (tests/test_grid.py).
+def cap_cover(lat: float, lon: float, sigma: float, res: int | None = None,
+              max_cover: int = 2048) -> tuple[int, list[int]]:
+    """``(res, sorted cell_ids)`` of the :func:`cap_covers` cover of the
+    cap of angle ``sigma`` (radians) around (lat, lon).
 
     When ``res`` is not forced by the caller, the resolution is coarsened
     until the cover fits in ``max_cover`` cells — a small polar cap
@@ -295,14 +278,23 @@ def cell_cover(lat: float, lon: float, radius_m: float, res: int | None = None,
     """
     auto = res is None
     if auto:
-        res = pick_resolution(radius_m)
+        # pick_resolution's meters are arcs of its 2e7 m half meridian
+        res = pick_resolution(sigma * 2.0e7 / math.pi)
     while True:
         coarsen = auto and res > 0
-        cells = cap_covers(lat, lon, radius_m, res, margin,
-                           max_cover if coarsen else None)[0]
+        cells = cap_covers(lat, lon, sigma, res, max_cover if coarsen else None)[0]
         # a finite cover holds at least the center's cell: empty means
         # over budget
         if coarsen and not len(cells):
             res -= 1
             continue
         return res, sorted(cells.tolist())
+
+
+def cell_cover(lat: float, lon: float, radius_m: float, res: int | None = None,
+               max_cover: int = 2048) -> tuple[int, list[int]]:
+    """Conservative WGS-84 disk cover: every point whose geodesic
+    distance to (lat, lon) is <= radius_m lies in one of the returned
+    cells (the :func:`cap_cover` of angle ``outer * radius_m / a``)."""
+    outer = hav_bounds(WGS84_A, WGS84_F)[1]
+    return cap_cover(lat, lon, (outer * radius_m + HAV_ROUND_M) / WGS84_A, res, max_cover)

@@ -3,20 +3,24 @@
 Engine rewrite of the reference's ``geodesic_knn`` (distance.py:463-540:
 full scan + argpartition top-k) as two exact passes in ONE lazy plan,
 both seeded by :func:`candidate_histogram` (exact per-cell candidate
-counts on a 64x64 grid; pass ``hist=`` to reuse it across joins):
+counts on a 64x64 grid; pass ``hist=`` to reuse it across joins).
+Both bound the distance ``d`` by the haversine ``hav`` on the sphere of
+radius ``a``: ``inner * d <= hav <= outer * d``
+(:func:`~geodistpy_spark.constants.hav_bounds`).
 
 1. Density pass. A per-query radius ``r`` from local histogram density,
    its cap cover at the join resolution (empty past ``COVER_BUDGET``
    cells), one cover equi-join. A query is CLOSED when >= k joined
-   candidates have haversine <= ``CLOSE_FRAC * r``: those lie within
-   geodesic ``r`` (haversine/geodesic stays in [0.9954, 1.0058] on every
-   registered ellipsoid) and the cover holds every point within ``r``,
-   so its top-k joined rows are exact.
+   candidates have ``hav <= inner * r``: those lie within ``r``, and
+   the cover holds every point within ``r``, so its top-k joined rows
+   are exact.
 2. Fallback for every open query. The smallest square block of
-   histogram cells around the query holding >= k candidates bounds the
-   k-th distance by ``R`` (:func:`_fallback_radius_np`). One join on the
-   cover of ``R`` ranks candidates by haversine in SQL; only rows within
-   ``RANK_SLACK`` of the k-th haversine reach the exact kernel.
+   histogram cells around the query holding >= k candidates lies within
+   central angle ``theta`` of it (:func:`_fallback_angle_np`), so the
+   k-th haversine is at most ``a * theta``. One join on the cover of
+   ``outer / inner * theta`` ranks candidates by haversine in SQL; only
+   rows within ``outer / inner`` of the k-th haversine reach the exact
+   kernel.
 
 Nothing is cached: the open-query aggregate reads the pass-1 join a
 second time (deterministic SQL up to the refine UDF), so a long-lived
@@ -38,18 +42,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import grid
-from ..constants import resolve_ellipsoid, unit_factor
-from ..functions.expressions import cell_id_col, great_circle_m, haversine_m
+from ..constants import HAV_ROUND_M, hav_bounds, resolve_ellipsoid, unit_factor
+from ..functions.expressions import great_circle_m, haversine_m
 from ..functions.udfs import vincenty_udf
+from .radius import _cover_join
 
 EARTH_AREA_M2 = 5.10072e14
 GLOBE_M = 2.1e7
 HIST_RES = 6  # 64 x 64 = 4096 cells; dense int64 grid is 32 KB driver-side
 COVER_BUDGET = 4096  # pass-1 cover cells per query; larger covers go to the fallback
-# haversine/geodesic lies in [0.9954, 1.0058] (tests/test_operators.py):
-CLOSE_FRAC = 0.99  # haversine <= 0.99 r  =>  geodesic <= r
-HAV_SLACK = 1.01  # geodesic <= r  =>  haversine <= 1.01 r
-RANK_SLACK = 1.0201  # haversine > 1.0201 H_k  =>  geodesic > the k-th geodesic
 
 
 @lru_cache(maxsize=128)
@@ -175,25 +176,24 @@ def _radius_estimator_np(counts: np.ndarray, k: int, r_cap_m: float):
     return _est
 
 
-def _fallback_radius_np(counts: np.ndarray, k: int, a: float, f: float):
-    """Numpy closure (la, lo) -> a radius (meters) holding >= k candidates.
+def _fallback_angle_np(counts: np.ndarray, k: int):
+    """Numpy closure (la, lo) -> a central angle (radians) holding >= k
+    candidates.
 
     Finds the smallest square block of histogram cells around the
     query's cell (longitude wrapping) that counts >= k candidates. Every
     point of the block is reachable along the query's parallel by at
-    most ``dlam`` and then along a meridian by at most ``dphi``; both
-    arcs have radius of curvature <= ``M = a / sqrt(1 - e^2)``, so
-    ``R = M * (dphi + cos(phi_q) * dlam)`` bounds the geodesic distance
-    to the k-th nearest candidate. Exact only if ``counts`` counts every
-    candidate in its own cell.
+    most ``dlam`` and then along a meridian by at most ``dphi``, so its
+    geodetic normal is within ``dphi + cos(phi_q) * dlam`` of the
+    query's. Exact only if ``counts`` counts every candidate in its own
+    cell.
     """
     n = counts.shape[0]
     # integral image of 3 side-by-side copies: wrapping block sums
     ii = np.pad(np.cumsum(np.cumsum(np.tile(counts, (1, 3)), axis=0), axis=1),
                 ((1, 0), (1, 0)))
-    m = a / math.sqrt(1.0 - f * (2.0 - f))
 
-    def _radius(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    def _angle(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
         y, x = np.divmod(grid.cell_id_np(la, lo, HIST_RES), n)
         s = np.full(len(la), n - 1)  # the whole grid holds all >= k
         for t in range(n - 2, -1, -1):  # descending: the last hit is the smallest
@@ -205,17 +205,20 @@ def _fallback_radius_np(counts: np.ndarray, k: int, a: float, f: float):
         lat_hi = -90.0 + 180.0 * np.minimum(y + s + 1, n) / n
         dphi = np.radians(np.maximum(la - lat_lo, lat_hi - la))
         dlam = np.radians(np.minimum((s + 1) * 360.0 / n, 180.0))
-        return m * (dphi + np.cos(np.radians(la)) * dlam)
+        return dphi + np.cos(np.radians(la)) * dlam
 
-    return _radius
+    return _angle
 
 
-def _seed_udf(counts: np.ndarray, k: int, r_cap_m: float, res: int, ellipsoid):
+def _seed_udf(counts: np.ndarray, k: int, r_cap_m: float, res: int, ellipsoid,
+              exact: bool = True):
     """Pandas UDF: (lat, lon) -> struct<r, cells, fcells>: the pass-1
     radius and its cover at ``res`` (empty past ``COVER_BUDGET``), and
     the fallback cover at ``HIST_RES``, in ONE Python stage."""
+    a, f = resolve_ellipsoid(ellipsoid)
+    inner, outer = hav_bounds(a, f, exact)
     est = _radius_estimator_np(counts, k, r_cap_m)
-    fallback = _fallback_radius_np(counts, k, *resolve_ellipsoid(ellipsoid))
+    fallback = _fallback_angle_np(counts, k)
     cover = partial(grid.cap_covers, res=res, max_cells=COVER_BUDGET)
 
     @F.pandas_udf("r double, cells array<bigint>, fcells array<bigint>")
@@ -223,8 +226,10 @@ def _seed_udf(counts: np.ndarray, k: int, r_cap_m: float, res: int, ellipsoid):
         la = lat.to_numpy(dtype=np.float64)
         lo = lon.to_numpy(dtype=np.float64)
         r = est(la, lo)
-        fcells = grid.cap_covers(la, lo, fallback(la, lo), HIST_RES)
-        return pd.DataFrame({"r": r, "cells": cover(la, lo, r), "fcells": fcells})
+        # theta >= half a histogram cell: HAV_ROUND_M is inside outer / inner
+        fcells = grid.cap_covers(la, lo, outer / inner * fallback(la, lo), HIST_RES)
+        return pd.DataFrame({"r": r, "cells": cover(la, lo, (outer * r + HAV_ROUND_M) / a),
+                             "fcells": fcells})
 
     # an evaluate-once fence, as in vincenty_udf(once=True): filters that
     # Catalyst infers on the struct's fields would otherwise run it twice
@@ -237,7 +242,8 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
              c_lat: str = "lat", c_lon: str = "lon", c_id: str | None = None,
              out: str = "dist", hist: tuple[np.ndarray, int] | None = None) -> DataFrame:
     """Many-to-many kNN join: for every query row, its k nearest
-    candidates by exact geodesic distance (``exact=False``: great-circle).
+    candidates by exact geodesic distance (``exact=False``:
+    Andoyer-Lambert great-circle on the same ellipsoid).
 
     See the module docstring for the two-pass plan. ``c_id`` gives the
     deterministic tie-break column (recommended; matches the reference's
@@ -270,27 +276,24 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
     # at the equator
     r_cap = min(30 * 2.0e7 / grid.nx(res), GLOBE_M)
 
-    seed = _seed_udf(counts, k, r_cap, res, ellipsoid)
+    seed = _seed_udf(counts, k, r_cap, res, ellipsoid, exact)
     qr = queries.select(
         F.col(q_id), F.col(q_lat).alias("__qlat"), F.col(q_lon).alias("__qlon"),
     ).filter(_valid_coords("__qlat", "__qlon")).select(
         q_id, "__qlat", "__qlon", seed("__qlat", "__qlon").alias("__s"))
 
-    hav = haversine_m("__qlat", "__qlon", c_lat, c_lon)
+    a, f = resolve_ellipsoid(ellipsoid)
+    inner, outer = hav_bounds(a, f, exact)
+    hav = haversine_m("__qlat", "__qlon", c_lat, c_lon, radius=a)
     if exact:
         dist = vincenty_udf(ellipsoid, once=True)(
             F.col("__qlat"), F.col("__qlon"), F.col(c_lat), F.col(c_lon))
     else:
-        dist = great_circle_m("__qlat", "__qlon", c_lat, c_lon)
+        dist = great_circle_m("__qlat", "__qlon", c_lat, c_lon, a, f)
     order_tail = [F.col(c_id).asc()] if c_id else [F.col(c_lat).asc(), F.col(c_lon).asc()]
     w = Window.partitionBy(q_id).orderBy(F.col(out).asc(), *order_tail)
     cols = [q_id, *(c for c in candidates.columns if c != out)]
-
-    def _cover_join(q: DataFrame, cells: str, cell_res: int, *q_cols) -> DataFrame:
-        q = q.select(q_id, "__qlat", "__qlon", *q_cols,
-                     F.explode(f"__s.{cells}").alias("__cell"))
-        c = candidates.withColumn("__cell", cell_id_col(c_lat, c_lon, cell_res))
-        return q.join(c, on="__cell")
+    q_cols = [q_id, "__qlat", "__qlon"]
 
     def _top_k(rows: DataFrame, closed) -> DataFrame:
         # window columns cannot sit in a filter: select, then filter
@@ -301,22 +304,26 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
     # pass 1: density-seeded radius. A query's closure count is the same
     # in the window of its ranked rows and in the aggregate that picks
     # the open queries, so each query is answered by exactly one pass
-    j1 = _cover_join(qr, "cells", res, F.col("__s.r").alias("__r"))
-    in_disk = hav <= F.col("__r") * CLOSE_FRAC
-    top1 = _top_k(j1.filter(hav <= F.col("__r") * HAV_SLACK),
+    j1 = _cover_join(qr, [*q_cols, F.col("__s.r").alias("__r")], F.col("__s.cells"),
+                     candidates, res, c_lat, c_lon)
+    in_disk = hav <= F.col("__r") * inner - HAV_ROUND_M
+    top1 = _top_k(j1.filter(hav <= F.col("__r") * outer + HAV_ROUND_M),
                   F.count_if(in_disk).over(Window.partitionBy(q_id)) >= k)
     # ids of the closed queries: at most one row per query, broadcast
     # like the query side
     closed = F.broadcast(j1.filter(in_disk).groupBy(q_id).count()
                          .filter(F.col("count") >= k).select(q_id))
 
-    # pass 2: the open queries, at the histogram-guaranteed radius
-    j2 = _cover_join(qr.join(closed, on=q_id, how="left_anti"), "fcells", HIST_RES)
+    # pass 2: the open queries, at the histogram-guaranteed angle
+    j2 = _cover_join(qr.join(closed, on=q_id, how="left_anti"), q_cols,
+                     F.col("__s.fcells"), candidates, HIST_RES, c_lat, c_lon)
     kth = F.nth_value("__hav", k).over(Window.partitionBy(q_id).orderBy("__hav")
                                        .rowsBetween(Window.unboundedPreceding,
                                                     Window.unboundedFollowing))
+    # the k-th distance is at most (hk + HAV_ROUND_M) / inner
     top2 = _top_k(j2.withColumn("__hav", hav).withColumn("__hk", kth)
-                  .filter(F.col("__hav") <= F.col("__hk") * RANK_SLACK + 1.0),
+                  .filter(F.col("__hav") <= (F.col("__hk") + HAV_ROUND_M) * (outer / inner)
+                          + HAV_ROUND_M),
                   F.lit(True))
 
     result = top1.unionByName(top2)

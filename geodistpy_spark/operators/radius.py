@@ -23,9 +23,41 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import grid
-from ..constants import unit_factor
+from ..constants import HAV_ROUND_M, hav_bounds, resolve_ellipsoid, unit_factor
 from ..functions.expressions import cell_id_col, great_circle_m, haversine_m
 from ..functions.udfs import vincenty_udf
+
+
+def _hav_band(radius_m: float, ellipsoid, exact: bool) -> tuple[float, float, float, float]:
+    """``(a, f, lo, hi)``: a row with ``haversine_m(radius=a) <= lo`` is
+    within ``radius_m``, one with ``> hi`` is outside it
+    (:func:`~geodistpy_spark.constants.hav_bounds`)."""
+    a, f = resolve_ellipsoid(ellipsoid)
+    inner, outer = hav_bounds(a, f, exact)
+    return a, f, inner * radius_m - HAV_ROUND_M, outer * radius_m + HAV_ROUND_M
+
+
+def _refine(rows: DataFrame, radius, metric: str, ellipsoid, exact: bool,
+            qlat, qlon, lat, lon, out: str) -> DataFrame:
+    """Rows within ``radius`` (boundary inclusive) with the distance in
+    ``out``. Exact mode: the codegen prefilter ``hav <= hi`` keeps the
+    cover box's corner area out of the Arrow kernel. ``exact=False``:
+    only rows in the ``(lo, hi]`` band evaluate Andoyer-Lambert, never as
+    a standalone filter: a filter fused into a join's codegen gets no
+    common-subexpression elimination, and AL's sigma subtree is
+    referenced six times (a measured 15x wall blowup on a 500 km,
+    2,000-query join); haversine has no repeated subtrees."""
+    radius_m = float(radius) / unit_factor(metric)
+    a, f, lo, hi = _hav_band(radius_m, ellipsoid, exact)
+    hav = haversine_m(qlat, qlon, lat, lon, radius=a)
+    if exact:
+        d = vincenty_udf(ellipsoid, once=True)(qlat, qlon, lat, lon)
+        return (rows.filter(hav <= hi).withColumn(out, d * unit_factor(metric))
+                .filter(F.col(out) <= float(radius)))
+    d = great_circle_m(qlat, qlon, lat, lon, a, f) * unit_factor(metric)
+    # the band already enforces out <= radius with the identical float
+    # expression; a tail filter would re-inline the AL tree
+    return rows.filter((hav <= lo) | ((hav <= hi) & (d <= float(radius)))).withColumn(out, d)
 
 
 def point_in_radius(df: DataFrame, center: tuple[float, float], radius,
@@ -49,59 +81,23 @@ def point_in_radius(df: DataFrame, center: tuple[float, float], radius,
     if radius_m < 0:
         raise ValueError(f"radius must be >= 0, got {radius}")
 
-    cres, cover = grid.cell_cover(clat, clon, radius_m, res=res)
+    a, _, _, hi = _hav_band(radius_m, ellipsoid, exact)
+    cres, cover = grid.cap_cover(clat, clon, hi / a, res=res)
     cell = F.col(cell_col) if cell_col else cell_id_col(lat_col, lon_col, cres)
-    pre = df.filter(cell.isin(cover))
-    hav = haversine_m(F.lit(clat), F.lit(clon), F.col(lat_col), F.col(lon_col))
-    m = _prefilter_margin_m(radius_m)
-    if exact:
-        # conservative codegen prefilter (see _prefilter_margin_m):
-        # provably-outside rows — the cover box's corner area (~27% of
-        # candidates) — never reach the Arrow kernel
-        pre = pre.filter(hav <= radius_m + m)
-        d = vincenty_udf(ellipsoid, once=True)(F.lit(clat), F.lit(clon), F.col(lat_col), F.col(lon_col))
-        return (
-            pre.withColumn(out, d * unit_factor(metric))
-            .filter(F.col(out) <= float(radius))
-        )
-    # approximate mode: decide membership with the haversine BAND so the
-    # expensive AL tree only evaluates (short-circuited) on the ~2%-wide
-    # boundary band — Catalyst pushes this predicate below the projection
-    # where no subexpression elimination exists (see _prefilter_margin_m)
-    d = great_circle_m(F.lit(clat), F.lit(clon), F.col(lat_col), F.col(lon_col))
-    keep = (hav <= radius_m - m) | (
-        (hav <= radius_m + m) & (d * unit_factor(metric) <= float(radius)))
-    # band filter already enforces out <= radius with the identical
-    # float expression; a tail filter would re-inline the AL tree
-    return pre.filter(keep).withColumn(out, d * unit_factor(metric))
+    return _refine(df.filter(cell.isin(cover)), radius, metric, ellipsoid, exact,
+                   F.lit(clat), F.lit(clon), F.col(lat_col), F.col(lon_col), out)
 
 
-def _prefilter_margin_m(radius_m: float) -> float:
-    """Margin making the spherical-haversine prefilter CONSERVATIVE:
-    haversine on the R=6371009 sphere is within 0.56% of the WGS-84
-    geodesic (the O(f*s) flattening bound), so 1e-2 * r + 5 km is ~2x
-    that bound at every radius — a row rejected here is provably
-    outside r.
-
-    Why haversine and NOT the Andoyer-Lambert column (which is 20x more
-    accurate): a filter fused into a join's codegen consume path gets NO
-    common-subexpression elimination, and AL's sigma subtree is
-    referenced six times — every joined row paid ~50 StrictMath calls,
-    a measured 15x wall blowup on the 500 km 2,000-query scaling job.
-    Haversine is 6 trig calls with no repeated subtrees; prefilter
-    accuracy only moves the margin, never correctness."""
-    return radius_m * 1e-2 + 5_000.0
-
-
-def _cover_cells_udf(radius_m: float, res: int):
-    """Pandas UDF: (lat, lon) -> array<long> cover cells at ``res``
-    (:func:`grid.cap_covers`)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cover(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(grid.cap_covers(lat.to_numpy(), lon.to_numpy(), radius_m, res))
-
-    return _cover
+def _cover_join(q: DataFrame, keep: list, cover, candidates: DataFrame, res: int,
+                c_lat: str, c_lon: str, on: tuple[str, ...] = ()) -> DataFrame:
+    """Every (query row, candidate) pair whose candidate lies in one of
+    the query's cover cells: the ``keep`` columns of ``q`` plus
+    ``__cell``, one row per element of ``cover`` (an array<long> Column
+    over ``q`` of cell ids at ``res``), equi-joined with the candidates
+    on ``__cell`` and the ``on`` keys both sides carry."""
+    q = q.select(*keep, F.explode(cover).alias("__cell"))
+    c = candidates.withColumn("__cell", cell_id_col(c_lat, c_lon, res))
+    return q.join(c, on=["__cell", *on])
 
 
 def radius_join(queries: DataFrame, candidates: DataFrame, radius,
@@ -113,10 +109,10 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
     """Many-to-many radius join: every (query, candidate) pair with
     geodesic distance <= radius (boundary inclusive).
 
-    Plan: queries -> per-query cover cells (vectorized UDF) -> explode ->
-    equi-join with candidates on cell id -> dropDuplicates (a candidate
-    can sit in 1 cover cell only, but covers of ONE query never repeat a
-    cell — no dedup needed) -> exact refine.
+    Plan: queries -> per-query cover cells (vectorized UDF) ->
+    :func:`_cover_join` with the candidates (a query's cover never
+    repeats a cell and a candidate sits in one cell, so no pair repeats)
+    -> exact refine.
 
     ``salt``: replicate the query side salt-ways and split candidate rows
     among salts — for dense-cell skew beyond what AQE skew-join handles.
@@ -131,47 +127,21 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
     if radius_m < 0:
         raise ValueError(f"radius must be >= 0, got {radius}")  # same contract as point_in_radius
     cres = res if res is not None else grid.pick_resolution(radius_m)
+    a, _, _, hi = _hav_band(radius_m, ellipsoid, exact)
 
-    cov = _cover_cells_udf(radius_m, cres)
-    q = queries.select(
-        F.col(q_id),
-        F.col(q_lat).alias("__qlat"),
-        F.col(q_lon).alias("__qlon"),
-    ).withColumn("__cell", F.explode(cov(F.col("__qlat"), F.col("__qlon"))))
-
-    c = candidates.withColumn("__cell", cell_id_col(c_lat, c_lon, cres))
-
+    q = queries.select(F.col(q_id), F.col(q_lat).alias("__qlat"), F.col(q_lon).alias("__qlon"))
+    c = candidates
+    on: tuple[str, ...] = ()
     if salt and salt > 1:
         q = q.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
         c = c.withColumn("__salt", F.pmod(F.hash(F.col(c_lat), F.col(c_lon)), F.lit(salt)))
-        join_keys = ["__cell", "__salt"]
-    else:
-        join_keys = ["__cell"]
+        on = ("__salt",)
 
-    joined = q.join(c, on=join_keys, how="inner")
-    if exact:
-        # see _prefilter_margin_m: provably-outside rows skip the Arrow
-        # kernel
-        joined = joined.filter(
-            haversine_m("__qlat", "__qlon", c_lat, c_lon)
-            <= radius_m + _prefilter_margin_m(radius_m))
-        d = vincenty_udf(ellipsoid, once=True)(F.col("__qlat"), F.col("__qlon"), F.col(c_lat), F.col(c_lon))
-        return (
-            joined.withColumn(out, d * unit_factor(metric))
-            .filter(F.col(out) <= float(radius))
-            .drop("__cell", "__qlat", "__qlon", "__salt")
-        )
-    # approximate mode: haversine band decision — AL only evaluates
-    # (short-circuited) on the boundary band inside the pushed join
-    # predicate; the output column evaluates once in the projection
-    # where codegen subexpression elimination applies
-    hav = haversine_m("__qlat", "__qlon", c_lat, c_lon)
-    m = _prefilter_margin_m(radius_m)
-    d = great_circle_m("__qlat", "__qlon", c_lat, c_lon)
-    keep = (hav <= radius_m - m) | (
-        (hav <= radius_m + m) & (d * unit_factor(metric) <= float(radius)))
-    return (
-        joined.filter(keep)
-        .withColumn(out, d * unit_factor(metric))
-        .drop("__cell", "__qlat", "__qlon", "__salt")
-    )
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def cover(lat: pd.Series, lon: pd.Series) -> pd.Series:
+        return pd.Series(grid.cap_covers(lat.to_numpy(), lon.to_numpy(), hi / a, cres))
+
+    joined = _cover_join(q, q.columns, cover("__qlat", "__qlon"), c, cres, c_lat, c_lon, on)
+    return (_refine(joined, radius, metric, ellipsoid, exact,
+                    "__qlat", "__qlon", c_lat, c_lon, out)
+            .drop("__cell", "__qlat", "__qlon", "__salt"))

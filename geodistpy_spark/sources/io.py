@@ -114,7 +114,8 @@ def adaptive_partitions_for_cover(spark: SparkSession, path: str,
 def read_adaptive_for_radius(spark: SparkSession, path: str,
                              center: tuple[float, float], radius_m: float) -> DataFrame:
     """Read ONLY the adaptive partitions a radius query can touch, with
-    the partition predicate pushed to the file listing. Compose with
+    the partition predicate pushed to the file listing. The cover
+    (:func:`grid.cell_cover`) assumes WGS-84. Compose with
     operators.radius.point_in_radius for the exact refine:
 
         pts = read_adaptive_for_radius(spark, path, (48.85, 2.35), 1e5)

@@ -4,6 +4,7 @@ import numpy as np
 
 from geodistpy_spark import grid as G
 from geodistpy_spark import kernels as K
+from geodistpy_spark.constants import WGS84_A, WGS84_F, hav_bounds
 
 
 class TestCellMath:
@@ -112,7 +113,8 @@ class TestCoverConservative:
         # measured 44k vs 94k cells here)
         res, cover = G.cell_cover(89.9, 0.0, 50_000.0, res=12)
         n = 1 << res
-        sigma_deg = np.degrees(50_000.0 * 1.002 / G.MIN_CURVATURE_RADIUS_M)
+        outer = hav_bounds(WGS84_A, WGS84_F)[1]
+        sigma_deg = np.degrees(50_000.0 * outer / WGS84_A)
         rows = int(np.ceil(2 * sigma_deg / (180.0 / n))) + 2
         assert len(cover) < 0.6 * rows * n
 

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geodistpy_spark import kernels as K
+from geodistpy_spark.constants import ELLIPSOIDS, HAV_ROUND_M, hav_bounds, resolve_ellipsoid
 from geodistpy_spark.operators import (
     bearing,
     destination,
@@ -181,6 +182,35 @@ class TestRadius:
         d_exact = K.geodesic_inverse([center[0]], [center[1]], la, lo)[0]
         got = point_in_radius(df, center, float(d_exact)).count()
         assert got == 1
+        # hav_a <= outer * s is attained by a short meridian arc at the
+        # equator: a point due north at exactly r sits on the prefilter's
+        # edge and passes only within the float allowance
+        for r in (1.0, 1_000.0):
+            la, lo, _ = K.vincenty_direct([0.0], [0.0], [0.0], [r])
+            d_exact = K.geodesic_inverse([0.0], [0.0], la, lo)[0]
+            df = spark.createDataFrame([(0, float(la[0]), float(lo[0]))],
+                                       "id long, lat double, lon double")
+            assert point_in_radius(df, (0.0, 0.0), float(d_exact)).count() == 1, r
+        # radius 0: lon 180 and -180 spell one point, whose haversine is
+        # ~1e-9 m, not 0
+        df = spark.createDataFrame([(0, 0.0, -180.0)], "id long, lat double, lon double")
+        assert point_in_radius(df, (0.0, 180.0), 0.0).count() == 1
+
+    def test_gc_mode_honours_ellipsoid(self, spark):
+        # (9, 0) is inside r from (0, 0) by Andoyer-Lambert on Clarke
+        # (1880) and outside it on WGS-84: exact=False must use the
+        # ellipsoid it is given
+        clarke = "Clarke (1880)"
+        al_c = K.great_circle([0.0], [0.0], [9.0], [0.0], *resolve_ellipsoid(clarke))[0]
+        al_w = K.great_circle([0.0], [0.0], [9.0], [0.0])[0]
+        assert al_c < al_w
+        r = (al_c + al_w) / 2.0
+        cand = spark.createDataFrame([(0, 9.0, 0.0)], "id long, lat double, lon double")
+        q = spark.createDataFrame([(1, 0.0, 0.0)], "query_id long, q_lat double, q_lon double")
+        assert point_in_radius(cand, (0.0, 0.0), r, ellipsoid=clarke, exact=False).count() == 1
+        assert radius_join(q, cand, r, ellipsoid=clarke, exact=False).count() == 1
+        got = knn_join(q, cand, 1, ellipsoid=clarke, exact=False).collect()
+        assert got[0]["dist"] == pytest.approx(al_c, abs=1e-6)
 
     def test_radius_join_vs_brute(self, spark, places, places_pd):
         qpd = places_pd.head(30).rename(
@@ -440,40 +470,98 @@ class TestKnn:
         assert np.allclose(np.sort(got.dist.values), np.sort(d)[:k], atol=1e-6)
 
 
+MARS_LIKE = (3396190.0, 0.00589)
+
+# every registered ellipsoid plus custom ones far from Earth's (a, f)
+BOUND_ELLIPSOIDS = [*ELLIPSOIDS,
+                    pytest.param(MARS_LIKE, id="Mars-like"),
+                    pytest.param((6378137.0, 0.05), id="f=0.05"),
+                    pytest.param((6371009.0, 0.0), id="f=0")]
+
+
+class TestCustomEllipsoid:
+    def test_mars_like_vs_brute(self, spark):
+        # every operator on a non-Earth-sized ellipsoid equals brute force
+        # on the same (a, f): no Earth radius may hide in a prefilter,
+        # cover or kNN bound
+        a, f = MARS_LIKE
+        rng = np.random.default_rng(3)
+        n = 600
+        lat, lon = rng.uniform(-3, 3, n), rng.uniform(-3, 3, n)
+        cand = spark.createDataFrame(
+            [(i, float(la), float(lo)) for i, (la, lo) in enumerate(zip(lat, lon))],
+            "cid long, lat double, lon double")
+        qs = [(0, 0.0, 0.0), (1, 2.0, -1.5), (2, -2.9, 2.9), (3, 40.0, 120.0)]
+        queries = spark.createDataFrame(qs, "query_id long, q_lat double, q_lon double")
+        radius = 100_000.0
+
+        def brute(q_lat, q_lon):
+            return K.geodesic_inverse(np.full(n, q_lat), np.full(n, q_lon), lat, lon, a, f)
+
+        d0 = brute(0.0, 0.0)
+        got = point_in_radius(cand, (0.0, 0.0), radius, ellipsoid=MARS_LIKE).toPandas()
+        assert set(got.cid) == set(np.flatnonzero(d0 <= radius))
+        assert np.allclose(got.sort_values("cid").dist.values,
+                           d0[np.sort(got.cid.values)], atol=1e-6)
+
+        rj = radius_join(queries, cand, radius, ellipsoid=MARS_LIKE) \
+            .select("query_id", "cid").toPandas()
+        exp = {(qi, c) for qi, qla, qlo in qs for c in np.flatnonzero(brute(qla, qlo) <= radius)}
+        assert set(zip(rj.query_id, rj.cid)) == exp
+
+        k = 7
+        kj = knn_join(queries, cand, k, ellipsoid=MARS_LIKE, c_id="cid").toPandas()
+        for qi, qla, qlo in qs:
+            d = brute(qla, qlo)
+            order = np.lexsort((np.arange(n), d))[:k]
+            row = kj[kj.query_id == qi].sort_values(["dist", "cid"])
+            assert list(row.cid) == list(order), qi
+            assert np.allclose(row.dist.values, d[order], atol=1e-6)
+
+
 class TestKnnBounds:
-    """The two distance bounds knn_join's exactness rests on (numpy only)."""
+    """The haversine/distance bounds every radius and kNN prefilter and
+    cover rests on (numpy only)."""
 
     @staticmethod
-    def _pairs(rng, n):
-        # 0.1 m .. 16,000 km, random azimuths; poles and the antimeridian
-        # as explicit origins
+    def _pairs(rng, n, a, f):
+        # 0.1 m .. past the antipode, random azimuths; poles and the
+        # antimeridian as explicit origins; then n // 4 near-antipodal
+        # pairs, down to 1e-9 degrees off the antipode
         lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
         lon = rng.uniform(-180, 180, n)
         lat[: n // 10] = rng.choice([-90.0, 90.0], n // 10)
         lon[n // 10: n // 5] = rng.choice([-180.0, 180.0], n // 10)
-        d = 10 ** rng.uniform(-1, np.log10(1.6e7), n)
-        la2, lo2, _ = K.vincenty_direct(lat, lon, rng.uniform(0, 360, n), d)
-        return lat, lon, la2, lo2
+        d = 10 ** rng.uniform(-1, np.log10(3.0 * a), n)
+        la2, lo2, _ = K.vincenty_direct(lat, lon, rng.uniform(0, 360, n), d, a, f)
+        m = n // 4
+        off = rng.choice([1.0, 1e-3, 1e-6, 1e-9], (2, m)) * rng.normal(0, 1, (2, m))
+        la3 = np.clip(-lat[-m:] + off[0], -90.0, 90.0)
+        lo3 = (lon[-m:] + 360.0 + off[1]) % 360.0 - 180.0
+        return (np.concatenate([lat, lat[-m:]]), np.concatenate([lon, lon[-m:]]),
+                np.concatenate([la2, la3]), np.concatenate([lo2, lo3]))
 
-    @pytest.mark.parametrize("ellipsoid", ["WGS-84", "Clarke (1880)"])
-    def test_close_frac_haversine_implies_geodesic(self, ellipsoid):
-        # haversine <= CLOSE_FRAC * r  =>  geodesic <= r  =>  haversine
-        # <= HAV_SLACK * r, for every r; RANK_SLACK covers the whole
-        # haversine/geodesic ratio spread
-        from geodistpy_spark.constants import resolve_ellipsoid
-        from geodistpy_spark.operators import knn as KN
+    @pytest.mark.parametrize("ellipsoid", BOUND_ELLIPSOIDS)
+    def test_haversine_bounds_hold(self, ellipsoid):
+        # inner * d - HAV_ROUND_M <= hav_a <= outer * d + HAV_ROUND_M for
+        # the geodesic and (exact=False) the Andoyer-Lambert distance d
+        a, f = resolve_ellipsoid(ellipsoid)
+        la1, lo1, la2, lo2 = self._pairs(np.random.default_rng(11), 200_000, a, f)
+        hav = K.haversine(la1, lo1, la2, lo2, a)
+        for exact, d in ((True, K.geodesic_inverse(la1, lo1, la2, lo2, a, f)),
+                         (False, K.great_circle(la1, lo1, la2, lo2, a, f))):
+            inner, outer = hav_bounds(a, f, exact)
+            assert inner <= 1.0 <= outer
+            low = hav - (inner * d - HAV_ROUND_M)
+            high = outer * d + HAV_ROUND_M - hav
+            assert low.min() >= 0.0, (exact, np.argmin(low), low.min())
+            assert high.min() >= 0.0, (exact, np.argmin(high), high.min())
 
-        la1, lo1, la2, lo2 = self._pairs(np.random.default_rng(11), 200_000)
-        g = K.geodesic_inverse(la1, lo1, la2, lo2, *resolve_ellipsoid(ellipsoid))
-        ratio = K.haversine(la1, lo1, la2, lo2) / g
-        assert ratio.min() >= KN.CLOSE_FRAC, ratio.min()
-        assert ratio.max() <= KN.HAV_SLACK, ratio.max()
-        assert ratio.min() * KN.RANK_SLACK > ratio.max()
-
-    @pytest.mark.parametrize("ellipsoid", ["WGS-84", "Clarke (1880)"])
+    @pytest.mark.parametrize("ellipsoid", ["WGS-84", "Clarke (1880)",
+                                           pytest.param(MARS_LIKE, id="Mars-like"),
+                                           pytest.param((6378137.0, 0.05), id="f=0.05")])
     def test_fallback_radius_bounds_kth_geodesic(self, ellipsoid):
         from geodistpy_spark import grid as G
-        from geodistpy_spark.constants import resolve_ellipsoid
         from geodistpy_spark.operators import knn as KN
 
         a, f = resolve_ellipsoid(ellipsoid)
@@ -502,12 +590,15 @@ class TestKnnBounds:
             qa = np.concatenate([q_la, np.minimum(la[:40] + 0.01, 90.0)])
             qo = np.concatenate([q_lo, lo[:40]])
             for k in (1, 7, 40):
-                radius = KN._fallback_radius_np(counts, k, a, f)(qa, qo)
+                # the k-th haversine is within the angle, so the k-th
+                # geodesic is within a / (1 - f) * angle
+                radius = a * KN._fallback_angle_np(counts, k)(qa, qo)
                 for i in range(len(qa)):
-                    d = K.geodesic_inverse(np.full(m, qa[i]), np.full(m, qo[i]),
-                                           la, lo, a, f)
-                    kth = np.partition(d, k - 1)[k - 1]
-                    assert kth <= radius[i], (name, k, qa[i], qo[i], kth, radius[i])
+                    args = (np.full(m, qa[i]), np.full(m, qo[i]), la, lo)
+                    hav = np.partition(K.haversine(*args, a), k - 1)[k - 1]
+                    kth = np.partition(K.geodesic_inverse(*args, a, f), k - 1)[k - 1]
+                    assert hav <= radius[i], (name, k, qa[i], qo[i], hav, radius[i])
+                    assert kth <= radius[i] / (1.0 - f), (name, k, qa[i], qo[i], kth, radius[i])
 
 
 class TestPipLeftJoin:
