@@ -1,3 +1,3 @@
-from .pipeline import CheckpointedRun, chunk_of, input_fingerprint, partition_metrics
+from .pipeline import CheckpointedRun, chunk_of
 
-__all__ = ["CheckpointedRun", "chunk_of", "input_fingerprint", "partition_metrics"]
+__all__ = ["CheckpointedRun", "chunk_of"]

@@ -12,14 +12,22 @@ Iceberg snapshot commits, which need jars not present here):
   sizes,
 - each chunk's result is written to ``out/chunk=<i>/`` and only then a
   commit marker ``_committed_<i>.json`` is written (to a temporary file
-  renamed onto the marker, so a marker is whole or absent) with lineage: rows
-  in/out, per-partition row counts, an input fingerprint (order-
-  independent hash-sum of keys), wall time,
-- a resumed run verifies the input fingerprint per chunk, skips
-  committed chunks, and recomputes uncommitted ones idempotently
-  (write-new-then-commit) — the union of chunk outputs is row-identical
-  to a single uninterrupted run because chunking and the transform are
-  deterministic.
+  renamed onto the marker, so a marker is whole or absent) with lineage:
+  the input fingerprint, rows out, the written files with each file's
+  row count from its parquet footer, the schema and the wall time. The
+  write is the chunk's only Spark job,
+- every :meth:`CheckpointedRun.run` fingerprints all chunks of its input
+  in one ``groupBy`` job: per chunk, the row count and the sum of key
+  hashes (order-independent). A committed chunk is skipped only when
+  its marker's fingerprint equals this one; otherwise, and for every
+  uncommitted chunk, the chunk is recomputed into a fresh exec dir and
+  committed (write-new-then-commit) — the union of chunk outputs is
+  row-identical to a single uninterrupted run over the same input
+  because chunking and the transform are deterministic,
+- the fingerprint sees added and removed keys only: a row edited in
+  place under the same key leaves it unchanged, so such a chunk stays
+  committed with its old output until :meth:`CheckpointedRun.invalidate`
+  drops its marker.
 
 Snapshot manifests (the Iceberg time-travel analog): every chunk
 execution writes an IMMUTABLE ``chunk=<i>/exec-<k>/`` directory and the
@@ -41,6 +49,7 @@ import shutil
 import time
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,24 +58,16 @@ def chunk_of(key_col: str, n_chunks: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_chunks)).cast("int")
 
 
-def input_fingerprint(df: DataFrame, key_col: str) -> dict:
-    """Order-independent input fingerprint: count + sum of key hashes."""
+def _fingerprints(src: DataFrame, key_col: str) -> dict[int, dict]:
+    """Per ``__chunk`` of ``src``: row count + sum of key hashes, in one
+    job. A chunk with no rows is absent."""
     # hashes reduced mod a prime before summing so the 64-bit sum cannot
     # overflow (ANSI mode) for any realistic row count (< 9e9 rows)
-    row = df.agg(
+    rows = src.groupBy("__chunk").agg(
         F.count("*").alias("n"),
         F.sum(F.pmod(F.xxhash64(F.col(key_col)), F.lit(1_000_000_007))).alias("hsum"),
-    ).collect()[0]
-    return {"n_rows": row["n"], "key_hash_sum": int(row["hsum"]) if row["hsum"] is not None else 0}
-
-
-def partition_metrics(df: DataFrame) -> list[dict]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    return [{"partition": r["pid"], "rows": r["rows"]} for r in rows]
+    ).collect()
+    return {r["__chunk"]: {"n_rows": r["n"], "key_hash_sum": int(r["hsum"])} for r in rows}
 
 
 class CheckpointedRun:
@@ -100,10 +101,8 @@ class CheckpointedRun:
             return json.load(f)
 
     def _data_dir(self, i: int) -> str:
-        """Current committed data location for chunk i (markers written
-        before the snapshot feature point at the chunk dir itself)."""
-        rel = self._marker_entry(i).get("data_dir")
-        return os.path.join(self.out_dir, rel) if rel else self._chunk_dir(i)
+        """Current committed data location for chunk i."""
+        return os.path.join(self.out_dir, self._marker_entry(i)["data_dir"])
 
     def committed_chunks(self) -> set[int]:
         return {
@@ -127,37 +126,40 @@ class CheckpointedRun:
     def run(self, source: DataFrame,
             transform: Callable[[DataFrame], DataFrame],
             fail_after_chunk: int | None = None) -> list[int]:
-        """Execute all uncommitted chunks; returns chunk ids executed.
+        """Execute every chunk that is uncommitted or whose committed
+        input fingerprint differs from ``source``'s; returns chunk ids
+        executed.
 
         ``fail_after_chunk`` injects a crash for resume tests.
         """
         src = source.withColumn("__chunk", chunk_of(self.key_col, self.n_chunks))
+        fps = _fingerprints(src, self.key_col)
         done = self.committed_chunks()
         executed = []
         for i in range(self.n_chunks):
-            if i in done:
+            fp = fps.get(i, {"n_rows": 0, "key_hash_sum": 0})
+            if i in done and self._marker_entry(i)["input"] == fp:
                 continue
             t0 = time.time()
-            chunk_in = src.filter(F.col("__chunk") == i).drop("__chunk")
-            fp = input_fingerprint(chunk_in, self.key_col)
-            result = transform(chunk_in)
+            result = transform(src.filter(F.col("__chunk") == i).drop("__chunk"))
             cdir = self._next_exec_dir(i)
             result.write.mode("overwrite").parquet(cdir)
-            written = result.sparkSession.read.parquet(cdir)
-            out_rows = written.count()
             files = sorted(
                 f for f in os.listdir(cdir)
                 if f.endswith(".parquet") and not f.startswith(("_", ".")))
+            # footer row counts: what Spark's own parquet count() reads
+            rows = [pq.ParquetFile(os.path.join(cdir, f)).metadata.num_rows
+                    for f in files]
             entry = {
                 "chunk": i,
                 "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
                 "wall_sec": round(time.time() - t0, 3),
                 "input": fp,
-                "rows_out": out_rows,
+                "rows_out": sum(rows),
                 "data_dir": os.path.relpath(cdir, self.out_dir),
                 "files": files,
-                "schema": written.schema.json(),
-                "partitions": partition_metrics(written),
+                "schema": result.schema.json(),
+                "partitions": [{"file": f, "rows": n} for f, n in zip(files, rows)],
             }
             self._log(dict(entry, event="chunk_written"))
             # write-then-rename: a crash mid-write leaves no marker, so
@@ -224,22 +226,15 @@ class CheckpointedRun:
         schema = None
         for i in done:
             e = self._marker_entry(i)
-            rel = e.get("data_dir", f"chunk={i}")
-            files = e.get("files")
-            if files is None:  # pre-snapshot-era marker: list on demand
-                d = os.path.join(self.out_dir, rel)
-                files = sorted(
-                    f for f in os.listdir(d)
-                    if f.endswith(".parquet") and not f.startswith(("_", ".")))
-            chunks[str(i)] = {"data_dir": rel, "files": files,
-                              "rows_out": e.get("rows_out")}
-            schema = e.get("schema", schema)
+            chunks[str(i)] = {"data_dir": e["data_dir"], "files": e["files"],
+                              "rows_out": e["rows_out"]}
+            schema = e["schema"]
         manifest = {
             "snapshot_id": sid,
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
             "note": note,
             "n_chunks": self.n_chunks,
-            "total_rows": sum(c["rows_out"] or 0 for c in chunks.values()),
+            "total_rows": sum(c["rows_out"] for c in chunks.values()),
             "schema": schema,
             "chunks": chunks,
         }

@@ -22,7 +22,9 @@ Local smoke, with the fixture places as query points::
 
 The job is chunked + checkpointed (plans.pipeline): a killed run resumes
 from the last committed chunk with identical output rows; each chunk
-commit carries per-partition row counts and input fingerprints.
+commit carries per-file row counts and an input fingerprint, and a
+re-run recomputes only uncommitted chunks and those whose input keys
+changed.
 """
 
 from __future__ import annotations
