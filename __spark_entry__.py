@@ -997,13 +997,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out.select("id_1", "id_2", F.round("cosine", 6).alias("cos_r"))
 
     def q_near_dup_groups(spark, sf_dir):
-        # large-star/small-star path (r4): O(log n) rounds on
-        # adversarial diameters; the recursive-CTE oracle is an
-        # independent realization, so this gates the new algorithm
+        # large-star/small-star connected components: O(log n) rounds
+        # on adversarial diameters; the recursive-CTE oracle is an
+        # independent realization of the same labels
         from geodistpy_spark.textops import near_dup_groups
 
         return near_dup_groups(_flat_docs(spark, sf_dir), threshold=0.5,
-                               algorithm="star", hash_fn="md5")
+                               hash_fn="md5")
 
     def q_cell_density_smooth(spark, sf_dir):
         from geodistpy_spark.operators import cell_density_smooth
@@ -1854,8 +1854,8 @@ def oracle_sql() -> dict[str, str]:
             "FROM au"
         ),
         # transitive closure (recursive CTE) over the near-dup pair graph
-        # — an INDEPENDENT realization of the engine's iterative
-        # min-label-propagation connected components
+        # — an INDEPENDENT realization of the engine's large-star/
+        # small-star connected components
         "near_dup_groups": (
             jacc_base.replace("WITH ", "WITH RECURSIVE ", 1)
             + ", jac AS (SELECT p.id_1, p.id_2 FROM pairs p "

@@ -95,11 +95,10 @@ def shingle_hashes(df: DataFrame, id_col: str = "doc_id",
     is used:
 
     - rows are NOT per-doc-distinct (no array_distinct). MIN-based
-      signature aggregation is duplicate-invariant, and the
-      ``small_pairs`` verify reduces per (pair, shingle) with MAX
+      signature aggregation is duplicate-invariant, and
+      :func:`ngram_jaccard` reduces per (pair, shingle) with MAX
       presence flags before counting, so duplicates cannot change any
-      result. Do NOT feed this into the relational Jaccard strategy,
-      whose row counts assume distinct rows.
+      result. A consumer that counts rows needs :func:`shingles`.
     - the id is ``xxhash64(w_i, .., w_{i+k-1})`` (multi-arg, no string
       materialization), not ``xxhash64(concat_ws(' ', ...))`` — a
       different (equally uniform, practically injective) hash family;
@@ -255,94 +254,51 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
 
 def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", k: int = 3,
-                  _shingles: DataFrame | None = None,
-                  small_pairs: bool = False) -> DataFrame:
+                  _shingles: DataFrame | None = None) -> DataFrame:
     """Exact shingle-set Jaccard for given (id_1, id_2) pairs.
+    ``pairs`` must hold DISTINCT pairs (the per-pair groupBy collapses
+    a repeated input pair to one output row; LSH candidates are distinct
+    by construction).
 
-    Two physical strategies, identical output:
-
-    - default (``small_pairs=False``): joins the distinct-shingle
-      relation to itself through the pair list — |A ∩ B| by equi-join
-      on shingle, |A ∪ B| = |A| + |B| − |A ∩ B|. Right when the pair
-      set is comparable to the corpus, but it shuffles the ENTIRE
-      shingle relation by id twice plus once for the sizes agg (the
-      measured q6 limiter: ~85 of 132 core-seconds at 800k docs were
-      these three corpus-sized exchanges).
-    - ``small_pairs=True`` (the LSH-output regime: candidate docs ≪
-      corpus): broadcast the exploded pair-membership relation (two
-      (id_1, id_2, doc) rows per pair, three longs each) onto the
-      shingle relation — ONE broadcast hash join both filters the
-      corpus-sized shingle scan to candidate docs and attaches the
-      pair — then two long-only HashAggregates: per (pair, shingle)
-      presence flags, then per pair counts (|A| = Σ side-1 present,
-      |A ∩ B| = Σ both present). Nothing corpus-sized ever shuffles,
-      and nothing sorts: the r5 shape (semi-filter + collect_list +
-      first()-pivot) forced an ObjectHashAggregate plus a
-      SortAggregate with two Sorts — arrays through the shuffle and
-      three broadcast builds where one suffices. Duplicate
-      (doc, shingle) rows are harmless here — the MAX presence flags
-      reduce per (pair, shingle) before anything is counted, so both
-      :func:`shingles` (distinct) and :func:`shingle_hashes`
-      (not distinct) are valid inputs; the RELATIONAL strategy's row
-      counts do require distinct rows. Requires DISTINCT pairs
-      (the final groupBy collapses a duplicated input pair to one
-      output row where the relational form would emit it twice — LSH
-      candidates are distinct by construction). The caller must
-      ensure ``pairs`` is broadcastable (:func:`near_duplicates_minhash`
-      gates on a pair count it has already materialized; at the gate,
-      2 x small_pairs_max rows x 3 longs is the broadcast relation).
+    The exploded pair-membership relation (two (id_1, id_2, doc) rows
+    per pair, three longs each) joins the shingle relation — one hash
+    join both filters the corpus-sized shingle scan to candidate docs
+    and attaches the pair; the planner broadcasts it when the pair set
+    is small, as it is for LSH output — then two long-only
+    HashAggregates: per (pair, shingle) presence flags, then per pair
+    counts (|A| = Σ side-1 present, |A ∩ B| = Σ both present). Nothing
+    corpus-sized shuffles and nothing sorts. Duplicate (doc, shingle)
+    rows are harmless — the MAX presence flags reduce per (pair,
+    shingle) before anything is counted — so both :func:`shingles`
+    (distinct) and :func:`shingle_hashes` (not distinct) are valid
+    ``_shingles``; the default derives :func:`shingles` from ``df``.
+    A pair touching a doc with no shingles (< k words) is dropped.
     """
-    if _shingles is not None:
-        sh = _shingles
-    else:
-        sh = shingles(df.select(id_col, text_col), text_col, k).cache()
-        sh.count()  # eager materialization (see near_duplicates_minhash)
-    if small_pairs:
-        sides = pairs.select(
-            "id_1", "id_2",
-            F.explode(F.array("id_1", "id_2")).alias(id_col),
-        )
-        h1 = F.max(F.when(F.col(id_col) == F.col("id_1"), 1)
-                   .otherwise(0)).alias("__h1")
-        h2 = F.max(F.when(F.col(id_col) == F.col("id_2"), 1)
-                   .otherwise(0)).alias("__h2")
-        per_shingle = (
-            sh.join(F.broadcast(sides), on=id_col)
-            .groupBy("id_1", "id_2", "shingle")
-            .agg(h1, h2)
-        )
-        return (
-            per_shingle.groupBy("id_1", "id_2")
-            .agg(
-                F.sum(F.col("__h1") * F.col("__h2")).alias("n_inter"),
-                F.sum("__h1").alias("n_1"),
-                F.sum("__h2").alias("n_2"),
-            )
-            # a pair whose doc has no shingles (< k words) has zero
-            # presence rows on that side: drop it, mirroring the
-            # relational strategy's inner join against the sizes
-            # relation
-            .filter((F.col("n_1") > 0) & (F.col("n_2") > 0))
-            .withColumn(
-                "jaccard",
-                F.col("n_inter") / (F.col("n_1") + F.col("n_2") - F.col("n_inter")),
-            )
-            .select("id_1", "id_2", "n_inter", "n_1", "n_2", "jaccard")
-        )
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("id_1"), "shingle"), on="id_1")
-        .join(sh.select(F.col(id_col).alias("id_2"), F.col("shingle").alias("shingle2")),
-              on="id_2")
-        .filter(F.col("shingle") == F.col("shingle2"))
-        .groupBy("id_1", "id_2")
-        .agg(F.count("*").alias("n_inter"))
+    sh = _shingles if _shingles is not None else shingles(
+        df.select(id_col, text_col), text_col, k)
+    sides = pairs.select(
+        "id_1", "id_2",
+        F.explode(F.array("id_1", "id_2")).alias(id_col),
+    )
+    h1 = F.max(F.when(F.col(id_col) == F.col("id_1"), 1)
+               .otherwise(0)).alias("__h1")
+    h2 = F.max(F.when(F.col(id_col) == F.col("id_2"), 1)
+               .otherwise(0)).alias("__h2")
+    per_shingle = (
+        sh.join(sides, on=id_col)
+        .groupBy("id_1", "id_2", "shingle")
+        .agg(h1, h2)
     )
     return (
-        pairs.join(inter, on=["id_1", "id_2"], how="left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.select(F.col(id_col).alias("id_1"), F.col("n_sh").alias("n_1")), on="id_1")
-        .join(sizes.select(F.col(id_col).alias("id_2"), F.col("n_sh").alias("n_2")), on="id_2")
+        per_shingle.groupBy("id_1", "id_2")
+        .agg(
+            F.sum(F.col("__h1") * F.col("__h2")).alias("n_inter"),
+            F.sum("__h1").alias("n_1"),
+            F.sum("__h2").alias("n_2"),
+        )
+        # a pair whose doc has no shingles (< k words) has zero
+        # presence rows on that side
+        .filter((F.col("n_1") > 0) & (F.col("n_2") > 0))
         .withColumn(
             "jaccard",
             F.col("n_inter") / (F.col("n_1") + F.col("n_2") - F.col("n_inter")),
@@ -355,243 +311,77 @@ def near_duplicates_minhash(df: DataFrame, id_col: str = "doc_id",
                             text_col: str = "text", k: int = 3,
                             threshold: float = 0.7,
                             hash_fn: str = "xxhash64",
-                            hash_shingles: bool | None = None,
-                            small_pairs_max: int = 2_000_000,
                             caches: list | None = None) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard verify.
 
-    NOTHING corpus-sized is ever cached or shuffled on the production
-    path: the candidate stage streams the shingle explode once into
-    the signature agg, and — when the materialized candidate count is
-    at most ``small_pairs_max`` (candidate ids then fit a cheap
-    broadcast: 2M pairs -> 4M int64 ids, ~32 MB; the verify's own
-    pair-membership broadcast is 2 rows x 3 longs per pair, ~96 MB
-    framed at the gate — size the gate down on executors with tight
-    broadcast budgets) — the verify re-derives shingles only for the
-    candidate docs (broadcast semi-filter on the RAW docs before
-    tokenizing, measured 6-15% of the corpus) and runs
-    :func:`ngram_jaccard`'s ``small_pairs`` broadcast/count strategy
-    (one broadcast join + two long-only HashAggregates, no sorts). Measured on the 800k-doc sweep corpus
-    vs the r4 cached-relational pipeline: 19 -> ~13 s at local[8],
-    44 -> ~33 s at local[2], and no multi-GB block-manager footprint
-    (at 10^12 docs persisting the exploded relation would spill —
-    streaming is the only shape that survives). Above the gate
-    (candidates a large fraction of the corpus) the relational verify
-    reads the full relation three times, so THERE the relation is
-    cached — materialized eagerly (see the inline comment on the AQE
-    materialization race).
+    NOTHING corpus-sized is ever cached or shuffled: the candidate
+    stage streams the shingle explode once into the signature agg, the
+    candidate pairs are cached and counted once (an unmaterialized
+    candidate stage would run twice, once per consumer), and the verify
+    re-derives shingles only for the candidate docs (semi-filter on the
+    RAW docs before tokenizing, measured 6-15% of the corpus) and runs
+    :func:`ngram_jaccard` on that narrow relation. Measured on the
+    800k-doc sweep corpus vs the r4 cached-relational pipeline: 19 ->
+    ~13 s at local[8], 44 -> ~33 s at local[2], and no multi-GB
+    block-manager footprint (at 10^12 docs persisting the exploded
+    relation would spill — streaming is the only shape that survives).
 
-    ``caches``: a list that receives the cached intermediates (always
-    the candidate pairs; plus the shingle relation on the relational
-    fallback) so a caller that has fully consumed the result can
-    ``unpersist()`` them — the result is lazy, so the function itself
-    cannot safely release them.
+    ``caches``: a list that receives the cached candidate pairs so a
+    caller that has fully consumed the result can ``unpersist()`` them —
+    the result is lazy, so the function itself cannot safely release
+    them.
 
-    ``hash_shingles`` (default: on iff ``hash_fn == 'xxhash64'``)
-    replaces shingle strings with xxhash64 longs at the source: every
-    downstream consumer (12 seed-hash mins, the band self-join, the
-    Jaccard verify) only needs shingle EQUALITY and hash uniformity,
-    never the text, so an 8-byte long replaces a ~25-50-byte string in
-    every corpus-sized scan and shuffle (see
-    BENCH/q6_stage_probe.json) — and since r6 the long comes from
-    :func:`shingle_hashes` (codegen multi-arg hash of the word k-gram,
-    no string ever built, no per-doc distinct — MIN signatures and the
-    MAX-flag verify are duplicate-invariant; measured 8.5 -> 2.4 s
+    ``hash_fn`` also picks the shingle relation. ``xxhash64`` uses
+    :func:`shingle_hashes`: every consumer (12 seed-hash mins, the band
+    self-join, the Jaccard verify) only needs shingle EQUALITY and hash
+    uniformity, never the text, so an 8-byte long from a codegen
+    multi-arg hash of the word k-gram replaces a ~25-50-byte string in
+    every corpus-sized scan and shuffle (measured 8.5 -> 2.4 s
     signature derivation at 800k docs / local[8]). The mapping is
     injective in practice: expected colliding distinct-shingle pairs
     is D^2 / 2^65 — 2.8e-5 at D = 32M distinct shingles, ~0.03 even at
     D = 1e9 — and one collision shifts one pair's intersection count
-    by at most 1. The md5 oracle mode keeps exact strings so the
-    DuckDB correctness mirror stays bit-identical."""
-    if hash_shingles is None:
-        hash_shingles = hash_fn == "xxhash64"
+    by at most 1. ``md5`` uses the exact :func:`shingles` strings so
+    the DuckDB correctness mirror stays bit-identical."""
 
-    def _fast_rel(docs: DataFrame) -> DataFrame:
-        # hashed mode: whole-stage-codegen word-triple hashing, no
-        # shingle strings ever built (see shingle_hashes — measured
-        # 8.5 -> 2.4 s for the signature derivation at 800k docs).
-        # Rows are not per-doc-distinct; every consumer on this path
-        # (MIN signature agg, MAX-flag small-pairs verify) is
-        # duplicate-invariant.
-        return shingle_hashes(docs, id_col, text_col, k)
+    def _rel(docs: DataFrame) -> DataFrame:
+        if hash_fn == "xxhash64":
+            return shingle_hashes(docs, id_col, text_col, k)
+        return shingles(docs.select(id_col, text_col), text_col, k)
 
-    def _distinct_rel(docs: DataFrame) -> DataFrame:
-        # string path (md5 oracle mode) and the relational verify,
-        # whose row counts require the per-doc-distinct contract
-        rel = shingles(docs.select(id_col, text_col), text_col, k)
-        if hash_shingles:
-            rel = rel.select(id_col, F.xxhash64("shingle").alias("shingle"))
-        return rel
-
-    # the candidate stage streams the shingle explode exactly once: the
-    # signature agg is its only consumer, and the band self-join reuses
-    # the signature exchange (measured — no double derivation), so
-    # NOTHING corpus-sized is cached or spilled here. That is the shape
-    # that survives 10^12 docs, where persisting the exploded relation
-    # (~#shingles x 16 B, several x the corpus) would spill to disk and
-    # pay more bytes than the recomputation it saves.
-    sh = _fast_rel(df) if hash_shingles else _distinct_rel(df)
     pairs = lsh_candidate_pairs(df, id_col, text_col, k, hash_fn=hash_fn,
-                                _shingles=sh).cache()
-    n_pairs = pairs.count()
+                                _shingles=_rel(df)).cache()
+    pairs.count()
     if caches is not None:
         caches.append(pairs)
-    if n_pairs <= small_pairs_max:
-        # verify needs shingles for CANDIDATE docs only (measured
-        # 6-15% of the corpus): semi-filter the raw docs by broadcast
-        # before tokenizing, so the second explode pays only for docs
-        # under verification, and hand ngram_jaccard that narrow
-        # relation. No .distinct() on the id list: left_semi dedupes
-        # inherently, and the distinct added one more exchange + AQE
-        # wave per call for nothing (build side stays 2 x n_pairs
-        # int64 ids — ~32 MB at the 2M gate)
-        cand = (
-            pairs.select(F.col("id_1").alias(id_col))
-            .union(pairs.select(F.col("id_2").alias(id_col)))
-        )
-        cand_docs = df.select(id_col, text_col).join(
-            F.broadcast(cand), on=id_col, how="left_semi")
-        verify_rel = (_fast_rel(cand_docs) if hash_shingles
-                      else _distinct_rel(cand_docs))
-        out = ngram_jaccard(df, pairs, id_col, text_col, k,
-                            _shingles=verify_rel,
-                            small_pairs=True)
-    else:
-        # relational verify re-reads the full relation three times:
-        # there a cache pays off (one extra explode to build it beats
-        # three). Its row-count math REQUIRES the per-doc-distinct
-        # contract, so the hashed mode rebuilds the distinct relation
-        # here (the duplicate-tolerant fast relation above only ever
-        # feeds the MIN signature agg). Materialize EAGERLY (one count)
-        # before the consumer plan exists: AQE compiles the query into
-        # independent exchange-materialization futures, and on an
-        # unmaterialized cache they race to re-derive it concurrently
-        # (~100 duplicated core-seconds measured at 800k docs)
-        if hash_shingles:
-            sh = _distinct_rel(df)
-        sh = sh.cache()
-        sh.count()
-        if caches is not None:
-            caches.append(sh)
-        out = ngram_jaccard(df, pairs, id_col, text_col, k, _shingles=sh,
-                            small_pairs=False)
+    # No .distinct() on the id list: left_semi dedupes inherently, and
+    # the distinct added one more exchange + AQE wave per call for
+    # nothing
+    cand = (
+        pairs.select(F.col("id_1").alias(id_col))
+        .union(pairs.select(F.col("id_2").alias(id_col)))
+    )
+    cand_docs = df.select(id_col, text_col).join(
+        cand, on=id_col, how="left_semi")
+    out = ngram_jaccard(df, pairs, id_col, text_col, k,
+                        _shingles=_rel(cand_docs))
     return out.filter(F.col("jaccard") >= threshold)
 
 
 def connected_components(nodes: DataFrame, pairs: DataFrame,
                          id_col: str = "doc_id",
                          max_iter: int = 25,
-                         checkpoint_every: int = 4,
-                         algorithm: str = "minlabel",
                          stats: dict | None = None) -> DataFrame:
     """Connected components over an undirected pair graph: every node
     labeled with its component's smallest id (singletons label
     themselves). ``pairs`` has columns (id_1, id_2).
 
-    Two algorithms, identical output:
-
-    - ``minlabel`` (default) — iterative min-label propagation (each
-      round: one edge-join + groupBy-min + label update; rounds =
-      eccentricity of the component from its min-id node). Near-dup
-      clusters have tiny diameters in practice, so rounds stay
-      single-digit.
-    - ``star`` — alternating large-star/small-star rewiring (Kiveris et
-      al., "Connected Components in MapReduce and Beyond", 2014):
-      every round REWIRES edges toward per-neighborhood minima instead
-      of propagating labels one hop, converging in O(log n) rounds on
-      adversarial diameters (paths/chains) where minlabel needs O(n).
-      Same join shape per round (groupBy-min + equi-join), so the
-      per-round cost is comparable — prefer it when cluster diameters
-      are unknown at extreme scale.
-
-    ``stats``: a dict that receives {"rounds": int} for observability.
-
-    Cache hygiene: every intermediate cache is unpersisted before
-    return. When a checkpoint dir is set (``sc.setCheckpointDir``) the
-    result is a reliable checkpoint — lineage truncated every
-    ``checkpoint_every`` rounds and at the end, so adversarial diameters
-    don't grow an unbounded plan and no persisted RDDs are left behind.
-    Without a checkpoint dir the returned frame stays cached (the caller
-    may unpersist it after consuming).
-    """
-    if algorithm not in ("minlabel", "star"):
-        raise ValueError(f"unknown algorithm={algorithm!r}")
-    if algorithm == "star":
-        return _connected_components_star(nodes, pairs, id_col, max_iter,
-                                          stats)
-    sc = nodes.sparkSession.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-    edges = pairs.select("id_1", "id_2").unionByName(
-        pairs.select(F.col("id_2").alias("id_1"), F.col("id_1").alias("id_2"))
-    ).cache()
-    labels = nodes.select(F.col(id_col), F.col(id_col).alias("group_id")).cache()
-    converged = False
-    i = -1
-    for i in range(max_iter):
-        nbr_min = (
-            edges.join(labels.select(F.col(id_col).alias("id_2"), "group_id"), on="id_2")
-            .groupBy(F.col("id_1").alias(id_col))
-            .agg(F.min("group_id").alias("__nmin"))
-        )
-        new_labels = (
-            labels.join(nbr_min, on=id_col, how="left")
-            .select(id_col,
-                    F.least(F.col("group_id"), F.coalesce("__nmin", F.col("group_id")))
-                    .alias("group_id"))
-        ).cache()
-        changed = (
-            new_labels.join(labels.withColumnRenamed("group_id", "__old"), on=id_col)
-            .filter(F.col("group_id") != F.col("__old")).limit(1).count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-        if (i + 1) % checkpoint_every == 0:
-            # lineage truncation must happen with OR without a
-            # checkpoint dir: each round's plan references the previous
-            # labels ~3x, so an un-truncated plan grows 3^rounds and
-            # Catalyst/tree-string work alone hangs past ~12 rounds on
-            # higher-diameter graphs (localCheckpoint stands in when no
-            # reliable dir is configured). Every 4 rounds: on a 200-node,
-            # 13-round graph (local[4]) every 6 took 17 s and every 8 ran
-            # a 2 GB driver heap out of memory building the plan string
-            # of one job; every 1-4 took 7-8 s in 1 GB
-            truncated = (labels.checkpoint(eager=True) if reliable
-                         else labels.localCheckpoint(eager=True))
-            labels.unpersist()
-            labels = truncated
-    # always record rounds + convergence (non-convergence at max_iter
-    # must not be silent: labels may still be moving)
-    if stats is not None:
-        stats["rounds"] = i + 1
-        stats["converged"] = converged
-    if not converged:
-        warnings.warn(
-            f"connected_components(minlabel) hit max_iter={max_iter} "
-            "without converging; labels may not be component minima "
-            "(use algorithm='star' for high-diameter graphs)",
-            stacklevel=2)
-    if reliable:
-        # materialize the full result BEFORE dropping edges: the changed
-        # probe's limit(1) may have cached only some label partitions,
-        # and the rest recompute through the edge join
-        final = labels.checkpoint(eager=True)
-        labels.unpersist()
-        edges.unpersist()
-        return final
-    edges.unpersist()
-    return labels
-
-
-def _connected_components_star(nodes: DataFrame, pairs: DataFrame,
-                               id_col: str, max_iter: int,
-                               stats: dict | None) -> DataFrame:
-    """Alternating large-star/small-star CC (see connected_components).
-
-    Edges are kept as a distinct (u, v) relation oriented u > v. Per
-    round:
+    Alternating large-star/small-star rewiring (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): every
+    round REWIRES edges toward per-neighborhood minima instead of
+    propagating labels one hop, so it converges in O(log n) rounds even
+    on adversarial diameters (paths/chains). Edges are kept as a
+    distinct (u, v) relation oriented u > v. Per round:
 
     - large-star: for every node c (over the symmetrized edge view),
       attach each strictly-larger neighbor to min(N(c) ∪ {c}).
@@ -603,10 +393,18 @@ def _connected_components_star(nodes: DataFrame, pairs: DataFrame,
     (count, sum(xxhash64)) checksum — no set-difference shuffle. On
     convergence every component is a star around its min node, so the
     label map is a single groupBy.
+
+    ``stats``: a dict that receives {"rounds": int, "converged": bool}.
+    Hitting ``max_iter`` before the checksum is stable also warns: the
+    labels may then not be component minima.
+
+    Cache hygiene: every round is materialized once to truncate lineage
+    — a reliable checkpoint when a checkpoint dir is set
+    (``sc.setCheckpointDir``), so nothing persistent is left behind,
+    else a local checkpoint that the ContextCleaner drops once its frame
+    is unreferenced (the returned frame stays cached until then).
     """
-    spark = nodes.sparkSession
-    sc = spark.sparkContext
-    reliable = sc.getCheckpointDir() is not None
+    reliable = nodes.sparkSession.sparkContext.getCheckpointDir() is not None
 
     def _pin(df):
         # EVERY round must truncate lineage: a star round references its
@@ -658,15 +456,23 @@ def _connected_components_star(nodes: DataFrame, pairs: DataFrame,
 
     prev = _checksum(e)
     rounds = 0
+    converged = False
     for i in range(max_iter):
         e = _pin(_small_star(_large_star(e)))
         cur = _checksum(e)
         rounds = i + 1
         if cur == prev:
+            converged = True
             break
         prev = cur
     if stats is not None:
         stats["rounds"] = rounds
+        stats["converged"] = converged
+    if not converged:
+        warnings.warn(
+            f"connected_components hit max_iter={max_iter} without "
+            "converging; labels may not be component minima",
+            stacklevel=2)
 
     # converged: stars around component minima — one groupBy labels all
     # non-center nodes; singletons and centers label themselves.
@@ -686,7 +492,6 @@ def _connected_components_star(nodes: DataFrame, pairs: DataFrame,
 def near_dup_groups(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", k: int = 3,
                     threshold: float = 0.7, max_iter: int = 25,
-                    algorithm: str = "minlabel",
                     hash_fn: str = "xxhash64",
                     caches: list | None = None) -> DataFrame:
     """Text near-dup components: :func:`connected_components` over the
@@ -702,8 +507,7 @@ def near_dup_groups(df: DataFrame, id_col: str = "doc_id",
     cannot safely release them itself)."""
     pairs = near_duplicates_minhash(df, id_col, text_col, k, threshold,
                                     hash_fn=hash_fn, caches=caches)
-    return connected_components(df, pairs, id_col, max_iter,
-                                algorithm=algorithm)
+    return connected_components(df, pairs, id_col, max_iter)
 
 
 def dedup_near(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",

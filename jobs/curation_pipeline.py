@@ -45,8 +45,6 @@ def main(argv=None, stop_session: bool = True):
     ap.add_argument("--threshold", type=float, default=0.7,
                     help="near-dup Jaccard threshold")
     ap.add_argument("--val-frac", type=float, default=0.05)
-    ap.add_argument("--cc-algorithm", default="star",
-                    choices=("star", "minlabel"))
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession, functions as F
@@ -71,9 +69,9 @@ def main(argv=None, stop_session: bool = True):
 
     # --- global phase: the survivor id set (ids only cross the wire) ---
     uniq = dedup_exact(docs)
-    pairs = near_duplicates_minhash(uniq, threshold=args.threshold)
-    groups = connected_components(uniq, pairs,
-                                  algorithm=args.cc_algorithm)
+    caches = []
+    groups = connected_components(uniq, near_duplicates_minhash(
+        uniq, threshold=args.threshold, caches=caches))
     # keep the longest member of each near-dup component (ties -> min id)
     scored = uniq.select("doc_id", F.length("text").alias("__len")) \
         .join(groups, on="doc_id")
@@ -92,6 +90,8 @@ def main(argv=None, stop_session: bool = True):
 
     keep = keep.cache()
     keep.count()
+    for c in caches:  # the candidate pairs: keep no longer reads them
+        c.unpersist()
     if contaminated is not None:
         contaminated = contaminated.cache()
         contaminated.count()

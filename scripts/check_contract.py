@@ -45,6 +45,43 @@ def _hash(df: pd.DataFrame) -> str:
     return h.hexdigest()[:16]
 
 
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[str, str]:
+    """(status, detail) of a Spark result against its oracle result:
+    MATCH, ROWCOUNT_MISMATCH, SCHEMA_MISMATCH or VALUE_MISMATCH."""
+    s, o = _canon(sdf), _canon(odf)
+    if len(s) != len(o):
+        return "ROWCOUNT_MISMATCH", f"spark={len(s)} oracle={len(o)}"
+    if list(s.columns) != list(o.columns):
+        return "SCHEMA_MISMATCH", f"spark={list(s.columns)} oracle={list(o.columns)}"
+    # dtype harmonization: ints may come back as int32 vs int64
+    for c in s.columns:
+        if s[c].dtype != o[c].dtype:
+            try:
+                s[c] = s[c].astype("float64") if s[c].dtype.kind == "f" or o[c].dtype.kind == "f" else s[c].astype("int64")
+                o[c] = o[c].astype(s[c].dtype)
+            except Exception:
+                s[c] = s[c].astype(str)
+                o[c] = o[c].astype(str)
+    s = s.sort_values(by=list(s.columns), kind="mergesort").reset_index(drop=True)
+    o = o.sort_values(by=list(o.columns), kind="mergesort").reset_index(drop=True)
+    if _hash(s) == _hash(o):
+        return "MATCH", ""
+    diff = ""
+    for c in s.columns:
+        neq = (s[c].values != o[c].values)
+        try:
+            import numpy as np
+
+            if s[c].dtype.kind == "f":
+                neq = ~np.isclose(s[c].values, o[c].values, rtol=0, atol=0, equal_nan=True)
+        except Exception:
+            pass
+        if neq.any():
+            i = int(neq.argmax())
+            diff += f"[{c}@{i}: spark={s[c].iloc[i]!r} oracle={o[c].iloc[i]!r} ({int(neq.sum())} diffs)] "
+    return "VALUE_MISMATCH", diff[:300]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -78,42 +115,10 @@ def main():
         except Exception as ex:
             results.append((name, "ORACLE_ERROR", str(ex)[:200]))
             continue
-        s, o = _canon(sdf), _canon(odf)
-        if len(s) != len(o):
-            results.append((name, "ROWCOUNT_MISMATCH", f"spark={len(s)} oracle={len(o)}"))
-            continue
-        if list(s.columns) != list(o.columns):
-            results.append((name, "SCHEMA_MISMATCH", f"spark={list(s.columns)} oracle={list(o.columns)}"))
-            continue
-        # dtype harmonization: ints may come back as int32 vs int64
-        for c in s.columns:
-            if s[c].dtype != o[c].dtype:
-                try:
-                    s[c] = s[c].astype("float64") if s[c].dtype.kind == "f" or o[c].dtype.kind == "f" else s[c].astype("int64")
-                    o[c] = o[c].astype(s[c].dtype)
-                except Exception:
-                    s[c] = s[c].astype(str)
-                    o[c] = o[c].astype(str)
-        s = s.sort_values(by=list(s.columns), kind="mergesort").reset_index(drop=True)
-        o = o.sort_values(by=list(o.columns), kind="mergesort").reset_index(drop=True)
-        hs, ho = _hash(s), _hash(o)
-        if hs == ho:
-            results.append((name, f"MATCH ({len(s)} rows, {t_spark:.1f}s)", ""))
-        else:
-            diff = ""
-            for c in s.columns:
-                neq = (s[c].values != o[c].values)
-                try:
-                    import numpy as np
-
-                    if s[c].dtype.kind == "f":
-                        neq = ~np.isclose(s[c].values, o[c].values, rtol=0, atol=0, equal_nan=True)
-                except Exception:
-                    pass
-                if neq.any():
-                    i = int(neq.argmax())
-                    diff += f"[{c}@{i}: spark={s[c].iloc[i]!r} oracle={o[c].iloc[i]!r} ({int(neq.sum())} diffs)] "
-            results.append((name, "VALUE_MISMATCH", diff[:300]))
+        status, detail = compare(sdf, odf)
+        if status == "MATCH":
+            status = f"MATCH ({len(sdf)} rows, {t_spark:.1f}s)"
+        results.append((name, status, detail))
 
     print()
     width = max(len(n) for n, _, _ in results)

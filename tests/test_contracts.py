@@ -68,3 +68,26 @@ class TestValidateCoords:
         assert validate_coords(df, action="filter").count() == 1
         flags = validate_coords(df, action="flag").toPandas().set_index("id").coord_valid
         assert flags[1] and not flags[2] and not flags[3] and not flags[4]
+
+
+class TestDedupOracles:
+    """The dedup queries of the driver contract against their DuckDB
+    oracles, compared the way ``scripts/check_contract.py`` compares
+    them (repr-exact after canonical column and row order)."""
+
+    @pytest.mark.parametrize("key", ["jaccard_pairs", "near_dup_groups"])
+    def test_query_matches_duckdb_oracle(self, spark, key):
+        import duckdb
+
+        import __spark_entry__ as E
+        from scripts.check_contract import TABLES, compare
+
+        sf_dir = "/root/testdata/sf0.001"
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                        f"read_parquet('{sf_dir}/{t}.parquet')")
+        got = E.queries()[key](spark, sf_dir).toPandas()
+        want = con.sql(E.oracle_sql()[key]).df()
+        assert len(got) > 0
+        assert compare(got, want) == ("MATCH", "")

@@ -20,19 +20,35 @@ from geodistpy_spark.textops import (
 )
 
 
+_BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
+_NEAR = "the quick brown fox jumps over the lazy dog near the river bank tonight"
+_FAR = "completely different content about spark distributed query engines"
+PLANTED = {
+    1: _BASE, 2: _BASE,                # exact dups
+    3: _NEAR,                          # near-dup of 1/2
+    4: _FAR, 5: _FAR + " extra",
+    6: "unrelated tiny text",
+}
+
+
 @pytest.fixture(scope="module")
 def planted(spark):
     """Docs with planted exact + near duplicates."""
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    near = "the quick brown fox jumps over the lazy dog near the river bank tonight"
-    far = "completely different content about spark distributed query engines"
-    rows = [
-        (1, base), (2, base),          # exact dups
-        (3, near),                     # near-dup of 1/2
-        (4, far), (5, far + " extra"),
-        (6, "unrelated tiny text"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(list(PLANTED.items()),
+                                 "doc_id long, text string")
+
+
+def exact_jaccard(a: str, b: str, k: int = 3):
+    """(n_inter, n_1, n_2, jaccard) of the word k-gram shingle SETS of
+    two texts, tokenized like ``tokenize`` (lowercase, split on single
+    spaces, empty tokens dropped) — the independent reference for the
+    Spark verify."""
+    def sh(t):
+        w = [x for x in t.lower().split(" ") if x]
+        return {" ".join(w[i:i + k]) for i in range(len(w) - k + 1)}
+    s1, s2 = sh(a), sh(b)
+    n = len(s1 & s2)
+    return n, len(s1), len(s2), n / (len(s1) + len(s2) - n)
 
 
 class TestDedup:
@@ -56,9 +72,9 @@ class TestDedup:
         assert jacc12 == 1.0
 
     def test_hashed_shingle_path_matches_string_path(self, planted):
-        # production path collapses shingle strings to xxhash64 longs
-        # before the cached relation. The CANDIDATE sets may differ
-        # between modes (different signature values -> different band
+        # the xxhash64 mode replaces shingle strings with codegen'd
+        # longs, the md5 mode keeps the strings. The CANDIDATE sets may
+        # differ between modes (different signature values -> different band
         # draws), but for every pair BOTH modes emit, the exact-verify
         # counts and jaccard must be identical (the long mapping is
         # injective absent a 64-bit collision), and the sure-thing
@@ -69,59 +85,50 @@ class TestDedup:
             planted, threshold=0.1).toPandas()[cols].set_index(
             ["id_1", "id_2"]).sort_index()
         strings = near_duplicates_minhash(
-            planted, threshold=0.1, hash_shingles=False).toPandas()[
+            planted, threshold=0.1, hash_fn="md5").toPandas()[
             cols].set_index(["id_1", "id_2"]).sort_index()
         assert (1, 2) in hashed.index and (1, 2) in strings.index
         common = hashed.index.intersection(strings.index)
         assert len(common) > 0
         assert hashed.loc[common].equals(strings.loc[common])
 
-    def test_jaccard_small_pairs_strategy_matches_relational(self, spark):
-        # the broadcast/array verify strategy (small_pairs=True) must be
-        # value-identical to the relational two-join form on explicit
-        # pairs, including a ZERO-overlap pair (n_inter=0 comes from the
-        # left-join fill in one strategy and an empty array_intersect in
-        # the other) and a pair touching a doc too short to shingle
-        # (dropped by the inner size/doc_sh join in BOTH strategies)
+    def test_jaccard_matches_exact_set_jaccard(self, spark):
+        # the flag verify against exact Python set Jaccard on explicit
+        # pairs, including a ZERO-overlap pair (n_inter=0: no shingle
+        # has both flags) and a pair touching a doc too short to
+        # shingle (dropped: it has no presence rows on that side)
         from geodistpy_spark.textops.dedup import ngram_jaccard
 
-        docs = spark.createDataFrame(
-            [(1, "alpha beta gamma delta epsilon"),
-             (2, "alpha beta gamma delta zeta"),
-             (3, "completely different words entirely here"),
-             (4, "too short")],
-            "doc_id long, text string")
+        texts = {1: "alpha beta gamma delta epsilon",
+                 2: "alpha beta gamma delta zeta",
+                 3: "completely different words entirely here",
+                 4: "too short"}
+        docs = spark.createDataFrame(list(texts.items()),
+                                     "doc_id long, text string")
         pairs = spark.createDataFrame(
             [(1, 2), (1, 3), (2, 4)], "id_1 long, id_2 long")
-        cols = ["id_1", "id_2", "n_inter", "n_1", "n_2", "jaccard"]
-        rel = ngram_jaccard(docs, pairs).toPandas()[cols].sort_values(
-            ["id_1", "id_2"]).reset_index(drop=True)
-        arr = ngram_jaccard(docs, pairs, small_pairs=True).toPandas()[
-            cols].sort_values(["id_1", "id_2"]).reset_index(drop=True)
-        assert rel.equals(arr)
-        got = set(zip(rel.id_1, rel.id_2))
-        assert (1, 3) in got and (2, 4) not in got
-        assert rel[(rel.id_1 == 1) & (rel.id_2 == 3)].n_inter.iloc[0] == 0
+        got = {(r.id_1, r.id_2): (r.n_inter, r.n_1, r.n_2, r.jaccard)
+               for r in ngram_jaccard(docs, pairs).collect()}
+        assert got == {(a, b): exact_jaccard(texts[a], texts[b])
+                       for a, b in [(1, 2), (1, 3)]}
+        assert got[(1, 3)][0] == 0
 
-    def test_near_dup_relational_branch_matches_small(self, planted):
-        # small_pairs_max=0 forces the relational fallback (cached
-        # shingle relation, two-join verify) — it must agree with the
-        # default small-pairs branch row-for-row, and the caches
-        # out-param must report what each branch actually cached
-        cols = ["id_1", "id_2", "n_inter", "n_1", "n_2", "jaccard"]
-        c_small, c_rel = [], []
-        small = near_duplicates_minhash(
-            planted, threshold=0.1, caches=c_small).toPandas()[
-            cols].sort_values(["id_1", "id_2"]).reset_index(drop=True)
-        rel = near_duplicates_minhash(
-            planted, threshold=0.1, small_pairs_max=0,
-            caches=c_rel).toPandas()[cols].sort_values(
-            ["id_1", "id_2"]).reset_index(drop=True)
-        assert small.equals(rel)
-        assert len(c_small) == 1      # pairs only — nothing corpus-sized
-        assert len(c_rel) == 2        # pairs + the shingle relation
-        for c in c_small + c_rel:
-            c.unpersist()
+    @pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+    def test_near_dup_pairs_match_exact_set_jaccard(self, planted, hash_fn):
+        # every reported pair carries the exact set Jaccard of its two
+        # texts, whichever shingle relation fed the verify, and the
+        # caches out-param receives the one cached relation (the
+        # candidate pairs — nothing corpus-sized)
+        caches = []
+        rows = near_duplicates_minhash(
+            planted, threshold=0.1, hash_fn=hash_fn, caches=caches).collect()
+        got = {(r.id_1, r.id_2): (r.n_inter, r.n_1, r.n_2, r.jaccard)
+               for r in rows}
+        assert (1, 2) in got and len(got) == len(rows)
+        assert got == {(a, b): exact_jaccard(PLANTED[a], PLANTED[b])
+                       for a, b in got}
+        assert len(caches) == 1
+        caches[0].unpersist()
 
     def test_lsh_no_false_pairs_for_disjoint(self, planted):
         pairs = lsh_candidate_pairs(planted).toPandas()
@@ -211,8 +218,8 @@ class TestDedup:
 
     def test_connected_components_cache_hygiene(self, spark, tmp_path):
         # with a checkpoint dir set, repeated dedup_near/components calls
-        # must not leak persisted RDDs (edges/labels caches unpersisted,
-        # result lineage truncated via reliable checkpoint)
+        # must not leak persisted RDDs (every round and the result are
+        # reliable checkpoints)
         from geodistpy_spark.textops import connected_components
 
         jsc = spark.sparkContext._jsc.sc()
@@ -944,8 +951,8 @@ class TestAnnFixtures:
 
 class TestStarConnectedComponents:
     def test_long_chain_converges_logarithmically(self, spark):
-        # diameter-128 path graph: minlabel needs ~128 rounds (it would
-        # hit max_iter), the star algorithm must finish in O(log n)
+        # diameter-128 path graph: one-hop label propagation would need
+        # ~128 rounds, the star algorithm must finish in O(log n)
         from geodistpy_spark.textops import connected_components
 
         n = 129
@@ -954,37 +961,101 @@ class TestStarConnectedComponents:
             F.col("id").alias("id_1"), (F.col("id") + 1).alias("id_2"))
         stats = {}
         out = connected_components(nodes, pairs, max_iter=15,
-                                   algorithm="star", stats=stats).toPandas()
-        assert stats["rounds"] <= 10, stats
+                                   stats=stats).toPandas()
+        assert stats["rounds"] <= 10 and stats["converged"], stats
         assert (out.group_id == 0).all()
         assert len(out) == n
 
-    def test_star_matches_minlabel_on_random_graph(self, spark):
-        import numpy as np
+    def test_max_iter_without_convergence_warns(self, spark):
+        # stopping before the edge checksum is stable leaves labels that
+        # may not be component minima: that must not be silent
+        from geodistpy_spark.textops import connected_components
 
+        n = 129
+        nodes = spark.range(n).select(F.col("id").alias("doc_id"))
+        pairs = spark.range(n - 1).select(
+            F.col("id").alias("id_1"), (F.col("id") + 1).alias("id_2"))
+        stats = {}
+        with pytest.warns(UserWarning, match="max_iter=2"):
+            connected_components(nodes, pairs, max_iter=2, stats=stats)
+        assert stats == {"rounds": 2, "converged": False}
+
+    def test_star_matches_union_find_on_random_graph(self, spark):
         from geodistpy_spark.textops import connected_components
 
         rng = np.random.default_rng(7)
         n = 200
         edges = [(int(a), int(b)) for a, b in rng.integers(0, n, (150, 2))
                  if a != b]
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)   # root = component min
         nodes = spark.range(n).select(F.col("id").alias("doc_id"))
         pairs = spark.createDataFrame(edges, "id_1 long, id_2 long")
-        a = connected_components(nodes, pairs, algorithm="star").toPandas()
-        b = connected_components(nodes, pairs, algorithm="minlabel").toPandas()
-        am = dict(zip(a.doc_id, a.group_id))
-        bm = dict(zip(b.doc_id, b.group_id))
-        assert am == bm
+        out = connected_components(nodes, pairs).toPandas()
+        assert dict(zip(out.doc_id, out.group_id)) == {
+            v: find(v) for v in range(n)}
+
+    def test_repeated_calls_do_not_grow_persistent_rdds(self, spark):
+        # without a checkpoint dir every round is a local checkpoint
+        # (a persisted RDD); superseded rounds and dropped results must
+        # be released once unreferenced, so the session's persistent-RDD
+        # count is flat across calls
+        import gc
+        import time
+
+        from geodistpy_spark.textops import connected_components
+
+        sc = spark.sparkContext
+        jsc = sc._jsc.sc()
+
+        def settled():
+            n = None
+            for _ in range(40):
+                gc.collect()
+                spark._jvm.System.gc()
+                time.sleep(0.25)
+                m = jsc.getPersistentRDDs().size()
+                if m == n:
+                    return m
+                n = m
+            return n
+
+        prev_dir = sc.getCheckpointDir()
+        getattr(jsc, "checkpointDir_$eq")(spark._jvm.scala.Option.apply(None))
+        try:
+            # five 8-node paths
+            nodes = spark.range(40).select(F.col("id").alias("doc_id"))
+            pairs = spark.range(39).filter(F.col("id") % 8 != 7).select(
+                F.col("id").alias("id_1"), (F.col("id") + 1).alias("id_2"))
+            sizes = []
+            for _ in range(4):
+                out = connected_components(nodes, pairs).toPandas()
+                assert len(out) == 40
+                assert (out.group_id == out.doc_id - out.doc_id % 8).all()
+                sizes.append(settled())
+            assert sizes[-1] <= sizes[0], sizes
+        finally:
+            if prev_dir:
+                sc.setCheckpointDir(prev_dir)
 
     def test_star_empty_and_selfloop(self, spark):
         from geodistpy_spark.textops import connected_components
 
         nodes = spark.range(5).select(F.col("id").alias("doc_id"))
         empty = spark.createDataFrame([], "id_1 long, id_2 long")
-        out = connected_components(nodes, empty, algorithm="star").toPandas()
+        out = connected_components(nodes, empty).toPandas()
         assert (out.doc_id == out.group_id).all()
         loops = spark.createDataFrame([(2, 2), (3, 4)], "id_1 long, id_2 long")
-        out2 = connected_components(nodes, loops, algorithm="star").toPandas()
+        out2 = connected_components(nodes, loops).toPandas()
         got = dict(zip(out2.doc_id, out2.group_id))
         assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 3}
 
@@ -1046,7 +1117,7 @@ class TestShingleHashes:
             "doc_id long, text string")
         fast = near_duplicates_minhash(docs, threshold=0.2).toPandas()
         slow = near_duplicates_minhash(
-            docs, threshold=0.2, hash_shingles=False).toPandas()
+            docs, threshold=0.2, hash_fn="md5").toPandas()
         cols = ["n_inter", "n_1", "n_2", "jaccard"]
         f = fast.set_index(["id_1", "id_2"]).sort_index()
         s = slow.set_index(["id_1", "id_2"]).sort_index()
