@@ -367,7 +367,7 @@ def _emb_near_pairs_sql() -> str:
 def _cos_sql(a: str, b: str) -> str:
     """Exact cosine between two DOUBLE[] expressions — the same
     sequential multiply-add fold as the engine's _dot/_norm column math
-    (textops/ann.py:25-32)."""
+    (textops/ann.py)."""
     return (f"list_dot_product({a}, {b}) / "
             f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))")
 

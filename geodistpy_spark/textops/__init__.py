@@ -17,10 +17,8 @@ from .audio import (
     sample_audio_windows,
 )
 from .ann import (
-    build_ivf_index,
     codebooks_from_df,
     cosine_topk,
-    cosine_topk_grid,
     ivf_topk,
     ivfpq_topk,
     pq_encode,
@@ -70,7 +68,7 @@ from .sampling import (
 __all__ = [
     "decontaminate", "hash_split", "ngram_contamination", "stratified_sample",
     "doc_fingerprint", "language_id", "quality_score", "rolling_fingerprints",
-    "token_count", "token_count_bpe", "trigram_logprob", "build_ivf_index", "codebooks_from_df", "cosine_topk", "cosine_topk_grid", "ivf_topk", "ivfpq_topk", "pq_encode", "pq_topk", "train_centroids", "train_pq", "dedup_exact",
+    "token_count", "token_count_bpe", "trigram_logprob", "codebooks_from_df", "cosine_topk", "ivf_topk", "ivfpq_topk", "pq_encode", "pq_topk", "train_centroids", "train_pq", "dedup_exact",
     "embedding_near_pairs", "exact_duplicates", "lsh_candidate_pairs",
     "minhash_signatures", "connected_components", "near_dup_groups", "dedup_near",
     "near_duplicates_minhash", "ngram_jaccard",

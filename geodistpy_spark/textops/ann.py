@@ -1,18 +1,30 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-- :func:`cosine_topk` — brute-force exact top-k (the baseline): native
-  ``zip_with``/``aggregate`` dot products (JVM codegen, no Python) +
-  ranking window.
-- :func:`ivf_topk` — IVF-style scale path: K deterministic centroids,
-  vectors assigned to nearest centroid (one broadcast join), queries
-  probe the top-P nearest cells only. Recall < 1 by design; exactness
-  is the baseline's job.
-- :func:`pq_topk` (+ :func:`train_pq`/:func:`pq_encode`) — product
-  quantization: vectors compressed to ``m`` one-byte codes (e.g. 64
-  floats -> 8 bytes, 32x), scored in the compressed domain via
-  asymmetric-distance lookup tables, then an exact re-rank of the ADC
-  shortlist. The memory/IO scale path: at 10^12 vectors the code table
-  is what a scan actually reads.
+One plan per operator:
+
+- :func:`cosine_topk` — the exact top-k: one Arrow-batched
+  ``mapInPandas`` matmul pass that keeps each batch's per-query top-k,
+  then one ranking window.
+- :func:`ivf_topk` — IVF: vectors are assigned to their nearest of K
+  centroids (:func:`train_centroids`, or a pre-trained index), each
+  query scores only the vectors of its ``n_probe`` nearest cells with
+  exact cosine. Recall < 1 by design.
+- :func:`pq_topk` (+ :func:`train_pq` / :func:`pq_encode`) — product
+  quantization: vectors compressed to ``m`` one-byte codes (64 floats
+  -> 8 bytes), scored in the compressed domain through asymmetric-
+  distance lookup tables (ADC), then the per-query shortlist is
+  re-ranked with exact cosine.
+- :func:`ivfpq_topk` — IVF x PQ: the same ADC scorer, restricted to the
+  rows of each query's probed cells.
+
+Both trainers are deterministic Lloyd iterations on a driver-side
+sample, the ``sample_size`` smallest ids (no RNG in the data path).
+Every scorer and trainer skips null and wrong-length vectors: they
+have no defined cosine, and one of them must not fail a whole batch.
+The numpy scorers collect the queries on the driver (the
+broadcast-small side by contract). Every top-k output is (query_id,
+vec_id, cosine, rank), rank 1..k, ties broken by candidate id
+ascending.
 """
 
 from __future__ import annotations
@@ -32,141 +44,157 @@ def _norm(a):
                               lambda acc, x: acc + x))
 
 
+def _cos(a, b):
+    # null when either side is null or the lengths differ (zip_with pads
+    # the shorter array with nulls)
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _unit(X):
+    import numpy as np
+
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
+                          X.dtype.type(1e-12))
+
+
+def _stack_valid(vecs, dim=None):
+    """(X, keep): the non-null rows of length ``dim`` (default: the
+    first non-empty row's length) stacked into a 2-D array, and the
+    selector of those rows in ``vecs``; X is None when no row is
+    valid."""
+    import numpy as np
+
+    try:
+        X = np.stack(vecs)  # every row valid: one C-level stack
+        if X.ndim == 2 and X.shape[1] and X.shape[1] == (dim or X.shape[1]):
+            return X, slice(None)
+    except ValueError:
+        pass
+    if dim is None:
+        dim = next((len(v) for v in vecs if v is not None and len(v)), 0)
+    keep = np.array([v is not None and len(v) == dim > 0 for v in vecs], bool)
+    return (np.stack(vecs[keep]) if keep.any() else None), keep
+
+
+def _train_sample(emb: DataFrame, sample_size: int, id_col: str,
+                  vec_col: str, who: str):
+    """The unit-normalized valid vectors among the ``sample_size``
+    smallest non-null ids."""
+    pdf = (emb.filter(F.col(vec_col).isNotNull())
+           .orderBy(F.col(id_col).asc()).limit(sample_size)
+           .select(F.col(vec_col).cast("array<double>").alias("v"))
+           .toPandas())
+    X, _ = _stack_valid(pdf["v"].values)
+    if X is None:
+        raise ValueError(f"{who}: no non-null, non-empty vectors to "
+                         "train on (empty corpus?)")
+    return _unit(X)
+
+
+def _queries(queries: DataFrame, q_id: str, q_vec: str) -> DataFrame:
+    return queries.select(F.col(q_id),
+                          F.col(q_vec).cast("array<double>").alias("qv"))
+
+
+def _collect_queries(q: DataFrame, q_id: str):
+    """(query ids, unit-normalized query matrix), or None when there are
+    no queries."""
+    import numpy as np
+
+    rows = q.collect()
+    if not rows:
+        return None
+    Q = np.stack([np.asarray(r["qv"], float) for r in rows])
+    return [r[q_id] for r in rows], _unit(Q)
+
+
+def _scored_schema(emb, queries, id_col, q_id, score):
+    return T.StructType([
+        T.StructField(q_id, queries.schema[q_id].dataType),
+        T.StructField(id_col, emb.schema[id_col].dataType),
+        T.StructField(score, T.DoubleType()),
+    ])
+
+
+def _empty_result(emb, queries, id_col, q_id) -> DataFrame:
+    schema = _scored_schema(emb, queries, id_col, q_id, "cosine")
+    return emb.sparkSession.createDataFrame(
+        [], schema.add("rank", T.IntegerType()))
+
+
+def _top(df: DataFrame, score: str, n: int, part: str, tie: str,
+         rank: str = "__rn") -> DataFrame:
+    """The ``n`` rows of highest ``score`` per ``part``, lower ``tie``
+    first on equal scores, numbered 1..n in ``rank``."""
+    w = Window.partitionBy(part).orderBy(F.col(score).desc(),
+                                         F.col(tie).asc())
+    return df.withColumn(rank, F.row_number().over(w)) \
+        .filter(F.col(rank) <= n)
+
+
+def _ranked(scored: DataFrame, k: int, q_id: str, id_col: str) -> DataFrame:
+    return _top(scored, "cosine", k, q_id, id_col, "rank") \
+        .select(q_id, id_col, "cosine", "rank")
+
+
 def cosine_topk(emb: DataFrame, queries: DataFrame, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
-                q_id: str = "query_id", q_vec: str = "q_vec",
-                min_parallelism: int | None = None) -> DataFrame:
+                q_id: str = "query_id", q_vec: str = "q_vec") -> DataFrame:
     """Exact cosine top-k: for every query vector, the k most-similar
-    candidate vectors. Queries are collected driver-side (the
-    broadcast-small side by contract); scoring is ONE Arrow-batched
-    ``mapInPandas`` pass — a numpy matmul (batch x dim) @ (dim x
-    n_queries), BLAS-vectorized — that also reduces each batch to its
-    per-query top-k BEFORE any exchange, so the final ranking window
-    sees only n_batches x n_queries x k rows. Exact: every global
-    top-k row is top-k within its batch.
-
-    (The previous shape — crossJoin + ``F.aggregate``/``zip_with``
-    column math + a full window — evaluated ~N x n_queries x dim
-    interpreted lambda steps and sorted N x n_queries rows with only
-    n_queries-way parallelism: 130+ s and 0.43 scaling efficiency at
-    1M x 20 x 64; this path is ~20x faster and scales with cores.)
+    candidate vectors. Scoring is ONE Arrow-batched ``mapInPandas``
+    pass — a numpy matmul (batch x dim) @ (dim x n_queries) — that
+    reduces each batch to its per-query top-k BEFORE any exchange, so
+    the final ranking window sees only n_batches x n_queries x k rows.
+    Exact: every global top-k row is top-k within its batch.
 
     Float32 sources take a filter-refine fast path: the vectors cross
-    the Arrow boundary at their native width (half the bytes of the
-    old eager ``cast("array<double>")``) and the selection matmul runs
-    in float32, keeping every candidate within ``1e-4`` of the batch's
-    k-th best f32 score — ~25x the worst-case f32 dot+normalize error
-    at dim<=4096 (n*u with u=2^-24), so the true f64 top-k provably
-    survives. Survivors (~k per query) are then re-scored in float64
-    from the raw values — float32 widens to float64 exactly, so the
-    result is bit-identical to the all-f64 path.
-
-    Output: (query_id, vec_id, cosine, rank), rank 1..k, ties broken by
-    candidate id ascending (deterministic).
+    the Arrow boundary at their native width and the selection matmul
+    runs in float32, keeping every candidate within ``1e-4`` of the
+    batch's k-th best f32 score — ~25x the worst-case f32 dot+normalize
+    error at dim<=4096 (n*u with u=2^-24), so the true f64 top-k
+    provably survives. Survivors (~k per query) are then re-scored in
+    float64 from the raw values — float32 widens to float64 exactly, so
+    the result is bit-identical to the all-f64 path.
     """
     import numpy as np
 
-    spark = emb.sparkSession
-    result_schema = T.StructType([
-        T.StructField(q_id, queries.schema[q_id].dataType),
-        T.StructField(id_col, emb.schema[id_col].dataType),
-        T.StructField("cosine", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-    ])
-    qrows = queries.select(
-        F.col(q_id), F.col(q_vec).cast("array<double>").alias("qv")).collect()
-    if not qrows:
-        return spark.createDataFrame([], result_schema)
-    qids = [r[q_id] for r in qrows]
-    Q = np.stack([np.asarray(r["qv"], float) for r in qrows])
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    dim = Q.shape[1]
-
-    # the per-batch partials emit the REAL query id (from the closure's
-    # qids list) instead of a __qidx that needed a broadcast qmap join
-    # to resolve — one less broadcast build + join wave per call
-    out_schema = T.StructType([
-        T.StructField(id_col, emb.schema[id_col].dataType),
-        T.StructField(q_id, queries.schema[q_id].dataType),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    nq = len(qids)
-
+    collected = _collect_queries(_queries(queries, q_id, q_vec), q_id)
+    if collected is None:
+        return _empty_result(emb, queries, id_col, q_id)
+    qids, Qn = collected
+    dim = Qn.shape[1]
     Qn32 = Qn.astype(np.float32)
-    # worst-case |f32_score - f64_score| for unit vectors at this dim
-    # (normalize + dot, ~(2*dim+2)*u with u=2^-24) is < 4e-6 at dim 64;
-    # 1e-4 is a ~25x safety margin and still admits ~k+0 survivors on
-    # any non-degenerate score distribution
+    # selection margins cover the worst-case |select_score - true| so
+    # the true top-k survives; the f32 one is ~25x the (2*dim+2)*u error
+    # of unit vectors at dim 64. Final values always come from the same
+    # f64 rescore, whichever dtype did the selection.
     F32_MARGIN = np.float32(1e-4)
-
-    # selection margins: cover the worst-case |select_score - true| so
-    # the true top-k provably survives selection; final values always
-    # come from the same f64 matrix-vector rescore, so the output is
-    # identical whichever dtype (and BLAS kernel) did the selection
     F64_MARGIN = 1e-9
-
-    def _topk_frames(ids, X, S, margin, exact, pd):
-        # per-query top-k of one batch: margin-select on the batch
-        # matmul scores S, deterministic f64 rescore of the ~k
-        # survivors via `exact`, id-ascending tie-break
-        frames = []
-        for qi in range(nq):
-            s = S[:, qi]
-            if len(s) > k:
-                kth = np.partition(s, len(s) - k)[len(s) - k]
-                cand = np.flatnonzero(s >= kth - margin)
-            else:
-                cand = np.arange(len(s))
-            s64 = exact(cand, qi)
-            order = np.lexsort((ids[cand], -s64))[:k]
-            frames.append(pd.DataFrame(
-                {id_col: ids[cand][order], q_id: qids[qi],
-                 "cosine": s64[order]}))
-        return frames
 
     def _score(pdfs):
         import pandas as pd
 
         for pdf in pdfs:
-            col = pdf["__v"].values
-            ids = pdf[id_col].values
-            try:
-                # hot path: every vector valid -> one C-level stack, no
-                # per-row python validity lambda
-                X = np.stack(col)
-                if X.ndim != 2 or X.shape[1] != dim:
-                    raise ValueError
-            except ValueError:
-                # null / wrong-dimension vectors are ignored (they have
-                # no defined cosine)
-                ok = np.array([v is not None and len(v) == dim
-                               for v in col], bool)
-                if not ok.any():
-                    continue
-                col = col[ok]
-                ids = ids[ok]
-                X = np.stack(col)
-            def _exact(cand, qi):
-                # float32 widens to float64 exactly, so this matches an
-                # all-f64 pipeline bit for bit
-                Xc = X[cand].astype(np.float64)
-                Xcn = Xc / np.maximum(
-                    np.linalg.norm(Xc, axis=1, keepdims=True), 1e-12)
-                return Xcn @ Qn[qi]
-
-            if X.dtype == np.float32:
-                # f32 select (half the flops + memory traffic)
-                Xn = X / np.maximum(
-                    np.linalg.norm(X, axis=1, keepdims=True),
-                    np.float32(1e-12))
-                S = Xn @ Qn32.T  # (B, nq) float32
-                frames = _topk_frames(ids, X, S, F32_MARGIN, _exact, pd)
-            else:
-                X = X.astype(np.float64, copy=False)
-                Xn = X / np.maximum(
-                    np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-                S = Xn @ Qn.T  # (B, nq) float64
-                frames = _topk_frames(ids, X, S, F64_MARGIN, _exact, pd)
+            X, ok = _stack_valid(pdf["__v"].values, dim)
+            if X is None:
+                continue
+            ids = pdf[id_col].values[ok]
+            f32 = X.dtype == np.float32
+            S = _unit(X) @ (Qn32 if f32 else Qn).T  # (B, nq)
+            margin = F32_MARGIN if f32 else F64_MARGIN
+            frames = []
+            for qi, qid in enumerate(qids):
+                s = S[:, qi]
+                if len(s) > k:
+                    kth = np.partition(s, len(s) - k)[len(s) - k]
+                    cand = np.flatnonzero(s >= kth - margin)
+                else:
+                    cand = np.arange(len(s))
+                s64 = _unit(X[cand].astype(np.float64)) @ Qn[qi]
+                order = np.lexsort((ids[cand], -s64))[:k]
+                frames.append(pd.DataFrame(
+                    {id_col: ids[cand][order], q_id: qid,
+                     "cosine": s64[order]}))
             yield pd.concat(frames, ignore_index=True)
 
     vec_type = emb.schema[vec_col].dataType.simpleString()
@@ -174,308 +202,98 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int,
         F.col(id_col),
         (F.col(vec_col) if vec_type in ("array<float>", "array<double>")
          else F.col(vec_col).cast("array<double>")).alias("__v"))
-    if min_parallelism:
-        # mapInPandas parallelism = input partitions: a small corpus in
-        # one or two parquet splits pins the matmul to 1-2 tasks no
-        # matter how many cores exist. Round-robin repartition only when
-        # the scan is actually under-split (production 100 TB scans have
-        # splits >> cores, so this stays a no-op there).
-        if src.rdd.getNumPartitions() < min_parallelism:
-            src = src.repartition(min_parallelism)
-    partial = src.mapInPandas(_score, out_schema)
-    w = Window.partitionBy(q_id).orderBy(F.col("cosine").desc(),
-                                         F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "cosine", "rank")
-    )
-
-
-def cosine_topk_grid(emb: DataFrame, queries: DataFrame, k: int,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     q_id: str = "query_id", q_vec: str = "q_vec",
-                     emb_block_rows: int = 262_144,
-                     query_block_rows: int = 4_096) -> DataFrame:
-    """Exact cosine top-k for LARGE query sets — no driver collect.
-
-    :func:`cosine_topk` collects the query vectors (broadcast-small by
-    contract); this variant is the scale escape hatch when the query
-    side is itself a big relation (10^6+ rows). Block-nested-loop
-    shape: both sides are hash-bucketed into blocks, a tiny (eb, qb)
-    grid relation pairs every emb block with every query block, and a
-    cogrouped ``applyInPandas`` scores each (emb block x query block)
-    cell with one BLAS matmul, reducing to per-query top-k INSIDE the
-    cell before any exchange. A final window keeps global top-k.
-
-    Cost model: exact all-pairs is N x M dot products no matter what;
-    the knobs bound per-task memory (block sizes) and the replication
-    factor (emb shuffled n_query_blocks times, queries n_emb_blocks
-    times) — at 100 TB you pick block sizes so the replicated shuffle
-    stays disk-friendly, or switch to :func:`ivf_topk` for sublinear
-    probing. Output schema/tie-breaks identical to :func:`cosine_topk`.
-    """
-    import numpy as np
-
-    spark = emb.sparkSession
-    n_emb = emb.count()
-    n_q = queries.count()
-    result_schema = T.StructType([
-        T.StructField(q_id, queries.schema[q_id].dataType),
-        T.StructField(id_col, emb.schema[id_col].dataType),
-        T.StructField("cosine", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-    ])
-    if n_q == 0 or n_emb == 0:
-        return spark.createDataFrame([], result_schema)
-    neb = max(1, -(-n_emb // emb_block_rows))
-    nqb = max(1, -(-n_q // query_block_rows))
-
-    e = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(neb)).cast("int").alias("__eb"))
-    qd = queries.select(
-        F.col(q_id), F.col(q_vec).cast("array<double>").alias("__qv"),
-        F.pmod(F.xxhash64(F.col(q_id)), F.lit(nqb)).cast("int").alias("__qb"))
-    grid = spark.range(neb).crossJoin(
-        spark.range(nqb).select(F.col("id").alias("__qb"))).select(
-        F.col("id").cast("int").alias("__eb"), F.col("__qb").cast("int"))
-    # replicate each side across the other's blocks (broadcast the tiny
-    # grid so the replication is a map-side join, not a shuffle)
-    e_rep = e.join(F.broadcast(grid), on="__eb")
-    q_rep = qd.join(F.broadcast(grid.select("__eb", "__qb")), on="__qb")
-
-    cell_schema = T.StructType([
-        T.StructField(q_id, queries.schema[q_id].dataType),
-        T.StructField(id_col, emb.schema[id_col].dataType),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def _cell(epdf, qpdf):
-        import pandas as pd
-
-        eok = epdf["__v"].map(lambda v: v is not None)
-        epdf = epdf[eok]
-        qok = qpdf["__qv"].map(lambda v: v is not None)
-        qpdf = qpdf[qok]
-        if not len(epdf) or not len(qpdf):
-            # cogroup hands a ZERO-COLUMN frame for an absent side, so
-            # build the empty result without touching the inputs (the
-            # Arrow writer casts empty object columns to cell_schema)
-            return pd.DataFrame({q_id: pd.Series(dtype="object"),
-                                 id_col: pd.Series(dtype="object"),
-                                 "cosine": pd.Series(dtype="float64")})
-        X = np.stack(epdf["__v"].values)
-        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        Q = np.stack(qpdf["__qv"].values)
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-        S = Xn @ Qn.T  # (B, nq_cell)
-        ids = epdf[id_col].values
-        qids = qpdf[q_id].values
-        frames = []
-        for qi in range(len(qids)):
-            s = S[:, qi]
-            order = np.lexsort((ids, -s))[:k]
-            frames.append(pd.DataFrame(
-                {q_id: qids[qi], id_col: ids[order], "cosine": s[order]}))
-        return pd.concat(frames, ignore_index=True)
-
-    partial = (
-        e_rep.groupby("__eb", "__qb")
-        .cogroup(q_rep.groupby("__eb", "__qb"))
-        .applyInPandas(_cell, cell_schema)
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("cosine").desc(),
-                                         F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "cosine", "rank")
-    )
+    partial = src.mapInPandas(
+        _score, _scored_schema(emb, queries, id_col, q_id, "cosine"))
+    return _ranked(partial, k, q_id, id_col)
 
 
 def train_centroids(emb: DataFrame, n_cells: int, n_iters: int = 5,
                     sample_size: int = 4096, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    distributed: bool = False):
-    """Deterministic spherical k-means (Lloyd iterations).
-
-    Default: trains on a driver-side sample — the ``sample_size``
-    smallest ids (deterministic, resumable — no RNG in the data path);
-    init = first n_cells of the sample (k-means++ would add RNG for
-    marginal gain at this K). Returns a list of unit-normalized
-    centroid vectors. At 100 TB the sample collect is a
-    partition-pruned scan of a few thousand rows — trivially cheap next
-    to the assignment pass, which stays fully distributed.
-
-    ``distributed=True``: full-corpus Lloyd — each iteration is ONE
-    Arrow-batched ``mapInPandas`` pass emitting per-batch partial sums
-    (cell, count, sum-vector; <= batches x n_cells tiny rows), reduced
-    on the driver. Same deterministic init, same spherical update
-    (centroid = normalized member sum), so on a corpus the sample
-    covers entirely the two trainers agree to fp round-off. Use when a
-    sampled draw could miss cluster structure (10^9+ vectors, rare
-    modes); cost = n_iters full scans, each embarrassingly parallel.
+                    vec_col: str = "embedding"):
+    """Deterministic spherical k-means (Lloyd iterations) on the
+    driver-side sample of the ``sample_size`` smallest ids; init = the
+    first ``n_cells`` sample vectors. Returns a list of unit-normalized
+    centroid vectors. At scale the sample collect is a partition-pruned
+    scan of a few thousand rows, next to the assignment pass, which
+    stays fully distributed.
     """
     import numpy as np
 
-    init = (
-        emb.filter(F.col(vec_col).isNotNull())
-        .orderBy(F.col(id_col).asc()).limit(n_cells if distributed
-                                            else sample_size)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .toPandas()
-    )
-    # the distributed assignment pass already drops null / wrong-dim
-    # vectors; mirror that here so a dirty corpus yields a clean error
-    # or a clean init instead of a ragged np.stack crash
-    vs = [v for v in init["v"].values if v is not None and len(v) > 0]
-    if not vs:
-        raise ValueError(
-            "train_centroids: no non-null, non-empty vectors to "
-            "initialize from (empty corpus?)")
-    dim0 = len(vs[0])
-    vs = [v for v in vs if len(v) == dim0]
-    X = np.stack(vs)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _train_sample(emb, sample_size, id_col, vec_col, "train_centroids")
     C = X[:n_cells].copy()
-    if not distributed:
-        for _ in range(n_iters):
-            sims = X @ C.T
-            assign = sims.argmax(axis=1)
-            for c in range(n_cells):
-                members = X[assign == c]
-                if len(members):
-                    m = members.sum(axis=0)
-                    C[c] = m / max(np.linalg.norm(m), 1e-12)
-        return [[float(x) for x in row] for row in C]
-
-    dim = C.shape[1]
-    src = emb.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    part_schema = T.StructType([
-        T.StructField("cell", T.IntegerType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("s", T.ArrayType(T.DoubleType())),
-    ])
     for _ in range(n_iters):
-        Cb = C.copy()
-
-        def _partials(pdfs, Cb=Cb):
-            import pandas as pd
-
-            for pdf in pdfs:
-                ok = pdf["__v"].map(lambda v: v is not None and len(v) == dim)
-                pdf = pdf[ok]
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["__v"].values)
-                V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True),
-                                   1e-12)
-                assign = (V @ Cb.T).argmax(axis=1)
-                cells, counts = np.unique(assign, return_counts=True)
-                sums = np.zeros((len(cells), dim))
-                for k, c in enumerate(cells):
-                    sums[k] = V[assign == c].sum(axis=0)
-                yield pd.DataFrame({"cell": cells.astype("int32"),
-                                    "n": counts.astype("int64"),
-                                    "s": list(sums)})
-
-        rows = src.mapInPandas(_partials, part_schema).collect()
-        # deterministic driver reduce: fixed accumulation order
-        agg_n = np.zeros(n_cells)
-        agg_s = np.zeros((n_cells, dim))
-        for r in sorted(rows, key=lambda r: (r["cell"], r["n"], tuple(r["s"]))):
-            agg_n[r["cell"]] += r["n"]
-            agg_s[r["cell"]] += np.asarray(r["s"])
+        assign = (X @ C.T).argmax(axis=1)
         for c in range(n_cells):
-            if agg_n[c]:
-                C[c] = agg_s[c] / max(np.linalg.norm(agg_s[c]), 1e-12)
+            members = X[assign == c]
+            if len(members):
+                m = members.sum(axis=0)
+                C[c] = m / max(np.linalg.norm(m), 1e-12)
     return [[float(x) for x in row] for row in C]
 
 
-def build_ivf_index(emb: DataFrame, n_cells: int | None = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    centroids: DataFrame | list | None = None):
-    """IVF index build: k-means centroids (deterministic sampled Lloyd)
-    + fully-distributed nearest-centroid assignment. Returns
-    (centroids_df, assigned_df) where assigned has a ``cell`` column.
-
-    ``n_cells=None`` auto-scales to ~sqrt(N) (clamped to [8, 65536]) —
-    the standard IVF sizing, so cells hold ~sqrt(N) vectors each and
-    both the probe fan-out and per-cell scan grow as sqrt, not linearly.
-
-    ``centroids``: a pre-trained index — a DataFrame with (cell: long,
-    cv: array<double>) or a list of centroid vectors — skips training
-    entirely. This is the persistable-index path: train once (or load
-    the committed fixture), reuse across queries/jobs.
-    """
-    import math
-
-    spark = emb.sparkSession
-    if centroids is not None:
-        if isinstance(centroids, DataFrame):
-            cents = centroids.select(F.col("cell").cast("long"),
-                                     F.col("cv").cast("array<double>"))
-        else:
-            cents = spark.createDataFrame(
-                [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
-                "cell long, cv array<double>")
+def _ivf_index(emb: DataFrame, n_cells: int, id_col: str, vec_col: str,
+               centroids) -> tuple[DataFrame, DataFrame]:
+    """(centroids (cell, cv), assigned (id, v, cell)): every valid vector
+    assigned to its most similar centroid, ties to the lower cell.
+    ``centroids`` is a pre-trained index — a (cell, cv) DataFrame or a
+    list of vectors; absent, :func:`train_centroids` trains one."""
+    if centroids is None:
+        centroids = train_centroids(emb, n_cells, id_col=id_col,
+                                    vec_col=vec_col,
+                                    sample_size=max(4096, 4 * n_cells))
+    if isinstance(centroids, DataFrame):
+        cents = centroids.select(F.col("cell").cast("long"),
+                                 F.col("cv").cast("array<double>"))
     else:
-        if n_cells is None:
-            n = emb.count()
-            n_cells = min(max(int(math.isqrt(max(n, 1))), 8), 65_536)
-        cvecs = train_centroids(emb, n_cells, id_col=id_col, vec_col=vec_col,
-                                sample_size=max(4096, 4 * n_cells))
-        cents = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(cvecs)], "cell long, cv array<double>")
-    v = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    scored = v.crossJoin(F.broadcast(cents)).withColumn(
-        "sim", _dot("v", "cv") / (_norm("v") * _norm("cv"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("sim").desc(), F.col("cell").asc())
-    assigned = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        cents = emb.sparkSession.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
+            "cell long, cv array<double>")
+    scored = emb.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+    ).crossJoin(F.broadcast(cents)).withColumn("sim", _cos("v", "cv")) \
+        .filter(F.col("sim").isNotNull())
+    return cents, _top(scored, "sim", 1, id_col, "cell") \
         .select(id_col, "v", "cell")
-    )
-    return cents, assigned
+
+
+def _probe(q: DataFrame, cents: DataFrame, n_probe: int,
+           q_id: str) -> DataFrame:
+    """(q_id, qv, cell): each query's ``n_probe`` most similar cells,
+    ties to the lower cell."""
+    qc = q.crossJoin(F.broadcast(cents)).withColumn("csim", _cos("qv", "cv"))
+    return _top(qc, "csim", n_probe, q_id, "cell").select(q_id, "qv", "cell")
+
+
+def ivf_topk(emb: DataFrame, queries: DataFrame, k: int,
+             n_cells: int = 16,
+             n_probe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
+             q_id: str = "query_id", q_vec: str = "q_vec",
+             centroids=None) -> DataFrame:
+    """IVF-bucketed approximate top-k: probe only the ``n_probe`` cells
+    whose centroids are most similar to the query; exact cosine within
+    probed cells. Candidate work drops ~n_cells/n_probe-fold vs brute
+    force. ``centroids`` loads a pre-trained index (a (cell, cv)
+    DataFrame or a list of vectors) and skips training.
+    """
+    cents, assigned = _ivf_index(emb, n_cells, id_col, vec_col, centroids)
+    cand = _probe(_queries(queries, q_id, q_vec), cents, n_probe, q_id) \
+        .join(assigned, on="cell")
+    return _ranked(cand.withColumn("cosine", _cos("v", "qv")), k, q_id,
+                   id_col)
 
 
 def train_pq(emb: DataFrame, m: int = 8, bits: int = 8,
              sample_size: int = 4096, id_col: str = "vec_id",
-             vec_col: str = "embedding", n_iters: int = 8,
-             distributed: bool = False):
+             vec_col: str = "embedding", n_iters: int = 8):
     """Deterministic product-quantization codebooks: the (unit-normalized)
     vector space is split into ``m`` contiguous subspaces and each gets
     its own ``2**bits``-entry k-means codebook, trained Lloyd-style on
-    the same deterministic smallest-ids sample as
-    :func:`train_centroids`. Returns ndarray (m, 2**bits, d/m).
-
-    Dimension d must be divisible by m.
-
-    ``distributed=True``: full-corpus Lloyd instead of the driver-side
-    sample — each iteration is ONE Arrow-batched ``mapInPandas`` pass
-    that assigns every vector in ALL m subspaces and emits per-batch
-    partial sums ((subspace, codeword, count, sum-vector); at most
-    batches x m x 2^bits tiny rows), reduced deterministically on the
-    driver (fixed accumulation order, mirroring
-    :func:`train_centroids`). Same deterministic init (globally
-    smallest-id rows), same mean update, so on a corpus the sample
-    covers entirely the two trainers agree to fp round-off. Use when a
-    4096-row draw could miss codeword structure (10^9+ vectors); cost =
-    ``n_iters`` full scans, each embarrassingly parallel with no
-    shuffle.
+    the same smallest-ids sample as :func:`train_centroids`. Returns
+    ndarray (m, 2**bits, d/m). Dimension d must be divisible by m.
     """
     import numpy as np
 
-    pdf = (
-        emb.orderBy(F.col(id_col).asc())
-        .limit((1 << bits) if distributed else sample_size)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .toPandas()
-    )
-    X = np.stack(pdf["v"].values)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _train_sample(emb, sample_size, id_col, vec_col, "train_pq")
     n, d = X.shape
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -484,89 +302,26 @@ def train_pq(emb: DataFrame, m: int = 8, bits: int = 8,
     books = np.zeros((m, ksub, dsub))
     for j in range(m):
         S = X[:, j * dsub:(j + 1) * dsub]
-        books[j] = S[:ksub].copy() if n >= ksub else np.resize(
-            S, (ksub, dsub)).copy()
-    if not distributed:
-        for j in range(m):
-            S = X[:, j * dsub:(j + 1) * dsub]
-            C = books[j]
-            for _ in range(n_iters):
-                d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                assign = d2.argmin(axis=1)
-                for c in range(ksub):
-                    members = S[assign == c]
-                    if len(members):
-                        C[c] = members.mean(axis=0)
-        return books
-
-    src = emb.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    part_schema = T.StructType([
-        T.StructField("j", T.IntegerType()),
-        T.StructField("cell", T.IntegerType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("s", T.ArrayType(T.DoubleType())),
-    ])
-    for _ in range(n_iters):
-        Bb = books.copy()
-
-        def _partials(pdfs, Bb=Bb):
-            import pandas as pd
-
-            for pdf in pdfs:
-                ok = pdf["__v"].map(lambda v: v is not None and len(v) == d)
-                pdf = pdf[ok]
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["__v"].values)
-                V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True),
-                                   1e-12)
-                out_j, out_c, out_n, out_s = [], [], [], []
-                for j in range(m):
-                    S = V[:, j * dsub:(j + 1) * dsub]
-                    C = Bb[j]
-                    # identical fp formula to the sampled trainer (so a
-                    # sample-covered corpus reproduces its books to
-                    # round-off), chunked to bound the (rows x ksub x
-                    # dsub) distance temp at ~64 MB
-                    chunk = max(1, (1 << 23) // (ksub * dsub))
-                    assign = np.empty(len(S), dtype=np.int64)
-                    for a in range(0, len(S), chunk):
-                        Sc = S[a:a + chunk]
-                        d2 = ((Sc[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                        assign[a:a + len(Sc)] = d2.argmin(axis=1)
-                    cells, counts = np.unique(assign, return_counts=True)
-                    sums = np.zeros((len(cells), dsub))
-                    for k, c in enumerate(cells):
-                        sums[k] = S[assign == c].sum(axis=0)
-                    out_j.extend([j] * len(cells))
-                    out_c.extend(cells.tolist())
-                    out_n.extend(counts.tolist())
-                    out_s.extend(list(sums))
-                yield pd.DataFrame({"j": np.asarray(out_j, "int32"),
-                                    "cell": np.asarray(out_c, "int32"),
-                                    "n": np.asarray(out_n, "int64"),
-                                    "s": out_s})
-
-        rows = src.mapInPandas(_partials, part_schema).collect()
-        agg_n = np.zeros((m, ksub))
-        agg_s = np.zeros((m, ksub, dsub))
-        # deterministic driver reduce: fixed accumulation order
-        for r in sorted(rows, key=lambda r: (r["j"], r["cell"], r["n"],
-                                             tuple(r["s"]))):
-            agg_n[r["j"], r["cell"]] += r["n"]
-            agg_s[r["j"], r["cell"]] += np.asarray(r["s"])
-        nz = agg_n > 0
-        books[nz] = agg_s[nz] / agg_n[nz][:, None]
+        C = books[j]
+        C[:] = S[:ksub] if n >= ksub else np.resize(S, (ksub, dsub))
+        for _ in range(n_iters):
+            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            assign = d2.argmin(axis=1)
+            for c in range(ksub):
+                members = S[assign == c]
+                if len(members):
+                    C[c] = members.mean(axis=0)
     return books
 
 
 def pq_encode(emb: DataFrame, codebooks, id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
-    """(id, codes array<smallint>) — every vector unit-normalized and
-    quantized to its nearest codeword per subspace (mapInPandas, fully
-    distributed; the codebooks ride the task closure, m * 2^bits * d/m
-    floats). The codes relation is the PERSISTABLE compressed index:
-    m bytes of payload per vector instead of 4-8 bytes per dimension.
+    """(id, codes array<smallint>) — every valid vector unit-normalized
+    and quantized to its nearest codeword per subspace (mapInPandas,
+    fully distributed; the codebooks ride the task closure, m * 2^bits
+    * d/m floats). The codes relation is the PERSISTABLE compressed
+    index: m bytes of payload per vector instead of 4-8 bytes per
+    dimension.
     """
     import numpy as np
 
@@ -581,14 +336,16 @@ def pq_encode(emb: DataFrame, codebooks, id_col: str = "vec_id",
         import pandas as pd
 
         for pdf in pdfs:
-            X = np.stack(pdf["__v"].values)
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            X, ok = _stack_valid(pdf["__v"].values, m * dsub)
+            if X is None:
+                continue
+            X = _unit(X)
             codes = np.empty((len(X), m), dtype=np.int16)
             for j in range(m):
                 S = X[:, j * dsub:(j + 1) * dsub]
                 d2 = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
                 codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].values,
+            yield pd.DataFrame({id_col: pdf[id_col].values[ok],
                                 "codes": list(codes)})
 
     src = emb.select(F.col(id_col),
@@ -622,105 +379,99 @@ def codebooks_from_df(df) -> "object":
     return books
 
 
-def pq_topk(emb: DataFrame, queries: DataFrame, k: int,
-            m: int = 8, bits: int = 8, shortlist: int = 64,
-            rerank: bool = True,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            q_id: str = "query_id", q_vec: str = "q_vec",
-            codebooks=None, codes: DataFrame | None = None) -> DataFrame:
-    """Product-quantized approximate top-k: score every vector in the
-    COMPRESSED domain (per-query lookup table of subspace partial dot
-    products, gathered per code — no float vectors touched), keep a
-    per-query ``shortlist``, then (``rerank=True``) re-rank the
-    shortlist with exact cosine against the original vectors.
-
-    Output schema matches :func:`cosine_topk`. Queries are collected
-    driver-side to build LUTs (the broadcast-small side by contract).
-    Approximate by design — gate with a recall test, not equality.
-
-    ``codebooks`` (ndarray (m, 2**bits, dsub), the output of
-    :func:`train_pq` / :func:`codebooks_from_df`) and ``codes`` (the
-    output of :func:`pq_encode`) make the compressed index persistable:
-    train/encode once, reuse across calls — absent, both are built here.
-    """
+def _pq_index(emb, m, bits, codebooks, codes, id_col, vec_col):
     import numpy as np
 
     books = (np.asarray(codebooks) if codebooks is not None
              else train_pq(emb, m, bits, id_col=id_col, vec_col=vec_col))
     if codes is None:
         codes = pq_encode(emb, books, id_col, vec_col)
+    return books, codes
 
-    qrows = queries.select(
-        F.col(q_id), F.col(q_vec).cast("array<double>").alias("qv")).collect()
-    if not qrows:
-        return emb.sparkSession.createDataFrame([], T.StructType([
-            T.StructField(q_id, queries.schema[q_id].dataType),
-            T.StructField(id_col, emb.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]))
-    qids = [r[q_id] for r in qrows]
-    Q = np.stack([np.asarray(r["qv"], float) for r in qrows])
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+
+def _adc_topk(emb: DataFrame, queries: DataFrame, k: int, shortlist: int,
+              books, codes: DataFrame, id_col: str, vec_col: str,
+              q_id: str, q_vec: str, probes: DataFrame | None = None):
+    """The ADC scorer: per-query LUT[j, c] = <q_subvector_j, codeword_jc>,
+    each code row scored by a gather-and-sum over its m codes (no float
+    vector touched), the ``shortlist`` best per query re-ranked with
+    exact cosine. With ``probes`` (q_id, cell), a query scores only the
+    rows of ``codes`` whose ``cell`` it probes."""
+    import numpy as np
+
+    q = _queries(queries, q_id, q_vec)
+    collected = _collect_queries(q, q_id)
+    if collected is None:
+        return _empty_result(emb, queries, id_col, q_id)
+    qids, Qn = collected
     mm, ksub, dsub = books.shape
-    # LUT[q, j, c] = <q_subvector_j, codeword_jc>
-    lut = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), mm, dsub), books)
-
-    out_schema = T.StructType([
-        T.StructField(id_col, emb.schema[id_col].dataType),
-        T.StructField("__qidx", T.IntegerType()),
-        T.StructField("adc", T.DoubleType()),
-    ])
+    lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), mm, dsub), books)
+    probed = None
+    if probes is not None:
+        cells: dict = {}
+        for r in probes.collect():  # n_queries x n_probe ints
+            cells.setdefault(r[q_id], []).append(r["cell"])
+        probed = [np.asarray(cells.get(qid, ()), np.int64) for qid in qids]
 
     def _score(pdfs):
         import pandas as pd
 
+        rows = np.arange(mm)[None, :]
         for pdf in pdfs:
-            C = np.stack(pdf["codes"].values).astype(np.int64)  # (B, m)
-            rows = np.arange(mm)[None, :]
-            ids = pdf[id_col].values
+            C, ok = _stack_valid(pdf["codes"].values, mm)
+            if C is None:
+                continue
+            C = C.astype(np.int64)  # (B, m)
+            ids = pdf[id_col].values[ok]
+            cells = None if probed is None else pdf["cell"].values[ok]
             frames = []
-            for qi in range(len(qids)):
-                s = lut[qi][rows, C].sum(axis=1)  # (B,)
+            for qi, qid in enumerate(qids):
+                sel = slice(None)
+                if probed is not None:
+                    sel = np.isin(cells, probed[qi])
+                    if not sel.any():
+                        continue
                 frames.append(pd.DataFrame(
-                    {id_col: ids, "__qidx": qi, "adc": s}))
-            yield pd.concat(frames, ignore_index=True)
+                    {id_col: ids[sel], q_id: qid,
+                     "adc": lut[qi][rows, C[sel]].sum(axis=1)}))
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
 
-    scored = codes.mapInPandas(_score, out_schema)
-    wq = Window.partitionBy("__qidx").orderBy(F.col("adc").desc(),
-                                              F.col(id_col).asc())
-    short = scored.withColumn("__rn", F.row_number().over(wq)) \
-        .filter(F.col("__rn") <= (shortlist if rerank else k))
-    spark = emb.sparkSession
-    q_id_type = queries.schema[q_id].dataType.simpleString()
-    qmap = spark.createDataFrame(
-        [(i, qid) for i, qid in enumerate(qids)],
-        f"__qidx int, {q_id} {q_id_type}")
-    short = short.join(F.broadcast(qmap), on="__qidx")
-    if not rerank:
-        w = Window.partitionBy(q_id).orderBy(F.col("adc").desc(),
-                                             F.col(id_col).asc())
-        return (short.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(q_id, id_col, F.col("adc").alias("cosine"), "rank"))
+    scored = codes.mapInPandas(
+        _score, _scored_schema(emb, queries, id_col, q_id, "adc"))
+    short = _top(scored, "adc", shortlist, q_id, id_col)
     v = emb.select(F.col(id_col),
                    F.col(vec_col).cast("array<double>").alias("v"))
-    q = queries.select(F.col(q_id),
-                       F.col(q_vec).cast("array<double>").alias("qv"))
-    cand = short.select(q_id, id_col).join(v, on=id_col).join(
-        F.broadcast(q), on=q_id)
-    sim = cand.withColumn("cosine", _dot("v", "qv") / (_norm("v") * _norm("qv")))
-    w = Window.partitionBy(q_id).orderBy(F.col("cosine").desc(),
-                                         F.col(id_col).asc())
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "cosine", "rank")
-    )
+    cand = short.select(q_id, id_col).join(v, on=id_col) \
+        .join(F.broadcast(q), on=q_id)
+    return _ranked(cand.withColumn("cosine", _cos("v", "qv")), k, q_id,
+                   id_col)
+
+
+def pq_topk(emb: DataFrame, queries: DataFrame, k: int,
+            m: int = 8, bits: int = 8, shortlist: int = 64,
+            id_col: str = "vec_id", vec_col: str = "embedding",
+            q_id: str = "query_id", q_vec: str = "q_vec",
+            codebooks=None, codes: DataFrame | None = None) -> DataFrame:
+    """Product-quantized approximate top-k: score every vector in the
+    COMPRESSED domain (per-query lookup table of subspace partial dot
+    products, gathered per code), keep a per-query ``shortlist``, then
+    re-rank the shortlist with exact cosine against the original
+    vectors. Approximate by design — gate with a recall test, not
+    equality.
+
+    ``codebooks`` (ndarray (m, 2**bits, dsub), the output of
+    :func:`train_pq` / :func:`codebooks_from_df`) and ``codes`` (the
+    output of :func:`pq_encode`) make the compressed index persistable:
+    train/encode once, reuse across calls — absent, both are built here.
+    """
+    books, codes = _pq_index(emb, m, bits, codebooks, codes, id_col, vec_col)
+    return _adc_topk(emb, queries, k, shortlist, books, codes, id_col,
+                     vec_col, q_id, q_vec)
 
 
 def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int,
-               n_cells: int | None = 16, n_probe: int = 4,
+               n_cells: int = 16, n_probe: int = 4,
                m: int = 8, bits: int = 8, shortlist: int = 64,
                id_col: str = "vec_id", vec_col: str = "embedding",
                q_id: str = "query_id", q_vec: str = "q_vec",
@@ -729,132 +480,16 @@ def ivfpq_topk(emb: DataFrame, queries: DataFrame, k: int,
     """IVF x PQ — the production ANN composition: IVF prunes WHICH
     vectors each query scores (top-``n_probe`` cells only), PQ
     compresses WHAT that scan reads (m one-byte codes per vector), and
-    the ADC shortlist re-ranks with exact cosine. At 10^12 vectors this
-    is the only shape whose per-query cost is sublinear in BOTH
-    candidate count and bytes-per-candidate.
+    the ADC shortlist re-ranks with exact cosine. Per-query cost is
+    sublinear in both candidate count and bytes per candidate.
 
-    Output schema matches :func:`cosine_topk`; approximate by design —
-    recall-gated, not equality-gated. ``centroids`` / ``codebooks`` /
-    ``codes`` accept a pre-trained persistable index (see
-    :func:`build_ivf_index` / :func:`pq_topk`).
+    Approximate by design — recall-gated, not equality-gated.
+    ``centroids`` / ``codebooks`` / ``codes`` accept a pre-trained
+    persistable index (see :func:`ivf_topk` / :func:`pq_topk`).
     """
-    import numpy as np
-
-    cents, assigned = build_ivf_index(emb, n_cells, id_col, vec_col,
-                                      centroids=centroids)
-    books = (np.asarray(codebooks) if codebooks is not None
-             else train_pq(emb, m, bits, id_col=id_col, vec_col=vec_col))
-    if codes is None:
-        codes = pq_encode(emb, books, id_col, vec_col)
-    codes = codes.join(assigned.select(id_col, "cell"), on=id_col)
-
-    qrows = queries.select(
-        F.col(q_id), F.col(q_vec).cast("array<double>").alias("qv")).collect()
-    if not qrows:
-        return emb.sparkSession.createDataFrame([], T.StructType([
-            T.StructField(q_id, queries.schema[q_id].dataType),
-            T.StructField(id_col, emb.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]))
-    qids = [r[q_id] for r in qrows]
-    Q = np.stack([np.asarray(r["qv"], float) for r in qrows])
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    mm, ksub, dsub = books.shape
-    lut = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), mm, dsub), books)
-
-    # per-query probed cells (tiny: queries x centroids, broadcast)
-    spark = emb.sparkSession
-    q_id_type = queries.schema[q_id].dataType.simpleString()
-    qmap = spark.createDataFrame(
-        [(i, qid) for i, qid in enumerate(qids)],
-        f"__qidx int, {q_id} {q_id_type}")
-    q = queries.select(F.col(q_id),
-                       F.col(q_vec).cast("array<double>").alias("qv"))
-    qc = q.join(F.broadcast(qmap), on=q_id).crossJoin(F.broadcast(cents)) \
-        .withColumn("csim", _dot("qv", "cv") / (_norm("qv") * _norm("cv")))
-    wq = Window.partitionBy(q_id).orderBy(F.col("csim").desc(),
-                                          F.col("cell").asc())
-    probes = (qc.withColumn("__rn", F.row_number().over(wq))
-              .filter(F.col("__rn") <= n_probe)
-              .select("__qidx", "cell"))
-
-    out_schema = T.StructType([
-        T.StructField(id_col, emb.schema[id_col].dataType),
-        T.StructField("__qidx", T.IntegerType()),
-        T.StructField("adc", T.DoubleType()),
-    ])
-    probe_map: dict = {}
-    for r in probes.collect():  # n_queries x n_probe ints — broadcast-tiny
-        probe_map.setdefault(int(r["cell"]), []).append(int(r["__qidx"]))
-
-    def _score(pdfs):
-        import pandas as pd
-
-        for pdf in pdfs:
-            C = np.stack(pdf["codes"].values).astype(np.int64)
-            cells = pdf["cell"].values
-            ids = pdf[id_col].values
-            rows = np.arange(mm)[None, :]
-            frames = []
-            for qi in range(len(qids)):
-                sel = np.array([qi in probe_map.get(int(c), ()) for c in cells])
-                if not sel.any():
-                    continue
-                s = lut[qi][rows, C[sel]].sum(axis=1)
-                frames.append(pd.DataFrame(
-                    {id_col: ids[sel], "__qidx": qi, "adc": s}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = codes.mapInPandas(_score, out_schema)
-    ws = Window.partitionBy("__qidx").orderBy(F.col("adc").desc(),
-                                              F.col(id_col).asc())
-    short = scored.withColumn("__rn", F.row_number().over(ws)) \
-        .filter(F.col("__rn") <= shortlist) \
-        .join(F.broadcast(qmap), on="__qidx")
-    v = emb.select(F.col(id_col),
-                   F.col(vec_col).cast("array<double>").alias("v"))
-    cand = short.select(q_id, id_col).join(v, on=id_col).join(
-        F.broadcast(q), on=q_id)
-    sim = cand.withColumn("cosine", _dot("v", "qv") / (_norm("v") * _norm("qv")))
-    w = Window.partitionBy(q_id).orderBy(F.col("cosine").desc(),
-                                         F.col(id_col).asc())
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "cosine", "rank")
-    )
-
-
-def ivf_topk(emb: DataFrame, queries: DataFrame, k: int,
-             n_cells: int | None = 16,
-             n_probe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
-             q_id: str = "query_id", q_vec: str = "q_vec",
-             centroids=None) -> DataFrame:
-    """IVF-bucketed approximate top-k: probe only the n_probe cells whose
-    centroids are most similar to the query; exact cosine within probed
-    cells. Candidate work drops ~n_cells/n_probe-fold vs brute force.
-    ``n_cells=None`` auto-scales to ~sqrt(N) (see build_ivf_index);
-    ``centroids`` loads a pre-trained index (see build_ivf_index).
-    """
-    cents, assigned = build_ivf_index(emb, n_cells, id_col, vec_col,
-                                      centroids=centroids)
-    q = queries.select(F.col(q_id), F.col(q_vec).cast("array<double>").alias("qv"))
-    qc = q.crossJoin(F.broadcast(cents)).withColumn(
-        "csim", _dot("qv", "cv") / (_norm("qv") * _norm("cv"))
-    )
-    wq = Window.partitionBy(q_id).orderBy(F.col("csim").desc(), F.col("cell").asc())
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select(q_id, "qv", "cell")
-    )
-    cand = probes.join(assigned, on="cell")
-    sim = cand.withColumn("cosine", _dot("v", "qv") / (_norm("v") * _norm("qv")))
-    w = Window.partitionBy(q_id).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, id_col, "cosine", "rank")
-    )
+    cents, assigned = _ivf_index(emb, n_cells, id_col, vec_col, centroids)
+    books, codes = _pq_index(emb, m, bits, codebooks, codes, id_col, vec_col)
+    probes = _probe(_queries(queries, q_id, q_vec), cents, n_probe, q_id)
+    return _adc_topk(emb, queries, k, shortlist, books,
+                     codes.join(assigned.select(id_col, "cell"), on=id_col),
+                     id_col, vec_col, q_id, q_vec, probes)

@@ -6,9 +6,12 @@ DuckDB-mirrorable: assignment -> probe -> ADC -> re-rank is pure SQL
 once the trained parameters are a shared parquet input (the reference's
 accuracy-oracle analog: benchmark.py:204-265).
 
-Training itself stays the engine's deterministic sampled-Lloyd
-(textops/ann.py train_centroids / train_pq — no RNG anywhere), so the
-fixtures are reproducible by rerunning this script.
+Training is the engine's one trainer per index: deterministic Lloyd
+on the ``sample_size`` smallest ids (textops/ann.py train_centroids /
+train_pq, no RNG anywhere; null and wrong-length vectors are skipped),
+so the fixtures are reproducible by rerunning this script, and
+``tests/test_textops.py::TestAnnFixtures`` checks that fresh training
+still returns the committed index.
 
 Layout:
 - centroids.parquet: (cell: int64, cv: list<double>)   16 cells

@@ -196,3 +196,17 @@ def test_decode_audio_empty_input(spark, docs):
         "doc_id", "span_idx", "media_ref")
     assert decode_audio(fetch_audio_bytes(spans)).count() == 0
     assert sample_audio_windows(fetch_audio_bytes(spans)).count() == 0
+
+
+def test_audio_null_payload_raises_parser_error(spark):
+    # a null payload surfaces the RIFF parser's documented
+    # ValueError, not a bytes(None) TypeError from the executor
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+
+    mb = spark.createDataFrame(
+        [("d1", 0, "r1", None)],
+        "doc_id string, span_idx int, media_ref string, payload binary")
+    with pytest.raises((PythonException, Py4JJavaError)) as ei:
+        decode_audio(mb).count()
+    assert "ValueError" in str(ei.value)

@@ -70,12 +70,14 @@ class TestValidateCoords:
         assert flags[1] and not flags[2] and not flags[3] and not flags[4]
 
 
-class TestDedupOracles:
-    """The dedup queries of the driver contract against their DuckDB
-    oracles, compared the way ``scripts/check_contract.py`` compares
-    them (repr-exact after canonical column and row order)."""
+class TestContractOracles:
+    """The dedup and ANN queries of the driver contract against their
+    DuckDB oracles, compared the way ``scripts/check_contract.py``
+    compares them (repr-exact after canonical column and row order)."""
 
-    @pytest.mark.parametrize("key", ["jaccard_pairs", "near_dup_groups"])
+    @pytest.mark.parametrize("key", [
+        "jaccard_pairs", "near_dup_groups",
+        "embedding_topk", "ivf_topk", "pq_topk", "ivfpq_topk"])
     def test_query_matches_duckdb_oracle(self, spark, key):
         import duckdb
 

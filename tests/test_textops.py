@@ -240,6 +240,9 @@ class TestDedup:
         finally:
             if prev_dir:
                 spark.sparkContext.setCheckpointDir(prev_dir)
+            else:
+                getattr(jsc, "checkpointDir_$eq")(
+                    spark._jvm.scala.Option.apply(None))
 
     def test_simhash_identical_for_exact_dups(self, planted):
         sh = simhash(planted).toPandas().set_index("doc_id").simhash
@@ -396,12 +399,122 @@ class TestAnn:
         assert len(hit & want) / len(want) >= 0.8
         for qi in range(10):  # self-hit survives compression + re-rank
             assert qi in set(rr[rr.query_id == qi].vec_id)
-        # compressed-domain-only scoring still lands most neighbors
-        adc = pq_topk(emb, q, 5, m=m, rerank=False).toPandas()
-        a = set(map(tuple, adc[["query_id", "vec_id"]].values))
-        assert len(a & want) / len(want) >= 0.4
         with pytest.raises(ValueError, match="divisible"):
             train_pq(emb, m=dim + 1)
+
+    def test_f32_fast_path_exact_on_adversarial_near_ties(self, spark):
+        # the float32 filter-refine path promises BIT-IDENTICAL output
+        # to f64 scoring of the same stored values; stress it with 50
+        # vectors whose true cosines to the query differ by only
+        # 1e-9..1e-7 — far below the f32 selection precision, so every
+        # near-tie must survive the margin filter and be ranked by the
+        # f64 rescore
+        import numpy as np
+
+        from geodistpy_spark.textops.ann import cosine_topk
+
+        rng = np.random.default_rng(7)
+        d = 16
+        base = rng.normal(size=d)
+        base /= np.linalg.norm(base)
+        rows = []
+        for i in range(50):
+            eps = 1e-9 * (i + 1)
+            o = rng.normal(size=d)
+            o -= (o @ base) * base
+            o /= np.linalg.norm(o)
+            v = base * np.cos(1e-3) + o * np.sin(1e-3) * (1 + eps)
+            v /= np.linalg.norm(v)
+            rows.append((i, [float(x) for x in v]))
+        for i in range(50, 200):
+            v = rng.normal(size=d)
+            v /= np.linalg.norm(v)
+            rows.append((i, [float(x) for x in v]))
+        embf32 = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>").select(
+            "vec_id", F.col("embedding").cast("array<float>").alias("embedding"))
+        q = spark.createDataFrame(
+            [(0, [float(x) for x in base])],
+            "query_id long, q_vec array<double>")
+        got = [(r.vec_id, r.cosine)
+               for r in cosine_topk(embf32, q, 20).orderBy("rank").collect()]
+        stored = {r.vec_id: np.array(r.embedding, dtype=np.float64)
+                  for r in embf32.collect()}
+        qv = base.astype(np.float64)
+        truth = sorted(
+            ((float(v @ qv / (np.linalg.norm(v) * np.linalg.norm(qv))), -i)
+             for i, v in stored.items()), reverse=True)[:20]
+        assert [g[0] for g in got] == [-mi for _, mi in truth]
+        assert max(abs(g[1] - c) for g, (c, _) in zip(got, truth)) < 1e-15
+
+    def test_train_init_filters_nulls_and_errors_on_empty(self, spark):
+        # the INIT sample must mirror the assignment pass's null /
+        # wrong-dim filtering (a null in the smallest-id window crashed
+        # np.stack), and an empty corpus must raise a clear error
+        import numpy as np
+
+        from geodistpy_spark.textops.ann import train_centroids
+
+        dirty = spark.createDataFrame(
+            [(1, None), (2, [1.0, 0.0]), (3, [0.5]), (4, [0.0, 1.0])],
+            "vec_id long, embedding array<double>")
+        C = np.asarray(train_centroids(dirty, 2))
+        assert C.shape == (2, 2) and np.isfinite(C).all()
+        empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+        with pytest.raises(ValueError, match="no non-null"):
+            train_centroids(empty, 2)
+
+    def test_topk_empty_and_null_inputs(self, spark):
+        # empty query set / empty corpus must not crash the Arrow-batched
+        # scorers (np.stack on empties did); a null and a wrong-length
+        # embedding row are skipped by every scorer, encoder and trainer
+        # — the same output as without those rows, and never fatal
+        from geodistpy_spark.textops import (
+            codebooks_from_df, cosine_topk, ivf_topk, ivfpq_topk, pq_encode,
+            pq_topk, train_pq)
+
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        q = emb.filter(F.col("vec_id") < 2).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+        q0 = q.filter(F.col("query_id") < 0)
+        books = codebooks_from_df(
+            spark.read.parquet("fixtures/ann/codebooks.parquet"))
+        assert cosine_topk(emb, q0, 3).count() == 0
+        assert cosine_topk(emb.filter(F.col("vec_id") < 0), q, 3).count() == 0
+        assert pq_topk(emb, q0, 3, codebooks=books).count() == 0
+        assert ivfpq_topk(emb, q0, 3, n_cells=4, codebooks=books).count() == 0
+
+        # row 7 null, row 8 one element short; the queries are their
+        # original vectors, so a row that is not skipped is a self-hit
+        bad = {7, 8}
+        dim = len(emb.first()["embedding"])
+        dirty = emb.withColumn("embedding", F.when(
+            F.col("vec_id") == 7, F.lit(None)).when(
+            F.col("vec_id") == 8, F.slice("embedding", 1, dim - 1)).otherwise(
+            F.col("embedding")))
+        clean = emb.filter(~F.col("vec_id").isin(*bad))
+        qb = emb.filter(F.col("vec_id").isin(*bad)).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+
+        trained = train_pq(dirty, m=8)
+        assert np.array_equal(trained, train_pq(clean, m=8))
+        codes = pq_encode(dirty, books).toPandas()
+        assert len(codes) == clean.count() and not bad & set(codes.vec_id)
+        cases = {
+            "cosine_topk": lambda e: cosine_topk(e, qb, 3),
+            # every cell probed and k = the corpus size: a row that is
+            # not skipped comes back with a null cosine
+            "ivf_topk": lambda e: ivf_topk(e, qb, 500, n_cells=4),
+            "pq_topk": lambda e: pq_topk(e, qb, 3),
+            "ivfpq_topk": lambda e: ivfpq_topk(e, qb, 3, n_cells=4,
+                                               codebooks=books),
+        }
+        for name, topk in cases.items():
+            out = topk(dirty).toPandas()
+            want = topk(clean).toPandas()
+            assert len(want) and not bad & set(out.vec_id), name
+            assert sorted(out.values.tolist()) \
+                == sorted(want.values.tolist()), name
 
 
 class TestAnalysis:
@@ -736,104 +849,15 @@ class TestIvfPq:
         assert (got.groupby("query_id").vec_id.count() <= 5).all()
 
 
-class TestCosineTopkGrid:
-    def test_grid_matches_collect_path(self, spark):
-        # the no-driver-collect block-nested-loop path must return the
-        # exact rows of the collect path, including tie-breaks — forced
-        # through a real multi-cell grid by tiny block sizes
-        import pandas as pd
-
-        from geodistpy_spark.textops import cosine_topk, cosine_topk_grid
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") % 37 == 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"))
-        ref = cosine_topk(emb, q, 7).toPandas() \
-            .sort_values(["query_id", "rank"]).reset_index(drop=True)
-        got = cosine_topk_grid(emb, q, 7, emb_block_rows=64,
-                               query_block_rows=3).toPandas() \
-            .sort_values(["query_id", "rank"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, ref)
-
-    def test_grid_empty_queries(self, spark):
-        from geodistpy_spark.textops import cosine_topk_grid
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        empty_q = emb.filter(F.col("vec_id") < 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"))
-        assert cosine_topk_grid(emb, empty_q, 5).count() == 0
-
-    def test_f32_fast_path_exact_on_adversarial_near_ties(self, spark):
-        # the float32 filter-refine path promises BIT-IDENTICAL output
-        # to f64 scoring of the same stored values; stress it with 50
-        # vectors whose true cosines to the query differ by only
-        # 1e-9..1e-7 — far below the f32 selection precision, so every
-        # near-tie must survive the margin filter and be ranked by the
-        # f64 rescore
-        import numpy as np
-
-        from geodistpy_spark.textops.ann import cosine_topk
-
-        rng = np.random.default_rng(7)
-        d = 16
-        base = rng.normal(size=d)
-        base /= np.linalg.norm(base)
-        rows = []
-        for i in range(50):
-            eps = 1e-9 * (i + 1)
-            o = rng.normal(size=d)
-            o -= (o @ base) * base
-            o /= np.linalg.norm(o)
-            v = base * np.cos(1e-3) + o * np.sin(1e-3) * (1 + eps)
-            v /= np.linalg.norm(v)
-            rows.append((i, [float(x) for x in v]))
-        for i in range(50, 200):
-            v = rng.normal(size=d)
-            v /= np.linalg.norm(v)
-            rows.append((i, [float(x) for x in v]))
-        embf32 = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>").select(
-            "vec_id", F.col("embedding").cast("array<float>").alias("embedding"))
-        q = spark.createDataFrame(
-            [(0, [float(x) for x in base])],
-            "query_id long, q_vec array<double>")
-        got = [(r.vec_id, r.cosine)
-               for r in cosine_topk(embf32, q, 20).orderBy("rank").collect()]
-        stored = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-                  for r in embf32.collect()}
-        qv = base.astype(np.float64)
-        truth = sorted(
-            ((float(v @ qv / (np.linalg.norm(v) * np.linalg.norm(qv))), -i)
-             for i, v in stored.items()), reverse=True)[:20]
-        assert [g[0] for g in got] == [-mi for _, mi in truth]
-        assert max(abs(g[1] - c) for g, (c, _) in zip(got, truth)) < 1e-15
-
-
 class TestDistributedLloyd:
-    def test_distributed_matches_sampled_on_covered_corpus(self, spark):
-        # when the sample covers the whole corpus, sampled and
-        # distributed Lloyd see identical data from the identical init,
-        # so the centroids must agree to fp round-off (the distributed
-        # path differs only in partial-sum accumulation order)
-        import numpy as np
-
-        from geodistpy_spark.textops.ann import train_centroids
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        n = emb.count()
-        sampled = np.asarray(train_centroids(emb, 8, sample_size=n))
-        dist = np.asarray(train_centroids(emb, 8, distributed=True))
-        assert np.allclose(sampled, dist, atol=1e-9), \
-            np.abs(sampled - dist).max()
+    # the sampled Lloyd trainers behind the IVF and PQ indexes
 
     def test_distributed_centroids_drive_ivf_recall(self, spark):
         from geodistpy_spark.textops import cosine_topk, ivf_topk
         from geodistpy_spark.textops.ann import train_centroids
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        cents = train_centroids(emb, 8, distributed=True)
+        cents = train_centroids(emb, 8)
         q = emb.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"))
@@ -845,53 +869,28 @@ class TestDistributedLloyd:
         assert len(hit & want) / len(want) >= 0.5
 
     def test_distributed_ignores_malformed_vectors(self, spark):
+        # a null and a wrong-length vector inside the sample are skipped:
+        # both trainers return what they return without them
         import numpy as np
 
-        from geodistpy_spark.textops.ann import train_centroids
+        from geodistpy_spark.textops.ann import train_centroids, train_pq
 
         base = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet").limit(64)
+            "/root/testdata/sf0.001/embeddings.parquet").filter(
+            F.col("vec_id") < 64).select(
+            "vec_id", F.col("embedding").cast("array<double>")
+            .alias("embedding"))
         dim = len(base.first()["embedding"])
         bad = spark.createDataFrame(
             [(10_001, None), (10_002, [1.0] * (dim - 1))],
-            f"vec_id long, embedding array<double>")
-        merged = base.select("vec_id",
-                             F.col("embedding").cast("array<double>")
-                             .alias("embedding")).unionByName(bad)
-        C = np.asarray(train_centroids(merged, 4, distributed=True))
-        assert C.shape == (4, dim) and np.isfinite(C).all()
-
-    def test_train_init_filters_nulls_and_errors_on_empty(self, spark):
-        # the INIT sample must mirror the assignment pass's null /
-        # wrong-dim filtering (a null in the smallest-id window crashed
-        # np.stack), and an empty corpus must raise a clear error
-        import numpy as np
-
-        from geodistpy_spark.textops.ann import train_centroids
-
-        dirty = spark.createDataFrame(
-            [(1, None), (2, [1.0, 0.0]), (3, [0.5]), (4, [0.0, 1.0])],
             "vec_id long, embedding array<double>")
-        C = np.asarray(train_centroids(dirty, 2))
-        assert C.shape == (2, 2) and np.isfinite(C).all()
-        empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-        with pytest.raises(ValueError, match="no non-null"):
-            train_centroids(empty, 2)
-
-    def test_audio_null_payload_raises_parser_error(self, spark):
-        # a null payload surfaces the RIFF parser's documented
-        # ValueError, not a bytes(None) TypeError from the executor
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors import PythonException
-
-        from geodistpy_spark.textops.audio import decode_audio
-
-        mb = spark.createDataFrame(
-            [("d1", 0, "r1", None)],
-            "doc_id string, span_idx int, media_ref string, payload binary")
-        with pytest.raises((PythonException, Py4JJavaError)) as ei:
-            decode_audio(mb).count()
-        assert "ValueError" in str(ei.value)
+        merged = base.unionByName(bad)
+        C = np.asarray(train_centroids(merged, 4))
+        assert C.shape == (4, dim) and np.isfinite(C).all()
+        assert np.array_equal(C, np.asarray(train_centroids(base, 4)))
+        books = train_pq(merged, m=8)
+        assert books.shape == (8, 256, dim // 8) and np.isfinite(books).all()
+        assert np.array_equal(books, train_pq(base, m=8))
 
 
 class TestAnnFixtures:
@@ -1059,28 +1058,6 @@ class TestStarConnectedComponents:
         got = dict(zip(out2.doc_id, out2.group_id))
         assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 3}
 
-    def test_topk_empty_and_null_inputs(self, spark):
-        # empty query set / empty corpus / null embedding rows must not
-        # crash the Arrow-batched scorers (np.stack on empties did)
-        from geodistpy_spark.textops import (
-            codebooks_from_df, cosine_topk, ivfpq_topk, pq_topk)
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 2).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-        q0 = q.filter(F.col("query_id") < 0)
-        books = codebooks_from_df(
-            spark.read.parquet("fixtures/ann/codebooks.parquet"))
-        assert cosine_topk(emb, q0, 3).count() == 0
-        assert cosine_topk(emb.filter(F.col("vec_id") < 0), q, 3).count() == 0
-        assert pq_topk(emb, q0, 3, codebooks=books).count() == 0
-        assert ivfpq_topk(emb, q0, 3, n_cells=4, codebooks=books).count() == 0
-        # null embedding rows are ignored, not fatal
-        emb2 = emb.withColumn("embedding", F.when(
-            F.col("vec_id") == 7, F.lit(None)).otherwise(F.col("embedding")))
-        out = cosine_topk(emb2, q, 3).toPandas()
-        assert len(out) == 6 and 7 not in set(out.vec_id)
-
 
 class TestShingleHashes:
     def test_codegen_shingle_ids_edge_docs(self, spark):
@@ -1124,36 +1101,3 @@ class TestShingleHashes:
         common = f.index.intersection(s.index)
         assert len(common) > 0
         assert f.loc[common, cols].equals(s.loc[common, cols])
-
-
-class TestDistributedTrainPQ:
-    def test_distributed_matches_sampled_on_covered_corpus(self, spark):
-        # when the sample covers the whole corpus, the sampled and
-        # distributed per-subspace Lloyd see identical data from the
-        # identical init and identical assignment formula, so the
-        # codebooks must agree to fp round-off
-        import numpy as np
-
-        from geodistpy_spark.textops.ann import train_pq
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        sampled = np.asarray(train_pq(emb, m=8, sample_size=10_000))
-        dist = np.asarray(train_pq(emb, m=8, distributed=True))
-        assert sampled.shape == dist.shape
-        assert np.allclose(sampled, dist, atol=1e-9), \
-            np.abs(sampled - dist).max()
-
-    def test_distributed_books_drive_pq_recall(self, spark):
-        from geodistpy_spark.textops import cosine_topk, pq_topk
-        from geodistpy_spark.textops.ann import train_pq
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        books = train_pq(emb, m=8, distributed=True)
-        q = emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"))
-        exact = cosine_topk(emb, q, 5).toPandas()
-        got = pq_topk(emb, q, 5, shortlist=64, codebooks=books).toPandas()
-        hit = set(map(tuple, got[["query_id", "vec_id"]].values))
-        want = set(map(tuple, exact[["query_id", "vec_id"]].values))
-        assert len(hit & want) / len(want) >= 0.5
