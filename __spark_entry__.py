@@ -369,7 +369,8 @@ def _cos_sql(a: str, b: str) -> str:
     sequential multiply-add fold as the engine's _dot/_norm column math
     (textops/ann.py)."""
     return (f"list_dot_product({a}, {b}) / "
-            f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))")
+            f"(greatest(sqrt(list_dot_product({a}, {a})), 1e-12) * "
+            f"greatest(sqrt(list_dot_product({b}, {b})), 1e-12))")
 
 
 # shared CTE prefixes for the ANN oracles: e = corpus as DOUBLE[],
@@ -1157,14 +1158,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ).alias("ok_frame_sha"),
                 F.count("*").alias("n_sampled"),
                 F.first("n_total").alias("n_total"))
-        # expected pick count: |{floor(i * n / 4) : i < min(4, n)}|
+        # expected pick count: min(4, n) distinct frames
         fgate = fgate.select(
             "doc_id", "span_idx", "ok_frame_sha",
-            (F.col("n_sampled") == F.size(F.array_distinct(F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.least(F.lit(4), F.col("n_total")).cast("int") - 1),
-                lambda i: F.floor(i * F.col("n_total") / 4))))
+            (F.col("n_sampled") == F.least(F.lit(4), F.col("n_total"))
              ).alias("ok_frame_count"))
         return (img.join(audio, on=["doc_id", "span_idx"])
                 .join(video, on=["doc_id", "span_idx"])

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import grid
 from ..functions.expressions import cell_id_col, parent_cell_col
 from .documents import SPANS_SCHEMA_DDL
 
@@ -102,11 +103,11 @@ def adaptive_partitions_for_cover(spark: SparkSession, path: str,
     for a_res, a_cell in parts:
         if a_res <= res:
             # cover cell's ancestor at a_res must equal a_cell
-            if any(parent_of(c, res, a_res) == a_cell for c in cover):
+            if any(grid.parent_cell(c, res, a_res) == a_cell for c in cover):
                 out.append((a_res, a_cell))
         else:
             # adaptive cell's ancestor at res must be a cover cell
-            if parent_of(a_cell, a_res, res) in cover:
+            if grid.parent_cell(a_cell, a_res, res) in cover:
                 out.append((a_res, a_cell))
     return sorted(out)
 
@@ -121,8 +122,6 @@ def read_adaptive_for_radius(spark: SparkSession, path: str,
         pts = read_adaptive_for_radius(spark, path, (48.85, 2.35), 1e5)
         hits = point_in_radius(pts, (48.85, 2.35), 1e5)
     """
-    from .. import grid
-
     res, cover = grid.cell_cover(center[0], center[1], radius_m)
     parts = adaptive_partitions_for_cover(spark, path, cover, res)
     df = spark.read.parquet(path)
@@ -135,13 +134,6 @@ def read_adaptive_for_radius(spark: SparkSession, path: str,
         clause = (F.col("a_res") == r) & (F.col("a_cell") == c)
         cond = clause if cond is None else (cond | clause)
     return df.filter(cond)
-
-
-def parent_of(cell: int, res: int, parent_res: int) -> int:
-    n = 1 << res
-    y, x = divmod(cell, n)
-    shift = res - parent_res
-    return (y >> shift) * (1 << parent_res) + (x >> shift)
 
 
 def write_documents(df: DataFrame, path: str, mode: str = "overwrite") -> None:

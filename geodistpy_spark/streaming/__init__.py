@@ -4,8 +4,7 @@ from .ingest import (
     stream_geofence,
     stream_windowed_event_counts,
 )
-from .stateful import stream_sessionize, stream_sessionize_tws
+from .stateful import stream_sessionize
 
 __all__ = ["stream_dedup_exact", "stream_extract_geo", "stream_geofence",
-           "stream_windowed_event_counts", "stream_sessionize",
-           "stream_sessionize_tws"]
+           "stream_windowed_event_counts", "stream_sessionize"]

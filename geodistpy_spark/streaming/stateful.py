@@ -117,95 +117,3 @@ def stream_sessionize(events: DataFrame, gap: str = "30 minutes",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def stream_sessionize_tws(events: DataFrame, gap: str = "30 minutes",
-                          watermark: str = "1 hour",
-                          user_col: str = "user_id",
-                          ts_col: str = "ts") -> DataFrame:
-    """Sessionization on Spark 4's ``transformWithStateInPandas`` — the
-    successor API to applyInPandasWithState: explicit typed ValueState,
-    first-class event-time timers (register/delete per key), and a
-    state-store contract that supports state evolution. Same semantics
-    as :func:`stream_sessionize` (closed sessions emitted in-batch;
-    the trailing open session closes when the watermark passes
-    last + gap; late events never regress the anchor).
-
-    Requires the RocksDB state store provider:
-    ``spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")``
-    (transformWithState is only implemented there; the default HDFS
-    provider raises at query start) AND the ``protobuf`` Python package
-    (PySpark's transformWithState state-API client speaks protobuf to
-    the JVM). This sandbox lacks protobuf, so the end-to-end pytest
-    skips here and the applyInPandasWithState variant
-    (:func:`stream_sessionize`, identical semantics) carries the gated
-    coverage; on any standard Spark 4 deployment (protobuf is a pyspark
-    install dependency) this path runs as written.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    gap_s = _parse_gap(gap)
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState("session", _STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self.state.exists():
-                start_s, last_s, n = tuple(self.state.get())
-            else:
-                start_s = last_s = -1
-                n = 0
-            closed: list[tuple[int, int, int]] = []
-            ts_all = pd.concat([p["ts"] for p in rows]).sort_values()
-            for t in (ts_all.astype("int64") // 1_000_000_000).tolist():
-                if start_s < 0:
-                    start_s, last_s, n = t, t, 1
-                elif t - last_s > gap_s:
-                    closed.append((start_s, last_s, n))
-                    start_s, last_s, n = t, t, 1
-                else:
-                    start_s = min(start_s, t)
-                    last_s, n = max(last_s, t), n + 1
-            self.state.update((start_s, last_s, n))
-            # one pending deadline per key: replace, don't accumulate
-            for old in self.handle.listTimers():
-                self.handle.deleteTimer(old)
-            self.handle.registerTimer((last_s + gap_s) * 1000)
-            if closed:
-                yield _sessions_frame(key[0], closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self.state.exists():
-                start_s, last_s, n = tuple(self.state.get())
-                self.state.clear()
-                yield _sessions_frame(key[0], [(start_s, last_s, n)])
-
-        def close(self) -> None:
-            pass
-
-    prepped = (
-        events.select(F.col(user_col).cast("string").alias("user_id"),
-                      F.col(ts_col).cast("timestamp").alias("ts"))
-        .withWatermark("ts", watermark)
-    )
-    return (
-        prepped.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_SessionProcessor(),
-            outputStructType=_OUTPUT,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-def _sessions_frame(user: str, closed: list[tuple[int, int, int]]) -> pd.DataFrame:
-    return pd.DataFrame({
-        "user_id": [user] * len(closed),
-        "session_start": pd.to_datetime([c[0] for c in closed], unit="s"),
-        "session_end": pd.to_datetime([c[1] for c in closed], unit="s"),
-        "n_events": pd.array([c[2] for c in closed], dtype="int32"),
-    })

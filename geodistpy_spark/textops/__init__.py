@@ -47,7 +47,6 @@ from .multimodal import (
     fetch_media_bytes,
     media_feature_pipeline,
     resize_media,
-    sample_frames,
 )
 from .pixels import decode_pixels, pixel_features
 from .video import (
@@ -76,7 +75,7 @@ __all__ = [
     "fetch_audio_bytes", "parse_wav_header", "sample_audio_windows",
     "shingles", "simhash", "simhash_near_pairs", "tokenize", "decode_media",
     "decode_pixels", "pixel_features",
-    "fetch_media_bytes", "media_feature_pipeline", "resize_media", "sample_frames",
+    "fetch_media_bytes", "media_feature_pipeline", "resize_media",
     "decode_video_meta", "fetch_video_bytes", "mp4_frame_table",
     "parse_mp4_header", "sample_video_frames", "video_feature_pipeline",
 ]

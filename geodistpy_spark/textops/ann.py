@@ -46,8 +46,10 @@ def _norm(a):
 
 def _cos(a, b):
     # null when either side is null or the lengths differ (zip_with pads
-    # the shorter array with nulls)
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    # the shorter array with nulls); norms clamp at 1e-12 like _unit, so
+    # an all-zero vector scores 0 instead of dividing by zero
+    return _dot(a, b) / (F.greatest(_norm(a), F.lit(1e-12))
+                         * F.greatest(_norm(b), F.lit(1e-12)))
 
 
 def _unit(X):
@@ -92,8 +94,10 @@ def _train_sample(emb: DataFrame, sample_size: int, id_col: str,
 
 
 def _queries(queries: DataFrame, q_id: str, q_vec: str) -> DataFrame:
-    return queries.select(F.col(q_id),
-                          F.col(q_vec).cast("array<double>").alias("qv"))
+    """(q_id, qv) of every query with a non-empty vector: a null or
+    empty query vector has no cosine, so it gets no rows."""
+    return queries.filter(F.size(q_vec) > 0).select(
+        F.col(q_id), F.col(q_vec).cast("array<double>").alias("qv"))
 
 
 def _collect_queries(q: DataFrame, q_id: str):

@@ -15,13 +15,14 @@ sample decode are implemented from the public WAVE format spec —
   silence ratio — the quality signals an audio-curation pipeline
   filters on.
 
-Spark surface mirrors the image path: an Arrow-batched ``mapInPandas``
-fetch stub that synthesises deterministic REAL WAV payloads from the
-span ref (so the decode runs on genuine byte layouts and tests can
-assert analytic truths: a pure sine decodes to RMS = A/sqrt(2), ZCR =
-2f, centroid ~= f), a ``decode_audio`` stage, and a window sampler
-(``sample_audio_windows``) that turns one payload row into per-window
-feature rows for segment-level curation.
+Spark surface, on the image path's plumbing (:mod:`.multimodal`
+``_fetch`` / ``_map_payloads``): a fetch stub that synthesises
+deterministic REAL WAV payloads from the span ref (so the decode runs
+on genuine byte layouts and tests can assert analytic truths: a pure
+sine decodes to RMS = A/sqrt(2), ZCR = 2f, centroid ~= f), a
+``decode_audio`` stage, and a window sampler (``sample_audio_windows``)
+that turns one payload row into per-window feature rows for
+segment-level curation.
 
 Parity note: the reference engine (/root/reference/geodistpy) has no
 multimodal surface at all; this module extends it for training-data
@@ -34,12 +35,11 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from .multimodal import _fetch, _map_payloads
 
 __all__ = [
     "parse_wav_header",
@@ -243,24 +243,15 @@ def _synth_wav(ref: str) -> bytes:
 
 
 def fetch_audio_bytes(media_spans: DataFrame) -> DataFrame:
-    """Resolve media refs -> binary WAV payloads.
-
-    STUB like :func:`.multimodal.fetch_media_bytes`: a real deployment
-    reads an object store; here the payload is a deterministic REAL
-    RIFF/WAVE byte stream synthesised from the ref, so the downstream
-    chunk walk + sample decode run on genuine layouts. Column types and
-    Arrow batch flow match the real path exactly.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pdf.assign(payload=[_synth_wav(r) for r in pdf["media_ref"]])
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in media_spans.schema.fields)
-    return media_spans.mapInPandas(gen, schema=schema + ", payload binary")
+    """Resolve media refs -> binary WAV payloads (the
+    :func:`.multimodal._fetch` STUB): deterministic REAL RIFF/WAVE byte
+    streams synthesised from the ref (:func:`_synth_wav`), so the
+    downstream chunk walk + sample decode run on genuine layouts."""
+    return _fetch(media_spans, _synth_wav)
 
 
+_FEATURES = ("duration_ms", "rms", "peak", "zcr_hz", "centroid_hz",
+             "rolloff_hz", "silence_ratio")
 _DECODED_AUDIO_SCHEMA = (
     "doc_id string, span_idx int, media_ref string, codec string, "
     "n_channels int, sample_rate int, bits int, n_samples long, "
@@ -273,42 +264,20 @@ _DECODED_AUDIO_SCHEMA = (
 def decode_audio(audio_with_bytes: DataFrame) -> DataFrame:
     """Decode binary WAV payloads -> per-payload audio features.
 
-    Arrow-batched ``mapInPandas``; each row is decoded with the real
-    RIFF walker (:func:`decode_wav`) and featurized with
-    :func:`audio_features`. Scales by partition — no driver-side work,
-    no shuffle (one narrow stage over the payload relation).
+    One :func:`.multimodal._map_payloads` stage; each payload is decoded
+    with the real RIFF walker (:func:`decode_wav`) and featurized with
+    :func:`audio_features`. A malformed (or null) payload raises the
+    parser's ValueError from the executor.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for p in pdf["payload"]:
-                # null -> b"" so malformed input surfaces as the parser's
-                # documented ValueError, not bytes(None) TypeError
-                b = b"" if p is None else bytes(p)
-                hdr = parse_wav_header(b)
-                sr, x = decode_wav(b)
-                f = audio_features(x, sr)
-                rows.append((hdr["codec"], hdr["n_channels"], sr, hdr["bits"],
-                             hdr["n_samples"], f["duration_ms"], f["rms"],
-                             f["peak"], f["zcr_hz"], f["centroid_hz"],
-                             f["rolloff_hz"], f["silence_ratio"], len(b)))
-            cols = list(zip(*rows))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].values,
-                "span_idx": pdf["span_idx"].values,
-                "media_ref": pdf["media_ref"].values,
-                "codec": cols[0], "n_channels": cols[1],
-                "sample_rate": cols[2], "bits": cols[3],
-                "n_samples": cols[4], "duration_ms": cols[5],
-                "rms": cols[6], "peak": cols[7], "zcr_hz": cols[8],
-                "centroid_hz": cols[9], "rolloff_hz": cols[10],
-                "silence_ratio": cols[11], "n_bytes": cols[12],
-            })
+    def decode(p: bytes):
+        hdr = parse_wav_header(p)
+        sr, x = decode_wav(p)
+        f = audio_features(x, sr)
+        return [(hdr["codec"], hdr["n_channels"], sr, hdr["bits"],
+                 hdr["n_samples"], *(f[c] for c in _FEATURES), len(p))]
 
-    return audio_with_bytes.mapInPandas(gen, schema=_DECODED_AUDIO_SCHEMA)
+    return _map_payloads(audio_with_bytes, decode, _DECODED_AUDIO_SCHEMA)
 
 
 _WINDOW_SCHEMA = (
@@ -324,8 +293,8 @@ def sample_audio_windows(audio_with_bytes: DataFrame, win_ms: int = 100,
     ``win_ms``-long windows every ``hop_ms`` (default: non-overlapping),
     each with its own RMS / ZCR / silence flag — the shape a
     segment-level curation filter (e.g. trim leading silence, drop dead
-    air) consumes. Executor-side explode inside ``mapInPandas``: one
-    payload row in, ``floor((n - win) / hop) + 1`` rows out, still no
+    air) consumes. One :func:`.multimodal._map_payloads` stage: one
+    payload row in, ``floor((n - win) / hop) + 1`` rows out, no
     shuffle.
     """
     hop_ms = win_ms if hop_ms is None else hop_ms
@@ -333,38 +302,25 @@ def sample_audio_windows(audio_with_bytes: DataFrame, win_ms: int = 100,
         raise ValueError("win_ms and hop_ms must be positive")
     thresh = 10.0 ** (_SILENCE_DB / 20.0)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "span_idx", "media_ref", "win_idx",
-                "t0_ms", "t1_ms", "rms", "zcr_hz", "is_silent")}
-            for doc_id, span_idx, ref, p in zip(
-                    pdf["doc_id"], pdf["span_idx"], pdf["media_ref"],
-                    pdf["payload"]):
-                sr, x = decode_wav(b"" if p is None else bytes(p))
-                mono = x.mean(axis=1)
-                win = max(1, sr * win_ms // 1000)
-                hop = max(1, sr * hop_ms // 1000)
-                n = mono.shape[0]
-                n_win = 0 if n < win else (n - win) // hop + 1
-                for w in range(n_win):
-                    seg = mono[w * hop: w * hop + win]
-                    rms = float(np.sqrt(np.mean(seg * seg)))
-                    s = np.signbit(seg)
-                    zcr = float(np.count_nonzero(s[1:] != s[:-1])) * sr / win
-                    out["doc_id"].append(doc_id)
-                    out["span_idx"].append(span_idx)
-                    out["media_ref"].append(ref)
-                    out["win_idx"].append(w)
-                    out["t0_ms"].append(1000.0 * w * hop / sr)
-                    out["t1_ms"].append(1000.0 * (w * hop + win) / sr)
-                    out["rms"].append(rms)
-                    out["zcr_hz"].append(zcr)
-                    out["is_silent"].append(rms < thresh)
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
+    def windows(p: bytes):
+        sr, x = decode_wav(p)
+        mono = x.mean(axis=1)
+        win = max(1, sr * win_ms // 1000)
+        hop = max(1, sr * hop_ms // 1000)
+        n = mono.shape[0]
+        n_win = 0 if n < win else (n - win) // hop + 1
+        out = []
+        for w in range(n_win):
+            seg = mono[w * hop: w * hop + win]
+            rms = float(np.sqrt(np.mean(seg * seg)))
+            s = np.signbit(seg)
+            zcr = float(np.count_nonzero(s[1:] != s[:-1])) * sr / win
+            out.append((w, 1000.0 * w * hop / sr,
+                        1000.0 * (w * hop + win) / sr, rms, zcr,
+                        rms < thresh))
+        return out
 
-    return audio_with_bytes.mapInPandas(gen, schema=_WINDOW_SCHEMA)
+    return _map_payloads(audio_with_bytes, windows, _WINDOW_SCHEMA)
 
 
 def audio_feature_pipeline(docs: DataFrame) -> DataFrame:

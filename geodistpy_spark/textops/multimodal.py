@@ -1,25 +1,29 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
-Media payloads are opaque ``binary`` columns with typed metadata; the
-Spark-side plumbing (schemas, partitioning, Arrow batch shapes,
-``mapInPandas`` signatures) is real and tested.
+Media payloads are opaque ``binary`` columns with typed metadata. Every
+media stage (images here, :mod:`.audio`, :mod:`.video`) runs on the
+same two Arrow-batched ``mapInPandas`` plumbings defined here:
+:func:`_fetch` appends a payload column to a span relation, and
+:func:`_map_payloads` turns each ``(doc_id, span_idx, media_ref,
+payload)`` row into zero or more typed output rows.
 
-The decode is REAL at two levels:
+An image payload is decoded once, by :func:`_image`, with one policy:
 
-- container headers: PNG / BMP / GIF / JPEG-SOF / WEBP (VP8, VP8L,
-  VP8X) / TIFF-IFD dimensions parsed from the payload bytes (pure byte
-  math — :func:`parse_image_header`);
 - pixels: PNG (stdlib zlib inflate + scanline unfiltering), BMP
   (uncompressed rows), GIF (LZW) and baseline JPEG (Huffman + IDCT)
-  are fully pixel-decoded by :mod:`.pixels`, and
-  ``decode_media(..., fake=False)`` computes its feature column from
-  the true pixel values.
+  are fully pixel-decoded by :mod:`.pixels`; dimensions come from the
+  pixel array and ``decode_media`` features from
+  :func:`.pixels.pixel_features`;
+- otherwise container headers: PNG / BMP / GIF / JPEG-SOF / WEBP (VP8,
+  VP8L, VP8X) / TIFF-IFD dimensions parsed from the payload bytes
+  (pure byte math — :func:`parse_image_header`);
+- otherwise format ``raw`` with pseudo-dimensions from the leading
+  bytes.
 
-Progressive-JPEG / WebP / TIFF pixel streams need codec machinery out
-of scope here: for those (and unrecognized payloads) ``fake=False``
-raises, while ``fake=True`` keeps the deterministic byte-derived
-stand-in features + pseudo-dimensions (oracle-mirrorable) — clearly
-marked.
+Without pixels (progressive JPEG / WebP / TIFF pixel streams need codec
+machinery out of scope here, and unrecognized or corrupt payloads have
+none), features are a deterministic byte-derived stand-in that a SQL
+oracle can mirror — clearly marked.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from .pixels import decode_pixels, luma, pixel_features
 
 MEDIA_FEATURE_DIM = 8
 PAYLOAD_BYTES = 128
@@ -148,97 +154,98 @@ def _synth_payload(ref: str) -> bytes:
     return (head + h * 4)[:PAYLOAD_BYTES]
 
 
-def fetch_media_bytes(media_spans: DataFrame) -> DataFrame:
-    """Resolve media_ref -> binary payload.
+def _fetch(spans: DataFrame, synth) -> DataFrame:
+    """``spans`` plus ``payload binary = synth(media_ref)``.
 
     STUB: a real deployment resolves ``media://`` refs against an object
-    store. Here the payload is a deterministic function of the ref (see
-    :func:`_synth_payload`) including REAL PNG/BMP/WEBP/TIFF container
-    headers, so the downstream header decode runs on genuine byte layouts.
-    Column types and batch flow match the real path exactly.
+    store. Here the payload is a deterministic function of the ref with
+    REAL container bytes, so the downstream decodes run on genuine byte
+    layouts. Column types and batch flow match the real path exactly.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pdf.assign(payload=[_synth_payload(r) for r in pdf["media_ref"]])
+            yield pdf.assign(payload=[synth(r) for r in pdf["media_ref"]])
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in media_spans.schema.fields)
-    return media_spans.mapInPandas(gen, schema=schema + ", payload binary")
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in spans.schema.fields)
+    return spans.mapInPandas(gen, schema=schema + ", payload binary")
 
 
-def decode_media(media_with_bytes: DataFrame, fake: bool = True) -> DataFrame:
+_KEYS = ["doc_id", "span_idx", "media_ref"]
+
+
+def _map_payloads(df: DataFrame, fn, schema: str) -> DataFrame:
+    """One executor-side stage over a payload relation: every row's
+    ``(doc_id, span_idx, media_ref)`` followed by each tuple that
+    ``fn(payload)`` returns — one for a decode, zero or more for a
+    sampler. A null payload reaches ``fn`` as ``b""``. ``schema`` is the
+    DDL of the output, the three key columns first. No shuffle, no
+    driver-side work; a batch with no output rows yields nothing.
+    """
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [key + out
+                    for key, p in zip(pdf[_KEYS].itertuples(index=False,
+                                                            name=None),
+                                      pdf["payload"])
+                    for out in fn(b"" if p is None else bytes(p))]
+            if rows:
+                yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(gen, schema=schema)
+
+
+def fetch_media_bytes(media_spans: DataFrame) -> DataFrame:
+    """Resolve media_ref -> binary image payload (:func:`_fetch` STUB):
+    :func:`_synth_payload` bytes carry REAL PNG/BMP/WEBP/TIFF container
+    headers."""
+    return _fetch(media_spans, _synth_payload)
+
+
+def _image(p: bytes):
+    """(format, height, width, (h, w, 3) uint8 RGB pixels or None).
+
+    Pixel-decode where :mod:`.pixels` implements the codec; otherwise
+    the container header's dimensions; otherwise format ``raw`` with
+    pseudo-dimensions from the first four bytes.
+    """
+    try:
+        fmt, img = decode_pixels(p)
+        return fmt, img.shape[0], img.shape[1], img
+    except (NotImplementedError, ValueError):
+        pass
+    hdr = parse_image_header(p)
+    if hdr is not None:
+        return hdr[0], hdr[2], hdr[1], None
+    u0, u1 = struct.unpack("<HH", p[:4]) if len(p) >= 4 else (64, 64)
+    return "raw", u1 % 1080 + 16, u0 % 1920 + 16, None
+
+
+def decode_media(media_with_bytes: DataFrame) -> DataFrame:
     """Decode binary media -> (format, dimensions, feature vector).
 
-    ``fake=False`` is the REAL path: PNG/BMP/GIF/baseline-JPEG payloads
-    are pixel-decoded (stdlib zlib + numpy — :mod:`.pixels`),
-    dimensions come from the decoded array, and ``features`` is
-    :func:`.pixels.pixel_features` computed from true pixel values.
-    Containers whose pixel streams need absent codec machinery
-    (progressive JPEG/WebP/TIFF) or unrecognized payloads raise
-    NotImplementedError from the executors.
-
-    ``fake=True`` is the plumbing/oracle path: dimensions are real for
-    recognized container headers, pseudo-dimensions are derived from
-    leading bytes otherwise (format 'raw'), and features are a
-    deterministic byte-derived stand-in that a SQL oracle can mirror.
-    The Arrow batch shape, output schema, and partition behavior are
-    identical in both modes.
+    Format and dimensions follow :func:`_image`. ``features`` is
+    :func:`.pixels.pixel_features` of the true pixels when the payload
+    pixel-decodes; otherwise it is a deterministic stand-in that a SQL
+    oracle can mirror: the last ``4 * MEDIA_FEATURE_DIM`` bytes (left
+    padded with zero bytes) summed in groups of four, over 1020.
     """
-    from .pixels import decode_pixels, pixel_features
+    win = MEDIA_FEATURE_DIM * 4
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, widths, heights = [], [], []
-            real_feats: list[np.ndarray] = []
-            # null payloads become b"": the real path then raises its
-            # documented undecodable error; the fake path derives the
-            # deterministic zero-stream stand-in instead of crashing
-            # bytes(None) inside the executor
-            payloads = [b"" if p is None else bytes(p) for p in pdf["payload"]]
-            for b in payloads:
-                if not fake:
-                    fmt, img = decode_pixels(b)  # raises for jpeg/webp/raw
-                    fmts.append(fmt)
-                    heights.append(img.shape[0])
-                    widths.append(img.shape[1])
-                    real_feats.append(pixel_features(img))
-                    continue
-                hdr = parse_image_header(b)
-                if hdr is not None:
-                    fmts.append(hdr[0]); widths.append(hdr[1]); heights.append(hdr[2])
-                else:
-                    u0, u1 = (struct.unpack("<HH", b[:4])
-                              if len(b) >= 4 else (64, 64))
-                    fmts.append("raw")
-                    widths.append(u0 % 1920 + 16)
-                    heights.append(u1 % 1080 + 16)
-            if fake:
-                # sub-window payloads left-pad with zero bytes so the
-                # stack stays rectangular (synth payloads are always
-                # >= the window, so the padded branch never changes a
-                # value the SQL oracle mirrors)
-                win = MEDIA_FEATURE_DIM * 4
-                raw = np.stack([
-                    np.frombuffer(b[-win:].rjust(win, b"\0"), dtype=np.uint8)
-                    for b in payloads
-                ])
-                feats = list((raw.reshape(len(pdf), MEDIA_FEATURE_DIM, 4)
-                              .sum(axis=2) / 1020.0).astype(np.float32))
-            else:
-                feats = real_feats
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "span_idx": pdf["span_idx"],
-                "media_ref": pdf["media_ref"],
-                "format": fmts,
-                "width": np.asarray(widths, dtype="int32"),
-                "height": np.asarray(heights, dtype="int32"),
-                "n_bytes": np.asarray([len(b) for b in payloads],
-                                      dtype="int64"),
-                "features": feats,
-            })
+    def decode(p: bytes):
+        fmt, h, w, img = _image(p)
+        if img is not None:
+            feats = pixel_features(img)
+        else:
+            raw = np.frombuffer(p[-win:].rjust(win, b"\0"), dtype=np.uint8)
+            feats = (raw.reshape(MEDIA_FEATURE_DIM, 4).sum(axis=1)
+                     / 1020.0).astype(np.float32)
+        return [(fmt, w, h, len(p), feats)]
 
-    return media_with_bytes.mapInPandas(gen, schema=DECODED_SCHEMA)
+    return _map_payloads(media_with_bytes, decode, DECODED_SCHEMA)
 
 
 def media_feature_pipeline(docs: DataFrame) -> DataFrame:
@@ -254,101 +261,20 @@ def media_feature_pipeline(docs: DataFrame) -> DataFrame:
     return decode_media(with_bytes)
 
 
-FRAME_BYTES = 32
-
-
-def sample_frames(media_with_bytes: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Uniform frame sampling from opaque video payloads — one output
-    row per sampled frame: (doc_id, span_idx, media_ref, n_total,
-    frame_idx, frame_bytes).
-
-    Payloads are treated as a sequence of ``FRAME_BYTES``-byte frames
-    (the deterministic stand-in for a codec's frame index; a real
-    deployment points the SAME plumbing — mapInPandas with a
-    one-in/many-out exploding batch shape — at the container's real
-    frame table). Sampling picks ``n_frames`` evenly spaced frames
-    (``floor(i * n_total / n_frames)``, deduplicated when the clip is
-    shorter than the ask), so re-runs and engines agree byte-for-byte.
-    """
-    if n_frames < 1:
-        raise ValueError(f"n_frames must be >= 1, got {n_frames}")
-
-    out_schema = (
-        "doc_id string, span_idx int, media_ref string, "
-        "n_total int, frame_idx int, frame_bytes binary"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "span_idx", "media_ref",
-                                   "n_total", "frame_idx", "frame_bytes")}
-            for _, row in pdf.iterrows():
-                raw = row["payload"]
-                p = b"" if raw is None else bytes(raw)
-                total = max(len(p) // FRAME_BYTES, 0)
-                if total == 0:
-                    continue
-                n_eff = min(n_frames, total)
-                picks = sorted({i * total // n_eff for i in range(n_eff)})
-                for fi in picks:
-                    out["doc_id"].append(row["doc_id"])
-                    out["span_idx"].append(row["span_idx"])
-                    out["media_ref"].append(row["media_ref"])
-                    out["n_total"].append(total)
-                    out["frame_idx"].append(fi)
-                    out["frame_bytes"].append(
-                        p[fi * FRAME_BYTES:(fi + 1) * FRAME_BYTES])
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    return media_with_bytes.mapInPandas(gen, schema=out_schema)
-
-
 def resize_media(media_with_bytes: DataFrame, out_h: int = 8,
                  out_w: int = 8) -> DataFrame:
     """Bilinear resize of each media item's luminance grid to
     (out_h, out_w): (doc_id, span_idx, media_ref, src_h, src_w, pixels)
     with ``pixels`` a row-major array<float> of length out_h * out_w.
 
-    The RESIZE math (vectorized numpy bilinear over the Arrow batch) is
-    real, and so is the SOURCE grid for PNG/BMP/GIF/baseline-JPEG
-    payloads: they are pixel-decoded (:mod:`.pixels`) to a true
-    Rec.601 luminance grid. Payloads whose codecs are absent
-    (progressive JPEG/WebP/TIFF/raw) fall back to a deterministic
-    sha256-stream luminance grid at the header's true aspect ratio
-    (clamped to 16x16 samples) — the honest stand-in.
+    The RESIZE math (numpy bilinear) is real, and so is the SOURCE grid
+    for payloads that pixel-decode (:func:`_image`): their true Rec.601
+    luminance. Payloads without pixels fall back to a deterministic
+    sha256-stream luminance grid at the header's (or pseudo-) aspect
+    ratio, clamped to 1x1..16x16 samples — the honest stand-in.
     """
     if out_h < 1 or out_w < 1:
         raise ValueError(f"output shape must be >= 1x1, got {out_h}x{out_w}")
-
-    out_schema = (
-        "doc_id string, span_idx int, media_ref string, "
-        "src_h int, src_w int, pixels array<float>"
-    )
-
-    def _src_grid(p: bytes):
-        # real path first: PNG/BMP/GIF decode to a true luminance grid
-        from .pixels import decode_pixels
-        try:
-            _, img = decode_pixels(p)
-        except (NotImplementedError, ValueError):
-            img = None
-        if img is not None:
-            f = img.astype(np.float64) / 255.0
-            lum = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
-            return img.shape[0], img.shape[1], lum
-        hdr = parse_image_header(p)
-        if hdr is not None:
-            _, w, h = hdr
-        else:
-            u0, u1 = struct.unpack("<HH", p[:4]) if len(p) >= 4 else (64, 64)
-            w, h = u0 % 1920 + 16, u1 % 1080 + 16
-        gh, gw = min(h, 16), min(w, 16)
-        stream = hashlib.sha256(p).digest()
-        while len(stream) < gh * gw:
-            stream += hashlib.sha256(stream).digest()
-        g = np.frombuffer(stream[:gh * gw], dtype=np.uint8) / 255.0
-        return h, w, g.reshape(gh, gw)
 
     def _bilinear(g: np.ndarray) -> np.ndarray:
         gh, gw = g.shape
@@ -365,21 +291,20 @@ def resize_media(media_with_bytes: DataFrame, out_h: int = 8,
                 + (g[y0][:, x1] * (1 - fy) * fx)
                 + (g[y1][:, x1] * fy * fx))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hs, ws, px = [], [], []
-            for p in pdf["payload"]:
-                h, w, g = _src_grid(b"" if p is None else bytes(p))
-                hs.append(h)
-                ws.append(w)
-                px.append(_bilinear(g).ravel().astype(np.float32))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "span_idx": pdf["span_idx"],
-                "media_ref": pdf["media_ref"],
-                "src_h": np.asarray(hs, dtype="int32"),
-                "src_w": np.asarray(ws, dtype="int32"),
-                "pixels": px,
-            })
+    def resize(p: bytes):
+        _, h, w, img = _image(p)
+        if img is not None:
+            g = luma(img.astype(np.float64) / 255.0)
+        else:
+            gh, gw = max(1, min(h, 16)), max(1, min(w, 16))
+            stream = hashlib.sha256(p).digest()
+            while len(stream) < gh * gw:
+                stream += hashlib.sha256(stream).digest()
+            g = (np.frombuffer(stream[:gh * gw], dtype=np.uint8)
+                 / 255.0).reshape(gh, gw)
+        return [(h, w, _bilinear(g).ravel().astype(np.float32))]
 
-    return media_with_bytes.mapInPandas(gen, schema=out_schema)
+    return _map_payloads(
+        media_with_bytes, resize,
+        "doc_id string, span_idx int, media_ref string, "
+        "src_h int, src_w int, pixels array<float>")

@@ -21,11 +21,12 @@ Everything returns an ``(h, w, 3)`` uint8 RGB array; alpha planes are
 dropped (compositing policy belongs to the caller, and the feature
 extractor below is luminance/chroma based).
 
-These are the honest replacements for the ``fake=True`` stand-ins in
-:mod:`.multimodal` — ``decode_media(..., fake=False)`` computes its
-feature column from these pixels. Progressive-JPEG/WebP/TIFF payloads
-still raise ``NotImplementedError`` (their bitstreams need codec
-machinery out of scope here).
+:mod:`.multimodal` pixel-decodes every image payload through
+:func:`decode_pixels` first: ``decode_media`` features and
+``resize_media`` grids come from these pixels whenever the decode
+succeeds. Progressive-JPEG/WebP/TIFF payloads raise
+``NotImplementedError`` (their bitstreams need codec machinery out of
+scope here); malformed streams raise ``ValueError``.
 
 Parity note: the reference engine has no multimodal surface at all;
 this module extends it for training-data pipelines (SURVEY.md §2 LLM
@@ -139,7 +140,10 @@ def decode_png(p: bytes) -> np.ndarray:
         raise ValueError(f"bad PNG color type {ctype}")
     ch = _PNG_CHANNELS[ctype]
     stride = w * ch
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise ValueError("PNG IDAT stream corrupt") from e
     px = _png_unfilter(raw, h, stride, ch).reshape(h, w, ch)
     if ctype == 0:
         return np.repeat(px, 3, axis=2)
@@ -608,20 +612,34 @@ def decode_pixels(p: bytes) -> tuple[str, np.ndarray]:
     Progressive JPEG / WebP / TIFF / unknown containers raise
     NotImplementedError — their pixel streams need entropy codecs
     absent from this environment (header-level dimensions for them
-    come from :func:`.multimodal.parse_image_header`).
+    come from :func:`.multimodal.parse_image_header`). A truncated or
+    corrupt stream, or one that decodes to no pixels, raises
+    ValueError, whichever decoder step it trips.
     """
-    if p[:8] == _PNG_MAGIC:
-        return "png", decode_png(p)
-    if p[:2] == b"BM":
-        return "bmp", decode_bmp(p)
-    if p[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif", decode_gif(p)
-    if p[:2] == b"\xff\xd8":
-        return "jpeg", decode_jpeg(p)
-    raise NotImplementedError(
-        "real pixel decode supports PNG/BMP/GIF/baseline-JPEG; "
-        "progressive JPEG/WebP/TIFF need codec libraries not present "
-        "in this environment")
+    try:
+        if p[:8] == _PNG_MAGIC:
+            fmt, img = "png", decode_png(p)
+        elif p[:2] == b"BM":
+            fmt, img = "bmp", decode_bmp(p)
+        elif p[:6] in (b"GIF87a", b"GIF89a"):
+            fmt, img = "gif", decode_gif(p)
+        elif p[:2] == b"\xff\xd8":
+            fmt, img = "jpeg", decode_jpeg(p)
+        else:
+            raise NotImplementedError(
+                "real pixel decode supports PNG/BMP/GIF/baseline-JPEG; "
+                "progressive JPEG/WebP/TIFF need codec libraries not "
+                "present in this environment")
+    except (struct.error, LookupError, ArithmeticError) as e:
+        raise ValueError(f"pixel stream malformed: {e!r}") from e
+    if not img.size:
+        raise ValueError(f"{fmt} image has no pixels")
+    return fmt, img
+
+
+def luma(f: np.ndarray) -> np.ndarray:
+    """Rec.601 luminance (h, w) of an (h, w, 3) RGB array."""
+    return 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
 
 
 def pixel_features(img: np.ndarray) -> np.ndarray:
@@ -631,12 +649,12 @@ def pixel_features(img: np.ndarray) -> np.ndarray:
     resolution-independent — the real-pixel replacement for the
     byte-derived stand-in features."""
     f = img.astype(np.float64) / 255.0
-    luma = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
-    h, w = luma.shape
+    y = luma(f)
+    h, w = y.shape
     hh, wh = max(h // 2, 1), max(w // 2, 1)
-    quads = [luma[:hh, :wh], luma[:hh, wh:], luma[hh:, :wh], luma[hh:, wh:]]
+    quads = [y[:hh, :wh], y[:hh, wh:], y[hh:, :wh], y[hh:, wh:]]
     return np.array(
         [f[:, :, 0].mean(), f[:, :, 1].mean(), f[:, :, 2].mean(),
-         luma.std()]
+         y.std()]
         + [(q.mean() if q.size else 0.0) for q in quads],
         dtype=np.float32)

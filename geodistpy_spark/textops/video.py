@@ -25,14 +25,15 @@ codec machinery out of scope here; frame payloads stay opaque
 ``binary`` — which is exactly what a frame-sampling training-data
 pipeline ships to a downstream vision encoder.
 
-Spark surface mirrors the audio path: an Arrow-batched ``mapInPandas``
-fetch stub that synthesises deterministic REAL MP4 payloads from the
-span ref (brand / frame count / fps / dimensions / box versions /
-stco-vs-co64 all derive from sha256, so tests and the DuckDB oracle
-recompute them independently, and every synthesised frame's bytes are
-a sha256-derived sequence a gate can verify after extraction), a
-``decode_video_meta`` stage, and ``sample_video_frames`` (uniform
-frame picks through the real sample tables).
+Spark surface, on the image path's plumbing (:mod:`.multimodal`
+``_fetch`` / ``_map_payloads``): a fetch stub that synthesises
+deterministic REAL MP4 payloads from the span ref (brand / frame
+count / fps / dimensions / box versions / stco-vs-co64 all derive from
+sha256, so tests and the DuckDB oracle recompute them independently,
+and every synthesised frame's bytes are a sha256-derived sequence a
+gate can verify after extraction), a ``decode_video_meta`` stage,
+and ``sample_video_frames`` (uniform frame picks through the real
+sample tables).
 
 Parity note: the reference engine (/root/reference/geodistpy) has no
 multimodal surface at all; this module extends it for training-data
@@ -44,11 +45,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from .multimodal import _fetch, _map_payloads
 
 __all__ = [
     "walk_boxes",
@@ -419,24 +419,15 @@ def _synth_mp4(ref: str) -> bytes:
 
 
 def fetch_video_bytes(media_spans: DataFrame) -> DataFrame:
-    """Resolve media refs -> binary MP4 payloads.
-
-    STUB like :func:`.multimodal.fetch_media_bytes`: a real deployment
-    reads an object store; here the payload is a deterministic REAL
-    ISO-BMFF byte stream synthesised from the ref, so the downstream
-    box walk + sample-table math run on genuine layouts. Column types
-    and Arrow batch flow match the real path exactly.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pdf.assign(payload=[_synth_mp4(r) for r in pdf["media_ref"]])
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in media_spans.schema.fields)
-    return media_spans.mapInPandas(gen, schema=schema + ", payload binary")
+    """Resolve media refs -> binary MP4 payloads (the
+    :func:`.multimodal._fetch` STUB): deterministic REAL ISO-BMFF byte
+    streams synthesised from the ref (:func:`_synth_mp4`), so the
+    downstream box walk + sample-table math run on genuine layouts."""
+    return _fetch(media_spans, _synth_mp4)
 
 
+_META = ("brand", "width", "height", "timescale", "duration", "n_frames",
+         "fps", "duration_ms")
 _VIDEO_META_SCHEMA = (
     "doc_id string, span_idx int, media_ref string, brand string, "
     "width int, height int, timescale int, duration long, "
@@ -447,34 +438,15 @@ _VIDEO_META_SCHEMA = (
 def decode_video_meta(video_with_bytes: DataFrame) -> DataFrame:
     """Decode binary MP4 payloads -> per-payload container metadata.
 
-    Arrow-batched ``mapInPandas``; each row is parsed with the real
-    box walker (:func:`parse_mp4_header`). Scales by partition — no
-    driver-side work, no shuffle.
+    One :func:`.multimodal._map_payloads` stage; each payload is parsed
+    with the real box walker (:func:`parse_mp4_header`).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for p in pdf["payload"]:
-                b = b"" if p is None else bytes(p)
-                h = parse_mp4_header(b)
-                rows.append((h["brand"], h["width"], h["height"],
-                             h["timescale"], h["duration"], h["n_frames"],
-                             h["fps"], h["duration_ms"], len(b)))
-            cols = list(zip(*rows))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].values,
-                "span_idx": pdf["span_idx"].values,
-                "media_ref": pdf["media_ref"].values,
-                "brand": cols[0], "width": cols[1], "height": cols[2],
-                "timescale": cols[3], "duration": cols[4],
-                "n_frames": cols[5], "fps": cols[6],
-                "duration_ms": cols[7], "n_bytes": cols[8],
-            })
+    def decode(p: bytes):
+        h = parse_mp4_header(p)
+        return [(*(h[c] for c in _META), len(p))]
 
-    return video_with_bytes.mapInPandas(gen, schema=_VIDEO_META_SCHEMA)
+    return _map_payloads(video_with_bytes, decode, _VIDEO_META_SCHEMA)
 
 
 _FRAME_SCHEMA = (
@@ -489,41 +461,28 @@ def sample_video_frames(video_with_bytes: DataFrame,
     output row per sampled frame: (doc_id, span_idx, media_ref,
     n_total, frame_idx, frame_bytes).
 
-    Picks ``n_frames`` evenly spaced decode-order samples
-    (``floor(i * n_total / n_frames)``, deduplicated for short clips)
-    and slices each frame's payload out of ``mdat`` at the
-    stsz/stsc/stco-derived (offset, size). Executor-side explode
-    inside ``mapInPandas`` — one payload row in, ≤ ``n_frames`` rows
-    out, no shuffle.
+    Picks ``n = min(n_frames, n_total)`` evenly spaced decode-order
+    samples (``floor(i * n_total / n)``, ``i < n``: every frame once
+    when the clip is shorter than the ask) and slices each frame's payload out of ``mdat`` at the
+    stsz/stsc/stco-derived (offset, size). One
+    :func:`.multimodal._map_payloads` stage: one payload row in,
+    ≤ ``n_frames`` rows out, no shuffle.
     """
     if n_frames < 1:
         raise ValueError(f"n_frames must be >= 1, got {n_frames}")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "span_idx", "media_ref", "n_total",
-                "frame_idx", "frame_bytes")}
-            for doc_id, span_idx, ref, p in zip(
-                    pdf["doc_id"], pdf["span_idx"], pdf["media_ref"],
-                    pdf["payload"]):
-                b = b"" if p is None else bytes(p)
-                table = mp4_frame_table(b)
-                total = len(table)
-                picks = sorted({i * total // n_frames
-                                for i in range(min(n_frames, total))})
-                for fi in picks:
-                    off, size = table[fi]
-                    out["doc_id"].append(doc_id)
-                    out["span_idx"].append(span_idx)
-                    out["media_ref"].append(ref)
-                    out["n_total"].append(total)
-                    out["frame_idx"].append(fi)
-                    out["frame_bytes"].append(b[off:off + size])
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
+    def frames(p: bytes):
+        table = mp4_frame_table(p)
+        total = len(table)
+        n_eff = min(n_frames, total)
+        picks = [i * total // n_eff for i in range(n_eff)]
+        out = []
+        for fi in picks:
+            off, size = table[fi]
+            out.append((total, fi, p[off:off + size]))
+        return out
 
-    return video_with_bytes.mapInPandas(gen, schema=_FRAME_SCHEMA)
+    return _map_payloads(video_with_bytes, frames, _FRAME_SCHEMA)
 
 
 def video_feature_pipeline(docs: DataFrame) -> DataFrame:

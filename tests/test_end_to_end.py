@@ -47,7 +47,7 @@ class TestEndToEnd:
                          c_lat="lat", c_lon="lon").toPandas()
         gp = chain["geo"].toPandas()
         qp = chain["queries"].toPandas()
-        for _, q in qp.iterrows():
+        for q in qp.itertuples():
             d = K.geodesic_inverse(np.full(len(gp), q.q_lat), np.full(len(gp), q.q_lon),
                                    gp.lat.values, gp.lon.values)
             exp = ((d <= 2_000_000.0).sum())
@@ -59,7 +59,7 @@ class TestEndToEnd:
         kj = knn_join(chain["queries"], chain["geo"], k,
                       c_lat="lat", c_lon="lon").toPandas()
         gp = chain["geo"].toPandas()
-        for _, q in chain["queries"].toPandas().iterrows():
+        for q in chain["queries"].toPandas().itertuples():
             d = np.sort(K.geodesic_inverse(
                 np.full(len(gp), q.q_lat), np.full(len(gp), q.q_lon),
                 gp.lat.values, gp.lon.values))[:k]

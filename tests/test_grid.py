@@ -148,7 +148,8 @@ class TestCoverConservative:
         counts = dict(zip(vals.tolist(), cnts.tolist()))
         n = 1 << res
         # brute: sum counts over each output cell's k-ring donors
-        for cell, row in out.iterrows():
+        for row in out.itertuples():
+            cell = row.Index
             y, x = divmod(int(cell), n)
             exp = 0
             for dy in range(-k, k + 1):
@@ -177,7 +178,7 @@ class TestCoverConservative:
             cid = G.cell_id_np(out.lat.values, out.lon.values, r)
             vals, cnts = np.unique(cid, return_counts=True)
             counts[r] = dict(zip(vals.tolist(), cnts.tolist()))
-        for _, row in out.iterrows():
+        for row in out.itertuples():
             r, c = int(row.a_res), int(row.a_cell)
             assert G.cell_id(row.lat, row.lon, r) == c          # (a)
             if r < rmax:

@@ -221,7 +221,7 @@ class TestRadius:
         rj = radius_join(queries, places, radius).select("query_id", "place_id").toPandas()
         got = set(zip(rj.query_id, rj.place_id))
         exp = set()
-        for _, q in qpd.iterrows():
+        for q in qpd.itertuples():
             d = K.geodesic_inverse(np.full(len(places_pd), q.q_lat),
                                    np.full(len(places_pd), q.q_lon),
                                    places_pd.lat.values, places_pd.lon.values)
@@ -240,7 +240,7 @@ class TestRadius:
             .select("query_id", "place_id").toPandas()
         got = set(zip(rj.query_id, rj.place_id))
         exp = set()
-        for _, q in qpd.iterrows():
+        for q in qpd.itertuples():
             d = K.great_circle(np.full(len(places_pd), q.q_lat),
                                np.full(len(places_pd), q.q_lon),
                                places_pd.lat.values, places_pd.lon.values)
@@ -282,7 +282,7 @@ class TestKnn:
         k = 5
         kj = knn_join(queries, places, k).select("query_id", "place_id", "dist").toPandas()
         assert len(kj) == 25 * k
-        for _, q in qpd.iterrows():
+        for q in qpd.itertuples():
             d = K.geodesic_inverse(np.full(len(places_pd), q.q_lat),
                                    np.full(len(places_pd), q.q_lon),
                                    places_pd.lat.values, places_pd.lon.values)
@@ -784,7 +784,7 @@ class TestDimwiseHaversine:
             [(i, *map(float, X[i])) for i in range(len(X))],
             "id long, lat double, lon double, value double")
         got = geodist_dimwise_haversine(df, "id", "lat", "lon", ["value"]).toPandas()
-        for _, r in got.iterrows():
+        for r in got.itertuples():
             i, j = int(r.id_1), int(r.id_2)
             assert abs(r.sq_lat - sq0[i, j]) < 1e-4 * max(sq0[i, j], 1)
             assert abs(r.sq_lon - sq1[i, j]) < 1e-4 * max(sq1[i, j], 1)
@@ -970,7 +970,7 @@ class TestPolygons:
         hits = point_in_polygon_join(
             pts_df, buf.select("poly_id", "ring")).toPandas()
         pd_pts = {p[0]: (p[1], p[2]) for p in pts}
-        for _, h in hits.iterrows():
+        for h in hits.itertuples():
             cla, clo = (40.0, -74.0) if h.poly_id == 1 else (10.0, 179.99)
             dd = K.great_circle(np.array([cla]), np.array([clo]),
                                 np.array([pd_pts[h.pid][0]]),

@@ -273,9 +273,8 @@ class TestCommittedGoldens:
 
 
 class TestDecodeMediaRealPath:
-    """decode_media(fake=False) end-to-end on a DataFrame of REAL
-    image payloads: dimensions and features must come from true
-    decoded pixels."""
+    """decode_media end-to-end on a DataFrame of REAL image payloads:
+    dimensions and features must come from true decoded pixels."""
 
     def _media_df(self, spark):
         rows = []
@@ -292,10 +291,10 @@ class TestDecodeMediaRealPath:
     def test_real_dims_and_features(self, spark):
         from geodistpy_spark.textops.multimodal import decode_media
 
-        out = decode_media(self._media_df(spark), fake=False).toPandas()
+        out = decode_media(self._media_df(spark)).toPandas()
         exp = np.load(os.path.join(_MEDIA, "expected.npz"))
         assert len(out) == 3
-        for _, r in out.iterrows():
+        for r in out.itertuples():
             img = exp[r.doc_id]
             assert (r.height, r.width) == img.shape[:2]
             assert r.format == {"png_rgb": "png", "bmp24": "bmp",
@@ -309,7 +308,7 @@ class TestDecodeMediaRealPath:
 
         out = resize_media(self._media_df(spark), out_h=4, out_w=4).toPandas()
         exp = np.load(os.path.join(_MEDIA, "expected.npz"))
-        for _, r in out.iterrows():
+        for r in out.itertuples():
             img = exp[r.doc_id].astype(np.float64) / 255.0
             lum = (0.299 * img[:, :, 0] + 0.587 * img[:, :, 1]
                    + 0.114 * img[:, :, 2])
@@ -318,6 +317,48 @@ class TestDecodeMediaRealPath:
             px = np.array(r.pixels).reshape(4, 4)
             np.testing.assert_allclose(px[0, 0], lum[0, 0], atol=1e-6)
             np.testing.assert_allclose(px[-1, -1], lum[-1, -1], atol=1e-6)
+
+
+    def test_malformed_streams_fall_back_to_header_dims(self, spark):
+        # a valid IHDR over an IDAT that is not zlib data, a GIF cut
+        # inside its image descriptor and a BMP whose width is 0: the
+        # pixel decode refuses each as malformed (ValueError, not
+        # zlib.error / struct.error / an empty array), so decode_media
+        # and resize_media fall back to the header's dims
+        import struct
+
+        from geodistpy_spark.textops.multimodal import (
+            MEDIA_FEATURE_DIM, decode_media, resize_media)
+
+        def chunk(typ, data):
+            return struct.pack(">I", len(data)) + typ + data + b"\0" * 4
+
+        png = (b"\x89PNG\r\n\x1a\n"
+               + chunk(b"IHDR", struct.pack(">IIBBBBB", 40, 30, 8, 2, 0, 0, 0))
+               + chunk(b"IDAT", b"not a zlib stream") + chunk(b"IEND", b""))
+        with open(os.path.join(_MEDIA, "gif_plain.bin"), "rb") as fh:
+            gif = fh.read()[:69]
+        with open(os.path.join(_MEDIA, "bmp24.bin"), "rb") as fh:
+            bmp = bytearray(fh.read())
+        bmp[18:22] = struct.pack("<i", 0)
+        cases = {"png": (png, 40, 30), "gif": (gif, 27, 19),
+                 "bmp": (bytes(bmp), 0, 11)}
+        for fmt, (p, _, _) in cases.items():
+            with pytest.raises(ValueError, match="IDAT|malformed|no pixels"):
+                decode_pixels(p)
+        df = spark.createDataFrame(
+            [(fmt, 0, f"media://{fmt}", bytearray(p))
+             for fmt, (p, _, _) in cases.items()],
+            "doc_id string, span_idx int, media_ref string, payload binary")
+        for r in decode_media(df).collect():
+            _, w, h = cases[r.doc_id]
+            assert (r.format, r.width, r.height) == (r.doc_id, w, h)
+            assert len(r.features) == MEDIA_FEATURE_DIM
+        rz = resize_media(df, out_h=2, out_w=2).collect()
+        assert len(rz) == 3
+        for r in rz:
+            _, w, h = cases[r.doc_id]
+            assert (r.src_w, r.src_h) == (w, h) and len(r.pixels) == 4
 
 
 class TestDecodeDispatchAndFeatures:

@@ -212,62 +212,6 @@ class TestStreaming:
         assert len(closed_b) == 1
         assert closed_b.n_events.iloc[0] == 2
 
-    def test_stream_sessionize_tws(self, spark, tmp_path):
-        # same scenario as the applyInPandasWithState test, on Spark 4's
-        # transformWithStateInPandas (typed ValueState + explicit
-        # event-time timers, RocksDB state store). The TWS state-API
-        # client requires the protobuf package (a standard pyspark
-        # dependency, absent in this sandbox) — skip, not fail, there.
-        import datetime as dt
-        import os
-
-        pytest.importorskip(
-            "google.protobuf",
-            reason="pyspark's transformWithState client needs protobuf")
-
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try:
-            src = str(tmp_path / "sess_tws_in")
-            os.makedirs(src, exist_ok=True)
-            t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-            rows = [
-                ("a", t0), ("a", t0 + dt.timedelta(minutes=5)),
-                ("a", t0 + dt.timedelta(minutes=10)),
-                ("a", t0 + dt.timedelta(hours=2)),
-                ("a", t0 + dt.timedelta(hours=2, minutes=3)),
-                ("b", t0), ("b", t0 + dt.timedelta(minutes=1)),
-            ]
-            spark.createDataFrame(rows, "user_id string, ts timestamp") \
-                .coalesce(1).write.parquet(os.path.join(src, "batch0"))
-            from geodistpy_spark.streaming import stream_sessionize_tws
-
-            ev = spark.readStream.schema("user_id string, ts timestamp") \
-                .parquet(os.path.join(src, "batch0"))
-            sess = stream_sessionize_tws(ev, gap="30 minutes", watermark="10 minutes")
-            assert sess.isStreaming
-            q = (sess.writeStream.format("memory").queryName("sess_tws")
-                 .option("checkpointLocation", str(tmp_path / "sess_tws_ck"))
-                 .outputMode("append").start())
-            try:
-                q.processAllAvailable()
-                out = spark.sql(
-                    "SELECT * FROM sess_tws ORDER BY user_id, session_start"
-                ).toPandas()
-            finally:
-                q.stop()
-            closed_a = out[out.user_id == "a"]
-            assert len(closed_a) == 1 and closed_a.n_events.iloc[0] == 3
-            closed_b = out[out.user_id == "b"]
-            assert len(closed_b) == 1 and closed_b.n_events.iloc[0] == 2
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
     def test_sessionize_fn_late_event_keeps_anchor(self):
         # cross-batch out-of-order event (late but above watermark) must
         # not move the session-end anchor BACKWARD — the next gap check

@@ -516,6 +516,58 @@ class TestAnn:
             assert sorted(out.values.tolist()) \
                 == sorted(want.values.tolist()), name
 
+        # a null and an empty query vector get no rows; the other
+        # queries' rows are unchanged
+        qn = q.unionByName(spark.createDataFrame(
+            [(98, None), (99, [])], q.schema))
+        cases = {
+            "cosine_topk": lambda qs: cosine_topk(emb, qs, 3),
+            "ivf_topk": lambda qs: ivf_topk(emb, qs, 3, n_cells=4),
+            "pq_topk": lambda qs: pq_topk(emb, qs, 3, codebooks=books),
+            "ivfpq_topk": lambda qs: ivfpq_topk(emb, qs, 3, n_cells=4,
+                                                codebooks=books),
+        }
+        for name, topk in cases.items():
+            out = topk(qn).toPandas()
+            want = topk(q).toPandas()
+            assert len(want) == 6, name
+            assert sorted(out.values.tolist()) \
+                == sorted(want.values.tolist()), name
+
+    def test_zero_vector_scores_zero(self, spark):
+        # an all-zero embedding has cosine 0 to every query in every
+        # scorer, not a division by zero (which raises under ANSI);
+        # k = the corpus size and every cell probed, so the zero row is
+        # always in the output
+        from geodistpy_spark.textops import (
+            codebooks_from_df, cosine_topk, ivf_topk, ivfpq_topk, pq_topk)
+
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        dim = len(emb.first()["embedding"])
+        n = emb.count()
+        zeroed = emb.withColumn("embedding", F.when(
+            F.col("vec_id") == 5,
+            F.array_repeat(F.lit(0.0).cast("float"), dim)).otherwise(
+            F.col("embedding")))
+        q = emb.filter(F.col("vec_id") < 2).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+        books = codebooks_from_df(
+            spark.read.parquet("fixtures/ann/codebooks.parquet"))
+        cases = {
+            "cosine_topk": lambda: cosine_topk(zeroed, q, n),
+            "ivf_topk": lambda: ivf_topk(zeroed, q, n, n_cells=4, n_probe=4),
+            "pq_topk": lambda: pq_topk(zeroed, q, n, shortlist=n,
+                                       codebooks=books),
+            "ivfpq_topk": lambda: ivfpq_topk(zeroed, q, n, n_cells=4,
+                                             n_probe=4, shortlist=n,
+                                             codebooks=books),
+        }
+        for name, topk in cases.items():
+            out = topk().toPandas()
+            assert len(out) == 2 * n, name
+            assert (out[out.vec_id == 5].cosine == 0.0).all(), name
+            assert (out.vec_id == 5).sum() == 2, name
+
 
 class TestAnalysis:
     def test_token_count(self, spark):
@@ -631,7 +683,7 @@ class TestMultimodal:
         mf = media_feature_pipeline(docs.limit(100)).toPandas()
         png_bmp = mf[mf.format.isin(["png", "bmp"])]
         assert len(png_bmp) > 0
-        for _, r in png_bmp.head(20).iterrows():
+        for r in png_bmp.head(20).itertuples():
             h = hashlib.sha256(r.media_ref.encode()).digest()
             assert r.width == 16 + (h[1] | (h[2] << 8)) % 2033
             assert r.height == 16 + (h[3] | (h[4] << 8)) % 1525
@@ -645,48 +697,12 @@ class TestMultimodal:
             ["doc_id", "span_idx"]).reset_index(drop=True)
         assert (a.width == b.width).all() and (a.height == b.height).all()
 
-    def test_real_decode_raises(self, spark, docs):
-        from geodistpy_spark.textops.multimodal import decode_media, fetch_media_bytes
-        from geodistpy_spark.sources.documents import extract_media_spans
-
-        spans = extract_media_spans(docs.limit(20)).select("doc_id", "span_idx", "media_ref")
-        wb = fetch_media_bytes(spans)
-        # synthetic payloads are header-only stubs: PNG/BMP kinds fail
-        # the real pixel decode as truncated streams, raw kinds as
-        # codec-less containers — either way fake=False must refuse
-        with pytest.raises(Exception,
-                           match="NotImplementedError|codec|truncated|missing"):
-            decode_media(wb, fake=False).count()
-
 
 class TestMultimodalFramesResize:
     def _spans(self, spark):
         return spark.createDataFrame(
             [("d1", 0, "media://a"), ("d2", 1, "media://b")],
             "doc_id string, span_idx int, media_ref string")
-
-    def test_sample_frames_uniform_and_bytes(self, spark):
-        from geodistpy_spark.textops import fetch_media_bytes, sample_frames
-        from geodistpy_spark.textops.multimodal import (
-            FRAME_BYTES, PAYLOAD_BYTES, _synth_payload)
-
-        wb = fetch_media_bytes(self._spans(spark))
-        out = sample_frames(wb, n_frames=3).toPandas()
-        total = PAYLOAD_BYTES // FRAME_BYTES
-        assert (out.n_total == total).all()
-        per = out.groupby("doc_id").frame_idx.apply(list).to_dict()
-        want = sorted({i * total // 3 for i in range(3)})
-        assert per["d1"] == want and per["d2"] == want
-        # sampled bytes are the payload's actual frame slices
-        p = _synth_payload("media://a")
-        for _, r in out[out.doc_id == "d1"].iterrows():
-            lo = r.frame_idx * FRAME_BYTES
-            assert bytes(r.frame_bytes) == p[lo:lo + FRAME_BYTES]
-        # more frames than the clip has -> every frame once
-        allf = sample_frames(wb, n_frames=99).toPandas()
-        assert sorted(allf[allf.doc_id == "d1"].frame_idx) == list(range(total))
-        with pytest.raises(ValueError, match="n_frames"):
-            sample_frames(wb, n_frames=0)
 
     def test_resize_media_bilinear(self, spark):
         from geodistpy_spark.textops import fetch_media_bytes, resize_media
@@ -713,11 +729,12 @@ class TestMultimodalFramesResize:
 
     def test_media_ops_survive_null_and_short_payloads(self, spark):
         # user-supplied payload columns can carry nulls and payloads
-        # shorter than the fake-feature window (32 B) or the pseudo-dim
-        # header (4 B); every mapInPandas media op must handle them
-        # (bytes(None) raised inside executors before the guards)
+        # shorter than the stand-in feature window (32 B) or the
+        # pseudo-dim header (4 B); every mapInPandas media op must
+        # handle them (bytes(None) raised inside executors before the
+        # guards)
         from geodistpy_spark.textops.multimodal import (
-            decode_media, resize_media, sample_frames, MEDIA_FEATURE_DIM)
+            decode_media, resize_media, MEDIA_FEATURE_DIM)
 
         rows = [
             ("d1", 0, "r1", bytearray(b"\x89PNG")),     # truncated magic
@@ -728,15 +745,13 @@ class TestMultimodalFramesResize:
         mb = spark.createDataFrame(
             rows,
             "doc_id string, span_idx int, media_ref string, payload binary")
-        dec = decode_media(mb, fake=True).toPandas()
+        dec = decode_media(mb).toPandas()
         assert len(dec) == 4
         assert dec.features.map(len).eq(MEDIA_FEATURE_DIM).all()
         assert dec.set_index("doc_id").n_bytes.to_dict() == {
             "d1": 4, "d2": 2, "d3": 0, "d4": 0}
         rz = resize_media(mb, out_h=2, out_w=2).toPandas()
         assert len(rz) == 4 and rz.pixels.map(len).eq(4).all()
-        # all payloads are shorter than one frame -> no sampled rows
-        assert sample_frames(mb).count() == 0
 
 
 class TestSamplingOps:

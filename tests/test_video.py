@@ -218,9 +218,20 @@ class TestSpark:
             assert r.n_total == e["n_frames"]
             assert len(r.frame_bytes) == e["sizes"][r.frame_idx]
             per_span.setdefault((r.doc_id, r.span_idx), []).append(r.frame_idx)
-        for (d, s), idxs in per_span.items():
-            assert len(idxs) == len(set(idxs))  # deduplicated picks
-            assert len(idxs) <= 4
+        refs = {(r.doc_id, r.span_idx): r.media_ref for r in rows}
+        for key, idxs in per_span.items():
+            n = _params(refs[key])["n_frames"]
+            m = min(4, n)
+            assert sorted(idxs) == [i * n // m for i in range(m)]
+        # a clip shorter than n_frames: every frame exactly once
+        allf: dict = {}
+        for r in sample_video_frames(fetch_video_bytes(spans),
+                                     n_frames=99).collect():
+            allf.setdefault((r.doc_id, r.span_idx, r.media_ref),
+                            []).append(r.frame_idx)
+        assert allf
+        for (_, _, ref), idxs in allf.items():
+            assert sorted(idxs) == list(range(_params(ref)["n_frames"]))
 
     def test_streaming_video_decode_matches_batch(self, spark,
                                                   fixture_paths, tmp_path):
