@@ -9,7 +9,7 @@ Layers
 - :mod:`geodistpy_spark.grid` — hierarchical quad-grid cell index
   (H3/S2 stand-in): cell ids as plain integer math, covers, k-rings.
 - :mod:`geodistpy_spark.functions` — Catalyst Column builders (codegen
-  fast path) + Arrow-batched pandas UDFs (exact path).
+  fast path) + Arrow UDFs (exact path).
 - :mod:`geodistpy_spark.operators` — distance queries, radius joins,
   kNN joins, point-in-polygon, zonal stats.
 - :mod:`geodistpy_spark.sources` — interleaved-document span extraction

@@ -13,8 +13,6 @@ from .expressions import (
 from .udfs import (
     destination_udf,
     interpolate_udf,
-    karney_udf,
-    vincenty_full_udf,
     vincenty_udf,
 )
 
@@ -22,5 +20,5 @@ __all__ = [
     "bearing_sphere_deg", "cell_id_col", "cell_x", "cell_y",
     "great_circle_m", "haversine_m", "normalize_lon", "parent_cell_col",
     "to_unit", "validate_coords", "destination_udf", "interpolate_udf",
-    "karney_udf", "vincenty_full_udf", "vincenty_udf",
+    "vincenty_udf",
 ]

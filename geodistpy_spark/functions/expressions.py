@@ -13,7 +13,7 @@ computes the identical expression.
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, wraps
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -25,24 +25,29 @@ def _c(x) -> Column:
     return x if isinstance(x, Column) else F.col(x) if isinstance(x, str) else F.lit(x)
 
 
+def _reusable(build):
+    """Memoize a Column builder unless an argument is a ``Column``.
+
+    A builder is tens of py4j round trips of pure driver wall per call
+    (~80 ms for ``cell_id_col`` under the kNN join's per-call profile),
+    and Column expression trees are immutable, so one tree per argument
+    tuple is reused across plans and sessions (analysis re-resolves per
+    plan). A ``Column`` has no value equality (``==`` builds an
+    expression), so a call with one builds afresh."""
+    cached = lru_cache(maxsize=512, typed=True)(build)
+
+    @wraps(build)
+    def call(*args, **kwargs):
+        if any(isinstance(v, Column) for v in (*args, *kwargs.values())):
+            return build(*args, **kwargs)
+        return cached(*args, **kwargs)
+
+    return call
+
+
+@_reusable
 def haversine_m(lat1, lon1, lat2, lon2, radius: float = EARTH_RADIUS_M) -> Column:
-    """Great-circle distance on a sphere (meters) — pure column math.
-
-    All-string column names hit an lru_cache (same rationale as
-    cell_id_col: the builder is ~50 py4j round trips of pure driver
-    wall per call, and Column trees are immutable/reusable)."""
-    if all(isinstance(v, str) for v in (lat1, lon1, lat2, lon2)):
-        return _haversine_m_cached(lat1, lon1, lat2, lon2, radius)
-    return _haversine_m_build(lat1, lon1, lat2, lon2, radius)
-
-
-@lru_cache(maxsize=512)
-def _haversine_m_cached(lat1: str, lon1: str, lat2: str, lon2: str,
-                        radius: float) -> Column:
-    return _haversine_m_build(lat1, lon1, lat2, lon2, radius)
-
-
-def _haversine_m_build(lat1, lon1, lat2, lon2, radius: float) -> Column:
+    """Great-circle distance on a sphere (meters) — pure column math."""
     p1, l1, p2, l2 = (F.radians(_c(v)) for v in (lat1, lon1, lat2, lon2))
     h = (
         F.pow(F.sin((p2 - p1) / 2), 2)
@@ -60,25 +65,13 @@ def _haversine_m_build(lat1, lon1, lat2, lon2, radius: float) -> Column:
             F.least(F.greatest(h, F.lit(0.0)), F.lit(1.0)))))
 
 
+@_reusable
 def great_circle_m(lat1, lon1, lat2, lon2, a: float = WGS84_A, f: float = WGS84_F) -> Column:
     """Lambert (Andoyer) flattening-corrected great circle — column math.
 
     Same formula as kernels.great_circle (reference contract:
     geodesic.py:676-767); ~10 m mean accuracy, zero Python overhead.
-    All-string column names hit an lru_cache (see haversine_m).
     """
-    if all(isinstance(v, str) for v in (lat1, lon1, lat2, lon2)):
-        return _great_circle_m_cached(lat1, lon1, lat2, lon2, a, f)
-    return _great_circle_m_build(lat1, lon1, lat2, lon2, a, f)
-
-
-@lru_cache(maxsize=512)
-def _great_circle_m_cached(lat1: str, lon1: str, lat2: str, lon2: str,
-                           a: float, f: float) -> Column:
-    return _great_circle_m_build(lat1, lon1, lat2, lon2, a, f)
-
-
-def _great_circle_m_build(lat1, lon1, lat2, lon2, a: float, f: float) -> Column:
     p1, l1, p2, l2 = (F.radians(_c(v)) for v in (lat1, lon1, lat2, lon2))
     b1 = F.atan((1.0 - f) * F.tan(p1))
     b2 = F.atan((1.0 - f) * F.tan(p2))
@@ -166,26 +159,13 @@ def cell_y(lat, res: int) -> Column:
         F.least(F.greatest(y, F.lit(0)), F.lit(n - 1))).cast("long")
 
 
-@lru_cache(maxsize=512)
-def _cell_id_col_cached(lat: str, lon: str, res: int) -> Column:
-    n = 1 << res
-    return (cell_y(lat, res) * n + cell_x(lon, res)).alias(f"cell_r{res}")
-
-
+@_reusable
 def cell_id_col(lat, lon, res: int) -> Column:
     """Quad-grid cell id = y * 2^res + x — pure integer column math.
 
     Identical to grid.cell_id_np and to the ANSI-SQL mirror; enables
     exact (bit-for-bit) equi-joins, partitioning, and DuckDB oracles.
-
-    String column names hit an lru_cache: the builder issues ~60 py4j
-    round trips (~80 ms of driver wall per call measured under the kNN
-    join's per-call profile), and Column expression trees are immutable,
-    so the same (lat, lon, res) triple can reuse one tree across plans
-    and sessions (analysis re-resolves per plan).
     """
-    if isinstance(lat, str) and isinstance(lon, str):
-        return _cell_id_col_cached(lat, lon, res)
     n = 1 << res
     return (cell_y(lat, res) * n + cell_x(lon, res)).alias(f"cell_r{res}")
 

@@ -2,7 +2,7 @@
 
 These are the accuracy-bearing numerical cores of the engine. They are
 designed to run on whole float64 arrays at once (Arrow batches inside
-pandas UDFs) — never per-row Python, per the north rule.
+Arrow UDFs) — never per-row Python, per the north rule.
 
 Implemented from public sources only:
 
@@ -85,15 +85,6 @@ def great_circle(lat1, lon1, lat2, lon2, a: float = WGS84_A, f: float = WGS84_F)
         X = np.where(cos_half_sq > 0, (sigma - sin_sigma) * sp2 * cq2 / np.where(cos_half_sq > 0, cos_half_sq, 1.0), 0.0)
         Y = np.where(sin_half_sq > 0, (sigma + sin_sigma) * cp2 * sq2 / np.where(sin_half_sq > 0, sin_half_sq, 1.0), 0.0)
     return a * (sigma - (f / 2.0) * (X + Y))
-
-
-def initial_bearing_sphere(lat1, lon1, lat2, lon2) -> np.ndarray:
-    """Spherical initial bearing (degrees in [0, 360)); closed-form helper."""
-    p1, l1, p2, l2 = (np.radians(_as_f64(v)) for v in (lat1, lon1, lat2, lon2))
-    dl = l2 - l1
-    y = np.sin(dl) * np.cos(p2)
-    x = np.cos(p1) * np.sin(p2) - np.sin(p1) * np.cos(p2) * np.cos(dl)
-    return np.mod(np.degrees(np.arctan2(y, x)), 360.0)
 
 
 # ---------------------------------------------------------------------------
@@ -609,7 +600,9 @@ def geodesic_inverse_full(lat1, lon1, lat2, lon2, a: float = WGS84_A, f: float =
         _as_f64(lat1), _as_f64(lon1), _as_f64(lat2), _as_f64(lon2)
     )
     s, az1, az2, ok = vincenty_inverse(lat1, lon1, lat2, lon2, a, f, full=True)
-    bad = ~ok
+    # a NaN coordinate never converges, and the Karney series would give
+    # it a finite azimuth (360 for a NaN longitude): it stays NaN
+    bad = ~ok & ~np.isnan(lat1 + lon1 + lat2 + lon2)
     if bad.any():
         s = s.copy(); az1 = az1.copy(); az2 = az2.copy()
         sk, a1k, a2k = karney_inverse(lat1[bad], lon1[bad], lat2[bad], lon2[bad], a, f, full=True)

@@ -16,9 +16,10 @@ from pyspark.sql import functions as F
 
 from ..functions.expressions import great_circle_m, haversine_m, to_unit
 from ..functions.udfs import (
+    bearing_udf,
     destination_udf,
     interpolate_udf,
-    vincenty_full_udf,
+    midpoint_udf,
     vincenty_udf,
 )
 
@@ -27,13 +28,37 @@ def _cols(df: DataFrame, names) -> list[Column]:
     return [F.col(n) for n in names]
 
 
+def _distance_m(exact: bool, ellipsoid, lat1, lon1, lat2, lon2) -> Column:
+    """Meters between two points: the exact Vincenty Arrow UDF, or the
+    codegen great circle (closed-form, hence oracle-checkable)."""
+    if exact:
+        return vincenty_udf(ellipsoid)(lat1, lon1, lat2, lon2)
+    return great_circle_m(lat1, lon1, lat2, lon2)
+
+
+def _pairs(df1: DataFrame, df2: DataFrame | None, id_col: str, lat_col: str,
+           lon_col: str, feature_cols=()) -> DataFrame:
+    """Cross relation of ``df1`` x ``df2`` with every column suffixed by
+    side (``id_1``, ``lat_1``, ``lon_1``, ``<feat>_1``, then ``_2``);
+    ``df2=None`` pairs ``df1`` with itself as the strict upper triangle
+    (``id_1 < id_2``)."""
+    def side(df, k):
+        return df.select(F.col(id_col).alias(f"id_{k}"),
+                         F.col(lat_col).alias(f"lat_{k}"),
+                         F.col(lon_col).alias(f"lon_{k}"),
+                         *[F.col(c).alias(f"{c}_{k}") for c in feature_cols])
+
+    pairs = side(df1, 1).crossJoin(side(df1 if df2 is None else df2, 2))
+    return pairs.filter(F.col("id_1") < F.col("id_2")) if df2 is None else pairs
+
+
 def geodist(df: DataFrame, lat1: str, lon1: str, lat2: str, lon2: str,
             metric: str = "meter", ellipsoid="WGS-84",
             out: str = "dist") -> DataFrame:
     """Elementwise exact geodesic distance dist[i] = d(A[i], B[i]).
 
     Engine analog of ``geodist`` (reference distance.py:94-163): zipped
-    coordinate columns -> scalar pandas UDF (Vincenty + Karney rescue),
+    coordinate columns -> scalar Arrow UDF (Vincenty + Karney rescue),
     then unit conversion as plain Catalyst arithmetic.
     """
     udf = vincenty_udf(ellipsoid)
@@ -69,11 +94,8 @@ def geodist_to_many(df: DataFrame, origin: tuple[float, float],
     olat, olon = float(origin[0]), float(origin[1])
     if not -90.0 <= olat <= 90.0 or not -180.0 <= olon <= 180.0:
         raise ValueError(f"origin out of range: {origin}")
-    if exact:
-        udf = vincenty_udf(ellipsoid)
-        d = udf(F.lit(olat), F.lit(olon), F.col(lat_col), F.col(lon_col))
-    else:
-        d = great_circle_m(F.lit(olat), F.lit(olon), F.col(lat_col), F.col(lon_col))
+    d = _distance_m(exact, ellipsoid, F.lit(olat), F.lit(olon),
+                    F.col(lat_col), F.col(lon_col))
     return df.withColumn(out, to_unit(d, metric))
 
 
@@ -94,28 +116,10 @@ def geodist_matrix(df1: DataFrame, df2: DataFrame | None = None,
     For large inputs prefer the cell-prefiltered ``radius_join`` /
     ``knn_join`` — an all-pairs matrix is inherently O(n1*n2).
     """
-    pdist = df2 is None
-    a = df1.select(
-        F.col(id_col).alias("id_1"),
-        F.col(lat_col).alias("lat_1"),
-        F.col(lon_col).alias("lon_1"),
-    )
-    bsrc = df1 if pdist else df2
-    b = bsrc.select(
-        F.col(id_col).alias("id_2"),
-        F.col(lat_col).alias("lat_2"),
-        F.col(lon_col).alias("lon_2"),
-    )
-    pairs = a.crossJoin(b)
-    if pdist:
-        pairs = pairs.filter(F.col("id_1") < F.col("id_2"))
-    if exact:
-        udf = vincenty_udf(ellipsoid)
-        d = udf(F.col("lat_1"), F.col("lon_1"), F.col("lat_2"), F.col("lon_2"))
-    else:
-        d = great_circle_m("lat_1", "lon_1", "lat_2", "lon_2")
-    pairs = pairs.select("id_1", "id_2", to_unit(d, metric).alias("dist"))
-    if pdist and mirror:
+    d = _distance_m(exact, ellipsoid, "lat_1", "lon_1", "lat_2", "lon_2")
+    pairs = _pairs(df1, df2, id_col, lat_col, lon_col).select(
+        "id_1", "id_2", to_unit(d, metric).alias("dist"))
+    if df2 is None and mirror:
         pairs = pairs.unionByName(
             pairs.select(
                 F.col("id_2").alias("id_1"), F.col("id_1").alias("id_2"), "dist"
@@ -138,11 +142,11 @@ def bearing(df: DataFrame, lat1: str, lon1: str, lat2: str, lon2: str,
             ellipsoid="WGS-84", out: str = "bearing_deg") -> DataFrame:
     """Initial forward azimuth A->B, degrees [0, 360), exact Vincenty
     inverse with Karney rescue (reference ``bearing``,
-    distance.py:169-214; coincident -> 0.0).
+    distance.py:169-214; coincident -> 0.0, a null or NaN coordinate ->
+    null).
     """
-    udf = vincenty_full_udf(ellipsoid)
-    full = udf(*_cols(df, [lat1, lon1, lat2, lon2]))
-    return df.withColumn(out, full["az1_deg"])
+    udf = bearing_udf(ellipsoid)
+    return df.withColumn(out, udf(*_cols(df, [lat1, lon1, lat2, lon2])))
 
 
 def destination(df: DataFrame, lat: str, lon: str, bearing_col, distance_col,
@@ -194,11 +198,10 @@ def midpoint(df: DataFrame, lat1: str, lon1: str, lat2: str, lon2: str,
              ellipsoid="WGS-84",
              out_lat: str = "mid_lat", out_lon: str = "mid_lon") -> DataFrame:
     """Geodesic midpoint = interpolate(n=1)[0] (reference ``midpoint``,
-    distance.py:359-384)."""
-    udf = interpolate_udf(1, ellipsoid)
-    arr = udf(*_cols(df, [lat1, lon1, lat2, lon2]))
-    first = arr.getItem(0)
-    return df.withColumn(out_lat, first["lat"]).withColumn(out_lon, first["lon"])
+    distance.py:359-384); the same UDF as SQL ``geo_midpoint``."""
+    udf = midpoint_udf(ellipsoid)
+    mid = udf(*_cols(df, [lat1, lon1, lat2, lon2]))
+    return df.withColumn(out_lat, mid["lat"]).withColumn(out_lon, mid["lon"])
 
 
 def geodist_dimwise(df: DataFrame, id_col: str, lat_col: str, lon_col: str,
@@ -210,19 +213,8 @@ def geodist_dimwise(df: DataFrame, id_col: str, lat_col: str, lon_col: str,
     Vincenty kernel for the codegen great-circle (closed-form, hence
     oracle-checkable — same fast/exact split as geodist_matrix).
     """
-    a = df.select(F.col(id_col).alias("id_1"), F.col(lat_col).alias("lat_1"),
-                  F.col(lon_col).alias("lon_1"),
-                  *[F.col(c).alias(f"{c}_1") for c in feature_cols])
-    b = df.select(F.col(id_col).alias("id_2"), F.col(lat_col).alias("lat_2"),
-                  F.col(lon_col).alias("lon_2"),
-                  *[F.col(c).alias(f"{c}_2") for c in feature_cols])
-    pairs = a.crossJoin(b)
-    if exact:
-        d = vincenty_udf(ellipsoid)(F.col("lat_1"), F.col("lon_1"),
-                                    F.col("lat_2"), F.col("lon_2"))
-    else:
-        d = great_circle_m("lat_1", "lon_1", "lat_2", "lon_2")
-    return pairs.select(
+    d = _distance_m(exact, ellipsoid, "lat_1", "lon_1", "lat_2", "lon_2")
+    return _pairs(df, df, id_col, lat_col, lon_col, feature_cols).select(
         "id_1", "id_2", d.alias("dist_m"),
         *[(F.col(f"{c}_2") - F.col(f"{c}_1")).alias(f"d_{c}") for c in feature_cols],
     )
@@ -239,13 +231,7 @@ def geodist_dimwise_haversine(df: DataFrame, id_col: str, lat_col: str,
     dimension gets its squared Euclidean diff. Relation form
     (id_1, id_2, sq_lat, sq_lon, sq_<feat>...), pure codegen, no UDFs.
     """
-    a = df.select(F.col(id_col).alias("id_1"), F.col(lat_col).alias("lat_1"),
-                  F.col(lon_col).alias("lon_1"),
-                  *[F.col(c).alias(f"{c}_1") for c in feature_cols])
-    b = df.select(F.col(id_col).alias("id_2"), F.col(lat_col).alias("lat_2"),
-                  F.col(lon_col).alias("lon_2"),
-                  *[F.col(c).alias(f"{c}_2") for c in feature_cols])
-    pairs = a.crossJoin(b)
+    pairs = _pairs(df, df, id_col, lat_col, lon_col, feature_cols)
     dlat2 = F.abs(F.radians(F.col("lat_1") - F.col("lat_2"))) / 2.0
     dlng2 = F.abs(F.radians(F.col("lon_1") - F.col("lon_2"))) / 2.0
     slat = F.sin(dlat2)

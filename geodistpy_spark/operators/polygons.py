@@ -397,30 +397,20 @@ def geodesic_buffer(points: DataFrame, radius, metric: str = "meter",
 
     from .. import kernels as K
     from ..constants import resolve_ellipsoid
+    from ..functions.udfs import kernel_udf, points_array
 
     a, f = resolve_ellipsoid(ellipsoid)
     bearings = np.arange(n_vertices) * step
 
-    @F.pandas_udf(T.ArrayType(T.StructType([
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-    ])))
-    def _ring(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        B = len(lat)
-        la = np.repeat(lat.to_numpy(float), n_vertices)
-        lo = np.repeat(lon.to_numpy(float), n_vertices)
-        az = np.tile(bearings, B)
-        la2, lo2, _ = K.vincenty_direct(
-            la, lo, az, np.full(B * n_vertices, radius_m), a=a, f=f)
-        la2 = la2.reshape(B, n_vertices)
-        lo2 = lo2.reshape(B, n_vertices)
-        return pd.Series([
-            [{"lat": float(la2[i, j]), "lon": float(lo2[i, j])}
-             for j in range(n_vertices)]
-            for i in range(B)
-        ])
+    def ring(lat, lon):
+        la, lo, _ = K.vincenty_direct(
+            np.repeat(lat, n_vertices), np.repeat(lon, n_vertices),
+            np.tile(bearings, len(lat)), np.full(len(lat) * n_vertices, radius_m),
+            a=a, f=f)
+        return points_array(la.reshape(-1, n_vertices), lo.reshape(-1, n_vertices))
 
-    return points.withColumn(out, _ring(F.col(lat_col), F.col(lon_col)))
+    udf = kernel_udf(ring, "array<struct<lat: double, lon: double>>")
+    return points.withColumn(out, udf(F.col(lat_col), F.col(lon_col)))
 
 
 SPHERE_R_M = 6_371_009.0

@@ -56,18 +56,12 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_geo_spans(docs: DataFrame, res: int | None = None) -> DataFrame:
-    """Geo points from the documents table.
-
-    Output: (doc_id, span_idx, lat, lon [, cell_r{res}]). Filter on
-    ``kind='geo'`` is pushed as close to the scan as Catalyst allows;
-    payload parse is split+cast column math. Rows whose payload fails to
-    parse or is out of range are dropped (mirrors reference coordinate
-    validation, distance.py:86-91).
-    """
-    pts = (
-        explode_spans(docs)
-        .filter(F.col("kind") == "geo")
+def _geo_points(spans: DataFrame) -> DataFrame:
+    """The geo rows of an :func:`explode_spans` relation with ``lat`` and
+    ``lon`` parsed from ``text = "<lat>,<lon>"``; rows whose payload
+    fails to parse or is out of range are dropped."""
+    return (
+        spans.filter(F.col("kind") == "geo")
         # F.get (not getItem): ANSI-safe NULL on malformed payloads with
         # no comma — Catalyst may evaluate the projection before the kind
         # filter (observed via a downstream explode plan), and getItem
@@ -79,8 +73,19 @@ def extract_geo_spans(docs: DataFrame, res: int | None = None) -> DataFrame:
             & F.col("lat").between(-90.0, 90.0)
             & F.col("lon").between(-180.0, 180.0)
         )
-        .select("doc_id", "span_idx", "lat", "lon")
     )
+
+
+def extract_geo_spans(docs: DataFrame, res: int | None = None) -> DataFrame:
+    """Geo points from the documents table.
+
+    Output: (doc_id, span_idx, lat, lon [, cell_r{res}]). Filter on
+    ``kind='geo'`` is pushed as close to the scan as Catalyst allows;
+    payload parse is split+cast column math. Rows whose payload fails to
+    parse or is out of range are dropped (mirrors reference coordinate
+    validation, distance.py:86-91).
+    """
+    pts = _geo_points(explode_spans(docs)).select("doc_id", "span_idx", "lat", "lon")
     if res is not None:
         pts = pts.withColumn(f"cell_r{res}", cell_id_col("lat", "lon", res))
     return pts
@@ -283,13 +288,7 @@ def geotag_text_spans(docs: DataFrame) -> DataFrame:
     sp = explode_spans(docs)
     text = sp.filter(F.col("kind") == "text").select(
         "doc_id", "span_idx", "offset", "text")
-    geo = (
-        sp.filter(F.col("kind") == "geo")
-        .withColumn("lat", F.get(F.split("text", ","), 0).try_cast("double"))
-        .withColumn("lon", F.get(F.split("text", ","), 1).try_cast("double"))
-        .filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
-        .select("doc_id", "offset", "lat", "lon")
-    )
+    geo = _geo_points(sp).select("doc_id", "offset", "lat", "lon")
     out = asof_join(text, geo, on="doc_id", left_ts="offset", right_ts="offset",
                     suffix="_g")
     return out.select(
@@ -300,25 +299,23 @@ def geotag_text_spans(docs: DataFrame) -> DataFrame:
     )
 
 
+def _span_strs(spans_col):
+    """Each span of a spans array column as its '|,|'-joined
+    (kind, text, media_ref) string, null fields as '|0|'."""
+    return F.transform(
+        spans_col,
+        lambda s: F.concat_ws(
+            "|,|", *(F.coalesce(s[k], F.lit("|0|"))
+                     for k in ("kind", "text", "media_ref"))),
+    )
+
+
 def _span_fp_expr(spans_col):
     """md5 over the ordered (kind, text, media_ref) sequence of a spans
     array column. Printable separators so the identical expression is
     writable in ANSI SQL (DuckDB oracle): span sep '|#|', field sep
     '|,|', null sentinel '|0|'."""
-    return F.md5(
-        F.concat_ws(
-            "|#|",
-            F.transform(
-                spans_col,
-                lambda s: F.concat_ws(
-                    "|,|",
-                    F.coalesce(s["kind"], F.lit("|0|")),
-                    F.coalesce(s["text"], F.lit("|0|")),
-                    F.coalesce(s["media_ref"], F.lit("|0|")),
-                ),
-            ),
-        )
-    )
+    return F.md5(F.concat_ws("|#|", _span_strs(spans_col)))
 
 
 def span_fingerprint(docs: DataFrame) -> DataFrame:
@@ -364,15 +361,7 @@ def verify_roundtrip(docs: DataFrame) -> int:
     # rebuild coalesces it to a '|X|' sentinel, which can never equal
     # the original fingerprint of an empty sequence (md5 of "" —
     # concat_ws treats a null array as empty).
-    span_strs = F.transform(
-        "spans",
-        lambda s: F.concat_ws(
-            "|,|",
-            F.coalesce(s["kind"], F.lit("|0|")),
-            F.coalesce(s["text"], F.lit("|0|")),
-            F.coalesce(s["media_ref"], F.lit("|0|")),
-        ),
-    )
+    span_strs = _span_strs("spans")
     exploded = docs.select(
         "doc_id",
         F.md5(F.concat_ws("|#|", span_strs)).alias("__orig_fp"),

@@ -12,9 +12,10 @@ notebook, dbt model) consumes the engine:
   subexpressions are deduplicated by codegen CSE). These mirror the
   Column builders in :mod:`geodistpy_spark.functions.expressions` 1:1
   and are equivalence-tested bit-for-bit against them.
-- **Arrow-batched pandas UDFs** (``spark.udf.register``): the exact
-  ellipsoidal kernel (Vincenty, with the Karney rescue baked into the
-  batch driver) that has no closed form. This crosses the JVM↔Arrow
+- **Arrow UDFs** (``spark.udf.register``): the exact ellipsoidal
+  kernels (Vincenty inverse with the Karney rescue baked into the
+  batch driver, Vincenty direct, geodesic midpoint) that have no closed
+  form. This crosses the JVM↔Arrow
   boundary per batch — the documented slow path relative to the
   expression functions, but identical in cost to the DataFrame-API
   operators, which use the same UDF.
@@ -30,9 +31,9 @@ Registered names (default prefix ``geo_``):
 ``geo_to_unit``       meters -> meter|km|mile|nmi (SQL UDF)
 ``geo_cell_id``       quad-grid cell id at runtime res (SQL UDF)
 ``geo_parent_cell``   ancestor cell id at coarser res (SQL UDF)
-``geo_vincenty_m``    exact ellipsoidal distance (pandas UDF, Arrow)
-``geo_destination_vincenty`` exact ellipsoidal direct (pandas UDF)
-``geo_midpoint``      exact geodesic midpoint (pandas UDF, Arrow)
+``geo_vincenty_m``    exact ellipsoidal distance (Arrow UDF)
+``geo_destination_vincenty`` exact ellipsoidal direct (Arrow UDF)
+``geo_midpoint``      exact geodesic midpoint (Arrow UDF)
 ===================== ===============================================
 
 Reference parity: these expose the same kernels as the reference's
@@ -191,8 +192,9 @@ def register_sql_functions(spark: SparkSession, prefix: str = "geo_",
     registered names.
 
     Closed-form kernels become Spark SQL UDFs (inlined by Catalyst —
-    full codegen); the exact Vincenty kernel is registered as an
-    Arrow-batched pandas UDF under ``{prefix}vincenty_m``. Temporary
+    full codegen); the exact kernels are registered as Arrow UDFs under
+    ``{prefix}vincenty_m``, ``{prefix}destination_vincenty`` and
+    ``{prefix}midpoint``. Temporary
     (session-scoped) registrations — call once per session.
     """
     names = []

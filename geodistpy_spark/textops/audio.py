@@ -124,6 +124,12 @@ def parse_wav_header(p: bytes) -> dict:
 def decode_wav(p: bytes) -> tuple[int, np.ndarray]:
     """Decode a WAV payload -> ``(sample_rate, float64 (n, ch) in [-1, 1])``."""
     h = parse_wav_header(p)
+    return h["sample_rate"], _wav_samples(p, h)
+
+
+def _wav_samples(p: bytes, h: dict) -> np.ndarray:
+    """The samples of ``p`` as float64 ``(n, ch)`` in [-1, 1], given its
+    parsed header ``h``."""
     ch, bits = h["n_channels"], h["bits"]
     n = h["n_samples"]
     raw = p[h["data_off"]: h["data_off"] + n * ch * (bits // 8)]
@@ -143,7 +149,7 @@ def decode_wav(p: bytes) -> tuple[int, np.ndarray]:
         x = v.astype(np.float64) / float(1 << 23)
     else:  # 32-bit PCM
         x = np.frombuffer(raw, dtype="<i4").astype(np.float64) / float(1 << 31)
-    return h["sample_rate"], x.reshape(n, ch)
+    return x.reshape(n, ch)
 
 
 def audio_features(x: np.ndarray, sr: int) -> dict:
@@ -265,15 +271,15 @@ def decode_audio(audio_with_bytes: DataFrame) -> DataFrame:
     """Decode binary WAV payloads -> per-payload audio features.
 
     One :func:`.multimodal._map_payloads` stage; each payload is decoded
-    with the real RIFF walker (:func:`decode_wav`) and featurized with
+    with the real RIFF walker (header parsed once) and featurized with
     :func:`audio_features`. A malformed (or null) payload raises the
     parser's ValueError from the executor.
     """
 
     def decode(p: bytes):
         hdr = parse_wav_header(p)
-        sr, x = decode_wav(p)
-        f = audio_features(x, sr)
+        sr = hdr["sample_rate"]
+        f = audio_features(_wav_samples(p, hdr), sr)
         return [(hdr["codec"], hdr["n_channels"], sr, hdr["bits"],
                  hdr["n_samples"], *(f[c] for c in _FEATURES), len(p))]
 

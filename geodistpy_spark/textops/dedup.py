@@ -154,7 +154,7 @@ def _seed_hash(s: int, hash_fn: str):
     lru_cached: Column trees are immutable (analysis re-resolves per
     plan), and the dedup pipeline rebuilds these same ~24 expressions
     on every call — each a handful of py4j round trips (same pattern
-    as functions.expressions._cell_id_col_cached).
+    as functions.expressions._reusable).
     """
     if hash_fn == "md5":
         return F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))

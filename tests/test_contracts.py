@@ -71,13 +71,16 @@ class TestValidateCoords:
 
 
 class TestContractOracles:
-    """The dedup and ANN queries of the driver contract against their
-    DuckDB oracles, compared the way ``scripts/check_contract.py``
-    compares them (repr-exact after canonical column and row order)."""
+    """The dedup, ANN and exact-kernel queries of the driver contract
+    against their DuckDB oracles and goldens, compared the way
+    ``scripts/check_contract.py`` compares them (repr-exact after
+    canonical column and row order)."""
 
     @pytest.mark.parametrize("key", [
         "jaccard_pairs", "near_dup_groups",
-        "embedding_topk", "ivf_topk", "pq_topk", "ivfpq_topk"])
+        "embedding_topk", "ivf_topk", "pq_topk", "ivfpq_topk",
+        "vincenty_pairs", "bearing_vincenty", "destination_roundtrip",
+        "interpolate", "midpoint", "matrix_gc", "dimwise", "buffer_rings"])
     def test_query_matches_duckdb_oracle(self, spark, key):
         import duckdb
 
