@@ -37,8 +37,14 @@ def points_array(la: np.ndarray, lo: np.ndarray) -> pa.Array:
     if la.ndim == 1:
         return pts
     rows, n = la.shape
-    offsets = pa.array(np.arange(0, rows * n + 1, n, dtype=np.int32))
-    return pa.ListArray.from_arrays(offsets, pts)
+    return list_array(np.arange(0, rows * n + 1, n), pts)
+
+
+def list_array(offsets: np.ndarray, values) -> pa.Array:
+    """Flat ``(offsets, values)`` -> one list per row: row ``i`` holds
+    ``values[offsets[i]:offsets[i + 1]]`` (e.g. the
+    :func:`~geodistpy_spark.grid.cap_covers` cells as array<bigint>)."""
+    return pa.ListArray.from_arrays(pa.array(np.asarray(offsets, dtype=np.int32)), values)
 
 
 def kernel_udf(fn, return_type, once: bool = False):
@@ -46,7 +52,7 @@ def kernel_udf(fn, return_type, once: bool = False):
 
     Each Arrow column reaches ``fn`` as a float64 array (null -> NaN);
     an ndarray result goes back with NaN -> null, an Arrow result (e.g.
-    :func:`points_array`) as is.
+    :func:`points_array`, :func:`list_array`) as is.
 
     ``once=True`` marks the UDF non-deterministic, which stops Catalyst
     from cloning it into both a Filter and a Project (the

@@ -8,16 +8,22 @@ hierarchical equirectangular quad-grid natively (SURVEY.md §2.4):
 - ``cell_id = y * 2^r + x`` as a 64-bit integer — *plain integer math*,
   identically computable as a Spark Column expression, in ANSI SQL
   (DuckDB oracle), and in numpy,
-- parent cell at ``r-1`` is ``(y >> 1) * 2^(r-1) + (x >> 1)``,
+- the ancestor ``s`` levels up is ``(y >> s) * 2^(r-s) + (x >> s)``
+  (:func:`parent_cell`, ints or int64 arrays; the Column twin is
+  ``expressions.parent_cell_col``),
 - neighbor enumeration wraps in x (antimeridian) and clamps in y
   (polar caps).
 
-Driver-side generators (:func:`cap_cover`, :func:`k_ring`) produce the
-small cell-id sets that get broadcast into joins; they only ever touch
-cell ids, never data rows. Cover conservativeness (every point within
-``radius_m`` geodesic meters of the center lands in a covered cell) is
-what makes the cell-prefilter + exact-refine join strategy *exact*
-(reference punts at >100k candidates: docs/spatial-queries.md:286-289).
+:func:`cap_covers` is the one cap cover: vectorized over points, flat
+``(offsets, cells)`` out, per-row longitude spans (so polar caps stay
+proportional to their area). The radius and kNN joins run it inside an
+Arrow UDF; the driver-side generators (:func:`cap_cover`,
+:func:`k_ring`) produce the small cell-id sets that get broadcast into
+joins. They only ever touch cell ids, never data rows. Cover
+conservativeness (every point within ``radius_m`` geodesic meters of
+the center lands in a covered cell) is what makes the cell-prefilter +
+exact-refine join strategy *exact* (reference punts at >100k
+candidates: docs/spatial-queries.md:286-289).
 """
 
 from __future__ import annotations
@@ -71,8 +77,10 @@ def cell_id_np(lat, lon, res: int) -> np.ndarray:
     return cells
 
 
-def parent_cell(cell: int, res: int, parent_res: int) -> int:
-    """Cell id of the ancestor at a coarser resolution."""
+def parent_cell(cell, res: int, parent_res: int):
+    """Cell id of the ancestor at a coarser resolution; ``cell`` may be
+    an int or an int64 array (the one parent formula of the quad grid,
+    mirrored by ``expressions.parent_cell_col``)."""
     n = nx(res)
     y, x = divmod(cell, n)
     shift = res - parent_res
@@ -177,91 +185,73 @@ def pick_resolution(radius_m: float, max_cover: int = 512) -> int:
     return min(max(r, 0), MAX_RES)
 
 
-def polar_cap_cells(lat: float, lon: float, sigma: float, res: int,
-                    y_lo: int, y_hi: int) -> list[int]:
-    """Cells of a pole-containing spherical cap with PER-ROW longitude
-    spans: inside a pole-cap the boundary's longitude half-width grows
-    monotonically toward the pole (full circle past
-    phi_full = pi - |lat| - sigma), so the row edge NEAREST the pole
-    bounds the whole row — conservative. Round-1 emitted all 2^res
-    longitudes for EVERY row (16k cells for 1 km at lat 89.99, res 14).
-    South caps are handled by mirroring latitudes; a cap containing both
-    poles is the whole band.
-    """
-    n = nx(res)
-    sigma_deg = math.degrees(sigma)
-    if (sigma_deg - abs(lat)) >= 90.0:  # both poles: full band
-        return [y * n + x for y in range(y_lo, y_hi + 1) for x in range(n)]
-    north = lat >= 0.0
-    alat = abs(math.radians(lat))
-    phi_full = math.pi - alat - sigma  # full-circle latitude (mirrored frame)
-    cells: list[int] = []
-    for y in range(y_lo, y_hi + 1):
-        # row's pole-nearest edge, mirrored into the north frame
-        if north:
-            edge = -90.0 + 180.0 * (y + 1) / n
-        else:
-            edge = -(-90.0 + 180.0 * y / n)
-        phi_e = math.radians(min(max(edge, -90.0), 90.0))
-        if phi_e >= phi_full:
-            span = n
-            lo_x = 0
-        else:
-            num = math.cos(sigma) - math.sin(phi_e) * math.sin(alat)
-            c = num / max(math.cos(phi_e) * math.cos(alat), 1e-300)
-            dl = math.degrees(math.acos(min(max(c, -1.0), 1.0)))
-            span = min(int(math.ceil(2.0 * dl / (360.0 / n))) + 2, n)
-            lo_x = int(math.floor(((lon - dl + 180.0) % 360.0) / 360.0 * n))
-        cells.extend(y * n + ((lo_x + i) % n) for i in range(span))
-    return sorted(set(cells))
-
-
 def cap_covers(lat, lon, sigma, res: int,
-               max_cells: int | None = None) -> list[np.ndarray]:
-    """Cap covers at ``res``, vectorized over points: row ``i`` holds
-    every cell containing a point whose geodetic (lat, lon), read as a
+               max_cells: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """Cap covers at ``res``, vectorized over points, as flat
+    ``(offsets, cells)``: ``cells[offsets[i]:offsets[i + 1]]`` holds every
+    cell containing a point whose geodetic (lat, lon), read as a
     unit-sphere direction, is within angle ``sigma[i]`` (radians) of
     ``(lat[i], lon[i])`` (``sigma`` may be a scalar; the geodesic disk of
     radius ``r`` is in the cap of angle ``outer * r / a``, see
-    :func:`~geodistpy_spark.constants.hav_bounds`).
+    :func:`~geodistpy_spark.constants.hav_bounds`). No row repeats a cell.
 
-    The standard spherical-cap bounding box: lat band ±σ, lon half-width
-    asin(sin σ / cos lat) when no pole is inside the cap, per-row polar
-    spans (:func:`polar_cap_cells`) otherwise. A row whose cover exceeds
-    ``max_cells`` gets an EMPTY array instead (its box is never
-    materialized).
+    Each point spans the cell rows of its lat band ±σ; each row spans
+    its own longitude half-width: asin(sin σ / cos lat) (the cap's
+    bounding box) when no pole is inside the cap, else the
+    law-of-cosines bound at the row's pole-nearest edge (the boundary's
+    half-width grows toward the pole), with full rows past
+    π - |lat| - σ and everywhere when the cap holds both poles. A point
+    whose cover exceeds ``max_cells``, or whose center or ``sigma`` is
+    not finite, gets an EMPTY row; per-row counts are known before any
+    cell is built, so such a cover is never materialized.
     """
     la, lo, sigma = np.broadcast_arrays(*(np.atleast_1d(np.asarray(v, dtype=np.float64))
                                           for v in (lat, lon, sigma)))
     n = nx(res)
     sigma = np.minimum(sigma, np.pi)
+    ok = np.isfinite(la) & np.isfinite(lo) & np.isfinite(sigma)
+    la, lo, sigma = (np.where(ok, v, 0.0) for v in (la, lo, sigma))
     sigma_deg = np.degrees(sigma)
     y_lo = np.clip(np.floor((np.maximum(la - sigma_deg, -90.0) + 90.0) / 180.0 * n),
                    0, n - 1).astype(np.int64)
     y_hi = np.clip(np.floor((np.minimum(la + sigma_deg, 90.0) + 90.0 - 1e-12) / 180.0 * n),
                    0, n - 1).astype(np.int64)
-    pole = (np.abs(la) + sigma_deg) >= 90.0
-    with np.errstate(invalid="ignore"):
-        ratio = np.sin(sigma) / np.maximum(np.cos(np.radians(la)), 1e-15)
-    dlam = np.degrees(np.arcsin(np.minimum(ratio, 1.0)))
-    span = np.minimum(np.ceil(2.0 * dlam / (360.0 / n)).astype(np.int64) + 2, n)
-    lo_x = np.floor(np.mod(lo - dlam + 180.0, 360.0) / 360.0 * n).astype(np.int64)
     limit = np.iinfo(np.int64).max if max_cells is None else max_cells
-    empty = np.empty(0, dtype=np.int64)
-    out = []
-    for i in range(la.size):
-        if pole[i]:
-            cells = np.asarray(polar_cap_cells(
-                float(la[i]), float(lo[i]), float(sigma[i]), res,
-                int(y_lo[i]), int(y_hi[i])), dtype=np.int64)
-            out.append(cells if len(cells) <= limit else empty)
-        elif (y_hi[i] - y_lo[i] + 1) * span[i] <= limit:
-            ys = np.arange(y_lo[i], y_hi[i] + 1, dtype=np.int64)
-            xs = (lo_x[i] + np.arange(span[i], dtype=np.int64)) % n
-            out.append((ys[:, None] * n + xs[None, :]).ravel())
-        else:
-            out.append(empty)
-    return out
+    # every row holds >= 1 cell: more rows than the budget is over it
+    n_rows = np.where(ok & (y_hi - y_lo < limit), y_hi - y_lo + 1, 0)
+
+    # expansion 1: point -> cover row y
+    row_off = np.concatenate(([0], np.cumsum(n_rows)))
+    pt = np.repeat(np.arange(la.size), n_rows)
+    y = y_lo[pt] + np.arange(pt.size) - row_off[pt]
+    p_la, p_lo, p_sigma, p_deg = la[pt], lo[pt], sigma[pt], sigma_deg[pt]
+    alat = np.radians(np.abs(p_la))
+    box = np.degrees(np.arcsin(np.minimum(
+        np.sin(p_sigma) / np.maximum(np.cos(alat), 1e-15), 1.0)))
+    # the row's pole-nearest edge, mirrored into the north frame
+    edge = np.where(p_la >= 0.0, -90.0 + 180.0 * (y + 1) / n, 90.0 - 180.0 * y / n)
+    phi_e = np.radians(np.clip(edge, -90.0, 90.0))
+    c = ((np.cos(p_sigma) - np.sin(phi_e) * np.sin(alat))
+         / np.maximum(np.cos(phi_e) * np.cos(alat), 1e-300))
+    polar = np.degrees(np.arccos(np.clip(c, -1.0, 1.0)))
+    pole = np.abs(p_la) + p_deg >= 90.0
+    full = pole & ((p_deg - np.abs(p_la) >= 90.0) | (phi_e >= np.pi - alat - p_sigma))
+    dl = np.where(pole, polar, box)
+    span = np.where(full, n, np.minimum(np.ceil(2.0 * dl / (360.0 / n)).astype(np.int64) + 2, n))
+    lo_x = np.where(full, 0, np.floor(np.mod(p_lo - dl + 180.0, 360.0) / 360.0 * n)
+                    .astype(np.int64))
+
+    # over-budget points keep no row
+    cum = np.concatenate(([0], np.cumsum(span)))
+    count = cum[row_off[1:]] - cum[row_off[:-1]]
+    count = np.where(count <= limit, count, 0)
+    span = np.where(count[pt] > 0, span, 0)
+
+    # expansion 2: cover row -> cell
+    row = np.repeat(np.arange(y.size), span)
+    cell_off = np.concatenate(([0], np.cumsum(span)))
+    x = (lo_x[row] + np.arange(row.size) - cell_off[row]) % n
+    return np.concatenate(([0], np.cumsum(count))), y[row] * n + x
 
 
 def cap_cover(lat: float, lon: float, sigma: float, res: int | None = None,
@@ -282,7 +272,8 @@ def cap_cover(lat: float, lon: float, sigma: float, res: int | None = None,
         res = pick_resolution(sigma * 2.0e7 / math.pi)
     while True:
         coarsen = auto and res > 0
-        cells = cap_covers(lat, lon, sigma, res, max_cover if coarsen else None)[0]
+        offsets, cells = cap_covers(lat, lon, sigma, res, max_cover if coarsen else None)
+        cells = cells[offsets[0]:offsets[1]]
         # a finite cover holds at least the center's cell: empty means
         # over budget
         if coarsen and not len(cells):

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..constants import EARTH_RADIUS_M, resolve_ellipsoid
 from ..functions.expressions import great_circle_m, haversine_m, to_unit
 from ..functions.udfs import (
     bearing_udf,
@@ -33,7 +34,7 @@ def _distance_m(exact: bool, ellipsoid, lat1, lon1, lat2, lon2) -> Column:
     codegen great circle (closed-form, hence oracle-checkable)."""
     if exact:
         return vincenty_udf(ellipsoid)(lat1, lon1, lat2, lon2)
-    return great_circle_m(lat1, lon1, lat2, lon2)
+    return great_circle_m(lat1, lon1, lat2, lon2, *resolve_ellipsoid(ellipsoid))
 
 
 def _pairs(df1: DataFrame, df2: DataFrame | None, id_col: str, lat_col: str,
@@ -222,7 +223,7 @@ def geodist_dimwise(df: DataFrame, id_col: str, lat_col: str, lon_col: str,
 
 def geodist_dimwise_haversine(df: DataFrame, id_col: str, lat_col: str,
                               lon_col: str, feature_cols: list[str] = (),
-                              radius: float = 6_371_009.0) -> DataFrame:
+                              radius: float = EARTH_RADIUS_M) -> DataFrame:
     """Per-dimension SQUARED pairwise distances (reference
     ``geodist_dimwise_harvesine``, geodesic.py:856-919): the lat and lon
     dimensions get squared haversine meters on the R=6371009 sphere —

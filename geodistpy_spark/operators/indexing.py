@@ -240,15 +240,7 @@ def compact_cell_set(cells: DataFrame, res: int, min_res: int = 0,
     cur = cells.select(F.col(cell_col).cast("long").alias("cell")).distinct()
     r = res
     while r > min_res:
-        n = 1 << r
-        pn = 1 << (r - 1)
-        # cell = y * n + x; parent = (y >> 1) * pn + (x >> 1) — pure
-        # bit math (n, pn are powers of two)
-        with_p = cur.withColumn(
-            "__p",
-            F.shiftright(F.col("cell").bitwiseAND(F.lit(n - 1)), 1)
-            + F.shiftright(F.shiftright(F.col("cell"), r), 1) * F.lit(pn),
-        )
+        with_p = cur.withColumn("__p", parent_cell_col(F.col("cell"), r, r - 1))
         full = (
             with_p.groupBy("__p").agg(F.count("*").alias("__c"))
             .filter(F.col("__c") == 4)

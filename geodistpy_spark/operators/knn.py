@@ -34,17 +34,17 @@ is index-stable, distance.py:533-537), else by (lat, lon).
 from __future__ import annotations
 
 import math
-from functools import lru_cache, partial
+from functools import lru_cache
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import grid
 from ..constants import HAV_ROUND_M, hav_bounds, resolve_ellipsoid, unit_factor
 from ..functions.expressions import great_circle_m, haversine_m
-from ..functions.udfs import vincenty_udf
+from ..functions.udfs import kernel_udf, list_array, vincenty_udf
 from .radius import _cover_join
 
 EARTH_AREA_M2 = 5.10072e14
@@ -95,9 +95,7 @@ def candidate_histogram_from_layout(path: str) -> tuple[np.ndarray, int]:
                 res, cells, rows = int(col[6:]), pf.read(columns=[col]).column(0).to_numpy(), 1
                 if res < HIST_RES:
                     raise ValueError(f"{f}: {col} is coarser than res {HIST_RES}")
-            y, x = np.divmod(cells, grid.nx(res))
-            s = res - HIST_RES
-            counts += np.bincount((y >> s) * n + (x >> s), minlength=n * n) * rows
+            counts += np.bincount(grid.parent_cell(cells, res, HIST_RES), minlength=n * n) * rows
     counts = counts.reshape(n, n)
     return counts, int(counts.sum())
 
@@ -212,28 +210,27 @@ def _fallback_angle_np(counts: np.ndarray, k: int):
 
 def _seed_udf(counts: np.ndarray, k: int, r_cap_m: float, res: int, ellipsoid,
               exact: bool = True):
-    """Pandas UDF: (lat, lon) -> struct<r, cells, fcells>: the pass-1
+    """Arrow UDF: (lat, lon) -> struct<r, cells, fcells>: the pass-1
     radius and its cover at ``res`` (empty past ``COVER_BUDGET``), and
-    the fallback cover at ``HIST_RES``, in ONE Python stage."""
+    the fallback cover at ``HIST_RES``, in ONE Python stage. ``once``:
+    filters that Catalyst infers on the struct's fields would otherwise
+    run it twice."""
     a, f = resolve_ellipsoid(ellipsoid)
     inner, outer = hav_bounds(a, f, exact)
     est = _radius_estimator_np(counts, k, r_cap_m)
     fallback = _fallback_angle_np(counts, k)
-    cover = partial(grid.cap_covers, res=res, max_cells=COVER_BUDGET)
 
-    @F.pandas_udf("r double, cells array<bigint>, fcells array<bigint>")
-    def _seed(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        la = lat.to_numpy(dtype=np.float64)
-        lo = lon.to_numpy(dtype=np.float64)
+    def seed(la: np.ndarray, lo: np.ndarray) -> pa.Array:
         r = est(la, lo)
+        cells = grid.cap_covers(la, lo, (outer * r + HAV_ROUND_M) / a, res, COVER_BUDGET)
         # theta >= half a histogram cell: HAV_ROUND_M is inside outer / inner
         fcells = grid.cap_covers(la, lo, outer / inner * fallback(la, lo), HIST_RES)
-        return pd.DataFrame({"r": r, "cells": cover(la, lo, (outer * r + HAV_ROUND_M) / a),
-                             "fcells": fcells})
+        return pa.StructArray.from_arrays(
+            [pa.array(r), list_array(*cells), list_array(*fcells)],
+            names=["r", "cells", "fcells"])
 
-    # an evaluate-once fence, as in vincenty_udf(once=True): filters that
-    # Catalyst infers on the struct's fields would otherwise run it twice
-    return _seed.asNondeterministic()
+    return kernel_udf(seed, "struct<r: double, cells: array<bigint>, fcells: array<bigint>>",
+                      once=True)
 
 
 def knn_join(queries: DataFrame, candidates: DataFrame, k: int,

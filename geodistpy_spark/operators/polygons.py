@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import grid
+from ..constants import EARTH_RADIUS_M
 from ..functions.expressions import cell_id_col
 
 
@@ -413,9 +414,6 @@ def geodesic_buffer(points: DataFrame, radius, metric: str = "meter",
     return points.withColumn(out, udf(F.col(lat_col), F.col(lon_col)))
 
 
-SPHERE_R_M = 6_371_009.0
-
-
 def polygon_area(polygons: DataFrame, out: str = "area_km2") -> DataFrame:
     """Spherical shoelace area per polygon: (poly_id, ``out``) in km².
 
@@ -493,7 +491,7 @@ def polygon_area(polygons: DataFrame, out: str = "area_km2") -> DataFrame:
     term = (
         F.radians(F.col("nlon") - F.col("ulon"))
         * (F.sin(F.radians("vlat")) + F.sin(F.radians("nlat")))
-        * F.lit(SPHERE_R_M * SPHERE_R_M / 2.0)
+        * F.lit(EARTH_RADIUS_M * EARTH_RADIUS_M / 2.0)
     )
     return (
         paired.withColumn("__t", F.round(term, 0).cast("long"))

@@ -17,15 +17,13 @@ additionally salt the probe side).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import grid
 from ..constants import HAV_ROUND_M, hav_bounds, resolve_ellipsoid, unit_factor
 from ..functions.expressions import cell_id_col, great_circle_m, haversine_m
-from ..functions.udfs import vincenty_udf
+from ..functions.udfs import kernel_udf, list_array, vincenty_udf
 
 
 def _hav_band(radius_m: float, ellipsoid, exact: bool) -> tuple[float, float, float, float]:
@@ -117,11 +115,13 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
     ``salt``: replicate the query side salt-ways and split candidate rows
     among salts — for dense-cell skew beyond what AQE skew-join handles.
 
-    Polar note: pole-containing caps get PER-ROW longitude spans
-    (grid.polar_cap_cells) — full rows only where the cap genuinely
-    spans all longitudes — so polar queries stay proportional to the
-    true cap area (which near a pole is inherently many lat/lon cells;
-    that distortion is the quad grid's trade-off vs H3/S2).
+    Polar note: every cover row carries its own longitude span
+    (:func:`~geodistpy_spark.grid.cap_covers`) — full rows only where
+    the cap genuinely spans all longitudes — so polar queries stay
+    proportional to the true cap area (which near a pole is inherently
+    many lat/lon cells; that distortion is the quad grid's trade-off vs
+    H3/S2). A query with a null or NaN coordinate has an empty cover and
+    yields no rows.
     """
     radius_m = float(radius) / unit_factor(metric)
     if radius_m < 0:
@@ -137,10 +137,8 @@ def radius_join(queries: DataFrame, candidates: DataFrame, radius,
         c = c.withColumn("__salt", F.pmod(F.hash(F.col(c_lat), F.col(c_lon)), F.lit(salt)))
         on = ("__salt",)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(grid.cap_covers(lat.to_numpy(), lon.to_numpy(), hi / a, cres))
-
+    cover = kernel_udf(lambda la, lo: list_array(*grid.cap_covers(la, lo, hi / a, cres)),
+                       "array<bigint>")
     joined = _cover_join(q, q.columns, cover("__qlat", "__qlon"), c, cres, c_lat, c_lon, on)
     return (_refine(joined, radius, metric, ellipsoid, exact,
                     "__qlat", "__qlon", c_lat, c_lon, out)

@@ -16,7 +16,6 @@ from .io import (
     adaptive_partitions_for_cover,
     cells_to_partitions,
     read_adaptive_for_radius,
-    read_cell_partitioned,
     read_documents,
     write_adaptive_partitioned,
     write_bucketed_cells,
@@ -32,7 +31,7 @@ __all__ = [
     "verify_roundtrip", "verify_span_sequence",
     "ensure_default_fixtures", "write_fixtures",
     "adaptive_partitions_for_cover", "cells_to_partitions",
-    "read_adaptive_for_radius", "read_cell_partitioned", "read_documents",
+    "read_adaptive_for_radius", "read_documents",
     "write_adaptive_partitioned", "write_bucketed_cells",
     "write_cell_partitioned", "write_documents",
     "coordinates_from_df", "resolve_coordinate_columns",

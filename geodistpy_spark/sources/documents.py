@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..constants import EARTH_RADIUS_M
 from ..functions.expressions import cell_id_col, great_circle_m
+from ..kernels import haversine
 
 SPANS_SCHEMA_DDL = (
     "doc_id string, "
@@ -168,7 +170,6 @@ def simplify_path(points: DataFrame, epsilon_m: float,
 
     if epsilon_m < 0:
         raise ValueError(f"epsilon_m must be >= 0, got {epsilon_m}")
-    R = 6_371_009.0
 
     def _xtrack(la1, lo1, la2, lo2, la, lo):
         """Distance of points (la, lo) to the great-circle SEGMENT 1->2,
@@ -180,27 +181,22 @@ def simplify_path(points: DataFrame, epsilon_m: float,
         p2, l2 = np.radians(la2), np.radians(lo2)
         p, l = np.radians(la), np.radians(lo)
 
-        def hav(pa, laa, pb, lab):
-            h = (np.sin((pb - pa) / 2) ** 2
-                 + np.cos(pa) * np.cos(pb) * np.sin((lab - laa) / 2) ** 2)
-            return 2 * np.arcsin(np.sqrt(np.clip(h, 0, 1)))
-
         def brg(pa, laa, pb, lab):
             dl = lab - laa
             return np.arctan2(np.sin(dl) * np.cos(pb),
                               np.cos(pa) * np.sin(pb)
                               - np.sin(pa) * np.cos(pb) * np.cos(dl))
 
-        d13 = hav(p1, l1, p, l)
-        d12 = hav(p1, l1, p2, l2)
+        d13 = haversine(la1, lo1, la, lo, radius=1.0)
+        d12 = haversine(la1, lo1, la2, lo2, radius=1.0)
         if d12 < 1e-12:  # degenerate segment -> radial
-            return d13 * R
+            return d13 * EARTH_RADIUS_M
         dt = brg(p1, l1, p, l) - brg(p1, l1, p2, l2)
         xt = np.abs(np.arcsin(np.clip(np.sin(d13) * np.sin(dt), -1, 1)))
         # signed along-track angle: >0 ahead of 1, <0 behind; d12 = length
         at = np.arctan2(np.sin(d13) * np.cos(dt), np.cos(d13))
-        d23 = hav(p2, l2, p, l)
-        return np.where(at < 0, d13, np.where(at > d12, d23, xt)) * R
+        d23 = haversine(la2, lo2, la, lo, radius=1.0)
+        return np.where(at < 0, d13, np.where(at > d12, d23, xt)) * EARTH_RADIUS_M
 
     schema = points.select(id_col, order_col, lat_col, lon_col).schema
 

@@ -9,9 +9,9 @@ first-class:
   kNN / polygon covers then prune whole partitions at the file-listing
   level (partition pruning) before any row is read — the 100 TB analog
   of the in-memory cell prefilter.
-- :func:`read_cell_partitioned` — reads the layout back; the coarse cell
-  column arrives as a partition column, so ``cell_pXX IN (...)``
-  predicates never touch non-matching files.
+  ``spark.read.parquet`` reads the layout back; the coarse cell column
+  arrives as a partition column, so ``cell_pXX IN (...)`` predicates
+  never touch non-matching files.
 - :func:`write_documents` / :func:`read_documents` — the interleaved
   documents table, schema-checked against the input_hint contract.
 
@@ -23,6 +23,7 @@ semantics.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,17 +51,10 @@ def write_cell_partitioned(df: DataFrame, path: str,
     out.write.mode(mode).partitionBy(part).parquet(path)
 
 
-def read_cell_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def cells_to_partitions(cover_cells: list[int], res: int, partition_res: int) -> list[int]:
     """Partition values a cover set touches (for partition-pruned scans)."""
-    shift = res - partition_res
-    n = 1 << res
-    pn = 1 << partition_res
-    parts = {((c // n) >> shift) * pn + ((c % n) >> shift) for c in cover_cells}
-    return sorted(parts)
+    cells = np.asarray(cover_cells, dtype=np.int64)
+    return np.unique(grid.parent_cell(cells, res, partition_res)).tolist()
 
 
 def write_adaptive_partitioned(df: DataFrame, path: str,
@@ -94,22 +88,18 @@ def adaptive_partitions_for_cover(spark: SparkSession, path: str,
     The partition listing is read from the written metadata (one cheap
     distinct over partition columns — file-listing only, no row data).
     """
-    parts = [
-        (int(r["a_res"]), int(r["a_cell"]))
-        for r in spark.read.parquet(path).select("a_res", "a_cell").distinct().collect()
-    ]
-    cover = set(cover_cells)
-    out = []
-    for a_res, a_cell in parts:
-        if a_res <= res:
-            # cover cell's ancestor at a_res must equal a_cell
-            if any(grid.parent_cell(c, res, a_res) == a_cell for c in cover):
-                out.append((a_res, a_cell))
-        else:
-            # adaptive cell's ancestor at res must be a cover cell
-            if grid.parent_cell(a_cell, a_res, res) in cover:
-                out.append((a_res, a_cell))
-    return sorted(out)
+    rows = spark.read.parquet(path).select("a_res", "a_cell").distinct().collect()
+    a_res = np.array([r["a_res"] for r in rows], dtype=np.int64)
+    a_cell = np.array([r["a_cell"] for r in rows], dtype=np.int64)
+    cover = np.asarray(cover_cells, dtype=np.int64)
+    hit = np.zeros(len(rows), dtype=bool)
+    for r in np.unique(a_res):
+        at = a_res == r
+        # coarser: a cover cell's ancestor is the adaptive cell; finer:
+        # the adaptive cell's ancestor is a cover cell
+        hit[at] = (np.isin(a_cell[at], grid.parent_cell(cover, res, r)) if r <= res
+                   else np.isin(grid.parent_cell(a_cell[at], r, res), cover))
+    return sorted(zip(a_res[hit].tolist(), a_cell[hit].tolist()))
 
 
 def read_adaptive_for_radius(spark: SparkSession, path: str,
@@ -127,8 +117,6 @@ def read_adaptive_for_radius(spark: SparkSession, path: str,
     df = spark.read.parquet(path)
     if not parts:
         return df.limit(0)
-    from pyspark.sql import functions as F
-
     cond = None
     for r, c in parts:
         clause = (F.col("a_res") == r) & (F.col("a_cell") == c)

@@ -71,16 +71,19 @@ class TestValidateCoords:
 
 
 class TestContractOracles:
-    """The dedup, ANN and exact-kernel queries of the driver contract
-    against their DuckDB oracles and goldens, compared the way
-    ``scripts/check_contract.py`` compares them (repr-exact after
-    canonical column and row order)."""
+    """The dedup, ANN, exact-kernel and tiling-layer queries of the
+    driver contract against their DuckDB oracles and goldens, compared
+    the way ``scripts/check_contract.py`` compares them (repr-exact
+    after canonical column and row order)."""
 
     @pytest.mark.parametrize("key", [
         "jaccard_pairs", "near_dup_groups",
         "embedding_topk", "ivf_topk", "pq_topk", "ivfpq_topk",
         "vincenty_pairs", "bearing_vincenty", "destination_roundtrip",
-        "interpolate", "midpoint", "matrix_gc", "dimwise", "buffer_rings"])
+        "interpolate", "midpoint", "matrix_gc", "dimwise", "buffer_rings",
+        "radius_join_gc", "radius_join_salted", "knn_gc", "knn_exact",
+        "cell_index_rollup", "cell_density_smooth", "adaptive_index",
+        "doc_cell_histogram"])
     def test_query_matches_duckdb_oracle(self, spark, key):
         import duckdb
 

@@ -137,6 +137,27 @@ class TestCoverConservative:
         res, _ = G.cell_cover(89.99, 45.0, 1_000.0, res=14)
         assert res == 14  # caller-forced resolution is respected
 
+    def test_cap_covers_flat_contract(self):
+        # one row per point; a non-finite center gets an empty row; an
+        # over-budget row is empty and leaves its neighbours unchanged;
+        # no row repeats a cell
+        lat = np.array([10.0, np.nan, 0.0, np.inf, 89.99, -30.0, 45.0, -np.inf])
+        lon = np.array([20.0, 5.0, np.nan, 5.0, 45.0, 179.99, -np.inf, 0.0])
+        sigma = np.array([0.01, 0.01, 0.01, 0.01, 0.001, 0.02, 0.01, 0.01])
+        off, cells = G.cap_covers(lat, lon, sigma, 10)
+        assert len(off) == len(lat) + 1
+        sizes = np.diff(off)
+        assert (sizes[[1, 2, 3, 6, 7]] == 0).all()
+        for i in range(len(lat)):
+            row = cells[off[i]:off[i + 1]]
+            assert len(np.unique(row)) == len(row), i
+        budget = max(sizes[0], sizes[5])
+        assert sizes[4] > budget  # the polar row spans full longitude rows
+        off_b, cells_b = G.cap_covers(lat, lon, sigma, 10, max_cells=budget)
+        assert np.diff(off_b).tolist() == [sizes[0], 0, 0, 0, 0, sizes[5], 0, 0]
+        for i in (0, 5):
+            assert (cells_b[off_b[i]:off_b[i + 1]] == cells[off[i]:off[i + 1]]).all()
+
     def test_cell_density_smooth_matches_brute(self, spark, places):
         from geodistpy_spark.operators import cell_density_smooth
 

@@ -6,7 +6,6 @@ from geodistpy_spark import grid as G
 from geodistpy_spark import kernels as K
 from geodistpy_spark.sources.io import (
     cells_to_partitions,
-    read_cell_partitioned,
     read_documents,
     write_cell_partitioned,
     write_documents,
@@ -17,7 +16,7 @@ class TestCellPartitionedLayout:
     def test_roundtrip_and_pruning(self, spark, places, tmp_path):
         path = str(tmp_path / "pts")
         write_cell_partitioned(places, path, res=12, partition_res=3)
-        back = read_cell_partitioned(spark, path)
+        back = spark.read.parquet(path)
         assert back.count() == places.count()
         assert "cell_p3" in back.columns and "cell_r12" in back.columns
 
@@ -44,7 +43,7 @@ class TestCellPartitionedLayout:
 
         path = str(tmp_path / "pts_push")
         write_cell_partitioned(places, path, res=12, partition_res=3)
-        back = read_cell_partitioned(spark, path)
+        back = spark.read.parquet(path)
         hits = point_in_radius(back, (48.85, 2.35), 100_000.0,
                                cell_col="cell_r12", res=12)
         plan = hits._jdf.queryExecution().executedPlan().toString()
@@ -58,7 +57,7 @@ class TestCellPartitionedLayout:
     def test_fine_cell_matches_expression(self, spark, places, tmp_path):
         path = str(tmp_path / "pts2")
         write_cell_partitioned(places, path, res=10, partition_res=2)
-        back = read_cell_partitioned(spark, path).toPandas()
+        back = spark.read.parquet(path).toPandas()
         exp = G.cell_id_np(back.lat.values, back.lon.values, 10)
         assert (back.cell_r10.values == exp).all()
 
@@ -73,7 +72,7 @@ class TestAdaptiveLayout:
         path = str(tmp_path / "adaptive")
         write_adaptive_partitioned(places, path, max_per_cell=40,
                                    min_res=2, max_res=10)
-        back = read_cell_partitioned(spark, path)
+        back = spark.read.parquet(path)
         assert back.count() == places.count()
         # balance guarantee: no non-clamped partition exceeds the cap
         sizes = back.filter("a_res < 10").groupBy("a_res", "a_cell").count().toPandas()
