@@ -117,21 +117,17 @@ def destination_sphere(lat, lon, bearing_deg, dist_m,
     p2 = F.asin(F.least(F.greatest(sp2, F.lit(-1.0)), F.lit(1.0)))
     l2 = l1 + F.atan2(F.sin(th) * F.sin(d) * F.cos(p1),
                       F.cos(d) - F.sin(p1) * sp2)
-    # null-input guard: greatest(NULL, -1) = -1 would otherwise turn a
-    # null coordinate into lat = -90 (the south pole). Guard on l2, not
-    # sp2: sp2 never involves lon, so a NULL longitude would slip
-    # through an sp2-only check with a fabricated latitude. NaN guard:
-    # the asin clamp ranks NaN above 1, so a NaN coordinate would land
-    # exactly on the NORTH pole — propagate struct(NaN, NaN) instead
-    # (matching the Vincenty-direct Arrow path on NaN input)
-    nan = F.lit(float("nan"))
+    # a null or NaN input gives a null point, as on the Vincenty-direct
+    # Arrow path: the asin clamp skips nulls (greatest(NULL, -1) = -1,
+    # the south pole) and ranks NaN above 1 (the north pole). Guard l2
+    # too: sp2 never involves lon, so an sp2-only check would give a
+    # bad longitude a fabricated latitude
     return F.when(
-        F.isnan(sp2) | F.isnan(l2),
-        F.struct(nan.alias("lat"), nan.alias("lon")),
-    ).when(sp2.isNotNull() & l2.isNotNull(), F.struct(
-        F.degrees(p2).alias("lat"),
-        (F.pmod(F.degrees(l2) + 180.0, F.lit(360.0)) - 180.0).alias("lon"),
-    ))
+        sp2.isNotNull() & l2.isNotNull() & ~F.isnan(sp2) & ~F.isnan(l2),
+        F.struct(
+            F.degrees(p2).alias("lat"),
+            (F.pmod(F.degrees(l2) + 180.0, F.lit(360.0)) - 180.0).alias("lon"),
+        ))
 
 
 def cell_x(lon, res: int) -> Column:

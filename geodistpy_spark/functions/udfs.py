@@ -30,10 +30,12 @@ _POINT_SCHEMA = T.StructType([
 
 def points_array(la: np.ndarray, lo: np.ndarray) -> pa.Array:
     """``(rows,)`` coordinates -> struct<lat, lon>; ``(rows, n)`` ->
-    array<struct<lat, lon>> of n points per row. NaN -> null."""
+    array<struct<lat, lon>> of n points per row. A point with a NaN
+    lat or lon is null."""
+    lat, lon = la.ravel(), lo.ravel()
     pts = pa.StructArray.from_arrays(
-        [pa.array(la.ravel(), from_pandas=True),
-         pa.array(lo.ravel(), from_pandas=True)], names=["lat", "lon"])
+        [pa.array(lat, from_pandas=True), pa.array(lon, from_pandas=True)],
+        names=["lat", "lon"], mask=pa.array(np.isnan(lat) | np.isnan(lon)))
     if la.ndim == 1:
         return pts
     rows, n = la.shape

@@ -34,7 +34,6 @@ is index-stable, distance.py:533-537), else by (lat, lon).
 from __future__ import annotations
 
 import math
-from functools import lru_cache
 
 import numpy as np
 import pyarrow as pa
@@ -43,7 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import grid
 from ..constants import HAV_ROUND_M, hav_bounds, resolve_ellipsoid, unit_factor
-from ..functions.expressions import great_circle_m, haversine_m
+from ..functions.expressions import _reusable, great_circle_m, haversine_m
 from ..functions.udfs import kernel_udf, list_array, vincenty_udf
 from .radius import _cover_join
 
@@ -53,11 +52,10 @@ HIST_RES = 6  # 64 x 64 = 4096 cells; dense int64 grid is 32 KB driver-side
 COVER_BUDGET = 4096  # pass-1 cover cells per query; larger covers go to the fallback
 
 
-@lru_cache(maxsize=128)
+@_reusable
 def _valid_coords(lat: str, lon: str):
     """Rows with non-null, non-NaN, in-range coordinates (NaN fails
-    ``between``, null propagates). Cached: Column trees are immutable and
-    building one is pure py4j overhead per call."""
+    ``between``, null propagates)."""
     return (
         F.col(lat).between(-90.0, 90.0) & F.col(lon).between(-180.0, 180.0)
         & ~F.isnan(lat) & ~F.isnan(lon)

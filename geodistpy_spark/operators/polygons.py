@@ -367,8 +367,7 @@ def geodesic_buffer(points: DataFrame, radius, metric: str = "meter",
     of ``n_vertices`` spherical-destination points at equal bearings
     around the row's coordinate — the geofence-CONSTRUCTION primitive
     (point + radius -> zone ring consumable by
-    :func:`point_in_polygon_join`, :func:`polygon_area`, or
-    ``streaming.stream_geofence``).
+    :func:`point_in_polygon_join` or :func:`polygon_area`).
 
     Default mode is pure whole-stage-codegen column math (``transform``
     over a literal bearing sequence + the spherical direct formula) —

@@ -108,13 +108,13 @@ def _destination_body() -> str:
            f" + cos({p1}) * sin({d}) * cos({th}))")
     l2 = (f"(radians(lon) + atan2(sin({th}) * sin({d}) * cos({p1}),"
           f" cos({d}) - sin({p1}) * {sp2}))")
-    # null/NaN guards mirror expressions.destination_sphere (a null
-    # input would otherwise clamp to lat = -90, a NaN one to the north
-    # pole); l2 is checked too because sp2 never involves lon
+    # the null rule of expressions.destination_sphere: a null or NaN
+    # input gives a null point (the clamp would otherwise put a null at
+    # lat = -90 and a NaN at the north pole); l2 is checked too because
+    # sp2 never involves lon
     return (
-        f"CASE WHEN isnan({sp2}) OR isnan({l2}) THEN named_struct("
-        f"'lat', double('NaN'), 'lon', double('NaN')) "
-        f"WHEN {sp2} IS NOT NULL AND {l2} IS NOT NULL "
+        f"CASE WHEN {sp2} IS NOT NULL AND {l2} IS NOT NULL "
+        f"AND NOT isnan({sp2}) AND NOT isnan({l2}) "
         f"THEN named_struct("
         f"'lat', degrees(asin(least(greatest({sp2}, -1.0d), 1.0d))), "
         f"'lon', pmod(degrees({l2}) + 180.0d, 360.0d) - 180.0d) END")

@@ -19,16 +19,17 @@ from __future__ import annotations
 
 import math
 import warnings
-from functools import lru_cache
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.expressions import _reusable
 
 DEFAULT_SEEDS = 12
 DEFAULT_BANDS = 4  # 3 rows per band
 
 
-@lru_cache(maxsize=64)
+@_reusable
 def _tokenize_col(text_col: str):
     return F.filter(F.split(F.lower(F.col(text_col)), " "), lambda w: w != "")
 
@@ -62,14 +63,14 @@ def shingles(df: DataFrame, text_col: str = "text", k: int = 3,
     )
 
 
-@lru_cache(maxsize=32)
+@_reusable
 def _shingle_zip_col(k: int):
     n_sh = F.greatest(F.size("words") - (k - 1), F.lit(0))
     return F.arrays_zip(
         *[F.slice("words", i + 1, n_sh) for i in range(k)]).alias("__z")
 
 
-@lru_cache(maxsize=32)
+@_reusable
 def _shingle_id_col(k: int):
     return F.xxhash64(*[F.col(f"__s.{i}") for i in range(k)])
 
@@ -140,7 +141,7 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-@lru_cache(maxsize=256)
+@_reusable
 def _seed_hash(s: int, hash_fn: str):
     """Per-seed uniform hash of the ``shingle`` column.
 
@@ -150,11 +151,6 @@ def _seed_hash(s: int, hash_fn: str):
     - ``md5``: 32-char hex string — 4x the bytes and driver-side string
       hashing, kept ONLY because DuckDB has md5 but not xxhash64, so
       the correctness-oracle rows stay bit-mirrorable in ANSI SQL.
-
-    lru_cached: Column trees are immutable (analysis re-resolves per
-    plan), and the dedup pipeline rebuilds these same ~24 expressions
-    on every call — each a handful of py4j round trips (same pattern
-    as functions.expressions._reusable).
     """
     if hash_fn == "md5":
         return F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))
@@ -163,7 +159,7 @@ def _seed_hash(s: int, hash_fn: str):
     raise ValueError(f"unknown hash_fn={hash_fn!r} (xxhash64|md5)")
 
 
-@lru_cache(maxsize=64)
+@_reusable
 def _sig_cols(n_seeds: int, hash_fn: str) -> tuple:
     """(aliased seed-hash columns, aliased MIN aggregates) for
     :func:`minhash_signatures` — one immutable tree per shape."""
@@ -173,7 +169,7 @@ def _sig_cols(n_seeds: int, hash_fn: str) -> tuple:
     return hashes, mins
 
 
-@lru_cache(maxsize=64)
+@_reusable
 def _band_cols(n_bands: int, rows: int, hash_fn: str) -> tuple:
     """Aliased band-key columns over mh* for :func:`lsh_candidate_pairs`."""
     if hash_fn == "xxhash64":

@@ -129,9 +129,10 @@ class TestDistances:
 
     def test_exact_udfs_null_nan_coincident_and_empty(self, spark):
         """Every exact Arrow UDF, operator and SQL: a null or NaN
-        coordinate gives null out (a struct or ring vertex keeps a null
-        lat/lon, never a fabricated point or azimuth), a coincident pair
-        gives 0 m and repeated waypoints, an empty frame gives no rows."""
+        coordinate gives null out (a null point or ring vertex, never a
+        fabricated point or azimuth, on the exact and the spherical
+        direct problem alike), a coincident pair gives 0 m and repeated
+        waypoints, an empty frame gives no rows."""
         from geodistpy_spark.operators import geodesic_buffer
         from geodistpy_spark.sql import register_sql_functions
 
@@ -146,30 +147,30 @@ class TestDistances:
             out = bearing(geodist(df, *pair), *pair)
             out = destination(out.withColumn("b", F.lit(90.0)), "lat1", "lon1", "b", 1000.0)
             out = midpoint(interpolate(out, *pair, n_points=2, explode=False), *pair)
-            out = geodesic_buffer(out, 1000.0, n_vertices=3, exact=True,
-                                  lat_col="lat1", lon_col="lon1")
+            for exact in (True, False):
+                out = geodesic_buffer(out, 1000.0, n_vertices=3, exact=exact,
+                                      lat_col="lat1", lon_col="lon1",
+                                      out=f"ring_{exact}")
             return out.selectExpr(
                 "*", "geo_vincenty_m(lat1, lon1, lat2, lon2) AS v",
                 "geo_destination_vincenty(lat1, lon1, 90.0d, 1000.0d) AS d",
+                "geo_destination(lat1, lon1, 90.0d, 1000.0d) AS ds",
                 "geo_midpoint(lat1, lon1, lat2, lon2) AS m")
 
-        null_pt = (None, None)
         r0, r1, r2 = every_udf(spark.createDataFrame(rows, schema)).orderBy("id").collect()
         for r in (r0, r1):
             assert (r.dist, r.bearing_deg, r.v) == (None, None, None)
-            assert (r.mid_lat, r.mid_lon) == null_pt and tuple(r.m) == null_pt
-            assert [tuple(w) for w in r.waypoints] == [null_pt] * 2
-            # the start longitude is null or NaN, so no longitude is reached
-            assert r.dest_lon is None and r.d.lon is None
-            assert [v.lon for v in r.ring] == [None] * 3
-        # a null start latitude reaches no latitude either
-        assert r0.dest_lat is None and r0.d.lat is None
-        assert [tuple(v) for v in r0.ring] == [null_pt] * 3
+            assert (r.mid_lat, r.mid_lon, r.m) == (None, None, None)
+            assert r.waypoints == [None] * 2
+            # a NaN longitude reaches no latitude either: the point is null
+            assert (r.dest_lat, r.dest_lon, r.d, r.ds) == (None, None, None, None)
+            assert r.ring_True == r.ring_False == [None] * 3
         assert (r2.dist, r2.bearing_deg, r2.v) == (0.0, 0.0, 0.0)
         assert [tuple(w) for w in r2.waypoints] == [(45.0, 7.0)] * 2
         assert (r2.mid_lat, r2.mid_lon) == (45.0, 7.0) == tuple(r2.m)
         assert tuple(r2.d) == (r2.dest_lat, r2.dest_lon)
-        assert np.isfinite([r2.dest_lat, r2.dest_lon, *np.ravel(r2.ring)]).all()
+        assert np.isfinite([r2.dest_lat, r2.dest_lon, *r2.ds,
+                            *np.ravel(r2.ring_True), *np.ravel(r2.ring_False)]).all()
         assert every_udf(spark.createDataFrame([], schema)).count() == 0
 
 

@@ -151,7 +151,8 @@ class TestSqlFunctions:
         # pole (clamp hits +1), and floor() collapses NaN to a valid
         # long so cell_id returns a REAL cell — a false equi-join key.
         # Contract: NaN in -> NaN out for doubles (matching the numpy
-        # kernels), NULL for the integral cell id.
+        # kernels), NULL for the integral cell id and for the
+        # destination point (as on the Vincenty-direct path).
         import math
         row = spark.sql("""
             SELECT geo_haversine_m(double('NaN'), 0.0d, 1.0d, 1.0d) AS hv,
@@ -161,7 +162,7 @@ class TestSqlFunctions:
         """).collect()[0]
         assert math.isnan(row.hv)
         assert row.cid is None and row.cid2 is None
-        assert math.isnan(row.dest["lat"]) and math.isnan(row.dest["lon"])
+        assert row.dest is None
         df = spark.createDataFrame(
             [(float("nan"), 0.0, 1.0, 1.0)], "lat1 double, lon1 double, "
             "lat2 double, lon2 double")
@@ -174,7 +175,7 @@ class TestSqlFunctions:
         ).collect()[0]
         assert math.isnan(got.hv) and got.cid is None
         assert got.cid_ok is not None
-        assert math.isnan(got.dest["lat"]) and math.isnan(got.dest["lon"])
+        assert got.dest is None
 
     def test_infinite_coordinates_yield_null_cell(self, spark, sql_pts):
         # the clamp exists for rounding jitter at the domain edge, but
