@@ -3,8 +3,9 @@
 Per the north rule, ALL per-row compute crosses the JVM->Python boundary
 as Arrow record batches and runs numpy-vectorized inside
 (never per-row Python). Every UDF here is one :func:`kernel_udf` over a
-numpy kernel: Arrow columns in as float64 arrays (null -> NaN), NaN out
-as null, points built columnar by :func:`points_array`. Ellipsoid
+numpy kernel: list columns in as Arrow ``ListArray`` and every other
+column as a float64 array (null -> NaN), NaN out as null, points built
+columnar by :func:`points_array`. Ellipsoid
 parameters are plain floats closed over by the UDF (serialized once in
 the task closure — reference analog: param resolution at
 distance.py:137-138).
@@ -52,9 +53,11 @@ def list_array(offsets: np.ndarray, values) -> pa.Array:
 def kernel_udf(fn, return_type, once: bool = False):
     """Scalar Arrow UDF over the numpy kernel ``fn``.
 
-    Each Arrow column reaches ``fn`` as a float64 array (null -> NaN);
-    an ndarray result goes back with NaN -> null, an Arrow result (e.g.
-    :func:`points_array`, :func:`list_array`) as is.
+    A list column reaches ``fn`` as its Arrow ``ListArray`` (per-row
+    slices ``values[offsets[i]:offsets[i + 1]]``); every other column as
+    a float64 array (null -> NaN). An ndarray result goes back with
+    NaN -> null, an Arrow result (e.g. :func:`points_array`,
+    :func:`list_array`) as is.
 
     ``once=True`` marks the UDF non-deterministic, which stops Catalyst
     from cloning it into both a Filter and a Project (the
@@ -64,7 +67,8 @@ def kernel_udf(fn, return_type, once: bool = False):
     is purely an evaluate-once fence.
     """
     def run(*cols: pa.Array) -> pa.Array:
-        out = fn(*(np.asarray(c.to_numpy(zero_copy_only=False), dtype=np.float64)
+        out = fn(*(c if pa.types.is_list(c.type)
+                   else np.asarray(c.to_numpy(zero_copy_only=False), dtype=np.float64)
                    for c in cols))
         return out if isinstance(out, pa.Array) else pa.array(out, from_pandas=True)
 

@@ -1,7 +1,7 @@
 """Point-in-polygon spatial join + raster<->vector zonal assignment.
 
 One plan for every polygon-set size, batch or streaming:
-  1. ring prep in ``mapInPandas`` over the polygon table (:func:`_prep_ring`
+  1. ring prep in one Arrow UDF over the polygon table (:func:`_prep_ring`
      per ring): unwrap the ring, close polar caps, pick a per-ring cover
      resolution and classify its conservative cell cover — no
      driver-side polygon state,
@@ -11,8 +11,11 @@ One plan for every polygon-set size, batch or streaming:
      broadcasts the pair side when it is small (the north rule's
      "broadcast of small polygon sets") and shuffles it otherwise,
   3. exact refine: one Arrow UDF ray-casts each candidate against the
-     ring on its row, grouped by poly_id inside each batch so the edge
-     loop is over one ring's edges, vectorized over its points.
+     ring on its row, reading every row's ring as a slice of the
+     batch's flat ring values, so the edge loop runs over the longest
+     ring, vectorized over the batch's points.
+
+Both UDFs are :func:`~geodistpy_spark.functions.udfs.kernel_udf`.
 
 Semantics: planar even-odd ray-cast in an unwrapped (lon, lat) frame per
 polygon — rings crossing the antimeridian are unwrapped relative to
@@ -25,21 +28,21 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import grid
 from ..constants import EARTH_RADIUS_M
 from ..functions.expressions import cell_id_col
+from ..functions.udfs import kernel_udf
 
 
 def _unwrap(lons: np.ndarray, ref: float) -> np.ndarray:
     return np.mod(lons - ref + 180.0, 360.0) - 180.0
 
 
-def _map_lon_into_ring(plon_u: np.ndarray, ring_lon_min: float) -> np.ndarray:
+def _map_lon_into_ring(plon_u: np.ndarray, ring_lon_min: float | np.ndarray) -> np.ndarray:
     """Map unwrapped point longitudes into [ring_min, ring_min + 360).
 
     A ring (possibly pole-encircling) occupies one 360-wide window in its
@@ -51,18 +54,21 @@ def _map_lon_into_ring(plon_u: np.ndarray, ring_lon_min: float) -> np.ndarray:
 
 
 def _raycast(vlat: np.ndarray, vlon_u: np.ndarray,
+             start: int | np.ndarray, n: int | np.ndarray,
              plat: np.ndarray, plon: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd ray-cast of mapped points against one prepped
-    ring (edge loop over <= ~20 edges, vectorized over points)."""
+    """Vectorized even-odd ray-cast of mapped points: point ``i`` against
+    the prepped ring ``vlat/vlon_u[start[i]:start[i] + n[i]]`` (scalar
+    ``start``/``n``: every point against one ring). The edge loop runs
+    over the longest ring, vectorized over points; a horizontal edge
+    (``yi == yj``) never satisfies ``cond``."""
     acc = np.zeros(len(plat), dtype=bool)
-    x2 = np.roll(vlon_u, -1)
-    y2 = np.roll(vlat, -1)
-    for e in range(len(vlat)):
-        xi, yi, xj, yj = vlon_u[e], vlat[e], x2[e], y2[e]
-        if yi == yj:
-            continue
-        cond = (yi > plat) != (yj > plat)
-        xint = (xj - xi) * (plat - yi) / (yj - yi) + xi
+    for e in range(int(np.max(n, initial=0))):
+        i = start + np.minimum(e, n - 1)
+        j = start + np.where(e + 1 < n, e + 1, 0)
+        xi, yi, xj, yj = vlon_u[i], vlat[i], vlon_u[j], vlat[j]
+        cond = (e < n) & ((yi > plat) != (yj > plat))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (xj - xi) * (plat - yi) / (yj - yi) + xi
         acc ^= cond & (plon < xint)
     return acc
 
@@ -124,7 +130,7 @@ def _classify_cover(vlat: np.ndarray, vlon_u: np.ndarray, ref: float,
     out = np.full(len(ys), 2, dtype=np.int8)
     quiet = ~touches & in_window
     if quiet.any():
-        inside = _raycast(vlat, vlon_u, cy[quiet], cx[quiet])
+        inside = _raycast(vlat, vlon_u, 0, len(vlat), cy[quiet], cx[quiet])
         out[quiet] = np.where(inside, 1, 0)
     return out
 
@@ -195,68 +201,61 @@ def _prep_ring(lat, lon):
     return res, vlat, u, ref, cells, full
 
 
-_PREP_COLS = ["poly_id", "__res", "vlat", "vlon_u", "ref", "cover", "cover_full"]
-_PREP_SCHEMA = ("poly_id long, __res int, vlat array<double>, vlon_u array<double>, "
-                "ref double, cover array<bigint>, cover_full array<boolean>")
+_PREP_TYPE = pa.struct([
+    ("__res", pa.int32()), ("vlat", pa.list_(pa.float64())),
+    ("vlon_u", pa.list_(pa.float64())), ("ref", pa.float64()),
+    ("cover", pa.list_(pa.int64())), ("cover_full", pa.list_(pa.bool_())),
+])
 
 
-def _prep_polygons(polygons: DataFrame) -> DataFrame:
-    """:func:`_prep_ring` over the polygon table in ``mapInPandas``: one
-    row per usable polygon. Null rings and rings of < 3 vertices have no
-    interior and are skipped."""
-    def _prep(pdfs):
-        for pdf in pdfs:
-            rows = []
-            for pid, ring in zip(pdf["poly_id"], pdf["ring"]):
-                if ring is None or len(ring) < 3:
-                    continue
-                res, vlat, u, ref, cells, full = _prep_ring(
-                    [v["lat"] for v in ring], [v["lon"] for v in ring])
-                rows.append((pid, res, vlat.tolist(), u.tolist(), ref,
-                             cells.tolist(), full.tolist()))
-            if rows:
-                # an all-skipped batch would hand Arrow empty OBJECT
-                # columns it cannot cast to list<double>
-                yield pd.DataFrame(rows, columns=_PREP_COLS)
-
-    return polygons.select("poly_id", "ring").mapInPandas(_prep, _PREP_SCHEMA)
+def _prep(lat: pa.ListArray, lon: pa.ListArray) -> pa.Array:
+    """Ring vertex lists -> :func:`_prep_ring` per ring, as one struct per
+    row (an explicit Arrow type: a worker has no session to parse DDL).
+    A null ring or one of < 3 vertices has no interior: null row."""
+    off = lat.offsets.to_numpy()
+    la = lat.values.to_numpy(zero_copy_only=False)
+    lo = lon.values.to_numpy(zero_copy_only=False)
+    ok = lat.is_valid().to_numpy(zero_copy_only=False) & (np.diff(off) >= 3)
+    return pa.array([_prep_ring(la[a:b], lo[a:b]) if keep else None
+                     for a, b, keep in zip(off[:-1], off[1:], ok)], type=_PREP_TYPE)
 
 
-@F.pandas_udf(T.BooleanType())
-def _pip_refine_udf(lat: pd.Series, lon: pd.Series, poly_id: pd.Series,
-                    vlat: pd.Series, vlon_u: pd.Series,
-                    ref: pd.Series, full: pd.Series) -> pd.Series:
-    """(point, ring columns, full) -> bool, vectorized even-odd ray-cast.
+def _refine(lat: np.ndarray, lon: np.ndarray, vlat: pa.ListArray,
+            vlon_u: pa.ListArray, ref: np.ndarray, full: np.ndarray) -> np.ndarray:
+    """(point, its candidate's ring, full) -> inside, even-odd ray-cast
+    of each row against its own ring slice of the batch's flat vertices.
 
-    The ring arrays arrive as columns of the joined candidate row and
-    are grouped by poly_id inside the batch, so the edge loop vectorizes
-    over that polygon's points. ``full`` rows (cover cells proven fully
-    interior) short-circuit to True without touching the edge loop:
-    Python compute follows boundary-cell rows only, while the plan stays
-    a SINGLE candidate scan (a full/boundary union split would re-scan
-    and re-join the whole point side)."""
-    la = lat.to_numpy()
-    lo = lon.to_numpy()
-    pid = poly_id.to_numpy()
-    inside = full.to_numpy(dtype=bool).copy()
+    ``full`` rows (cover cells proven fully interior) short-circuit to
+    True without touching the edge loop: Python compute follows
+    boundary-cell rows only, while the plan stays a SINGLE candidate
+    scan (a full/boundary union split would re-scan and re-join the
+    whole point side)."""
+    off = vlat.offsets.to_numpy()
+    start, n = off[:-1] - off[0], np.diff(off)
+    ya = vlat.flatten().to_numpy(zero_copy_only=False)
+    xa = vlon_u.flatten().to_numpy(zero_copy_only=False)
+    inside = full > 0
     todo = ~inside
-    for p in pd.unique(pid[todo]):
-        sel = todo & (pid == p)
-        first = int(np.flatnonzero(sel)[0])
-        vla = np.asarray(vlat.iloc[first], dtype=float)
-        vlo = np.asarray(vlon_u.iloc[first], dtype=float)
-        rf = float(ref.iloc[first])
-        plon = _map_lon_into_ring(_unwrap(lo[sel], rf), vlo.min())
-        inside[sel] = _raycast(vla, vlo, la[sel], plon)
-    return pd.Series(inside)
+    plon = _map_lon_into_ring(_unwrap(lon[todo], ref[todo]),
+                              np.minimum.reduceat(xa, start)[todo])
+    inside[todo] = _raycast(ya, xa, start[todo], n[todo], lat[todo], plon)
+    return inside
 
 
 def _pip_hits(pts: DataFrame, polygons: DataFrame,
               lat_col: str, lon_col: str) -> DataFrame:
     """(point rows x containing poly_id) by the module docstring's plan:
-    one polygon scan, ONE point scan (an ancestor cell per ACTIVE res),
-    one equi-join on (res, cell), one candidate scan into the refine."""
-    prepped = _prep_polygons(polygons)
+    one polygon scan through the ring-prep UDF, ONE point scan (an
+    ancestor cell per ACTIVE res), one equi-join on (res, cell), one
+    candidate scan into the refine UDF."""
+    # once: the struct is read field by field, and Catalyst would
+    # otherwise inline the UDF into every field
+    prep = kernel_udf(_prep, "struct<__res: int, vlat: array<double>, "
+                      "vlon_u: array<double>, ref: double, cover: array<bigint>, "
+                      "cover_full: array<boolean>>", once=True)
+    prepped = polygons.select(
+        "poly_id", prep(F.col("ring.lat"), F.col("ring.lon")).alias("__p"),
+    ).where(F.col("__p").isNotNull()).select("poly_id", "__p.*")
     # ring arrays ride on the exploded pair relation: its volume is
     # polygons x cover cells (never points), and carrying them here
     # means ONE point-side join and ONE candidate scan — a separate
@@ -290,9 +289,9 @@ def _pip_hits(pts: DataFrame, polygons: DataFrame,
     )
     cand = ptsx.join(pairs, on=["__res", "__cell"], how="inner") \
         .drop("__res", "__cell")
-    hit = cand.filter(_pip_refine_udf(
-        F.col(lat_col), F.col(lon_col), F.col("poly_id"),
-        F.col("vlat"), F.col("vlon_u"), F.col("ref"), F.col("__full")))
+    refine = kernel_udf(_refine, "boolean")
+    hit = cand.filter(refine(F.col(lat_col), F.col(lon_col), F.col("vlat"),
+                             F.col("vlon_u"), F.col("ref"), F.col("__full")))
     return hit.drop("vlat", "vlon_u", "ref", "__full")
 
 
@@ -397,7 +396,7 @@ def geodesic_buffer(points: DataFrame, radius, metric: str = "meter",
 
     from .. import kernels as K
     from ..constants import resolve_ellipsoid
-    from ..functions.udfs import kernel_udf, points_array
+    from ..functions.udfs import points_array
 
     a, f = resolve_ellipsoid(ellipsoid)
     bearings = np.arange(n_vertices) * step

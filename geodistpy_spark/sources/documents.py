@@ -161,12 +161,15 @@ def simplify_path(points: DataFrame, epsilon_m: float,
     the segment actually kept, not its infinite great circle) of the
     simplified path. Endpoints always survive.
 
-    Plan: ONE ``applyInPandas`` grouped-map over ``id_col`` — per-group
-    work is the classic stack DP (numpy-vectorized cross-track per
-    segment), cost follows the longest document, not the corpus.
+    Plan: ONE ``applyInArrow`` grouped map over ``id_col`` (an Arrow
+    table in and out per document) — per-group work is the classic
+    stack DP (numpy-vectorized cross-track per segment; a null
+    coordinate is NaN), cost follows the longest document, not the
+    corpus.
     Output: the input columns, kept rows only, order preserved.
     """
     import numpy as np
+    import pyarrow as pa
 
     if epsilon_m < 0:
         raise ValueError(f"epsilon_m must be >= 0, got {epsilon_m}")
@@ -200,13 +203,13 @@ def simplify_path(points: DataFrame, epsilon_m: float,
 
     schema = points.select(id_col, order_col, lat_col, lon_col).schema
 
-    def _simplify(pdf):
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        n = len(pdf)
+    def _simplify(tbl):
+        tbl = tbl.sort_by(order_col)
+        n = tbl.num_rows
         if n <= 2:
-            return pdf[[id_col, order_col, lat_col, lon_col]]
-        la = pdf[lat_col].to_numpy(float)
-        lo = pdf[lon_col].to_numpy(float)
+            return tbl
+        la = np.asarray(tbl[lat_col].to_numpy(), dtype=float)
+        lo = np.asarray(tbl[lon_col].to_numpy(), dtype=float)
         keep = np.zeros(n, dtype=bool)
         keep[0] = keep[-1] = True
         stack = [(0, n - 1)]
@@ -222,11 +225,11 @@ def simplify_path(points: DataFrame, epsilon_m: float,
                 keep[w] = True
                 stack.append((i, w))
                 stack.append((w, j))
-        return pdf.loc[keep, [id_col, order_col, lat_col, lon_col]]
+        return tbl.filter(pa.array(keep))
 
     return (
         points.select(id_col, order_col, lat_col, lon_col)
-        .groupBy(id_col).applyInPandas(_simplify, schema)
+        .groupBy(id_col).applyInArrow(_simplify, schema)
     )
 
 

@@ -71,10 +71,10 @@ class TestValidateCoords:
 
 
 class TestContractOracles:
-    """The dedup, ANN, exact-kernel and tiling-layer queries of the
-    driver contract against their DuckDB oracles and goldens, compared
-    the way ``scripts/check_contract.py`` compares them (repr-exact
-    after canonical column and row order)."""
+    """The dedup, ANN, exact-kernel, tiling-layer, PiP and path
+    queries of the driver contract against their DuckDB oracles and
+    goldens, compared the way ``scripts/check_contract.py`` compares
+    them (repr-exact after canonical column and row order)."""
 
     @pytest.mark.parametrize("key", [
         "jaccard_pairs", "near_dup_groups",
@@ -83,7 +83,7 @@ class TestContractOracles:
         "interpolate", "midpoint", "matrix_gc", "dimwise", "buffer_rings",
         "radius_join_gc", "radius_join_salted", "knn_gc", "knn_exact",
         "cell_index_rollup", "cell_density_smooth", "adaptive_index",
-        "doc_cell_histogram"])
+        "doc_cell_histogram", "point_in_polygon", "zonal_stats", "simplify_path"])
     def test_query_matches_duckdb_oracle(self, spark, key):
         import duckdb
 

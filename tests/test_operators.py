@@ -894,15 +894,23 @@ class TestPolygons:
             == _pip_brute(places, polygons)
 
     def test_square_membership(self, spark):
+        # two overlapping squares whose ids float64 cannot tell apart:
+        # each point matches exactly the squares containing it, so the
+        # refine never groups candidate rows by an id cast to float
+        a, b = 2**53, 2**53 + 1
         sq = spark.createDataFrame(
-            [(99, "sq", [{"lat": 0.0, "lon": 0.0}, {"lat": 0.0, "lon": 10.0},
-                         {"lat": 10.0, "lon": 10.0}, {"lat": 10.0, "lon": 0.0}])],
+            [(a, "sq", [{"lat": 0.0, "lon": 0.0}, {"lat": 0.0, "lon": 10.0},
+                        {"lat": 10.0, "lon": 10.0}, {"lat": 10.0, "lon": 0.0}]),
+             (b, "sq4", [{"lat": 4.0, "lon": 4.0}, {"lat": 4.0, "lon": 14.0},
+                         {"lat": 14.0, "lon": 14.0}, {"lat": 14.0, "lon": 4.0}])],
             schema="poly_id long, name string, ring array<struct<lat:double,lon:double>>")
         pts = spark.createDataFrame(
-            [(1, 5.0, 5.0), (2, 15.0, 5.0), (3, 5.0, -1.0), (4, 9.99, 9.99)],
+            [(1, 5.0, 5.0), (2, 15.0, 5.0), (3, 5.0, -1.0), (4, 9.99, 9.99),
+             (5, 0.01, 3.99), (6, 13.99, 10.01), (7, 3.99, 9.99), (8, 10.01, 4.01)],
             schema="pid long, lat double, lon double")
-        got = point_in_polygon_join(pts, sq).select("pid").toPandas()
-        assert sorted(got.pid) == [1, 4]
+        got = point_in_polygon_join(pts, sq).select("pid", "poly_id").collect()
+        assert sorted((r.pid, r.poly_id) for r in got) == [
+            (1, a), (1, b), (4, a), (4, b), (5, a), (6, b), (7, a), (8, b)]
 
     def test_antimeridian_polygon(self, spark):
         ring = [{"lat": -5.0, "lon": 175.0}, {"lat": -5.0, "lon": -175.0},
@@ -1001,7 +1009,7 @@ class TestPolygons:
                     plat = -90.0 + (y + gy.ravel()) * 180.0 / n
                     plon_abs = -180.0 + (x + gx.ravel()) * 360.0 / n
                     inside = _raycast(
-                        vlat, vlon_u, plat,
+                        vlat, vlon_u, 0, len(vlat), plat,
                         _map_lon_into_ring(_unwrap(plon_abs, ref),
                                            float(vlon_u.min())))
                     cell = y * n + x
@@ -1118,6 +1126,27 @@ class TestPolygons:
         got = hit.select("place_id", "poly_id").toPandas()
         assert set(zip(got.place_id.astype(int), got.poly_id.astype(int))) \
             == _pip_brute(places, polygons)
+
+    @pytest.mark.parametrize("case, want", [("inner", 4), ("zonal", 4), ("left", 8)])
+    def test_executed_job_counts(self, spark, places, polygons, raster, case, want):
+        # build + execution on the fixtures: an added job (a second
+        # polygon scan, a driver collect) fails here rather than only in
+        # a traced benchmark run
+        run = {
+            "inner": lambda: point_in_polygon_join(places, polygons)
+            .groupBy("poly_id").count().collect(),
+            "zonal": lambda: zonal_stats(raster, polygons).collect(),
+            "left": lambda: point_in_polygon_join(places, polygons, how="left").count(),
+        }[case]
+        places.count()  # the fixture is cached: its first read adds a job
+        sc = spark.sparkContext
+        sc.setJobGroup(f"pip-{case}", case)
+        try:
+            run()
+            jobs = sc.statusTracker().getJobIdsForGroup(f"pip-{case}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == want
 
     def test_plan_broadcasts_small_zone_sets(self, places, polygons):
         # the north rule's "broadcast of small polygon sets" is the
