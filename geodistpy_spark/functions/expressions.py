@@ -6,9 +6,11 @@ Python workers, no Arrow transfer. These cover the closed-form kernels
 math, unit conversion, longitude normalization). The iterative kernels
 (Vincenty/Karney) live in :mod:`geodistpy_spark.functions.udfs`.
 
-Every formula here is intentionally mirrored 1:1 by an ANSI-SQL string
-(see ``oracle_ddl`` snippets in __spark_entry__.py) so the DuckDB oracle
-computes the identical expression.
+The haversine and great-circle formulas are mirrored by the ANSI-SQL
+strings ``_hav_sql`` / ``_gc_sql`` in __spark_entry__.py, which the
+DuckDB contract oracles compute. The Spark SQL surface
+(:mod:`geodistpy_spark.sql`) needs no mirror: it registers Catalyst's
+own SQL for these builders.
 """
 
 from __future__ import annotations
@@ -126,7 +128,7 @@ def destination_sphere(lat, lon, bearing_deg, dist_m,
         sp2.isNotNull() & l2.isNotNull() & ~F.isnan(sp2) & ~F.isnan(l2),
         F.struct(
             F.degrees(p2).alias("lat"),
-            (F.pmod(F.degrees(l2) + 180.0, F.lit(360.0)) - 180.0).alias("lon"),
+            normalize_lon(F.degrees(l2)).alias("lon"),
         ))
 
 
@@ -190,7 +192,7 @@ def to_unit(dist_m, metric: str = "meter") -> Column:
 
 
 def normalize_lon(lon) -> Column:
-    """Normalize longitude to [-180, 180] (reference: distance.py:272)."""
+    """Normalize longitude to [-180, 180) (reference: distance.py:272)."""
     return F.pmod(_c(lon) + 180.0, F.lit(360.0)) - 180.0
 
 

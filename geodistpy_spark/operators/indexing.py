@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import cell_id_col, parent_cell_col
+from ..functions.expressions import cell_id_col, normalize_lon, parent_cell_col
 
 
 def cell_density_smooth(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
@@ -207,7 +207,7 @@ def geo_bbox(df: DataFrame, group_col: str,
     span = best.select(
         group_col,
         F.col("__lon").alias("lon_east"),
-        (F.pmod(F.col("__next") + 180.0, F.lit(360.0)) - 180.0).alias("lon_west"),
+        normalize_lon("__next").alias("lon_west"),
         (360.0 - F.col("__gap")).alias("lon_width"),
     )
     return lats.join(span, on=group_col).select(

@@ -46,8 +46,6 @@ from ..functions.expressions import _reusable, great_circle_m, haversine_m
 from ..functions.udfs import kernel_udf, list_array, vincenty_udf
 from .radius import _cover_join
 
-EARTH_AREA_M2 = 5.10072e14
-GLOBE_M = 2.1e7
 HIST_RES = 6  # 64 x 64 = 4096 cells; dense int64 grid is 32 KB driver-side
 COVER_BUDGET = 4096  # pass-1 cover cells per query; larger covers go to the fallback
 
@@ -133,7 +131,7 @@ def candidate_histogram(candidates: DataFrame, c_lat: str = "lat",
     return counts, int(counts.sum())
 
 
-def _radius_estimator_np(counts: np.ndarray, k: int, r_cap_m: float):
+def _radius_estimator_np(counts: np.ndarray, k: int, r_cap_m: float, a: float):
     """Numpy closure (la, lo) -> density-derived search radius (meters).
 
     Expands square blocks on an integral image until >= 2k candidates are
@@ -145,7 +143,7 @@ def _radius_estimator_np(counts: np.ndarray, k: int, r_cap_m: float):
     n = counts.shape[0]
     # integral image with a zero row/col: block sums in O(1)
     ii = np.pad(np.cumsum(np.cumsum(counts, axis=0), axis=1), ((1, 0), (1, 0)))
-    cell_h_m = 180.0 / n * 110_600.0
+    cell_h_m = math.pi * a / n  # a histogram row on a meridian of radius a
     target = 2 * k
 
     def _est(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
@@ -215,7 +213,7 @@ def _seed_udf(counts: np.ndarray, k: int, r_cap_m: float, res: int, ellipsoid,
     run it twice."""
     a, f = resolve_ellipsoid(ellipsoid)
     inner, outer = hav_bounds(a, f, exact)
-    est = _radius_estimator_np(counts, k, r_cap_m)
+    est = _radius_estimator_np(counts, k, r_cap_m, a)
     fallback = _fallback_angle_np(counts, k)
 
     def seed(la: np.ndarray, lo: np.ndarray) -> pa.Array:
@@ -260,16 +258,19 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
             "distance.py:520-522)")
 
     # join resolution from the candidate-weighted mean density (the radius
-    # a typical query needs); covers stay ~3x3 for in-distribution queries
+    # a typical query needs); covers stay ~3x3 for in-distribution queries.
+    # The sphere of radius a has area 4 pi a^2 and half a great circle pi a
+    a, f = resolve_ellipsoid(ellipsoid)
+    half_globe = math.pi * a
     n_h = grid.nx(HIST_RES)
     occupied = counts[counts > 0].astype(np.float64)
     mean_density = float((occupied ** 2).sum()) / (
-        occupied.sum() * EARTH_AREA_M2 / (n_h * n_h))
+        occupied.sum() * 4.0 * half_globe * a / (n_h * n_h))
     r_typ = 1.5 * math.sqrt(2.0 * k / (math.pi * mean_density))
-    res = grid.pick_resolution(min(max(r_typ, 1_000.0), GLOBE_M))
+    res = grid.pick_resolution(min(max(r_typ, 1_000.0), half_globe))
     # 30 join cells: the radius of a ~64 x 64-cell (COVER_BUDGET) cover
     # at the equator
-    r_cap = min(30 * 2.0e7 / grid.nx(res), GLOBE_M)
+    r_cap = min(30 * half_globe / grid.nx(res), half_globe)
 
     seed = _seed_udf(counts, k, r_cap, res, ellipsoid, exact)
     qr = queries.select(
@@ -277,7 +278,6 @@ def knn_join(queries: DataFrame, candidates: DataFrame, k: int,
     ).filter(_valid_coords("__qlat", "__qlon")).select(
         q_id, "__qlat", "__qlon", seed("__qlat", "__qlon").alias("__s"))
 
-    a, f = resolve_ellipsoid(ellipsoid)
     inner, outer = hav_bounds(a, f, exact)
     hav = haversine_m("__qlat", "__qlon", c_lat, c_lon, radius=a)
     if exact:

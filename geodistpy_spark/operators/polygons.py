@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from .. import grid
 from ..constants import EARTH_RADIUS_M
-from ..functions.expressions import cell_id_col
+from ..functions.expressions import cell_id_col, normalize_lon
 from ..functions.udfs import kernel_udf
 
 
@@ -437,7 +437,7 @@ def polygon_area(polygons: DataFrame, out: str = "area_km2") -> DataFrame:
              F.col("v.lat").alias("vlat"), F.col("v.lon").alias("vlon"))
     ref = v0.withColumn("ref", F.first("vlon").over(w))
     rel = ref.withColumn(
-        "rlon", F.pmod(F.col("vlon") - F.col("ref") + 180.0, F.lit(360.0)) - 180.0)
+        "rlon", normalize_lon(F.col("vlon") - F.col("ref")))
     dd = rel.withColumn(
         "dd", F.col("rlon") - F.coalesce(F.lag("rlon").over(w), F.col("rlon")))
     u = dd.withColumn(
@@ -454,7 +454,7 @@ def polygon_area(polygons: DataFrame, out: str = "area_km2") -> DataFrame:
         F.min_by("vlat", "idx").alias("flat"),
     ).withColumn(
         "closing",
-        F.pmod(F.col("u0") - F.col("ulast") + 180.0, F.lit(360.0)) - 180.0,
+        normalize_lon(F.col("u0") - F.col("ulast")),
     ).withColumn(
         "pole", F.when(F.col("mlat") > 0.0, 90.0).otherwise(-90.0)
     ).withColumn(

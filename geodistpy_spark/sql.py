@@ -9,9 +9,14 @@ notebook, dbt model) consumes the engine:
   INLINES it into the calling plan — whole-stage codegen, constant
   folding, and predicate pushdown all still apply (a call over
   literals folds to a literal at plan time, and repeated
-  subexpressions are deduplicated by codegen CSE). These mirror the
-  Column builders in :mod:`geodistpy_spark.functions.expressions` 1:1
-  and are equivalence-tested bit-for-bit against them.
+  subexpressions are deduplicated by codegen CSE). Five bodies are
+  rendered from the Column builders in
+  :mod:`geodistpy_spark.functions.expressions` (Catalyst's own SQL for
+  the analyzed builder), so each formula has one spelling and the SQL
+  surface is bit-identical to the DataFrame API by construction.
+  ``geo_to_unit``, ``geo_cell_id`` and ``geo_parent_cell`` take a unit
+  or resolution as a runtime SQL value, which the builders fold at
+  build time, so those three keep hand-written bodies.
 - **Arrow UDFs** (``spark.udf.register``): the exact ellipsoidal
   kernels (Vincenty inverse with the Karney rescue baked into the
   batch driver, Vincenty direct, geodesic midpoint) that have no closed
@@ -42,83 +47,45 @@ geo_greatcircle_m, ``bearing`` -> geo_bearing_deg; reference
 distance.py:94, :684, :169) through SQL instead of Python calls.
 """
 
+
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 
-from .constants import EARTH_RADIUS_M, WGS84_A, WGS84_F
+from .constants import UNIT_FACTORS, resolve_ellipsoid
+from .functions.expressions import (bearing_sphere_deg, destination_sphere,
+                                    great_circle_m, haversine_m, normalize_lon)
 
 __all__ = ["register_sql_functions", "SQL_FUNCTION_NAMES"]
 
-_R = repr(EARTH_RADIUS_M)
-_A = repr(WGS84_A)
-_F = repr(WGS84_F)
+_PAIR = ("lat1", "lon1", "lat2", "lon2")
+_DIRECT = ("lat", "lon", "bearing_deg", "dist_m")
 
-# --- body builders -------------------------------------------------------
-# Each mirrors the corresponding Column builder in
-# functions/expressions.py operation-for-operation (same order, same
-# clamps), so results are bit-identical to the DataFrame API. SQL UDF
-# bodies must be a single expression, so intermediates are expanded by
-# Python substitution here; codegen CSE collapses the repeats.
-
-# null/NaN guards mirror expressions.haversine_m: greatest/least skip
-# nulls and rank NaN above every number, so the clamp alone would turn
-# a null coordinate into 0 m and a NaN one into the antipodal distance
-_HAVERSINE_H = """(pow(sin((radians(lat2) - radians(lat1)) / 2), 2)
-    + cos(radians(lat1)) * cos(radians(lat2))
-      * pow(sin((radians(lon2) - radians(lon1)) / 2), 2))"""
-_HAVERSINE = (f"CASE WHEN isnan({_HAVERSINE_H}) THEN double('NaN') "
-              f"WHEN {_HAVERSINE_H} IS NOT NULL THEN "
-              f"2.0d * {_R} * asin(sqrt(least(greatest("
-              f"{_HAVERSINE_H}, 0.0d), 1.0d))) END")
+# name -> (return type, DOUBLE parameters, builder (a, f) -> Column over them)
+_RENDERED = {
+    "haversine_m": ("DOUBLE", _PAIR, lambda a, f: haversine_m(*_PAIR)),
+    "greatcircle_m": ("DOUBLE", _PAIR, lambda a, f: great_circle_m(*_PAIR, a, f)),
+    "bearing_deg": ("DOUBLE", _PAIR, lambda a, f: bearing_sphere_deg(*_PAIR)),
+    # renders as struct(lat, lon) without field names; the RETURNS type
+    # names the fields (a struct casts by position)
+    "destination": ("STRUCT<lat: DOUBLE, lon: DOUBLE>", _DIRECT,
+                    lambda a, f: destination_sphere(*_DIRECT)),
+    "normalize_lon": ("DOUBLE", ("lon",), lambda a, f: normalize_lon("lon")),
+}
 
 
-def _greatcircle_body() -> str:
-    b1 = f"atan((1.0d - {_F}) * tan(radians(lat1)))"
-    b2 = f"atan((1.0d - {_F}) * tan(radians(lat2)))"
-    dl = "(radians(lon2) - radians(lon1))"
-    y = (f"sqrt(pow(cos({b2}) * sin({dl}), 2)"
-         f" + pow(cos({b1}) * sin({b2})"
-         f" - sin({b1}) * cos({b2}) * cos({dl}), 2))")
-    x = f"(sin({b1}) * sin({b2}) + cos({b1}) * cos({b2}) * cos({dl}))"
-    sigma = f"atan2({y}, {x})"
-    sp2 = f"pow(sin(({b1} + {b2}) / 2), 2)"
-    sq2 = f"pow(sin(({b2} - {b1}) / 2), 2)"
-    ch2 = f"pow(cos({sigma} / 2), 2)"
-    sh2 = f"pow(sin({sigma} / 2), 2)"
-    big_x = (f"CASE WHEN {ch2} > 0 THEN ({sigma} - sin({sigma}))"
-             f" * {sp2} * (1.0d - {sq2}) / {ch2} ELSE 0.0d END")
-    big_y = (f"CASE WHEN {sh2} > 0 THEN ({sigma} + sin({sigma}))"
-             f" * (1.0d - {sp2}) * {sq2} / {sh2} ELSE 0.0d END")
-    return f"{_A} * ({sigma} - ({_F} / 2.0d) * (({big_x}) + ({big_y})))"
+def _render(spark: SparkSession, args: str, col: Column) -> str:
+    """Catalyst's own SQL for ``col``, analyzed over an empty relation
+    whose columns are the function's arguments ``args`` (a DDL schema)."""
+    return (spark.createDataFrame([], args).select(col.alias("x"))
+            ._jdf.queryExecution().analyzed().projectList().head()
+            .child().sql())
 
 
-_BEARING = """pmod(degrees(atan2(
-    sin(radians(lon2) - radians(lon1)) * cos(radians(lat2)),
-    cos(radians(lat1)) * sin(radians(lat2))
-    - sin(radians(lat1)) * cos(radians(lat2))
-      * cos(radians(lon2) - radians(lon1)))), 360.0d)"""
-
-
-def _destination_body() -> str:
-    p1 = "radians(lat)"
-    th = "radians(bearing_deg)"
-    d = f"(dist_m / {_R})"
-    sp2 = (f"(sin({p1}) * cos({d})"
-           f" + cos({p1}) * sin({d}) * cos({th}))")
-    l2 = (f"(radians(lon) + atan2(sin({th}) * sin({d}) * cos({p1}),"
-          f" cos({d}) - sin({p1}) * {sp2}))")
-    # the null rule of expressions.destination_sphere: a null or NaN
-    # input gives a null point (the clamp would otherwise put a null at
-    # lat = -90 and a NaN at the north pole); l2 is checked too because
-    # sp2 never involves lon
-    return (
-        f"CASE WHEN {sp2} IS NOT NULL AND {l2} IS NOT NULL "
-        f"AND NOT isnan({sp2}) AND NOT isnan({l2}) "
-        f"THEN named_struct("
-        f"'lat', degrees(asin(least(greatest({sp2}, -1.0d), 1.0d))), "
-        f"'lon', pmod(degrees({l2}) + 180.0d, 360.0d) - 180.0d) END")
-
+# --- hand-written bodies -------------------------------------------------
+# These take the resolution or the unit as a runtime SQL value; the
+# Column builders fold it at build time (``1 << res``,
+# ``unit_factor(metric)``).
 
 def _cell_id_body() -> str:
     n = "CAST(pow(2, res) AS BIGINT)"
@@ -151,30 +118,15 @@ def _parent_cell_body() -> str:
             f" + shiftright({x}, res - parent_res) END")
 
 
-# aliases and factors mirror constants.UNIT_FACTORS exactly ('m' too);
 # a NULL metric propagates NULL (the CASE <expr> WHEN form never
 # matches NULL, so it needs an explicit branch)
-_TO_UNIT = """CASE
-    WHEN metric IS NULL THEN CAST(NULL AS DOUBLE)
-    WHEN metric IN ('meter', 'm') THEN dist_m * 1.0d
-    WHEN metric = 'km' THEN dist_m * 1.0e-3d
-    WHEN metric = 'mile' THEN dist_m * (1.0d / 1609.344d)
-    WHEN metric = 'nmi' THEN dist_m * (1.0d / 1852.0d)
-    ELSE CAST(raise_error(concat('unknown metric: ', metric)) AS DOUBLE)
-END"""
+_TO_UNIT = " ".join([
+    "CASE WHEN metric IS NULL THEN CAST(NULL AS DOUBLE)",
+    *(f"WHEN metric = '{k}' THEN dist_m * {v!r}D" for k, v in UNIT_FACTORS.items()),
+    "ELSE CAST(raise_error(concat('unknown metric: ', metric)) AS DOUBLE) END"])
 
-_PAIR_ARGS = "lat1 DOUBLE, lon1 DOUBLE, lat2 DOUBLE, lon2 DOUBLE"
-
-_SQL_UDFS: dict[str, tuple[str, str, str]] = {
+_HAND_WRITTEN: dict[str, tuple[str, str, str]] = {
     # name -> (arg signature, return type, body)
-    "haversine_m": (_PAIR_ARGS, "DOUBLE", _HAVERSINE),
-    "greatcircle_m": (_PAIR_ARGS, "DOUBLE", _greatcircle_body()),
-    "bearing_deg": (_PAIR_ARGS, "DOUBLE", _BEARING),
-    "destination": ("lat DOUBLE, lon DOUBLE, bearing_deg DOUBLE, "
-                    "dist_m DOUBLE",
-                    "STRUCT<lat: DOUBLE, lon: DOUBLE>", _destination_body()),
-    "normalize_lon": ("lon DOUBLE", "DOUBLE",
-                      "pmod(lon + 180.0d, 360.0d) - 180.0d"),
     "to_unit": ("dist_m DOUBLE, metric STRING", "DOUBLE", _TO_UNIT),
     "cell_id": ("lat DOUBLE, lon DOUBLE, res INT", "BIGINT",
                 _cell_id_body()),
@@ -182,27 +134,33 @@ _SQL_UDFS: dict[str, tuple[str, str, str]] = {
                     _parent_cell_body()),
 }
 
-SQL_FUNCTION_NAMES = tuple(f"geo_{k}" for k in _SQL_UDFS) + (
+SQL_FUNCTION_NAMES = tuple(f"geo_{k}" for k in (*_RENDERED, *_HAND_WRITTEN)) + (
     "geo_vincenty_m", "geo_destination_vincenty", "geo_midpoint")
 
 
 def register_sql_functions(spark: SparkSession, prefix: str = "geo_",
-                           ellipsoid: str = "WGS-84") -> tuple[str, ...]:
+                           ellipsoid: str | tuple[float, float] = "WGS-84"
+                           ) -> tuple[str, ...]:
     """Register the engine's SQL functions on ``spark``; returns the
     registered names.
 
     Closed-form kernels become Spark SQL UDFs (inlined by Catalyst —
-    full codegen); the exact kernels are registered as Arrow UDFs under
-    ``{prefix}vincenty_m``, ``{prefix}destination_vincenty`` and
-    ``{prefix}midpoint``. Temporary
+    full codegen), ``{prefix}greatcircle_m`` on ``ellipsoid``; the exact
+    kernels are registered as Arrow UDFs under ``{prefix}vincenty_m``,
+    ``{prefix}destination_vincenty`` and ``{prefix}midpoint``. Temporary
     (session-scoped) registrations — call once per session.
     """
-    names = []
-    for name, (args, rtype, body) in _SQL_UDFS.items():
+    a, f = resolve_ellipsoid(ellipsoid)
+    table = {}
+    for name, (rtype, params, build) in _RENDERED.items():
+        args = ", ".join(f"{p} DOUBLE" for p in params)
+        table[name] = (args, rtype, _render(spark, args, build(a, f)))
+    table.update(_HAND_WRITTEN)
+    for name, (args, rtype, body) in table.items():
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {prefix}{name}({args}) "
             f"RETURNS {rtype} RETURN {body}")
-        names.append(f"{prefix}{name}")
+    names = [f"{prefix}{name}" for name in table]
     from .functions.udfs import destination_udf, midpoint_udf, vincenty_udf
 
     spark.udf.register(f"{prefix}vincenty_m", vincenty_udf(ellipsoid=ellipsoid))

@@ -262,3 +262,20 @@ class TestSqlFunctions:
         ).collect()[0]
         assert abs(row.v - 111319.49079322515) < 1e-3  # GRS-80 ~= WGS-84
         assert abs(row.h - 111195.08372419141) < 1e-6
+        # a custom (a, f) reaches the great circle, not only the exact
+        # kernels: bit-identical to the builder on the same ellipsoid
+        mars = (3396190.0, 1.0 / 169.8)
+        register_sql_functions(spark, prefix="g3_", ellipsoid=mars)
+        pair = "lat1, lon1, lat2, lon2"
+        got = spark.sql(
+            f"SELECT g3_greatcircle_m({pair}) AS gc, "
+            f"       geo_greatcircle_m({pair}) AS wgs FROM sql_pts").toPandas()
+        want = sql_pts.select(great_circle_m(
+            "lat1", "lon1", "lat2", "lon2", *mars).alias("gc")).toPandas()
+        assert (got["gc"].values == want["gc"].values).all()
+        assert (got["gc"].values < 0.6 * got["wgs"].values).all()
+        row = spark.sql(
+            "SELECT g3_greatcircle_m(10.0d, 20.0d, 30.0d, 40.0d) AS gc, "
+            "       g3_vincenty_m(10.0d, 20.0d, 30.0d, 40.0d) AS v"
+        ).collect()[0]
+        assert abs(row.gc - 1_613_115.3) < 0.1 and abs(row.v - 1_613_122.0) < 0.1
